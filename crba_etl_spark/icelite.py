@@ -2,8 +2,8 @@
 
 No Iceberg/Delta jars exist in this environment (verified: no network,
 ``$SPARK_HOME/jars`` has neither), so ``MERGE INTO`` SQL is unavailable.
-icelite supplies, in ~200 lines of pure PySpark + JSON, exactly the three
-properties the CDC engine needs from the table layer:
+icelite supplies, in pure PySpark + JSON, exactly the three properties the
+CDC engine needs from the table layer:
 
 1. **snapshot atomicity** — readers always see a complete version: the
    only mutation visible to readers is an atomic ``os.replace`` of the
@@ -11,7 +11,7 @@ properties the CDC engine needs from the table layer:
 2. **idempotent epoch commit** — the set of committed epoch ids is
    embedded in the snapshot manifest itself, so the epoch marker and the
    data become visible in the same atomic operation (re-delivered epochs
-   are detected and skipped);
+   are detected and skipped by :meth:`IceliteTable.skip_if_committed`);
 3. **schema-evolution metadata** — the manifest carries the table's
    payload schema; additive evolution rewrites only the manifest, and
    old data files are projected to the evolved schema on read (missing
@@ -26,8 +26,9 @@ Layout::
       quarantine/epoch=<k>/        # late/low-LSN events (appended per epoch)
       metrics/                     # per-epoch lineage + apply metrics
 
-The table is hash-bucketed by ``conv_id`` (``pmod(xxhash64(conv_id), N)``)
-— the Iceberg ``bucket(N, conv_id)`` transform — so a MERGE touches and
+The table is hash-bucketed by ``conv_id`` (``pmod(hash(conv_id), N)``, Spark's
+Murmur3 ``hash`` — see :func:`bucket_expr`), the shape of the Iceberg
+``bucket(N, conv_id)`` transform, so a MERGE touches and
 rewrites only the buckets its batch hits (partition-pruned rewrite), and
 at cluster scale the merge join is a co-partitioned storage-partitioned
 join. The call-site API (``merge`` in merge.py) mirrors Iceberg so a real
@@ -41,6 +42,7 @@ icelite replaces full-refresh with incremental snapshot-atomic commits.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import shutil
@@ -55,6 +57,40 @@ CURRENT = "CURRENT"
 #: every snapshot so a table created under a different bucketing scheme
 #: refuses loudly instead of silently mis-assigning rows to buckets
 BUCKET_FN = "murmur3_pmod_v1"
+
+#: every manifest field, in the order each snapshot is written, with the
+#: value a field takes when an older manifest lacks it. Writers change the
+#: fields they own; :meth:`IceliteTable._swap` carries the rest forward —
+#: including keys not listed here. ``rebucket_progress``/``aux`` are
+#: written only when set.
+_MANIFEST = {
+    "version": None,
+    "schema": None,
+    "key_cols": ["conv_id", "turn_idx"],
+    "bucket_fn": BUCKET_FN,
+    "n_buckets": 32,
+    "files": {},
+    # merge-on-read delta files per bucket, in commit order; resolution
+    # is max-__lsn per key so order is informational
+    "deltas": {},
+    "committed_epochs": [],
+    # partial-epoch slice markers (streaming): idempotence unit when one
+    # epoch's files span micro-batches
+    "slices": [],
+    # cumulative applied source files per still-incomplete epoch
+    # (streaming): union across slices; compared to the producer's _DONE
+    # declaration to decide epoch completeness
+    "epoch_files": {},
+    "parent": None,
+    "stats": {},
+    # in-flight bucket-count evolution bookkeeping (see rebucket)
+    "rebucket_progress": None,
+    # engine-maintained auxiliary artifacts (e.g. the LSH band index,
+    # band_index.py): name -> {"files": [relpaths], ...}, committed in the
+    # SAME atomic pointer swap as the data, so an index can never
+    # reference rows the table doesn't hold (or miss rows it does)
+    "aux": {},
+}
 
 
 class CommitConflict(RuntimeError):
@@ -197,15 +233,13 @@ class IceliteTable:
         os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         t = cls(root, io=io)
-        t._key_cols = list(key_cols or ["conv_id", "turn_idx"])
-        t._write_snapshot(
-            version=0,
-            schema=payload_schema,
-            files={},
-            committed_epochs=[],
-            parent=None,
-            stats={},
-            n_buckets=n_buckets,
+        t._swap(
+            lambda snap: snap.update(
+                schema=payload_schema.jsonValue(),
+                key_cols=list(key_cols or ["conv_id", "turn_idx"]),
+                n_buckets=n_buckets,
+            ),
+            fresh=True,
         )
         return t
 
@@ -268,63 +302,50 @@ class IceliteTable:
         eps = self.snapshot()["committed_epochs"]
         return max(eps) if eps else None
 
-    def _write_snapshot(
-        self,
-        version,
-        schema,
-        files,
-        committed_epochs,
-        parent,
-        stats,
-        n_buckets=None,
-        deltas=None,
-        slices=None,
-        epoch_files=None,
-        expected_current=None,
-        rebucket_progress=None,
-        aux=None,
-    ):
-        snap = {
-            "version": version,
-            "schema": schema.jsonValue(),
-            "key_cols": getattr(self, "_key_cols", None) or self.key_cols(),
-            "bucket_fn": BUCKET_FN,
-            "n_buckets": n_buckets if n_buckets is not None else self.n_buckets(),
-            "files": {str(k): v for k, v in files.items()},
-            # merge-on-read delta files per bucket, in commit order;
-            # resolution is max-__lsn per key so order is informational
-            "deltas": {str(k): v for k, v in (deltas or {}).items()},
-            "committed_epochs": sorted(committed_epochs),
-            # partial-epoch slice markers (streaming): idempotence unit
-            # when one epoch's files span micro-batches
-            "slices": sorted(slices or []),
-            # cumulative applied source files per still-incomplete epoch
-            # (streaming): union across slices; compared to the
-            # producer's _DONE declaration to decide epoch completeness
-            "epoch_files": {str(k): sorted(v) for k, v in (epoch_files or {}).items()},
-            "parent": parent,
-            "stats": stats,
-        }
-        if rebucket_progress is not None:
-            # in-flight bucket-count evolution bookkeeping (see rebucket):
-            # per-old-bucket-group rewrite results + the base each group
-            # read, so a crashed/conflicted rebucket resumes instead of
-            # restarting O(table)
-            snap["rebucket_progress"] = rebucket_progress
-        if aux:
-            # engine-maintained auxiliary artifacts (e.g. the LSH band
-            # index, band_index.py): name -> {"files": [relpaths], ...}.
-            # Committed in the SAME atomic pointer swap as the data, so
-            # an index can never reference rows the table doesn't hold
-            # (or miss rows it does). Append-only across commits; every
-            # snapshot-writing path carries it forward.
-            snap["aux"] = aux
-        name = f"snapshot-{version:06d}.json"
-        # the atomic commit point: data + schema + epoch marker become
-        # visible in one conditional pointer swap (see LocalManifestIO
-        # for what this becomes on an object store); raises
-        # CommitConflict if a concurrent writer moved CURRENT
-        self.io.commit_atomic(name, snap, expected_current)
+    def _swap(self, mutate, fresh: bool = False) -> dict:
+        """THE commit primitive: every manifest write goes through here.
+        Deep-copies the live snapshot, lets ``mutate(snap)`` change only
+        the fields its writer owns, bumps ``version``/``parent``,
+        normalises the sorted lists and CAS-swaps the result in — data,
+        schema, epoch markers and aux artifacts become visible together
+        in one conditional pointer swap (see LocalManifestIO for what
+        that is on an object store). Every field ``mutate`` leaves alone
+        carries forward, including keys this code does not know.
+
+        A lost CAS re-runs ``mutate`` on a fresh snapshot, at most 8
+        times (the data files are already on disk and unreferenced until
+        the swap succeeds). A :class:`CommitConflict` raised BY
+        ``mutate`` — its base validation failed — escapes to the caller,
+        who must re-read and redo the rewrite. ``mutate`` returning
+        ``False`` leaves the table as it is and returns the live
+        snapshot. ``fresh`` writes version 0 of a new table."""
+        for _attempt in range(8):
+            live = None if fresh else self.snapshot()
+            snap = copy.deepcopy(live or {})
+            for k, v in _MANIFEST.items():
+                snap.setdefault(k, copy.deepcopy(v))
+            if mutate(snap) is False:
+                return live
+            snap["version"] = 0 if live is None else live["version"] + 1
+            snap["parent"] = None if live is None else live["version"]
+            snap["bucket_fn"] = BUCKET_FN
+            snap["committed_epochs"] = sorted(set(snap["committed_epochs"]))
+            snap["slices"] = sorted(set(snap["slices"]))
+            snap["epoch_files"] = {k: sorted(v) for k, v in snap["epoch_files"].items()}
+            for optional in ("rebucket_progress", "aux"):
+                if not snap[optional]:
+                    del snap[optional]
+            snap = {**{k: snap[k] for k in _MANIFEST if k in snap}, **snap}
+            try:
+                self.io.commit_atomic(
+                    f"snapshot-{snap['version']:06d}.json",
+                    snap,
+                    None if live is None else f"snapshot-{live['version']:06d}.json",
+                )
+            except CommitConflict:
+                continue
+            return snap
+        raise CommitConflict(f"lost 8 CAS races committing {snap['stats']}")
 
     # --- read path -----------------------------------------------------------
 
@@ -438,24 +459,121 @@ class IceliteTable:
 
     @staticmethod
     def _already_committed(snap: dict, epoch: int, slice_marker: str | None) -> bool:
-        """Idempotence predicate shared by both commit paths. Whole-epoch
-        commits dedupe on the epoch id; slice commits (streaming micro-
-        batches carrying part of an epoch) dedupe on their own marker —
-        and ALSO on the epoch id: an epoch enters ``committed_epochs``
-        only when the applied-file union covers the producer's declared
-        ``_DONE`` set, so every possible slice of a committed epoch is
-        redundant by contract. Without the epoch check, a redelivery
-        under a FRESH streaming checkpoint (batch ids renumber → new
-        slice markers) would re-commit every slice — state-idempotent,
-        but not the exactly-once the marker protocol promises. While the
-        epoch is still open, unseen markers do apply (new files can join
-        an open epoch at any time)."""
-        if slice_marker is not None:
-            return (
-                slice_marker in set(snap.get("slices", []))
-                or epoch in set(snap["committed_epochs"])
-            )
-        return epoch in set(snap["committed_epochs"])
+        """Idempotence predicate. Whole-epoch commits dedupe on the epoch
+        id; slice commits (streaming micro-batches carrying part of an
+        epoch) dedupe on their own marker — and ALSO on the epoch id: an
+        epoch enters ``committed_epochs`` only when the applied-file union
+        covers the producer's declared ``_DONE`` set, so every possible
+        slice of a committed epoch is redundant by contract. Without the
+        epoch check, a redelivery under a FRESH streaming checkpoint
+        (batch ids renumber → new slice markers) would re-commit every
+        slice — state-idempotent, but not the exactly-once the marker
+        protocol promises. While the epoch is still open, unseen markers
+        do apply (new files can join an open epoch at any time)."""
+        return epoch in snap["committed_epochs"] or (
+            slice_marker is not None and slice_marker in snap.get("slices", [])
+        )
+
+    def skip_if_committed(
+        self,
+        epoch: int,
+        slice_marker: str | None = None,
+        mark_epoch: bool = True,
+        snap: dict | None = None,
+    ) -> dict | None:
+        """The exactly-once decision for an apply: ``None`` if the epoch
+        (or slice) still has to be applied, else the stats of the skip.
+        ``snap`` is the snapshot to decide against (default: the live
+        one).
+
+        A retried SLICE whose epoch has since been learned complete
+        (``mark_epoch=True`` — e.g. the producer's ``_DONE`` marker
+        appeared only after the slice was first applied) is the first to
+        know the epoch is done: the skip still promotes the epoch into
+        ``committed_epochs`` with a metadata-only commit, or the epoch
+        marker would be permanently missed (the data is state-idempotent
+        either way, but a later full replay would re-run the epoch)."""
+        snap = snap if snap is not None else self.snapshot()
+        if not self._already_committed(snap, epoch, slice_marker):
+            return None
+        if (
+            slice_marker is not None
+            and mark_epoch
+            and epoch not in snap["committed_epochs"]
+        ):
+            self.mark_epoch_committed(epoch)
+            return {
+                "epoch": epoch,
+                "skipped": True,
+                "reason": "slice already committed; epoch marker promoted",
+            }
+        return {"epoch": epoch, "skipped": True, "reason": "already committed"}
+
+    def mark_epoch_committed(self, epoch: int) -> dict:
+        """Metadata-only commit: promote ``epoch`` into
+        ``committed_epochs`` (and drop its partial-slice bookkeeping)
+        without touching any data files. Used when epoch completeness is
+        learned only AFTER the epoch's last slice was applied — e.g. the
+        producer's ``_DONE`` marker landed late, or a retried micro-batch
+        skipped via its slice marker once completeness became known."""
+
+        def promote(snap: dict):
+            if epoch in snap["committed_epochs"]:
+                return False
+            snap["committed_epochs"].append(epoch)
+            snap["epoch_files"].pop(str(epoch), None)
+            snap["stats"] = {"epoch_marker_promoted": epoch}
+
+        return self._swap(promote)
+
+    def _commit_epoch(
+        self,
+        add_files,
+        epoch: int,
+        schema: T.StructType,
+        stats: dict,
+        slice_marker: str | None,
+        mark_epoch: bool,
+        slice_files: list[str] | None,
+        aux_add: dict | None,
+        expected_n_buckets: int | None,
+    ) -> dict:
+        """The epoch-commit mutation shared by :meth:`commit` and
+        :meth:`commit_deltas`; only ``add_files(snap)`` — swap in a
+        rewrite, or append deltas — differs between them. Skips a
+        (raced) redelivery; refuses files written under a bucket count
+        the table no longer has; records the epoch and slice markers,
+        the slice's source files (the epoch's entry is dropped once the
+        epoch is marked — the epoch id subsumes it), the aux additions
+        and the schema union."""
+
+        def mutate(snap: dict):
+            if self._already_committed(snap, epoch, slice_marker):
+                return False
+            if expected_n_buckets is not None and snap["n_buckets"] != expected_n_buckets:
+                # a concurrent rebucket changed the bucket function: files
+                # keyed (and value-stamped) by the old one would corrupt
+                # every bucket-pruned read of their rows
+                raise CommitConflict(
+                    f"epoch {epoch}: bucket count changed ({expected_n_buckets} → "
+                    f"{snap['n_buckets']}) since the files were written — "
+                    "re-bucket and re-write"
+                )
+            add_files(snap)
+            if mark_epoch:
+                snap["committed_epochs"].append(epoch)
+            if slice_marker is not None:
+                snap["slices"].append(slice_marker)
+            efiles = snap["epoch_files"]
+            if slice_files is not None:
+                efiles[str(epoch)] = list(set(efiles.get(str(epoch), [])) | set(slice_files))
+            if mark_epoch:
+                efiles.pop(str(epoch), None)
+            self._add_aux(snap["aux"], aux_add)
+            snap["schema"] = self._union_with_current(snap, schema).jsonValue()
+            snap["stats"] = stats
+
+        return self._swap(mutate)
 
     @staticmethod
     def _union_with_current(snap: dict, schema: T.StructType) -> T.StructType:
@@ -472,38 +590,31 @@ class IceliteTable:
 
         return merge_schemas(T.StructType.fromJson(snap["schema"]), schema)
 
-    def mark_epoch_committed(self, epoch: int) -> dict:
-        """Metadata-only commit: promote ``epoch`` into
-        ``committed_epochs`` (and drop its partial-slice bookkeeping)
-        without touching any data files. Used when epoch completeness is
-        learned only AFTER the epoch's last slice was applied — e.g. the
-        producer's ``_DONE`` marker landed late, or a retried micro-batch
-        skipped via its slice marker once completeness became known."""
-        for _attempt in range(8):
-            snap = self.snapshot()
-            if epoch in set(snap["committed_epochs"]):
-                return snap
-            efiles = {k: list(v) for k, v in snap.get("epoch_files", {}).items()}
-            efiles.pop(str(epoch), None)
-            try:
-                self._write_snapshot(
-                    version=snap["version"] + 1,
-                    schema=T.StructType.fromJson(snap["schema"]),
-                    files={int(k): v for k, v in snap["files"].items()},
-                    committed_epochs=set(snap["committed_epochs"]) | {epoch},
-                    parent=snap["version"],
-                    stats={"epoch_marker_promoted": epoch},
-                    deltas={int(k): v for k, v in snap.get("deltas", {}).items()},
-                    slices=snap.get("slices", []),
-                    epoch_files=efiles,
-                    rebucket_progress=snap.get("rebucket_progress"),
-                    aux=snap.get("aux"),
-                    expected_current=f"snapshot-{snap['version']:06d}.json",
+    @staticmethod
+    def _add_aux(aux: dict, aux_add: dict | None) -> None:
+        """Fold a commit's additions into a snapshot's aux section:
+        ``aux_add`` maps artifact name → either a list of new relative
+        file paths, or a dict ``{"files": [...], "config": {...},
+        "rows_add": int}`` — ``config`` records the parameters the
+        artifact was BUILT with (first write wins; maintenance rebuilds
+        read it back instead of guessing defaults), and ``rows_add``
+        accumulates into the artifact's ``rows_total`` counter
+        (stale-fraction bookkeeping for index maintenance). Runs inside
+        the commit mutation, so a lost race re-appends against whatever
+        the winner recorded."""
+        for name, add in (aux_add or {}).items():
+            if isinstance(add, list):
+                add = {"files": add}
+            ent = aux.setdefault(name, {"files": []})
+            ent["files"] = sorted(
+                set(ent.get("files", [])) | set(add.get("files", []))
+            )
+            if add.get("config") is not None and "config" not in ent:
+                ent["config"] = dict(add["config"])
+            if "rows_add" in add:
+                ent["rows_total"] = int(ent.get("rows_total", 0)) + int(
+                    add["rows_add"]
                 )
-            except CommitConflict:
-                continue
-            return self.snapshot()
-        raise CommitConflict(f"epoch {epoch}: marker promotion lost 8 CAS races")
 
     def commit(
         self,
@@ -521,10 +632,7 @@ class IceliteTable:
     ) -> dict:
         """Copy-on-write commit: swap in the new files for affected
         buckets (absorbing any deltas they had), carry over the rest,
-        mark the epoch committed — atomically. Optimistic under
-        concurrency: a losing CAS re-reads and re-applies the metadata
-        mutation (the data files are already on disk and unreferenced
-        until this succeeds).
+        mark the epoch committed — atomically.
 
         ``base_snapshot`` is the snapshot the rewrite was COMPUTED from.
         A COW rewrite is only valid against the exact base it read: if a
@@ -538,110 +646,28 @@ class IceliteTable:
         re-validates the affected buckets against the base and raises
         :class:`CommitConflict` to the CALLER (who must re-read,
         re-merge, re-write) instead of retrying internally."""
-        for _attempt in range(8):
-            snap = self.snapshot()
-            if self._already_committed(snap, epoch, slice_marker):
-                return snap  # already committed (raced redelivery) — no-op
-            if (
-                expected_n_buckets is not None
-                and int(snap.get("n_buckets", 32)) != expected_n_buckets
-            ):
-                raise CommitConflict(
-                    f"epoch {epoch}: bucket count changed "
-                    f"({expected_n_buckets} → {snap.get('n_buckets')}) since "
-                    "the rewrite was computed — re-read and re-merge"
-                )
+
+        def swap_in(snap: dict) -> None:
             if base_snapshot is not None and snap["version"] != base_snapshot["version"]:
-                for b in affected:
-                    bs = str(b)
-                    if snap["files"].get(bs, []) != base_snapshot["files"].get(bs, []) or snap.get(
+                for b in map(str, affected):
+                    if snap["files"].get(b, []) != base_snapshot["files"].get(
+                        b, []
+                    ) or snap["deltas"].get(b, []) != base_snapshot.get(
                         "deltas", {}
-                    ).get(bs, []) != base_snapshot.get("deltas", {}).get(bs, []):
+                    ).get(b, []):
                         raise CommitConflict(
                             f"epoch {epoch}: bucket {b} changed since base "
                             f"v{base_snapshot['version']} (now v{snap['version']}) — "
                             "rewrite is stale; re-read and re-merge"
                         )
-            files = {int(k): v for k, v in snap["files"].items()}
-            deltas = {int(k): v for k, v in snap.get("deltas", {}).items()}
             for b in affected:
-                files[b] = new_bucket_files.get(b, [])
-                deltas.pop(b, None)  # rewritten base subsumes prior deltas
-            version = snap["version"] + 1
-            epochs = set(snap["committed_epochs"])
-            if mark_epoch:
-                epochs |= {epoch}
-            slices = set(snap.get("slices", []))
-            if slice_marker is not None:
-                slices |= {slice_marker}
-            efiles = self._union_epoch_files(snap, epoch, slice_files, mark_epoch)
-            try:
-                self._write_snapshot(
-                    version=version,
-                    schema=self._union_with_current(snap, schema),
-                    files=files,
-                    committed_epochs=epochs,
-                    parent=snap["version"],
-                    stats=stats,
-                    deltas=deltas,
-                    slices=slices,
-                    epoch_files=efiles,
-                    rebucket_progress=snap.get("rebucket_progress"),
-                    aux=self._merged_aux(snap, aux_add),
-                    expected_current=f"snapshot-{snap['version']:06d}.json",
-                )
-            except CommitConflict:
-                continue
-            return self.snapshot()
-        raise CommitConflict(f"epoch {epoch}: commit lost 8 CAS races")
+                snap["files"][str(b)] = new_bucket_files.get(b, [])
+                snap["deltas"].pop(str(b), None)  # the rewrite subsumes them
 
-    @staticmethod
-    def _union_epoch_files(
-        snap: dict, epoch: int, slice_files: list[str] | None, mark_epoch: bool
-    ) -> dict[str, list[str]]:
-        """Cumulative applied-file bookkeeping for partial epochs: union
-        this slice's source files into the epoch's entry; once the epoch
-        is marked committed the entry is dropped (the epoch id in
-        ``committed_epochs`` subsumes it)."""
-        efiles = {k: list(v) for k, v in snap.get("epoch_files", {}).items()}
-        if slice_files is not None:
-            efiles[str(epoch)] = sorted(
-                set(efiles.get(str(epoch), [])) | set(slice_files)
-            )
-        if mark_epoch:
-            efiles.pop(str(epoch), None)
-        return efiles
-
-    @staticmethod
-    def _merged_aux(snap: dict, aux_add: dict | None) -> dict:
-        """The snapshot's aux section with this commit's additions folded
-        in: ``aux_add`` maps artifact name → either a list of new
-        relative file paths, or a dict ``{"files": [...], "config":
-        {...}, "rows_add": int}`` — ``config`` records the parameters the
-        artifact was BUILT with (first write wins; maintenance rebuilds
-        read it back instead of guessing defaults — round-5 ADVICE), and
-        ``rows_add`` accumulates into the artifact's ``rows_total``
-        counter (stale-fraction bookkeeping for index maintenance).
-        Computed INSIDE the CAS retry loop from the fresh snapshot, so a
-        lost race re-appends against whatever the winner recorded. The
-        skip path (_already_committed) never reaches this — a
-        redelivered epoch adds no index files, keeping the aux artifact
-        exactly-once alongside the data."""
-        aux = {k: dict(v) for k, v in snap.get("aux", {}).items()}
-        for name, add in (aux_add or {}).items():
-            if isinstance(add, list):
-                add = {"files": add}
-            ent = aux.setdefault(name, {"files": []})
-            ent["files"] = sorted(
-                set(ent.get("files", [])) | set(add.get("files", []))
-            )
-            if add.get("config") is not None and "config" not in ent:
-                ent["config"] = dict(add["config"])
-            if "rows_add" in add:
-                ent["rows_total"] = int(ent.get("rows_total", 0)) + int(
-                    add["rows_add"]
-                )
-        return aux
+        return self._commit_epoch(
+            swap_in, epoch, schema, stats, slice_marker, mark_epoch,
+            slice_files, aux_add, expected_n_buckets,
+        )
 
     def commit_deltas(
         self,
@@ -657,57 +683,20 @@ class IceliteTable:
     ) -> dict:
         """Merge-on-read commit: append the epoch's delta files to each
         touched bucket; nothing is rewritten. Apply cost is O(batch).
-        Optimistic under concurrency (see :meth:`commit`).
 
         ``expected_n_buckets``: the bucket count the delta files were
-        WRITTEN under. A concurrent rebucket changes the bucket function,
-        and appending files keyed (and value-stamped) by the OLD function
-        would silently corrupt every bucket-pruned read of those rows —
-        so a mismatch raises :class:`CommitConflict` to the caller, who
-        must re-bucket the batch and re-write (apply_delta_epoch's retry
-        loop does)."""
-        for _attempt in range(8):
-            snap = self.snapshot()
-            if self._already_committed(snap, epoch, slice_marker):
-                return snap
-            if (
-                expected_n_buckets is not None
-                and int(snap.get("n_buckets", 32)) != expected_n_buckets
-            ):
-                raise CommitConflict(
-                    f"epoch {epoch}: bucket count changed "
-                    f"({expected_n_buckets} → {snap.get('n_buckets')}) since "
-                    "the delta files were written — re-bucket and re-write"
-                )
-            deltas = {int(k): list(v) for k, v in snap.get("deltas", {}).items()}
+        WRITTEN under; a mismatch (a concurrent rebucket) raises
+        :class:`CommitConflict` to the caller, who must re-bucket the
+        batch and re-write (apply_delta_epoch's retry loop does)."""
+
+        def append(snap: dict) -> None:
             for b, fl in new_bucket_files.items():
-                deltas.setdefault(b, []).extend(fl)
-            epochs = set(snap["committed_epochs"])
-            if mark_epoch:
-                epochs |= {epoch}
-            slices = set(snap.get("slices", []))
-            if slice_marker is not None:
-                slices |= {slice_marker}
-            efiles = self._union_epoch_files(snap, epoch, slice_files, mark_epoch)
-            try:
-                self._write_snapshot(
-                    version=snap["version"] + 1,
-                    schema=self._union_with_current(snap, schema),
-                    files={int(k): v for k, v in snap["files"].items()},
-                    committed_epochs=epochs,
-                    parent=snap["version"],
-                    stats=stats,
-                    deltas=deltas,
-                    slices=slices,
-                    epoch_files=efiles,
-                    rebucket_progress=snap.get("rebucket_progress"),
-                    aux=self._merged_aux(snap, aux_add),
-                    expected_current=f"snapshot-{snap['version']:06d}.json",
-                )
-            except CommitConflict:
-                continue
-            return self.snapshot()
-        raise CommitConflict(f"epoch {epoch}: delta commit lost 8 CAS races")
+                snap["deltas"].setdefault(str(b), []).extend(fl)
+
+        return self._commit_epoch(
+            append, epoch, schema, stats, slice_marker, mark_epoch,
+            slice_files, aux_add, expected_n_buckets,
+        )
 
     # --- maintenance ---------------------------------------------------------
 
@@ -727,36 +716,20 @@ class IceliteTable:
         instead — the same contract as compaction/rebucket. ``extra``
         overwrites additional entry keys (e.g. resetting ``rows_total``
         after a rebuild); recorded ``config`` is preserved."""
-        for _attempt in range(8):
-            snap = self.snapshot()
-            aux = {k: dict(v) for k, v in snap.get("aux", {}).items()}
-            cur = aux.get(name, {}).get("files", [])
+
+        def replace(snap: dict) -> None:
+            ent = snap["aux"].get(name, {})
+            cur = ent.get("files", [])
             if cur != base_files:
                 raise CommitConflict(
                     f"aux {name!r}: artifact changed since the rewrite's "
                     f"base ({len(cur)} vs {len(base_files)} files) — "
                     "re-read and re-run the rebuild"
                 )
-            aux[name] = {**aux.get(name, {}), "files": sorted(files), **(extra or {})}
-            try:
-                self._write_snapshot(
-                    version=snap["version"] + 1,
-                    schema=T.StructType.fromJson(snap["schema"]),
-                    files={int(k): v for k, v in snap["files"].items()},
-                    committed_epochs=set(snap["committed_epochs"]),
-                    parent=snap["version"],
-                    stats={"aux_rewrite": name},
-                    deltas={int(k): v for k, v in snap.get("deltas", {}).items()},
-                    slices=snap.get("slices", []),
-                    epoch_files=snap.get("epoch_files", {}),
-                    rebucket_progress=snap.get("rebucket_progress"),
-                    aux=aux,
-                    expected_current=f"snapshot-{snap['version']:06d}.json",
-                )
-            except CommitConflict:
-                continue  # CAS race on an UNRELATED commit — revalidate
-            return self.snapshot()
-        raise CommitConflict(f"aux {name!r}: rewrite lost 8 CAS races")
+            snap["aux"][name] = {**ent, "files": sorted(files), **(extra or {})}
+            snap["stats"] = {"aux_rewrite": name}
+
+        return self._swap(replace)
 
     def rebucket(
         self,
@@ -838,91 +811,63 @@ class IceliteTable:
                     out.append((gk, g))
             return out
 
-        for _attempt in range(8):
-            cur = self.snapshot()
-            pending = stale(cur)
-            if not pending:
-                # final swap: union every group's output per new bucket; one
-                # atomic commit flips bucketing, folds deltas, drops
-                # progress. Every base was just validated against `cur`, and
-                # the CAS is against `cur` — so dropping deltas is sound:
-                # everything the snapshot holds was folded into a rewrite.
-                files_new: dict[int, list[str]] = {}
-                for gk, _g in groups:
-                    for b, fl in groups_done[gk]["new_files"].items():
-                        files_new.setdefault(int(b), []).extend(fl)
-                try:
-                    self._write_snapshot(
-                        version=cur["version"] + 1,
-                        schema=T.StructType.fromJson(cur["schema"]),
-                        files={b: files_new.get(b, []) for b in sorted(files_new)},
-                        committed_epochs=set(cur["committed_epochs"]),
-                        parent=cur["version"],
-                        stats={"rebucket": True, "from": old_n, "to": new_n_buckets},
-                        n_buckets=new_n_buckets,
-                        deltas={},
-                        slices=cur.get("slices", []),
-                        epoch_files=cur.get("epoch_files", {}),
-                        aux=cur.get("aux"),
-                        expected_current=f"snapshot-{cur['version']:06d}.json",
-                    )
-                except CommitConflict:
-                    continue  # a commit raced the swap — revalidate its buckets
-                return self.snapshot()
+        def record_progress(s: dict) -> None:
+            # metadata-only (live table unchanged): persists resume state
+            s["rebucket_progress"] = {"to": int(new_n_buckets), "groups": dict(groups_done)}
+            s["stats"] = {"rebucket_progress_group": gk, "to": new_n_buckets}
 
-            for gk, g in pending:
+        def swap_in(s: dict) -> None:
+            # union every group's output per new bucket; one atomic commit
+            # flips bucketing, folds deltas, drops progress. Every base is
+            # validated against `s`, the snapshot this swap CASes on — so
+            # dropping deltas is sound: everything `s` holds was folded
+            # into a rewrite
+            if stale(s):
+                raise CommitConflict("rebucket: a commit changed rewritten buckets")
+            files_new: dict[int, list[str]] = {}
+            for gk, _g in groups:
+                for b, fl in groups_done[gk]["new_files"].items():
+                    files_new.setdefault(int(b), []).extend(fl)
+            s["files"] = {str(b): files_new[b] for b in sorted(files_new)}
+            s["deltas"] = {}
+            s["n_buckets"] = new_n_buckets
+            s["rebucket_progress"] = None
+            s["stats"] = {"rebucket": True, "from": old_n, "to": new_n_buckets}
+
+        # redo loop, not a CAS loop (_swap retries lost CAS races): each
+        # pass rewrites the groups whose recorded base no longer matches,
+        # then attempts the swap, which re-validates every group
+        for _cycle in range(8):
+            for gk, g in stale(self.snapshot()):
                 cur = self.snapshot()
-                version = cur["version"] + 1
                 # read the EXACT version whose base is recorded (a commit
-                # landing between this read and the rewrite is caught by
-                # the next validation pass), re-clustered by the NEW
-                # bucket function (write_merged's own repartition would
-                # use the OLD count)
+                # landing between this read and the swap is caught by the
+                # swap's validation), re-clustered by the NEW bucket
+                # function (write_merged's own repartition would use the
+                # OLD count); the data dir claims the version the progress
+                # commit will take, so rewrite dirs never collide
                 df = self.read_resolved(
                     spark, buckets=set(g), version=cur["version"]
                 ).withColumn(BUCKET_COL, bucket_expr(new_n_buckets, key))
                 new_files = self.write_merged(
                     df.repartition(new_n_buckets, F.col(key)),
                     epoch=-2,
-                    version=version,
+                    version=cur["version"] + 1,
                     repartition=False,
                 )
                 groups_done[gk] = {
                     "base": {str(b): base_of(cur, b) for b in g},
                     "new_files": {str(b): fl for b, fl in new_files.items()},
                 }
-                # metadata-only progress commit after EVERY group (live
-                # table unchanged): persists resume state and claims the
-                # version number so rewrite data dirs never collide. A
-                # CAS loss just means a concurrent commit landed —
-                # revalidate; the in-memory record survives if its base
-                # still matches.
-                try:
-                    self._write_snapshot(
-                        version=version,
-                        schema=T.StructType.fromJson(cur["schema"]),
-                        files={int(k): v for k, v in cur["files"].items()},
-                        committed_epochs=set(cur["committed_epochs"]),
-                        parent=cur["version"],
-                        stats={"rebucket_progress_group": gk, "to": new_n_buckets},
-                        n_buckets=old_n,
-                        deltas={int(k): v for k, v in cur.get("deltas", {}).items()},
-                        slices=cur.get("slices", []),
-                        epoch_files=cur.get("epoch_files", {}),
-                        rebucket_progress={
-                            "to": int(new_n_buckets),
-                            "groups": groups_done,
-                        },
-                        aux=cur.get("aux"),
-                        expected_current=f"snapshot-{cur['version']:06d}.json",
-                    )
-                except CommitConflict:
-                    break  # concurrent commit mid-rewrite — revalidate all
-        else:
-            raise CommitConflict(
-                "rebucket: lost 8 validation/CAS cycles to concurrent commits — "
-                "recorded groups are persisted; re-run to resume"
-            )
+                self._swap(record_progress)
+            try:
+                return self._swap(swap_in)
+            except CommitConflict:
+                continue  # a commit landed in rewritten buckets: redo them
+        raise CommitConflict(
+            "rebucket: lost 8 validation cycles to concurrent commits — "
+            "recorded groups are persisted; re-run to resume"
+        )
 
     def expire_snapshots(self, keep_last: int = 1, aux_min_age_s: float = 600.0) -> dict:
         """Iceberg-style snapshot expiry: delete snapshot manifests older
@@ -1049,28 +994,18 @@ class IceliteTable:
         if drop_tombstones:
             df = df.filter(~F.col("__deleted"))
         df = df.withColumn(BUCKET_COL, bucket_expr(n, self.key_cols()[0]))
-        version = snap["version"] + 1
-        new_files = self.write_merged(df, epoch=-1, version=version)
-        files = {int(k): v for k, v in snap["files"].items()}
-        deltas = {int(k): v for k, v in snap.get("deltas", {}).items()}
-        for b in buckets:
-            files[b] = new_files.get(b, [])
-            deltas.pop(b, None)
-        self._write_snapshot(
-            version=version,
-            schema=self.schema(),
-            files=files,
-            committed_epochs=set(snap["committed_epochs"]),
-            parent=snap["version"],
-            stats={"compaction": True, "buckets": sorted(buckets)},
-            deltas=deltas,
-            slices=snap.get("slices", []),
-            epoch_files=snap.get("epoch_files", {}),
-            rebucket_progress=snap.get("rebucket_progress"),
-            aux=snap.get("aux"),
-            # maintenance op: a CommitConflict escapes to the caller,
-            # who re-reads and re-runs (the rewritten data dir would be
-            # stale after a concurrent commit anyway)
-            expected_current=f"snapshot-{snap['version']:06d}.json",
-        )
-        return self.snapshot()
+        new_files = self.write_merged(df, epoch=-1, version=snap["version"] + 1)
+
+        def fold(s: dict) -> None:
+            # maintenance op: a commit since `snap` makes the rewrite stale
+            # — the conflict escapes to the caller, who re-reads and re-runs
+            if s["version"] != snap["version"]:
+                raise CommitConflict(
+                    f"compaction base v{snap['version']} moved to v{s['version']}"
+                )
+            for b in buckets:
+                s["files"][str(b)] = new_files.get(b, [])
+                s["deltas"].pop(str(b), None)
+            s["stats"] = {"compaction": True, "buckets": sorted(buckets)}
+
+        return self._swap(fold)

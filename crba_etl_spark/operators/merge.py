@@ -47,35 +47,6 @@ def batch_payload_schema(batch: DataFrame) -> T.StructType:
     )
 
 
-def _skip_stats(
-    table: IceliteTable,
-    snap: dict,
-    epoch: int,
-    slice_marker: str | None,
-    mark_epoch: bool,
-) -> dict:
-    """Stats for a skipped (already-committed) apply. If this was a
-    retried SLICE whose epoch has since been learned complete
-    (``mark_epoch=True`` — e.g. the producer's ``_DONE`` marker appeared
-    only after the slice was first applied), the skip must still promote
-    the epoch into ``committed_epochs`` with a metadata-only commit, or
-    the exactly-once epoch marker would be permanently missed (the data
-    is state-idempotent either way, but a later full replay would re-run
-    the whole epoch)."""
-    if (
-        slice_marker is not None
-        and mark_epoch
-        and epoch not in set(snap["committed_epochs"])
-    ):
-        table.mark_epoch_committed(epoch)
-        return {
-            "epoch": epoch,
-            "skipped": True,
-            "reason": "slice already committed; epoch marker promoted",
-        }
-    return {"epoch": epoch, "skipped": True, "reason": "already committed"}
-
-
 def merge_epoch(
     spark: SparkSession,
     table: IceliteTable,
@@ -103,12 +74,12 @@ def merge_epoch(
     from the fresh snapshot (Iceberg's serializable-merge retry), so a
     concurrent commit's rows are never silently dropped."""
     snap = table.snapshot()
-    if IceliteTable._already_committed(snap, epoch, slice_marker):
-        return _skip_stats(table, snap, epoch, slice_marker, mark_epoch)
+    if skip := table.skip_if_committed(epoch, slice_marker, mark_epoch, snap):
+        return skip
 
     t0 = time.monotonic()
-    n_buckets = table.n_buckets()
-    key_cols = table.key_cols()  # honor custom keys persisted in the snapshot
+    n_buckets = snap["n_buckets"]
+    key_cols = snap["key_cols"]  # honor custom keys persisted in the snapshot
 
     # the batch's own rows and bucket assignment never change across
     # retries — persist them once; the EVOLVED schema is re-derived per
@@ -151,13 +122,13 @@ def merge_epoch(
                 # rewrite was computed from stale data — re-read and
                 # re-merge from the fresh snapshot
                 snap = table.snapshot()
-                if IceliteTable._already_committed(snap, epoch, slice_marker):
-                    return _skip_stats(table, snap, epoch, slice_marker, mark_epoch)
-                if table.n_buckets() != n_buckets:
+                if skip := table.skip_if_committed(epoch, slice_marker, mark_epoch, snap):
+                    return skip
+                if snap["n_buckets"] != n_buckets:
                     # a REBUCKET raced in: the batch's bucket assignment
                     # (and thus the affected-bucket set) is stale — redo
                     # both under the new bucket function
-                    n_buckets = table.n_buckets()
+                    n_buckets = snap["n_buckets"]
                     raw.unpersist()
                     raw = reduced.withColumn(
                         BUCKET_COL, bucket_expr(n_buckets, key_cols[0])
@@ -320,13 +291,15 @@ def apply_delta_epoch(
     commit retried; a crashed attempt's dir is an unreferenced orphan.
     """
     snap = table.snapshot()
-    if IceliteTable._already_committed(snap, epoch, slice_marker):
-        return _skip_stats(table, snap, epoch, slice_marker, mark_epoch)
+    if skip := table.skip_if_committed(epoch, slice_marker, mark_epoch, snap):
+        return skip
 
     t0 = time.monotonic()
-    key_cols = table.key_cols()
+    key_cols = snap["key_cols"]
 
-    evolved = merge_schemas(table.schema(), batch_payload_schema(reduced))
+    evolved = merge_schemas(
+        T.StructType.fromJson(snap["schema"]), batch_payload_schema(reduced)
+    )
     payload_cols = [f.name for f in evolved.fields]
     batch = align_to(
         reduced,
@@ -336,7 +309,7 @@ def apply_delta_epoch(
         ),
     )
     for _attempt in range(8):
-        n_buckets = table.n_buckets()
+        n_buckets = snap["n_buckets"]
         delta = batch.select(
             *payload_cols,
             F.col("lsn").alias(LSN_COL),
@@ -351,7 +324,7 @@ def apply_delta_epoch(
             F.coalesce(F.sum(F.col(DELETED_COL).cast("int")), F.lit(0)).alias("dels"),
         )
 
-        version = table.snapshot()["version"] + 1
+        version = snap["version"] + 1
         new_files = table.write_merged(
             delta, epoch=epoch, version=version, repartition=not pre_partitioned
         )
@@ -419,9 +392,9 @@ def apply_delta_epoch(
             # a rebucket raced in — the written files are keyed by the
             # old bucket function; re-bucket and re-write from fresh state
             snap = table.snapshot()
-            if IceliteTable._already_committed(snap, epoch, slice_marker):
-                return _skip_stats(table, snap, epoch, slice_marker, mark_epoch)
-            if table.n_buckets() == n_buckets:
+            if skip := table.skip_if_committed(epoch, slice_marker, mark_epoch, snap):
+                return skip
+            if snap["n_buckets"] == n_buckets:
                 # not a rebucket: commit_deltas already exhausted its own
                 # CAS retries for an unrelated conflict — re-bucketing and
                 # fully re-writing the epoch's delta files under the SAME

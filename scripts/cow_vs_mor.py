@@ -26,7 +26,8 @@ import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_EVENTS = int(os.environ.get("CROSSOVER_EVENTS", "4000000"))
 N_EPOCHS = int(os.environ.get("CROSSOVER_EPOCHS", "8"))
@@ -109,8 +110,8 @@ def main() -> None:
         "COW remains right for bootstrap loads (epoch >> table) or",
         "read-dominated tables that cannot tolerate resolve-on-read.",
     ]
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/COW_VS_MOR.md", "w") as f:
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    with open(os.path.join(REPO, "BENCH", "COW_VS_MOR.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines))
     spark.stop()

@@ -1,17 +1,19 @@
 """Regenerate PLANS.md: captured physical plans for the load-bearing
-queries, with commentary on what each plan proves at scale. Run:
-    python scripts/dump_plans.py
-tests/test_plans.py builds the same sections, asserts the invariants
-below on the LIVE plans, and rewrites PLANS.md — so the document cannot
-drift from the code again (round-1 lesson: it did, after the max_by
-switch).
+queries, with commentary on what each plan proves at scale. Run from the
+repository root:
+    python scripts/dump_plans.py PLANS.md
+tests/test_plans.py builds the same sections and asserts the invariants
+on the LIVE plans (rendering the document into a temporary file), so the
+invariants the document describes cannot drift from the code (round-1
+lesson: they did, after the max_by switch).
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -97,15 +99,14 @@ then `bit_count(xor)` verifies; no quadratic scan.""",
     return sections
 
 
-def write_plans_md(sections, path="/root/repo/PLANS.md") -> None:
+def write_plans_md(sections, path: str) -> None:
     with open(path, "w") as f:
         f.write(
             "# PLANS — captured physical plans for the load-bearing operators\n\n"
-            "Regenerated by tests/test_plans.py on every pytest run (also:\n"
-            "`python scripts/dump_plans.py`); the same test asserts the key\n"
-            "invariants — one exchange in the CDC apply, partial `max_by`,\n"
-            "PushedFilters at the scan, broadcast dims, no nested-loop joins\n"
-            "in any LSH path — so this file cannot drift from the code.\n"
+            "Regenerated by `python scripts/dump_plans.py PLANS.md`;\n"
+            "tests/test_plans.py asserts the key invariants on the live plans\n"
+            "— one exchange in the CDC apply, partial `max_by`, PushedFilters\n"
+            "at the scan, broadcast dims, no nested-loop joins in any LSH path.\n"
             "(sf0.01 inputs; plan shapes are scale-independent.)\n"
         )
         for title, why, plan in sections:
@@ -113,11 +114,16 @@ def write_plans_md(sections, path="/root/repo/PLANS.md") -> None:
 
 
 def main() -> None:
+    import argparse
+
     from crba_etl_spark.session import get_spark
 
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("out", help="path of the markdown file to write, e.g. PLANS.md")
+    args = ap.parse_args()
     spark = get_spark(master="local[4]", app_name="dump-plans")
-    write_plans_md(build_sections(spark))
-    print("wrote PLANS.md")
+    write_plans_md(build_sections(spark), args.out)
+    print(f"wrote {args.out}")
     spark.stop()
 
 

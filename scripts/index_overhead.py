@@ -19,7 +19,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 EVENTS = int(os.environ.get("IDX_BENCH_EVENTS", "600000"))
 EPOCHS = 3
@@ -151,7 +152,7 @@ def main() -> None:
         "marginal cost does not grow as the indexed corpus grows.",
         "",
     ]
-    out = "/root/repo/BENCH/INDEX_OVERHEAD.md"
+    out = os.path.join(REPO, "BENCH", "INDEX_OVERHEAD.md")
     with open(out, "w") as f:
         f.write("\n".join(lines))
     print("\n".join(lines))

@@ -29,7 +29,8 @@ import random
 import string
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F, types as T  # noqa: E402
 
@@ -177,7 +178,7 @@ def main() -> None:
         "the oracle.",
         "",
     ]
-    with open("/root/repo/BENCH/REPROBE_RECALL.md", "w") as f:
+    with open(os.path.join(REPO, "BENCH", "REPROBE_RECALL.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote BENCH/REPROBE_RECALL.md")
     spark.stop()

@@ -1,10 +1,13 @@
+import os
 import shutil
 import sys
 import tempfile
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: repository root, so the package imports from any checkout location
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from crba_etl_spark.session import get_spark  # noqa: E402
 

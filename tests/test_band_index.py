@@ -436,3 +436,39 @@ def test_engine_maintains_index_across_epochs(spark, tmpdir_):
         for r in text_dedup.incremental_lsh_candidates(probe, final_docs).collect()
     }
     assert fresh <= got
+
+
+def test_labels_compaction_fires_in_cow_mode(spark, tmpdir_):
+    """The labels-delta threshold is table-state maintenance in every
+    mode: a COW engine (no data compaction at all) keeps no more than
+    ``labels_compact_epochs`` label tag dirs after each epoch, and the
+    resolved labeling equals that of an engine that never compacts."""
+    from crba_etl_spark.band_index import LABELS_AUX, DedupLabels
+
+    t1 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    epochs = [
+        [(1, 0, "I", "a", 0, "user", t1, None, 0, 0),
+         (2, 0, "I", "b", 0, "user", t1 + " x", None, 1, 1)],
+        [(3, 1, "I", "c", 0, "user", t1 + " y", None, 2, 2)],
+        [(4, 2, "I", "d", 0, "user", "an unrelated sentence about spark", None, 3, 3),
+         (5, 2, "U", "a", 0, "user", t1 + " z", None, 4, 4)],
+    ]
+    eng = CDCEngine(
+        spark, os.path.join(tmpdir_, "cow"), n_buckets=4, mode="cow",
+        dedup_labels=True, labels_compact_epochs=2,
+    )
+    ref = CDCEngine(
+        spark, os.path.join(tmpdir_, "ref"), n_buckets=4, mode="cow",
+        dedup_labels=True, labels_compact_epochs=0,
+    )
+
+    def labels(e):
+        rows = DedupLabels(e.table, e.lsh_index).read(spark).collect()
+        return {r["node"]: r["label"] for r in rows}
+
+    for k, rows in enumerate(epochs):
+        eng.apply_epoch(make_events(spark, rows), k)
+        ref.apply_epoch(make_events(spark, rows), k)
+        files = eng.table.aux()[LABELS_AUX]["files"]
+        assert len({p.split("/")[2] for p in files}) <= 2, k
+        assert labels(eng) == labels(ref), k

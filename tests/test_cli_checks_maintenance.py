@@ -9,7 +9,7 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import make_events
+from conftest import REPO, make_events
 from crba_etl_spark.checks import run_checks
 from crba_etl_spark.engine import CDCEngine
 from crba_etl_spark.gen import StreamSpec, generate_stream, oracle_final
@@ -30,7 +30,7 @@ def test_cli_replay_compact_check_metrics(stream, tmpdir_):
     def cli(*args):
         return subprocess.run(
             [sys.executable, "-m", "crba_etl_spark", *args],
-            capture_output=True, text=True, cwd="/root/repo", env=env, timeout=420,
+            capture_output=True, text=True, cwd=REPO, env=env, timeout=420,
         )
 
     r = cli("replay", "--events", stream, "--table", table, "--n-buckets", "4")
@@ -65,7 +65,7 @@ def test_cli_lsh_index_and_rebuild(stream, tmpdir_):
     def cli(*args):
         return subprocess.run(
             [sys.executable, "-m", "crba_etl_spark", *args],
-            capture_output=True, text=True, cwd="/root/repo", env=env, timeout=600,
+            capture_output=True, text=True, cwd=REPO, env=env, timeout=600,
         )
 
     r = cli(
@@ -207,7 +207,7 @@ def test_check_html_report_renders(spark, stream, tmpdir_):
     r = subprocess.run(
         [sys.executable, "-m", "crba_etl_spark", "check", "--table", table,
          "--n-buckets", "4", "--html", out_html],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
         env={**os.environ, "SPARK_GRAFT_CPUS": "4"}, timeout=420,
     )
     assert r.returncode == 0, r.stderr[-2000:]

@@ -1,12 +1,16 @@
 """Physical-plan invariants, asserted on LIVE plans (round-1 lesson:
 PLANS.md drifted after an operator change because it was prose-only).
-This test also rewrites PLANS.md from the same captured plans, so the
-committed document always matches the code that passed CI."""
+The test also renders the plans document from the same captured plans —
+into a temporary file, so a test run never rewrites the tracked PLANS.md
+(regenerate that with ``python scripts/dump_plans.py PLANS.md``)."""
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+)
 
 from dump_plans import SF, build_sections, plan_of, write_plans_md
 
@@ -17,7 +21,7 @@ def _by_title(sections):
     return {t.split(" (")[0]: p for t, _w, p in sections}
 
 
-def test_plan_invariants_and_regenerate_plans_md(spark):
+def test_plan_invariants_and_regenerate_plans_md(spark, tmp_path):
     sections = build_sections(spark)
     plans = _by_title(sections)
 
@@ -141,4 +145,7 @@ def test_plan_invariants_and_regenerate_plans_md(spark):
         if qname not in SCALAR_BROADCAST_OK:
             assert "BroadcastNestedLoopJoin" not in p, qname
 
-    write_plans_md(sections)
+    out = tmp_path / "PLANS.md"
+    write_plans_md(sections, str(out))
+    doc = out.read_text()
+    assert all(f"## {title}" in doc for title, _w, _p in sections)

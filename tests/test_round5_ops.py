@@ -16,7 +16,7 @@ import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from crba_etl_spark.cache import release_caches  # noqa: E402
 from crba_etl_spark.operators import text_analysis, text_dedup  # noqa: E402

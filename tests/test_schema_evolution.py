@@ -88,3 +88,35 @@ def test_mixed_epoch_replay_old_then_new(spark, tmpdir_, mode):
         ("c2", 0): ("b", "tool_1"),
         ("c3", 0): ("c", None),
     }
+
+
+def test_replay_epoch_whose_files_disagree_on_schema(spark, tmpdir_):
+    """One epoch's files can straddle the evolution point: the first file
+    lacks `tool`, the second carries it. Replay must not read the whole
+    epoch with the first file's footer schema, which would drop the
+    column's values."""
+    import glob
+    import json
+    import shutil
+
+    pre = T.StructType([f for f in TRANSCRIPT.fields if f.name != "tool"])
+    events = os.path.join(tmpdir_, "events", "epoch=0")
+    os.makedirs(events)
+    batches = [
+        make_events(spark, [(1, 0, "I", "c1", 0, "user", "old", None, 0, 0)], with_tool=False),
+        make_events(spark, [(2, 0, "I", "c2", 0, "user", "new", "search", 1, 1)]),
+    ]
+    for i, df in enumerate(batches):
+        out = os.path.join(tmpdir_, f"w{i}")
+        df.coalesce(1).write.parquet(out)
+        (part,) = glob.glob(os.path.join(out, "part-*.parquet"))
+        shutil.move(part, os.path.join(events, f"part-{i}.parquet"))
+    with open(os.path.join(events, "_DONE"), "w") as f:
+        json.dump({"files": ["part-0.parquet", "part-1.parquet"]}, f)
+
+    eng = CDCEngine(
+        spark, os.path.join(tmpdir_, "t"), payload_schema=pre, n_buckets=4
+    )
+    assert eng.replay(os.path.join(tmpdir_, "events"))["epochs_applied"] == [0]
+    got = {r.conv_id: r.tool for r in eng.read_final().collect()}
+    assert got == {"c1": None, "c2": "search"}
