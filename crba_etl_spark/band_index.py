@@ -39,14 +39,27 @@ form a standing 10^10-event ingest needs.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
+from collections import Counter, defaultdict
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .cache import persist_tracked, release_caches
 from .icelite import IceliteTable
-from .operators.text_dedup import _band_rows, minhash_signatures
+from .operators.graph import _local_frame
+from .operators.text_dedup import (
+    N_BANDS,
+    _band_hash_cols,
+    _band_rows,
+    _bkey,
+    _minhash_agg,
+    _slot_key,
+    minhash_signatures,
+)
+from .spread import spread_compute
 
 #: name of this artifact in the snapshot's aux section
 AUX_NAME = "lsh_bands"
@@ -95,6 +108,36 @@ BAND_SCHEMA = T.StructType(
 )
 
 
+@dataclass
+class BatchBands:
+    """A batch's LSH footprint on the driver (:meth:`LshBandIndex.batch_bands`):
+    O(batch) keys, no text."""
+
+    spark: SparkSession
+    epoch: int
+    #: writer K of this epoch's band files
+    k: int
+    #: doc_id -> md5(text), every live document with text
+    md5: dict[str, str]
+    #: doc_id -> band_hash per band_idx
+    bands: dict[str, tuple[str, ...]]
+    #: K -> band_hash -> pmod(hash(band_hash), K)
+    parts: dict[int, dict[str, int]]
+
+    def index_rows(self) -> list[tuple]:
+        """(doc_id, band_idx, band_hash, __epoch, __bpart) of every
+        document, clustered by partition and band_hash."""
+        part = self.parts[self.k]
+        return sorted(
+            (
+                (doc, b, h, self.epoch, f"{self.k}-{part[h]}")
+                for doc, hs in self.bands.items()
+                for b, h in enumerate(hs)
+            ),
+            key=lambda r: (r[4], r[2], r[0]),
+        )
+
+
 class LshBandIndex:
     """The persisted band table of an :class:`IceliteTable`.
 
@@ -109,32 +152,93 @@ class LshBandIndex:
 
     # --- write path (engine side) -------------------------------------
 
-    def rows_for(self, batch: DataFrame, epoch: int) -> DataFrame:
-        """Band rows for a reduced batch's LIVE rows (tombstones carry no
-        text to index). One shingle→MinHash→band pass over the batch —
-        O(batch), independent of table size."""
+    def _live(self, batch: DataFrame) -> DataFrame:
+        """A batch's LIVE rows with text (tombstones carry no text to
+        index)."""
         if "op" in batch.columns:
             batch = batch.filter(F.col("op") != "D")
-        docs = batch.select(
+        return batch.filter(F.col(self.text_col).isNotNull())
+
+    def _live_docs(self, batch: DataFrame) -> DataFrame:
+        """(doc_id, text) of :meth:`_live` rows."""
+        return self._live(batch).select(
             F.concat_ws("#", *self.table.key_cols()).alias("doc_id"),
             F.col(self.text_col).alias("text"),
-        ).filter(F.col("text").isNotNull())
-        return _band_rows(minhash_signatures(docs), "doc_id").withColumn(
+        )
+
+    def rows_for(self, batch: DataFrame, epoch: int) -> DataFrame:
+        """Band rows for a reduced batch's live rows as a distributed
+        relation — one shingle→MinHash→band pass over the batch, O(batch)
+        and independent of table size. The rebuild path and an engine
+        without labels write these; :meth:`batch_bands` is the collected
+        form."""
+        sig = minhash_signatures(self._live_docs(batch))
+        return _band_rows(sig, "doc_id").withColumn(
             "__epoch", F.lit(epoch).cast("long")
         )
 
-    def write_epoch(self, rows: DataFrame, tag: str) -> list[str]:
+    def batch_bands(self, batch: DataFrame, epoch: int) -> "BatchBands":
+        """The batch's whole LSH footprint, collected to the driver in ONE
+        Spark pass: per live document its md5(text), its band hashes, and
+        each band hash's ``__bpart`` part id under this epoch's writer K
+        and every K the index files were written under. The band write
+        and the label delta both work from it, so the signature pass
+        runs once per epoch. Raises ``ValueError`` when a ``doc_id``
+        carries two texts (the signature would mix them)."""
+        k = self.table.n_buckets()
+        ks = sorted({k} | {p[0] for p in map(self._file_part, self.files()) if p})
+        # grouped by the KEY columns, not the derived doc_id: a batch the
+        # engine already clustered by key (the MOR bucket repartition,
+        # the COW reduce) then aggregates without another exchange
+        kc = self.table.key_cols()
+        docs = self._live(batch).select(
+            *kc, F.col(self.text_col).alias("text"), F.md5(self.text_col).alias("__d")
+        )
+        sig = _minhash_agg(spread_compute(docs), [*kc, "__d"])
+        bh = F.array(*_band_hash_cols())
+        rows = sig.select(
+            F.concat_ws("#", *kc).alias("doc_id"),
+            "__d",
+            bh.alias("bh"),
+            *[
+                F.array(
+                    *[F.pmod(F.hash(bh[b]), F.lit(kk)) for b in range(N_BANDS)]
+                ).alias(f"p{kk}")
+                for kk in ks
+            ],
+        ).collect()
+        out = BatchBands(batch.sparkSession, epoch, k, {}, {}, {kk: {} for kk in ks})
+        for r in rows:
+            if r["doc_id"] in out.md5:
+                raise ValueError(
+                    f"doc_id {r['doc_id']!r} occurs with two texts in one batch;"
+                    " a batch must hold one row per document"
+                )
+            out.md5[r["doc_id"]] = r["__d"]
+            out.bands[r["doc_id"]] = tuple(r["bh"])
+            for kk in ks:
+                out.parts[kk].update(zip(r["bh"], r[f"p{kk}"]))
+        return out
+
+    def write_epoch(self, rows: "DataFrame | BatchBands", tag: str) -> list[str]:
         """Write one commit's band rows under ``index/lsh/<tag>``,
         DIRECTORY-PARTITIONED by ``__bpart = "<K>-<pmod(hash(band_hash),
-        K)>"`` (K = the table's bucket count at write time) and clustered
-        by ``band_hash`` within each partition, so per-epoch candidate
-        generation can read ONLY the partitions the batch's band hashes
-        hit instead of streaming the whole persisted index (round-6
-        VERDICT #1 — the one remaining O(corpus)-per-epoch scan). The
-        ``repartition(K, band_hash)`` partition id is the identical
-        murmur3 ``pmod(hash(·), K)`` as the ``__bpart`` value (the same
-        alignment trick as icelite.bucket_expr), so the partitioned
-        write emits one file per hit directory with no extra exchange.
+        K)>"`` (K = the table's bucket count at write time) with all rows
+        of a band_hash in one file of its partition, so per-epoch
+        candidate generation can read ONLY the partitions the batch's
+        band hashes hit instead of streaming the whole persisted index
+        (round-6 VERDICT #1 — the one remaining O(corpus)-per-epoch
+        scan).
+
+        ``rows`` is either a distributed band relation (doc_id,
+        band_idx, band_hash, __epoch) — hashed here and
+        ``repartition(K, band_hash)``-ed, whose partition id is the
+        identical murmur3 ``pmod(hash(·), K)`` as the ``__bpart`` value
+        (the same alignment trick as icelite.bucket_expr), so the write
+        emits one file per hit directory — or a collected
+        :class:`BatchBands`, whose part ids were computed in its Spark
+        pass: its rows are written from the driver by ONE task, one file
+        per hit directory, with no exchange.
 
         K rides IN the partition value, making every file self-
         describing: epochs written under different bucket counts (a
@@ -152,21 +256,22 @@ class LshBandIndex:
         out = os.path.join(self.table.root, rel)
         if os.path.exists(out):
             shutil.rmtree(out)
-        k = self.table.n_buckets()
-        (
-            rows.withColumn(
+        if isinstance(rows, BatchBands):
+            schema = T.StructType(
+                [*BAND_SCHEMA.fields, T.StructField("__bpart", T.StringType())]
+            )
+            df = _local_frame(rows.spark, schema, rows.index_rows()).coalesce(1)
+        else:
+            k = self.table.n_buckets()
+            df = rows.withColumn(
                 "__bpart",
                 F.concat_ws(
                     "-",
                     F.lit(k),
                     F.pmod(F.hash(F.col("band_hash")), F.lit(k)).cast("string"),
                 ),
-            )
-            .repartition(k, F.col("band_hash"))
-            .write.partitionBy("__bpart")
-            .mode("overwrite")
-            .parquet(out)
-        )
+            ).repartition(k, F.col("band_hash"))
+        df.write.partitionBy("__bpart").mode("overwrite").parquet(out)
         files = []
         for root_, _dirs, fnames in os.walk(out):
             for f in fnames:
@@ -202,11 +307,8 @@ class LshBandIndex:
         are always kept (conservative, read-compatible)."""
         allf = self.files()
         ks = {p[0] for p in map(self._file_part, allf) if p is not None}
-        if not ks:
-            return allf
-        hit: dict[int, set[int]] = {}
-        for k in sorted(ks):
-            hit[k] = {
+        hit = {
+            k: {
                 r[0]
                 for r in batch_bands.select(
                     F.pmod(F.hash(F.col("band_hash")), F.lit(k)).alias("p")
@@ -214,11 +316,93 @@ class LshBandIndex:
                 .distinct()
                 .collect()
             }
+            for k in sorted(ks)
+        }
+        return self._files_hit(allf, hit)
+
+    def _files_hit(self, files: list[str], hit: dict[int, set[int]]) -> list[str]:
+        """``files`` in a hit ``(K, part)`` partition, plus the files
+        ``hit`` cannot rule out: legacy ones and those of a K it lacks."""
         out = []
-        for f in allf:
+        for f in files:
             fp = self._file_part(f)
-            if fp is None or fp[1] in hit.get(fp[0], set()):
+            if fp is None or fp[0] not in hit or fp[1] in hit[fp[0]]:
                 out.append(f)
+        return out
+
+    def probe(
+        self,
+        bands: BatchBands,
+        bkeys: set[str],
+        max_bucket: int | None,
+        panel_size: int,
+        bucket_of,
+    ) -> list:
+        """The indexed side of the buckets ``bkeys`` (``band_idx:band_hash``
+        of the batch), read from the index files whose partitions they
+        hit — none when the index is empty. Tuples (bkey, kind, slot,
+        doc_id, bucket): kind ``m`` for every member of a bucket within
+        ``max_bucket`` rows (all members when it is None); for an
+        oversized bucket, kind ``r`` for its min doc_id and kind ``p``
+        for its member minimizing md5(slot‖doc_id), slot <
+        ``panel_size`` (the indexed half of
+        :func:`text_dedup.probe_panel`). ``bucket`` is the doc's table
+        bucket (``bucket_of``, a Column function of ``doc_id``), so its
+        text can be read bucket-pruned.
+
+        Capped, this is two passes: a partially aggregated size count
+        per hit bucket, then a scan for the members of the small ones.
+        An oversized bucket can be corpus-sized (shared boilerplate), so
+        its members are never gathered in one place."""
+        hit = {
+            k: {bands.parts[k][key.split(":", 1)[1]] for key in bkeys}
+            for k in bands.parts
+        }
+        files = self._files_hit(self.files(), hit)
+        if not files or not bkeys:
+            return []
+        rows = (
+            self.read(bands.spark, files)
+            .select(_bkey().alias("bkey"), "doc_id")
+            .filter(F.col("bkey").isin(sorted(bkeys)))
+        )
+        members = rows.select(
+            "bkey",
+            F.lit("m").alias("kind"),
+            F.lit(-1).alias("slot"),
+            "doc_id",
+            bucket_of(F.col("doc_id")).alias("bucket"),
+        )
+        if max_bucket is None:
+            return [tuple(r) for r in members.collect()]
+        picks = ["__rep"] + [f"__p{j}" for j in range(panel_size)]
+        sizes = (
+            rows.groupBy("bkey")
+            .agg(
+                F.count(F.lit(1)).alias("__n"),
+                F.min("doc_id").alias("__rep"),
+                *[
+                    F.min_by("doc_id", _slot_key(j)).alias(f"__p{j}")
+                    for j in range(panel_size)
+                ],
+            )
+            .select(
+                "bkey",
+                "__n",
+                *[F.struct(F.col(c), bucket_of(F.col(c))).alias(c) for c in picks],
+            )
+            .collect()
+        )
+        out, small = [], []
+        for r in sizes:
+            if r["__n"] <= max_bucket:
+                small.append(r["bkey"])
+                continue
+            out.append((r["bkey"], "r", -1, *r["__rep"]))
+            out += [(r["bkey"], "p", j, *r[f"__p{j}"]) for j in range(panel_size)]
+        if small:
+            small_members = members.filter(F.col("bkey").isin(small))
+            out += [tuple(r) for r in small_members.collect()]
         return out
 
     def read(
@@ -268,8 +452,6 @@ class LshBandIndex:
         (re-probe targets, read from the index files only); ``star`` =
         (bkey, member, rep) with member = the NEW doc whose candidate
         edge was capped to the bucket representative."""
-        from .operators.text_dedup import _bkey
-
         nb_rel = _band_rows(
             persist_tracked(minhash_signatures(new_docs, id_col)), id_col
         )
@@ -393,23 +575,96 @@ LABELS_SCHEMA = T.StructType(
 )
 
 
+def _norm(a: str, b: str) -> tuple[str, str]:
+    return (a, b) if a <= b else (b, a)
+
+
+def _batch_buckets(
+    bands: dict[str, tuple[str, ...]], max_bucket: int | None
+) -> tuple[Counter, dict[str, dict[str, str]], list[tuple[str, str, str]]]:
+    """In-batch LSH buckets on the driver — the same output as
+    ``text_dedup.minhash_lsh_candidates(docs, max_bucket=...,
+    return_oversized=True)`` over the documents' band hashes (tested
+    side by side): ``(pairs, mem, star)`` with pairs = Counter of
+    (id_a < id_b) → n_shared_bands, mem = bkey → {doc_id: rep} of
+    oversized buckets, star = (bkey, member, rep) capped edges."""
+    buckets: dict[tuple[int, str], list[str]] = defaultdict(list)
+    for doc, hs in bands.items():
+        for b, h in enumerate(hs):
+            buckets[(b, h)].append(doc)
+    pairs: Counter = Counter()
+    mem: dict[str, dict[str, str]] = {}
+    star = []
+    for (b, h), docs in buckets.items():
+        docs.sort()
+        if max_bucket is None or len(docs) <= max_bucket:
+            pairs.update(
+                (x, y) for i, x in enumerate(docs) for y in docs[i + 1 :]
+            )
+            continue
+        rep, bkey = docs[0], f"{b}:{h}"
+        mem[bkey] = {d: rep for d in docs}
+        pairs.update((rep, d) for d in docs[1:])
+        star += [(bkey, d, rep) for d in docs[1:]]
+    return pairs, mem, star
+
+
+def _indexed_buckets(bands: dict[str, tuple[str, ...]], probed: list[tuple]):
+    """New×existing buckets on the driver from
+    :meth:`LshBandIndex.probe`'s tuples — the same pairs and star edges
+    as ``LshBandIndex.candidates(..., return_oversized=True)`` (tested
+    side by side). Returns ``(pairs, star, picks, bucket)``: the set of
+    (new_id, existing_id), the (bkey, member, rep) capped edges, bkey →
+    slot → the indexed panel pick, and doc_id → table bucket of every
+    indexed doc seen."""
+    bucket: dict[str, int] = {}
+    small: dict[str, set[str]] = defaultdict(set)
+    big_rep: dict[str, str] = {}
+    picks: dict[str, dict[int, str]] = defaultdict(dict)
+    for bkey, kind, slot, doc, b in probed:
+        bucket[doc] = b
+        if kind == "m":
+            small[bkey].add(doc)
+        elif kind == "r":
+            big_rep[bkey] = doc
+        else:
+            picks[bkey][slot] = doc
+    pairs, star = set(), []
+    for doc, hs in bands.items():
+        for bkey in (f"{b}:{h}" for b, h in enumerate(hs)):
+            pairs.update((doc, e) for e in small.get(bkey, ()) if e != doc)
+            rep = big_rep.get(bkey, doc)
+            if rep != doc:
+                pairs.add((doc, rep))
+                star.append((bkey, doc, rep))
+    return pairs, star, picks, bucket
+
+
+def _panel_pick(slot: int, docs) -> str:
+    """The member minimizing md5(slot‖doc_id) — one slot of
+    ``text_dedup.probe_panel``."""
+    return min(
+        docs, key=lambda d: hashlib.md5(f"{slot}|{d}".encode()).hexdigest()
+    )
+
+
 class DedupLabels:
     """Near-duplicate GROUP LABELS maintained incrementally at epoch
     commit — the full dedup pipeline inside the exactly-once ingest
     loop: batch → candidates from the persisted band index (new×existing)
-    plus an in-batch LSH self-join (new×new) → exact-Jaccard verification
-    against current text → ``merge_components_delta`` fold into the
-    persisted labeling.
+    plus in-batch LSH buckets (new×new) → exact-Jaccard verification
+    against current text → union-find fold into the persisted labeling.
 
     Storage is icelite-MOR-shaped: per-epoch parquet deltas of ONLY the
     rows whose label is new or changed, recorded in the snapshot aux
     section (same atomic CAS as the data and the band index); reads
-    resolve latest-per-node by ``__epoch``. Per-batch cost: the corpus
-    appears only as (a) the band-file equi-join (no re-shingling), (b) a
-    bucket-PRUNED text scan of just the candidate partners for
-    verification, and (c) streamed broadcast probes of the labels
-    relation inside ``merge_components_delta`` — no corpus shuffle, no
-    corpus rewrite.
+    resolve the smallest label per node. Per-batch cost: the batch is
+    collected to the driver as O(batch) keys (:class:`BatchBands`, no
+    text), and the corpus appears only in Spark passes that are
+    streamed against broadcast key lists — the band-file probe of the
+    hit partitions (no re-shingling), a bucket-PRUNED text scan of the
+    candidate partners outside the batch, and the labels probe — no
+    corpus shuffle, no corpus rewrite.
 
     Semantics: labels are the canonical min-labeling; groups are
     MONOTONE (an update to a member's text can add edges, never remove
@@ -430,9 +685,10 @@ class DedupLabels:
         self.table = table
         self.index = index
         self.threshold = threshold
-        #: checkpoint dir for the (rare) distributed components fallback
-        #: — makes mid-loop executor loss survivable on a real cluster;
-        #: None = fast localCheckpoint (see operators.graph._materialize)
+        #: checkpoint dir for the verification result — makes an
+        #: executor loss while it is collected survivable on a real
+        #: cluster; None = fast localCheckpoint (see
+        #: operators.graph._materialize)
         self.reliable_checkpoint = reliable_checkpoint
         #: oversized-band-bucket cap (see LshBandIndex.candidates /
         #: minhash_lsh_candidates) — ON BY DEFAULT since round 6. The
@@ -487,243 +743,179 @@ class DedupLabels:
             .agg(F.min("label").alias("label"))
         )
 
-    def _batch_docs(self, batch: DataFrame) -> DataFrame:
-        if "op" in batch.columns:
-            batch = batch.filter(F.col("op") != "D")
-        return batch.select(
-            F.concat_ws("#", *self.table.key_cols()).alias("doc_id"),
-            F.col(self.index.text_col).alias("text"),
-        ).filter(F.col("text").isNotNull())
+    def _bucket_of(self, doc_id) -> F.Column:
+        """Table bucket of a ``doc_id`` (the key columns joined by ``#``):
+        the bucket function over its first key column."""
+        kc = self.table.key_cols()
+        conv = F.substring_index(doc_id, "#", 1) if len(kc) > 1 else doc_id
+        ftype = self.table.schema()[kc[0]].dataType
+        return F.pmod(F.hash(conv.cast(ftype)), F.lit(self.table.n_buckets())).cast(
+            "int"
+        )
 
     def delta_for_epoch(
-        self, spark: SparkSession, batch: DataFrame, epoch: int
+        self,
+        spark: SparkSession,
+        batch: DataFrame,
+        epoch: int,
+        bands: BatchBands | None = None,
     ) -> DataFrame:
-        """Label-delta rows (node, label, __epoch) this batch causes.
-        Must run against the PRE-commit snapshot (the index/labels as of
-        the previous epoch — the batch's own band rows join the snapshot
-        only with this epoch's commit).
+        """Label-delta rows (node, label, __epoch) this batch causes, as a
+        one-partition relation of driver rows. Must run against the
+        PRE-commit snapshot (the index/labels as of the previous epoch —
+        the batch's own band rows join the snapshot only with this
+        epoch's commit). ``bands`` is the batch's collected footprint
+        when the caller already has it (the engine shares it with the
+        band write); otherwise it is collected here.
 
-        Per-epoch cost (round-5 VERDICT #1, the ~57 s/epoch fixed floor,
-        now cut): the persisted labels are read+resolved ONCE per epoch
-        (tracked persist — they feed the probe and the relabel join);
-        the components fold runs DRIVER-SIDE over the collected verified
-        edge set (O(batch) rows) instead of the ~10-job distributed star
-        loop — see graph.merge_components_delta's driver fast path; and
-        re-probe verification rides the same plan as the primary
-        verification, costing zero extra jobs when no star edge fails."""
-        from .operators.graph import merge_components_delta
-        from .operators.text_dedup import (
-            jaccard_verify_pairs,
-            minhash_lsh_candidates,
-            probe_panel,
-        )
+        One path, whatever the batch size, on the premise the driver
+        union-find already made: the batch's keys and candidate pairs fit
+        on the driver. Spark does the hashing (:meth:`LshBandIndex.
+        batch_bands`), the index probe (:meth:`LshBandIndex.probe`, only
+        when the index has files), one Jaccard verification (the
+        partner text read only when a partner lies outside the batch)
+        and the labels probes. The driver does the rest:
 
-        bd_all = self._batch_docs(batch)
-        prev = persist_tracked(self.read(spark))
-        # EXACT-dup collapse before LSH (the standard pipeline order, and
-        # a scale requirement): k identical texts in one batch would band
-        # into a k-clique — k² candidate pairs through verification —
-        # while contributing one node of information. One representative
-        # per distinct text runs the LSH/verify path; the other members
-        # join its component through trivial exact edges.
-        dg = persist_tracked(bd_all.withColumn("__d", F.md5("text")))
-        reps = dg.groupBy("__d").agg(F.min("doc_id").alias("__rep"))
-        with_rep = dg.join(F.broadcast(reps), "__d")
-        bd = with_rep.filter(F.col("doc_id") == F.col("__rep")).select(
-            "doc_id", "text"
-        )
-        exact_edges = with_rep.filter(F.col("doc_id") != F.col("__rep")).select(
-            F.col("__rep").alias("id_a"), F.col("doc_id").alias("id_b")
-        )
-        reprobing = self.max_bucket is not None and self.reprobe > 0
-        nx_out = self.index.candidates(
-            spark, bd, max_bucket=self.max_bucket, return_oversized=reprobing
-        )
-        nn_out = minhash_lsh_candidates(
-            bd, max_bucket=self.max_bucket, return_oversized=reprobing
-        )
-        mem = star = None
-        if reprobing:
-            nx_pairs, mem_x, star_x = nx_out
-            nn_pairs, mem_n, star_n = nn_out
-            # oversized buckets can coincide across the two sides (same
-            # band key in the batch and the index): the star edges and
-            # (lazily, only on failure) the probe membership merge
-            star = star_x.unionByName(star_n)
-            mem = mem_x.unionByName(mem_n).select("bkey", "doc_id")
-        else:
-            nx_pairs, nn_pairs = nx_out, nn_out
-        from .operators.graph import _materialize
+        - exact-dup collapse: one representative (min doc_id) per
+          distinct md5(text) runs LSH and verification; the other
+          members join its component through trivial exact edges;
+        - in-batch buckets with the ``max_bucket`` cap
+          (:func:`_batch_buckets`) and the index-side pairs, star edges
+          and oversized-bucket representatives;
+        - the re-probe panel of every oversized bucket. The pairs of
+          each star member with its bucket's panel are verified in the
+          same pass as the candidates, so the failed-star check — a star
+          edge that did not verify re-pairs its member with the panel —
+          is a driver-side lookup and a re-probe costs no extra job. The
+          price: up to ``reprobe`` extra pairs per star edge are
+          verified even when the star edge passes;
+        - the union-find fold (``graph._merge_driver``).
 
-        nx = nx_pairs.filter(F.col("new_id") != F.col("existing_id")).select(
-            F.col("new_id").alias("id_a"), F.col("existing_id").alias("id_b")
-        )
-        nn = nn_pairs.select("id_a", "id_b")
-        from .operators.graph import _no_constraint_propagation
+        The verification result is the one materialization
+        (``graph._materialize``), so ``reliable_checkpoint`` writes it
+        to a durable checkpoint before it is collected."""
+        from .operators.graph import _merge_driver
 
-        # cand and docs_v are TRUNCATION points (checkpoint, not persist):
-        # each feeds several downstream consumers, and a persisted
-        # relation only dedupes EXECUTION — Catalyst re-analyzes its full
-        # logical subtree in every consumer, and those subtrees multiply
-        # through the verify/re-probe join levels (observed 3×10⁷-char
-        # plans per epoch with persist-only). Both are materialized at
-        # this point of the epoch anyway. The guard covers the Spark
-        # Union-over-cached-relation constraint-rewrite crash (see
-        # operators.graph._no_constraint_propagation) — both are unions
-        # whose branches reuse tracked-persisted relations.
-        with _no_constraint_propagation(spark):
-            cand = _materialize(
-                nx.union(nn).distinct(), self.reliable_checkpoint
-            )
-        ids = (
-            cand.select(F.col("id_a").alias("doc_id"))
-            .union(cand.select(F.col("id_b").alias("doc_id")))
-            .distinct()
-        )
-        # verification corpus: batch text (an updated doc verifies
-        # against its CURRENT text) + candidate partners' stored text,
-        # scanned only in the buckets the partners live in (distinct
-        # bucket ids are <= n_buckets — a tiny driver collect, same
-        # precedent as the COW merge's affected-bucket pruning)
-        kc = self.table.key_cols()
-        ftype = self.table.schema()[kc[0]].dataType
-        conv = (
-            F.substring_index(F.col("doc_id"), "#", 1)
-            if len(kc) > 1
-            else F.col("doc_id")
-        ).cast(ftype)
-        buckets = {
-            r[0]
-            for r in ids.select(
-                F.pmod(F.hash(conv), F.lit(self.table.n_buckets()))
-                .cast("int")
-                .alias("b")
-            )
-            .distinct()
-            .collect()
+        bb = bands if bands is not None else self.index.batch_bands(batch, epoch)
+        # exact-dup collapse: the min doc_id of each distinct text
+        rep_of: dict[str, str] = {}
+        for doc in sorted(bb.md5):
+            rep_of.setdefault(bb.md5[doc], doc)
+        reps = {doc: bb.bands[doc] for doc in rep_of.values()}
+        exact = {
+            _norm(rep_of[d], doc) for doc, d in bb.md5.items() if doc != rep_of[d]
         }
-        batch_ids = bd_all.select("doc_id")
-        ex_docs = (
-            self.table.read_resolved(spark, buckets=buckets)
-            .filter(~F.col("__deleted"))
-            .select(
-                F.concat_ws("#", *kc).alias("doc_id"),
-                F.col(self.index.text_col).alias("text"),
-            )
-            .join(F.broadcast(batch_ids), "doc_id", "left_anti")
+
+        cap = self.max_bucket
+        reprobing = cap is not None and self.reprobe > 0
+        pairs, mem_n, batch_star = _batch_buckets(reps, cap)
+        bkeys = {f"{b}:{h}" for hs in reps.values() for b, h in enumerate(hs)}
+        probed = self.index.probe(
+            bb, bkeys, cap, self.reprobe if reprobing else 0, self._bucket_of
         )
-        with _no_constraint_propagation(spark):
-            docs_v = _materialize(
-                bd.union(ex_docs).join(F.broadcast(ids), "doc_id"),
-                self.reliable_checkpoint,
-            )
-        # the verify pipeline (shingle joins over candidate partners) is
-        # the expensive subtree; merge_components_delta materializes its
-        # edge-set input exactly once (driver collect or checkpoint)
-        verified = persist_tracked(
-            jaccard_verify_pairs(docs_v, cand, threshold=self.threshold)
-        )
-        pairs = verified.select("id_a", "id_b")
-        if star is not None:
-            # materialize the verification ONCE (it feeds the pairs union
-            # and the failed-star anti-join), then check for failures.
-            # The check runs ONLY over cached relations (star derives
-            # from the persisted signatures/bands/sizes — no index scan,
-            # no shingle pass), so on a genuine-clique corpus — where
-            # every rep edge verifies — the safe default costs one cheap
-            # anti-join job and nothing else. Probe membership, panel
-            # and partner text are built ONLY when a failure exists.
-            verified.count()
-            vnorm = verified.select(
-                F.least("id_a", "id_b").alias("na"),
-                F.greatest("id_a", "id_b").alias("nb"),
-            ).distinct()
-            # failed and probes are TRUNCATION points, not mere persists:
-            # the failure path nests verified/star/panel subtrees through
-            # several join levels, and every level doubles the subtree's
-            # occurrences in downstream plans — caching dedupes execution
-            # but Catalyst still ANALYZES the full tree (observed: a
-            # 7×10⁸-char plan string on the bench corpus). Checkpointing
-            # these two small relations keeps every downstream plan
-            # shallow; both are materialized here anyway (the count / the
-            # probe-bucket collect).
-            failed = _materialize(
-                star.select(
-                    "bkey",
-                    "member",
-                    F.least("member", "rep").alias("na"),
-                    F.greatest("member", "rep").alias("nb"),
-                )
-                .join(vnorm, ["na", "nb"], "left_anti")
-                .select("bkey", "member"),
-                self.reliable_checkpoint,
-            )
-            if failed.count() > 0:
-                fmem = mem.join(
-                    F.broadcast(failed.select("bkey").distinct()), "bkey"
-                )
-                panel = probe_panel(fmem, panel_size=self.reprobe)
-                probes = _materialize(
-                    failed.join(panel, "bkey")
-                    .filter(F.col("probe_id") != F.col("member"))
-                    .select(
-                        F.least("member", "probe_id").alias("id_a"),
-                        F.greatest("member", "probe_id").alias("id_b"),
-                    )
-                    .distinct(),
-                    self.reliable_checkpoint,
-                )
-                ids2 = (
-                    probes.select(F.col("id_a").alias("doc_id"))
-                    .union(probes.select(F.col("id_b").alias("doc_id")))
-                    .distinct()
-                )
-                buckets2 = {
-                    r[0]
-                    for r in ids2.select(
-                        F.pmod(F.hash(conv), F.lit(self.table.n_buckets()))
-                        .cast("int")
-                        .alias("b")
-                    )
-                    .distinct()
-                    .collect()
+        indexed, star, picks, bucket = _indexed_buckets(reps, probed)
+        cand = {_norm(a, b) for a, b in pairs} | {_norm(a, b) for a, b in indexed}
+        star += batch_star
+        # re-probe panels of the oversized buckets (indexed ∪ in-batch
+        # members, per slot), and every pair a failed star edge could
+        # re-probe — verified up front with the candidates
+        panel: dict[str, set[str]] = {}
+        if reprobing:
+            for bkey in {s[0] for s in star}:
+                members, slots = list(mem_n.get(bkey, ())), picks.get(bkey, {})
+                panel[bkey] = {
+                    _panel_pick(j, members + [slots[j]] if j in slots else members)
+                    for j in range(self.reprobe)
                 }
-                ex2 = (
-                    self.table.read_resolved(spark, buckets=buckets2)
-                    .filter(~F.col("__deleted"))
-                    .select(
-                        F.concat_ws("#", *kc).alias("doc_id"),
-                        F.col(self.index.text_col).alias("text"),
-                    )
-                    .join(F.broadcast(batch_ids), "doc_id", "left_anti")
-                )
-                docs_v2 = bd.union(ex2).join(F.broadcast(ids2), "doc_id")
-                pairs = pairs.union(
-                    jaccard_verify_pairs(
-                        docs_v2, probes, threshold=self.threshold
-                    ).select("id_a", "id_b")
-                )
-        pairs = pairs.union(exact_edges)
-        delta = merge_components_delta(
-            prev,
-            pairs,
-            new_nodes=bd_all.select(F.col("doc_id").alias("node")),
-            reliable_checkpoint=self.reliable_checkpoint,
+        probes = {
+            _norm(m, p) for bkey, m, _rep in star for p in panel.get(bkey, ()) if p != m
+        }
+
+        verified = self._verify(
+            spark, batch, cand | probes, set(reps), set(bb.md5), bucket
         )
-        return delta.withColumn("__epoch", F.lit(epoch).cast("long"))
+        edges = {p for p in cand if p in verified} | exact
+        for bkey, m, rep in star:
+            if _norm(m, rep) not in verified:
+                retried = (_norm(m, p) for p in panel.get(bkey, ()) if p != m)
+                edges.update(q for q in retried if q in verified)
+
+        labels = self.read(spark) if self.files() else None
+        cur, mapping, local = _merge_driver(labels, sorted(edges), set(bb.md5))
+        # a remapped EXISTING label relabels every node that carries it
+        # (every label is itself a labeled node, so the keys to look up
+        # are the mapped labels among the probed ones)
+        remapped = sorted(set(mapping) & set(cur.values()))
+        changed = []
+        if remapped:
+            changed = [
+                (r["node"], mapping[r["label"]])
+                for r in labels.filter(F.col("label").isin(remapped)).collect()
+            ]
+        return _local_frame(
+            spark, LABELS_SCHEMA, [(n, l, epoch) for n, l in changed + local]
+        ).coalesce(1)
+
+    def _verify(
+        self,
+        spark: SparkSession,
+        batch: DataFrame,
+        pairs: set[tuple[str, str]],
+        reps: set[str],
+        batch_ids: set[str],
+        bucket: dict[str, int],
+    ) -> set[tuple[str, str]]:
+        """The (id_a ≤ id_b) ``pairs`` whose exact Jaccard passes the
+        threshold. A document verifies with its batch text when it is a
+        batch representative, with its stored text when it is not in the
+        batch (read only from the buckets such partners live in), and
+        not at all when it is an exact duplicate inside the batch (its
+        representative carries its edges)."""
+        from .operators.graph import _materialize, _persistent_rdd_ids, _release_blocks
+        from .operators.text_dedup import jaccard_verify_pairs
+
+        if not pairs:
+            return set()
+        ids = {x for p in pairs for x in p}
+        texts = self.index._live_docs(batch).filter(
+            F.col("doc_id").isin(sorted(ids & reps))
+        )
+        outside = sorted(ids - batch_ids)
+        if outside:
+            kc = self.table.key_cols()
+            stored = (
+                self.table.read_resolved(spark, buckets={bucket[x] for x in outside})
+                .filter(~F.col("__deleted"))
+                .select(
+                    F.concat_ws("#", *kc).alias("doc_id"),
+                    F.col(self.index.text_col).alias("text"),
+                )
+                .filter(F.col("doc_id").isin(outside))
+            )
+            texts = texts.unionByName(stored)
+        pair_schema = T.StructType(
+            [T.StructField(c, T.StringType()) for c in ("id_a", "id_b")]
+        )
+        pdf = _local_frame(spark, pair_schema, sorted(pairs))
+        before = _persistent_rdd_ids(spark)
+        out = _materialize(
+            jaccard_verify_pairs(texts, pdf, threshold=self.threshold),
+            self.reliable_checkpoint,
+        )
+        verified = {(r["id_a"], r["id_b"]) for r in out.collect()}
+        _release_blocks(spark, _persistent_rdd_ids(spark) - before)
+        return verified
 
     def write_epoch(self, rows: DataFrame, tag: str) -> list[str]:
-        """Same write/orphan protocol as :meth:`LshBandIndex.write_epoch`
-        under ``index/dedup_labels/<tag>``."""
+        """Write ``rows`` as they are partitioned under
+        ``index/dedup_labels/<tag>`` — one file for
+        :meth:`delta_for_epoch`'s driver rows — with the same
+        write/orphan protocol as :meth:`LshBandIndex.write_epoch`."""
         rel = f"index/dedup_labels/{tag}"
         out = os.path.join(self.table.root, rel)
         if os.path.exists(out):
             shutil.rmtree(out)
-        (
-            rows.repartition(self.table.n_buckets(), F.col("node"))
-            .write.mode("overwrite")
-            .parquet(out)
-        )
+        rows.write.mode("overwrite").parquet(out)
         return sorted(
             f"{rel}/{f}" for f in os.listdir(out) if f.endswith(".parquet")
         )
@@ -737,8 +929,10 @@ class DedupLabels:
         base = self.files()
         snap = self.table.snapshot()
         epoch = max(snap["committed_epochs"], default=0)
-        resolved = self.read(spark).withColumn(
-            "__epoch", F.lit(epoch).cast("long")
+        resolved = (
+            self.read(spark)
+            .withColumn("__epoch", F.lit(epoch).cast("long"))
+            .repartition(self.table.n_buckets(), F.col("node"))
         )
         files = self.write_epoch(resolved, f"{tag}-v{snap['version'] + 1:06d}")
         return self.table.set_aux(LABELS_AUX, files, base_files=base)
@@ -787,7 +981,10 @@ def ingest_documents(
         {"op": F.lit("U"), "lsn": F.lit(epoch).cast("long")}
     )
     tag = f"e{epoch:06d}-{uuid.uuid4().hex[:8]}"
-    band_files = index.write_epoch(index.rows_for(batch, epoch), tag)
+    # the labels need the batch's bands on the driver anyway; without
+    # them the band rows stay distributed
+    bands = index.batch_bands(batch, epoch) if dedup_labels else None
+    band_files = index.write_epoch(bands or index.rows_for(batch, epoch), tag)
     aux_add = {
         AUX_NAME: {
             "files": band_files,
@@ -800,7 +997,7 @@ def ingest_documents(
         labels = DedupLabels(table, index, max_bucket=mb)
         aux_add[LABELS_AUX] = {
             "files": labels.write_epoch(
-                labels.delta_for_epoch(spark, batch, epoch), tag
+                labels.delta_for_epoch(spark, batch, epoch, bands=bands), tag
             ),
             "config": {"threshold": labels.threshold, "max_bucket": mb},
         }

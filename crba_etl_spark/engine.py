@@ -147,7 +147,7 @@ class CDCEngine:
         ``dedup_labels=True`` (implies ``lsh_index``) additionally folds
         each batch into the persisted near-dup GROUP labeling
         (band_index.DedupLabels): index candidates → exact-Jaccard
-        verify → incremental components delta — the complete dedup
+        verify → driver-side union-find fold — the complete dedup
         pipeline inside the exactly-once commit loop, O(changed) label
         rows written per epoch.
 
@@ -179,11 +179,11 @@ class CDCEngine:
         never spuriously. Set >1.0 to disable.
 
         ``reliable_cc_checkpoints=True`` routes the dedup-labels
-        components loops' lineage truncation to durable ``checkpoint()``
-        files under ``<table_root>/checkpoints/cc`` (executor loss
-        mid-loop is then survivable on a real cluster — with the default
-        ``localCheckpoint`` it kills the job); off locally, where there
-        are no executors to lose.
+        verification result's lineage truncation to durable
+        ``checkpoint()`` files under ``<table_root>/checkpoints/cc``
+        (executor loss while it is collected is then survivable on a real
+        cluster — with the default ``localCheckpoint`` it kills the job);
+        off locally, where there are no executors to lose.
 
         ``labels_compact_epochs``: the labels artifact is MOR-shaped —
         every epoch appends a delta file set and the per-epoch
@@ -280,6 +280,7 @@ class CDCEngine:
         penalty is extra files per bucket — never wrong rows."""
         if skip := self.table.skip_if_committed(epoch, slice_marker, mark_epoch):
             return skip
+        t0 = time.monotonic()
 
         obs = Observation(f"events-in-{epoch}")
         events = events.observe(obs, *_count_alias())
@@ -318,17 +319,22 @@ class CDCEngine:
             persisted = reduced.persist()
             import uuid
 
+            from .band_index import AUX_NAME, LABELS_AUX, _parquet_rows
+
             # unique per attempt: a deterministic tag could collide with
             # a COMMITTED dir on raced redelivery and rmtree files the
             # snapshot references; an abandoned attempt's dir is just an
             # unreferenced orphan (expire_snapshots sweeps it)
             tag = f"e{epoch:06d}-{uuid.uuid4().hex[:8]}"
-            from .band_index import AUX_NAME
-
-            from .band_index import _parquet_rows
-
+            # with labels, the batch's bands are collected once and feed
+            # both the band write and the label delta
+            bands = (
+                self.lsh_index.batch_bands(persisted, epoch)
+                if self.dedup_labels is not None
+                else None
+            )
             band_files = self.lsh_index.write_epoch(
-                self.lsh_index.rows_for(persisted, epoch), tag
+                bands or self.lsh_index.rows_for(persisted, epoch), tag
             )
             # config rides the aux entry (first write wins) so a later
             # maintenance run — possibly a CLI engine constructed with
@@ -346,24 +352,19 @@ class CDCEngine:
             if self.dedup_labels is not None:
                 # computed against the PRE-commit snapshot (index/labels
                 # as of the previous epoch) and written before the data
-                # commit references it; intermediates (signatures,
-                # candidate set) are scoped to this block
-                from .band_index import LABELS_AUX
-                from .cache import tracked_caches
-
-                with tracked_caches():
-                    aux_add[LABELS_AUX] = {
-                        "files": self.dedup_labels.write_epoch(
-                            self.dedup_labels.delta_for_epoch(
-                                self.spark, persisted, epoch
-                            ),
-                            tag,
+                # commit references it
+                aux_add[LABELS_AUX] = {
+                    "files": self.dedup_labels.write_epoch(
+                        self.dedup_labels.delta_for_epoch(
+                            self.spark, persisted, epoch, bands=bands
                         ),
-                        "config": {
-                            "threshold": self.dedup_labels.threshold,
-                            "max_bucket": self.dedup_labels.max_bucket,
-                        },
-                    }
+                        tag,
+                    ),
+                    "config": {
+                        "threshold": self.dedup_labels.threshold,
+                        "max_bucket": self.dedup_labels.max_bucket,
+                    },
+                }
             reduced = persisted
         try:
             if self.mode == "mor":
@@ -398,6 +399,9 @@ class CDCEngine:
             stats["events_in"] = int(obs.get["events_in"])
             if slice_marker is not None:
                 stats["slice"] = slice_marker
+            # the whole apply: reduce, band write, label delta and write,
+            # data write and commit — up to the metrics row it lands in
+            stats["apply_s"] = round(time.monotonic() - t0, 3)
             write_epoch_metrics(self.table, self.metrics_dir, stats)
             self._applied_since_compact += 1
             self._maybe_compact()

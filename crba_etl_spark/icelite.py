@@ -393,14 +393,20 @@ class IceliteTable:
         version: int | None = None,
     ) -> DataFrame:
         """Stored rows with merge-on-read resolution applied: one row per
-        key (max-__lsn wins over base ∪ deltas), tombstones included."""
+        key (max-__lsn wins over base ∪ deltas), tombstones included.
+
+        Every stored file already holds one row per key (a delta file is
+        one reduced batch, a base file one resolved bucket) and a key
+        lives in one bucket, so the resolving aggregate — an exchange —
+        runs only when some bucket holds a delta beside another file."""
         df = self.read_stored(spark, buckets=buckets, schema=schema, version=version)
         snap = self.snapshot_at(version)
         touched = snap.get("deltas", {})
         if buckets is not None:
             touched = {b: v for b, v in touched.items() if int(b) in buckets}
-        if not any(touched.values()):
-            return df  # pure base: unique per key already
+        files = snap["files"]
+        if all(len(v) + len(files.get(b, [])) <= 1 for b, v in touched.items() if v):
+            return df  # no key can occur twice
         from .operators.dedup import reduce_latest
 
         return reduce_latest(df, key_cols=self.key_cols(), order_col="__lsn")

@@ -39,7 +39,7 @@ Reference analog: none — graft mandate (dedup family beyond SURVEY §2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..cache import persist_tracked
 
@@ -271,24 +271,37 @@ def _collect_edges_capped(
     return [(r["a"], r["b"]) for r in e_df.collect()], e_df
 
 
+def _local_frame(
+    spark: SparkSession, schema: T.StructType, rows: list[tuple]
+) -> DataFrame:
+    """Driver rows as a LocalRelation, shipped through Arrow — no Python
+    worker runs (``createDataFrame`` over a list pickles the rows
+    through one)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+    )
+
+
 def _probe_labels(
     lab: DataFrame, ids: set, extra_ids: set | None = None
 ) -> dict:
     """Current labels of ``ids ∪ extra_ids`` — ONE streamed pass over the
-    big labels relation against a broadcast id list (the only corpus-
-    touching job of the driver-side merge)."""
+    big labels relation, filtered by the id set (the only corpus-touching
+    job of the driver-side merge; the filter pushes below a resolving
+    aggregate, so only the probed nodes' rows shuffle)."""
     probe = sorted(ids | (extra_ids or set()))
     if not probe:
         return {}
-    spark = lab.sparkSession
-    import pyspark.sql.types as T
-
-    pdf = spark.createDataFrame(
-        [(x,) for x in probe], T.StructType([lab.schema["node"]])
-    )
     return {
         r["node"]: r["label"]
-        for r in lab.join(F.broadcast(pdf), "node").collect()
+        for r in lab.filter(F.col("node").isin(probe)).collect()
     }
 
 
@@ -340,7 +353,7 @@ def merge_components(
     if driver_cc_max_edges is not None:
         edges, e_df = _collect_edges_capped(new_edges, src, dst, driver_cc_max_edges)
         if edges is not None:
-            return _merge_driver(
+            return _merge_collected(
                 lab, edges, new_nodes, node_col, delta_only=False
             )
         # over the cap: reuse the materialized edge relation for the
@@ -405,30 +418,18 @@ def merge_components(
 
 
 def _merge_driver(
-    lab: DataFrame,
-    edges: list[tuple],
-    new_nodes: DataFrame | None,
-    node_col: str,
-    delta_only: bool,
-) -> DataFrame:
-    """Driver-side incremental merge (small collected edge set). Spark
-    jobs: one labels probe (streamed big side × broadcast ids) + the
-    caller's final action over the relabel join — everything else is
-    Python over O(|edges| + |batch|) rows. Output contract identical to
-    the distributed paths (tested side by side)."""
-    import pyspark.sql.types as T
-
-    spark = lab.sparkSession
+    lab: DataFrame | None, edges: list[tuple], nn_ids: set | None
+) -> tuple[dict, dict, list[tuple]]:
+    """Driver half of the incremental merge over a collected edge set:
+    ONE labels probe (:func:`_probe_labels`; skipped when ``lab`` is
+    None — nothing labeled yet), then union-find of the
+    condensed graph in Python over O(|edges| + |batch|) rows. Returns
+    ``(cur, mapping, local)``: the probed current labels; old → new
+    label for every condensed node that is not its component's
+    minimum; and (node, label) rows for the endpoints and new nodes the
+    labeling lacks."""
     ends = {x for ab in edges for x in ab}
-    nn_ids: set | None = None
-    if new_nodes is not None:
-        nn_ids = {
-            r[0]
-            for r in new_nodes.select(F.col(node_col).alias("node"))
-            .distinct()
-            .collect()
-        }
-    cur = _probe_labels(lab, ends, nn_ids)
+    cur = _probe_labels(lab, ends, nn_ids) if lab is not None else {}
     # condense: substitute each endpoint by its current label (itself if
     # unlabeled); union-find the condensed graph; labels of condensed
     # minima ARE the union graph's minima (see merge_components)
@@ -439,34 +440,51 @@ def _merge_driver(
         ).items()
         if new != old
     }
-    node_f = lab.schema["node"]
+    local = [(x, mapping.get(x, x)) for x in sorted(ends) if x not in cur]
+    if nn_ids is not None:
+        local += [(x, x) for x in sorted(nn_ids) if x not in ends and x not in cur]
+    return cur, mapping, local
+
+
+def _merge_collected(
+    lab: DataFrame,
+    edges: list[tuple],
+    new_nodes: DataFrame | None,
+    node_col: str,
+    delta_only: bool,
+) -> DataFrame:
+    """The merge over a small collected edge set. Spark jobs: the
+    new-node collect, one labels probe + the caller's final action over
+    the relabel join — everything else is :func:`_merge_driver`. Output
+    contract identical to the distributed paths (tested side by
+    side)."""
+    spark = lab.sparkSession
+    nn_ids: set | None = None
+    if new_nodes is not None:
+        nn_ids = {
+            r[0]
+            for r in new_nodes.select(F.col(node_col).alias("node"))
+            .distinct()
+            .collect()
+        }
+    _cur, mapping, local_rows = _merge_driver(lab, edges, nn_ids)
     out_schema = T.StructType(
         [
-            T.StructField("node", node_f.dataType),
+            T.StructField("node", lab.schema["node"].dataType),
             T.StructField("label", lab.schema["label"].dataType),
         ]
     )
-    local_rows = [
-        (x, mapping.get(x, x)) for x in sorted(ends) if x not in cur
-    ]
-    if nn_ids is not None:
-        local_rows += [
-            (x, x) for x in sorted(nn_ids) if x not in ends and x not in cur
-        ]
-    local = spark.createDataFrame(local_rows, out_schema)
+    local = _local_frame(spark, out_schema, local_rows)
     if not mapping:
         if delta_only:
             return local
         return lab.unionByName(local)
+    ltype = lab.schema["label"].dataType
     mdf = F.broadcast(
-        spark.createDataFrame(
+        _local_frame(
+            spark,
+            T.StructType([T.StructField("_old", ltype), T.StructField("_new", ltype)]),
             sorted(mapping.items()),
-            T.StructType(
-                [
-                    T.StructField("_old", lab.schema["label"].dataType),
-                    T.StructField("_new", lab.schema["label"].dataType),
-                ]
-            ),
         )
     )
     if delta_only:
@@ -518,7 +536,7 @@ def merge_components_delta(
     if driver_cc_max_edges is not None:
         edges, e_df = _collect_edges_capped(new_edges, src, dst, driver_cc_max_edges)
         if edges is not None:
-            return _merge_driver(
+            return _merge_collected(
                 lab, edges, new_nodes, node_col, delta_only=True
             )
         new_edges, src, dst = e_df, "a", "b"

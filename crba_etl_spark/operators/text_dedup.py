@@ -210,12 +210,22 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     bound by the source file layout (a single-row-group parquet file =
     one scan task); the narrow (id, text) projection is repartitioned to
     the session parallelism only when the scan has fewer splits — a
-    structural no-op at corpus scale (see spread.py)."""
+    structural no-op at corpus scale (see spread.py).
+
+    Precondition: ``id_col`` is unique. Rows sharing an id are grouped
+    into ONE signature — the slot-wise minimum over all their texts,
+    which is the signature of none of them."""
     base = spread_compute(
         docs.filter(F.col("text").isNotNull()).select(id_col, "text")
     )
+    return _minhash_agg(base, [id_col])
+
+
+def _minhash_agg(base: DataFrame, keys: list[str]) -> DataFrame:
+    """The signature pipeline of :func:`minhash_signatures` over a
+    (keys..., text) relation, grouped by ``keys``."""
     hashed = base.select(
-        id_col,
+        *keys,
         F.explode(
             F.sequence(
                 F.lit(1), F.greatest(F.length("text") - (SHINGLE_LEN - 1), F.lit(1))
@@ -223,7 +233,7 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ).alias("__i"),
         "text",
     ).select(
-        id_col,
+        *keys,
         h32(F.col("text").substr(F.col("__i"), F.lit(SHINGLE_LEN))).alias("__h"),
     )
     aggs = [
@@ -232,14 +242,12 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         )
         for k, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
     ]
-    return hashed.groupBy(id_col).agg(*aggs)
+    return hashed.groupBy(*keys).agg(*aggs)
 
 
-def _band_rows(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, band_idx, band_hash) rows from a signature relation — the
-    LSH bucketing unit shared by the self-join (dedup within a corpus)
-    and the new×existing join (incremental dedup against a corpus)."""
-    band_cols = [
+def _band_hash_cols() -> list[F.Column]:
+    """``band_hash`` of each band of a signature relation, by band_idx."""
+    return [
         F.md5(
             F.concat_ws(
                 ":",
@@ -251,6 +259,13 @@ def _band_rows(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ).alias("band_hash")
         for b in range(N_BANDS)
     ]
+
+
+def _band_rows(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, band_idx, band_hash) rows from a signature relation — the
+    LSH bucketing unit shared by the self-join (dedup within a corpus)
+    and the new×existing join (incremental dedup against a corpus)."""
+    band_cols = _band_hash_cols()
     return sig.select(
         id_col,
         F.explode(
@@ -310,12 +325,7 @@ def probe_panel(mem: DataFrame, panel_size: int = P_REPROBE) -> DataFrame:
     panel can occasionally be smaller than ``panel_size`` (k
     pseudo-random draws WITH replacement) — the re-probe guarantee is
     probabilistic either way."""
-    aggs = [
-        F.min_by(
-            "doc_id", F.md5(F.concat(F.lit(f"{j}|"), F.col("doc_id")))
-        ).alias(f"_p{j}")
-        for j in range(panel_size)
-    ]
+    aggs = [F.min_by("doc_id", _slot_key(j)).alias(f"_p{j}") for j in range(panel_size)]
     return (
         mem.select("bkey", "doc_id")
         .groupBy("bkey")
@@ -329,6 +339,11 @@ def probe_panel(mem: DataFrame, panel_size: int = P_REPROBE) -> DataFrame:
             ).alias("probe_id"),
         )
     )
+
+
+def _slot_key(j: int) -> F.Column:
+    """Panel slot ``j``'s ordering key of a member ``doc_id``: md5(j‖doc_id)."""
+    return F.md5(F.concat(F.lit(f"{j}|"), F.col("doc_id")))
 
 
 def reprobe_star_failures(

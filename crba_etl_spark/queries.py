@@ -1234,7 +1234,7 @@ def q_engine_dedup_labels(spark, sf_dir):
     ingested as epoch 0 and the 20% batch as epoch 1, each commit
     atomically carrying its band-index rows AND its near-dup group-label
     delta (band_index.DedupLabels: index candidates → exact-Jaccard
-    verify over bucket-pruned partner text → merge_components_delta,
+    verify over bucket-pruned partner text → driver-side union-find fold,
     O(changed) label rows per epoch). The returned labeling is read back
     from the persisted aux artifact; the oracle is the FULL-RECOMPUTE
     recursive-CTE closure over the whole corpus (`dedup_groups`'

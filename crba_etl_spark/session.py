@@ -43,13 +43,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let the planner pick shuffled-hash join when its size checks
-        # pass instead of always sort-merge (guide §3.1/§9): skips both
-        # sides' sorts; measured r7 on the sf1.0 star joins ~10-15%
-        # (revenue_by_nation 2.4s→2.0s). Spark still falls back to SMJ
-        # whenever the per-partition build side could be large, so this
-        # is a planner PERMISSION, not a forced strategy.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # generated fixtures + driver testdata carry tz-naive parquet

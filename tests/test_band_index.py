@@ -472,3 +472,269 @@ def test_labels_compaction_fires_in_cow_mode(spark, tmpdir_):
         files = eng.table.aux()[LABELS_AUX]["files"]
         assert len({p.split("/")[2] for p in files}) <= 2, k
         assert labels(eng) == labels(ref), k
+
+
+# --- the driver-side dedup-label epoch ----------------------------------
+
+
+def _count_jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran) — counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spread_compute_reads_partitions_without_jobs(spark):
+    """spread_compute reads the partition count from the plan: a shuffled
+    (or cached shuffled) relation runs no job, and a one-partition input
+    is still spread to the session parallelism."""
+    from crba_etl_spark.spread import spread_compute
+
+    shuffled = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    cached = spark.range(1000).repartition(3, "id").persist()
+    for df in (shuffled, cached):
+        out, jobs = _count_jobs(spark, lambda: spread_compute(df))
+        assert jobs == 0
+    cached.unpersist()
+    one = spark.range(0, 100, 1, 1)
+    out = spread_compute(one)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_apply_s_covers_label_work(spark, tmpdir_, monkeypatch):
+    """stats['apply_s'] is the whole apply_epoch, label delta included."""
+    import time
+
+    from crba_etl_spark.band_index import DedupLabels
+
+    real = DedupLabels.delta_for_epoch
+
+    def slow(self, *a, **k):
+        time.sleep(0.5)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(DedupLabels, "delta_for_epoch", slow)
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=2, dedup_labels=True)
+    stats = eng.apply_epoch(
+        make_events(
+            spark, [(1, 0, "I", "a", 0, "user", "some text to label", None, 0, 0)]
+        ),
+        0,
+    )
+    assert stats["apply_s"] >= 0.5
+
+
+def test_delta_rejects_a_doc_id_with_two_texts(spark, tmpdir_):
+    """A batch is one row per document: a doc_id carrying two texts would
+    get a signature mixing both, so the collected batch refuses it."""
+    import pytest
+
+    from crba_etl_spark.band_index import DedupLabels
+
+    docs = spark.createDataFrame(
+        [("d1", "alpha bravo charlie delta"), ("d1", "kilo lima mike november")],
+        ["doc_id", "text"],
+    )
+    table, index = ingest_documents(spark, os.path.join(tmpdir_, "t"), docs.limit(0))
+    batch = docs.withColumns({"op": F.lit("U"), "lsn": F.lit(1).cast("long")})
+    with pytest.raises(ValueError, match="d1"):
+        DedupLabels(table, index).delta_for_epoch(spark, batch, 1)
+
+
+def _template_docs(spark):
+    """Four templates with per-doc edits (oversized band buckets at small
+    caps, mixed with false positives across templates) plus singletons."""
+    shared = " ".join(f"w{i:03d}" for i in range(40))
+    rows = []
+    for t, tail in enumerate(["qa ra sa", "xb yb zb", "mc nc oc", "pd qd rd"]):
+        for i in range(9):
+            rows.append((f"t{t}-{i}", f"{shared} {tail} v{i % 3}"))
+    rows += [
+        (f"s{i}", f"unrelated sentence number {i} about {i * 7}") for i in range(12)
+    ]
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def test_batch_buckets_equal_spark_reference(spark):
+    """The driver-side in-batch buckets, star edges, oversized-bucket
+    membership and probe panel equal minhash_lsh_candidates(...,
+    return_oversized=True) and probe_panel, capped and uncapped."""
+    from crba_etl_spark.band_index import _batch_buckets, _panel_pick
+    from crba_etl_spark.cache import release_caches
+    from crba_etl_spark.operators.text_dedup import _band_rows, minhash_signatures
+
+    docs = _template_docs(spark)
+    bands = {}
+    for r in _band_rows(minhash_signatures(docs)).orderBy("band_idx").collect():
+        bands.setdefault(r["doc_id"], []).append(r["band_hash"])
+    bands = {d: tuple(h) for d, h in bands.items()}
+    seen_oversized = False
+    for cap in (None, 2, 4, 8):
+        pairs, mem, star = _batch_buckets(bands, cap)
+        ref_pairs, ref_mem, ref_star = text_dedup.minhash_lsh_candidates(
+            docs, max_bucket=cap, return_oversized=True
+        )
+        assert dict(pairs) == {
+            (r["id_a"], r["id_b"]): r["n_shared_bands"] for r in ref_pairs.collect()
+        }
+        if cap is None:
+            assert not mem and not star and ref_mem is None
+            continue
+        assert {
+            (bkey, d, rep) for bkey, m in mem.items() for d, rep in m.items()
+        } == {tuple(r) for r in ref_mem.select("bkey", "doc_id", "rep").collect()}
+        assert sorted(star) == sorted(
+            tuple(r) for r in ref_star.select("bkey", "member", "rep").collect()
+        )
+        ref_panel = {}
+        for r in text_dedup.probe_panel(ref_mem, panel_size=5).collect():
+            ref_panel.setdefault(r["bkey"], set()).add(r["probe_id"])
+        assert {
+            bkey: {_panel_pick(j, m) for j in range(5)} for bkey, m in mem.items()
+        } == ref_panel
+        seen_oversized |= bool(mem)
+        release_caches()
+    assert seen_oversized
+
+
+def test_indexed_buckets_equal_spark_reference(spark, tmpdir_):
+    """The driver-side new×existing side — LshBandIndex.probe plus
+    _indexed_buckets — gives the pairs and star edges of
+    LshBandIndex.candidates(..., return_oversized=True), panels equal to
+    probe_panel over its oversized membership, and each indexed doc's
+    table bucket, capped and uncapped."""
+    from crba_etl_spark.band_index import DedupLabels, _indexed_buckets
+    from crba_etl_spark.cache import release_caches
+    from crba_etl_spark.icelite import bucket_expr
+
+    docs = _template_docs(spark)
+    existing = docs.filter(~F.col("doc_id").rlike("-[78]$|^s1"))
+    new = docs.filter(F.col("doc_id").rlike("-[78]$|^s1"))
+    table, index = ingest_documents(
+        spark, os.path.join(tmpdir_, "t"), existing, n_buckets=4
+    )
+    batch = new.withColumns({"op": F.lit("U"), "lsn": F.lit(1).cast("long")})
+    bb = index.batch_bands(batch, 1)
+    bkeys = {f"{b}:{h}" for hs in bb.bands.values() for b, h in enumerate(hs)}
+    stored = {
+        r[0]: r[1]
+        for r in table.read(spark).select("doc_id", bucket_expr(4, "doc_id")).collect()
+    }
+    bucket_of = DedupLabels(table, index)._bucket_of
+    seen_oversized = False
+    for cap in (None, 2, 4):
+        probed = index.probe(bb, bkeys, cap, 5, bucket_of)
+        pairs, star, picks, bucket = _indexed_buckets(bb.bands, probed)
+        out = index.candidates(
+            spark, new, max_bucket=cap, return_oversized=cap is not None
+        )
+        ref_pairs, ref_mem, ref_star = out if cap is not None else (out, None, None)
+        assert pairs == {
+            (r["new_id"], r["existing_id"])
+            for r in ref_pairs.collect()
+            if r["new_id"] != r["existing_id"]
+        }
+        assert bucket and all(stored[d] == b for d, b in bucket.items())
+        if cap is None:
+            assert not star and not picks
+            continue
+        assert sorted(star) == sorted(
+            tuple(r) for r in ref_star.select("bkey", "member", "rep").collect()
+        )
+        ref_panel = {}
+        for r in text_dedup.probe_panel(ref_mem, panel_size=5).collect():
+            ref_panel.setdefault(r["bkey"], set()).add(r["probe_id"])
+        assert {bkey: set(p.values()) for bkey, p in picks.items()} == ref_panel
+        seen_oversized |= bool(picks)
+        release_caches()
+    assert seen_oversized
+
+
+def test_dedup_epochs_equal_exact_closure_within_job_budget(spark, tmpdir_):
+    """Three engine epochs against a non-empty index and labeling, with
+    updates, a delete, exact duplicates (in the batch and against the
+    corpus) and a FALSE-POSITIVE oversized bucket (two groups sharing a
+    long prefix, capped at 3, threshold 0.95) whose failed star edges
+    only the re-probe recovers. The labels equal the exact closure of
+    the monotone model — every pair at or above the threshold between a
+    batch document and the batch or the table as of its epoch, grouped
+    by union-find — and every applied epoch stays within 20 Spark
+    jobs."""
+    from crba_etl_spark.band_index import DedupLabels
+    from crba_etl_spark.operators.graph import _driver_union_find
+
+    shared = " ".join(f"w{i:03d}" for i in range(60))
+    thr = 0.95
+    epochs = [
+        [("I", "a", shared + " qa ra sa"), ("I", "b", shared + " xb yb zb"),
+         ("I", "c", shared + " qa ra sb"), ("I", "d", shared + " xb yb zc"),
+         ("I", "e", "exact duplicate text number one"),
+         ("I", "f", "exact duplicate text number one"),
+         ("I", "u", "a lonely sentence about the weather today")],
+        [("I", "g", shared + " xb yb zd"),
+         ("I", "h", "exact duplicate text number one"),
+         ("U", "f", "a lonely sentence about the weather today!"),
+         ("I", "i", "fresh pair of twin texts here"),
+         ("I", "j", "fresh pair of twin texts here")],
+        [("I", "k", shared + " qa ra sc"), ("D", "u", None),
+         ("U", "i", "fresh pair of twin texts here."),
+         ("I", "m", shared + " xb yb ze")],
+    ]
+
+    def shingles(t):
+        return {t[i : i + 5] for i in range(max(len(t) - 4, 1))}
+
+    def jac(x, y):
+        a, b = shingles(x), shingles(y)
+        inter = len(a & b)
+        return inter > 0 and round(inter / (len(a) + len(b) - inter), 6) >= thr
+
+    def run(reprobe):
+        eng = CDCEngine(
+            spark, os.path.join(tmpdir_, f"t{reprobe}"), n_buckets=4,
+            dedup_labels=True, dedup_max_bucket=3,
+        )
+        eng.dedup_labels.threshold = thr
+        eng.dedup_labels.reprobe = reprobe
+        jobs = []
+        lsn = 0
+        for k, batch in enumerate(epochs):
+            rows = []
+            for op, conv, text in batch:
+                lsn += 1
+                rows.append((lsn, k, op, conv, 0, "user", text, None, lsn, lsn))
+            stats, n = _count_jobs(
+                spark, lambda: eng.apply_epoch(make_events(spark, rows), k)
+            )
+            assert not stats.get("skipped")
+            jobs.append(n)
+        got = DedupLabels(eng.table, eng.lsh_index).read(spark).collect()
+        return {r["node"]: r["label"] for r in got}, jobs
+
+    live, nodes, edges = {}, set(), []
+    for batch in epochs:
+        new = {f"{c}#0": t for op, c, t in batch if op != "D"}
+        for x, tx in new.items():
+            partners = {**{y: ty for y, ty in live.items() if y not in new}, **new}
+            edges += [(x, y) for y, ty in partners.items() if y != x and jac(tx, ty)]
+        nodes |= set(new)
+        live.update(new)
+        for op, c, _t in batch:
+            if op == "D":
+                live.pop(f"{c}#0")
+    comp = _driver_union_find(edges)
+    want = {n: comp.get(n, n) for n in nodes}
+
+    got, jobs = run(reprobe=8)
+    assert got == want
+    assert want["b#0"] == want["d#0"] != want["a#0"]  # the false positives split
+    assert all(n <= 20 for n in jobs), jobs
+    # the re-probe is load-bearing on this corpus
+    assert run(reprobe=0)[0] != want

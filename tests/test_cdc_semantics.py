@@ -131,3 +131,28 @@ def test_exactly_once_epoch_redelivery(spark, tmpdir_, mode):
     s2 = eng.apply_epoch(ev, 0)
     assert not s1.get("skipped") and s2.get("skipped")
     assert eng.read_final().count() == 1
+
+
+def test_read_resolves_only_buckets_holding_two_files(spark, tmpdir_):
+    """A MOR table whose buckets each hold one delta file reads without
+    the resolving aggregate (every file is one row per key); once a
+    second delta lands in a bucket, the read resolves it to the latest
+    row per key."""
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode="mor")
+    eng.apply_epoch(make_events(spark, [
+        (1, 0, "I", "c1", 0, "user", "hello", None, 0, 0),
+        (2, 0, "I", "c2", 0, "user", "other", None, 0, 1),
+    ]), 0)
+
+    def plan():
+        return eng.read_final()._jdf.queryExecution().executedPlan().toString()
+
+    assert "Exchange" not in plan()
+    eng.apply_epoch(make_events(spark, [
+        (3, 1, "U", "c1", 0, "user", "hello again", None, 0, 2),
+    ]), 1)
+    assert "Exchange" in plan()
+    assert rows_of(eng.read_final()) == {
+        ("c1", 0): ("user", "hello again", None),
+        ("c2", 0): ("user", "other", None),
+    }
