@@ -16,8 +16,8 @@ re-runs) re-expressed Spark-first:
 - additive schema evolution (the reference's edition-over-edition source
   drift, ``/root/reference/config/{2020,2023}/in/data/staging/``);
 - per-partition lineage + apply-rate metrics;
-- training-data operators (dedup, similarity search, text analysis) in
-  ``crba_etl_spark.operators``.
+- optionally, a MinHash band index and near-duplicate group labels
+  maintained in the same commit as each epoch's data (``band_index``).
 
 Everything is DataFrame-API / Catalyst-optimized; per-row Python is never
 used in the hot path.

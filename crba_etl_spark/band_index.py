@@ -678,7 +678,7 @@ class DedupLabels:
         table: IceliteTable,
         index: LshBandIndex,
         threshold: float = 0.35,
-        max_bucket: int | None = DEFAULT_MAX_BUCKET,
+        max_bucket: int | None | str = DEFAULT_MAX_BUCKET,
         reprobe: int = 8,
         reliable_checkpoint: str | None = None,
     ):
@@ -708,8 +708,9 @@ class DedupLabels:
         #: corpus, pinned <1% in tests) and confined to pairs whose ONLY
         #: shared buckets are oversized; pairs sharing any small bucket
         #: stay exact. ``None`` restores exact all-pairs closure
-        #: semantics at O(n²)-per-bucket risk.
-        self.max_bucket = max_bucket
+        #: semantics at O(n²)-per-bucket risk; ``"auto"`` means
+        #: DEFAULT_MAX_BUCKET.
+        self.max_bucket = DEFAULT_MAX_BUCKET if max_bucket == "auto" else max_bucket
         #: probe-panel size for failed star edges; 0 disables re-probe
         #: (restoring the pre-round-6 capped semantics)
         self.reprobe = reprobe
@@ -938,6 +939,49 @@ class DedupLabels:
         return self.table.set_aux(LABELS_AUX, files, base_files=base)
 
 
+def write_epoch_aux(
+    spark: SparkSession,
+    index: LshBandIndex,
+    labels: "DedupLabels | None",
+    batch: DataFrame,
+    epoch: int,
+) -> dict:
+    """Write one epoch's aux artifacts — the band rows and, with
+    ``labels``, the label delta — and return the ``aux_add`` entries the
+    epoch's data commit records. Files hit disk BEFORE the commit that
+    references them: a failed commit leaves only an orphan dir, which
+    ``expire_snapshots`` sweeps. The label delta is computed against the
+    pre-commit snapshot (index and labels as of the previous epoch)."""
+    import uuid
+
+    # unique per attempt: a deterministic tag could collide with a
+    # COMMITTED dir on raced redelivery and rmtree files the snapshot
+    # references; an abandoned attempt's dir is just an unreferenced orphan
+    tag = f"e{epoch:06d}-{uuid.uuid4().hex[:8]}"
+    # with labels, the batch's bands are collected once and feed both the
+    # band write and the label delta; without them they stay distributed
+    bands = index.batch_bands(batch, epoch) if labels is not None else None
+    band_files = index.write_epoch(bands or index.rows_for(batch, epoch), tag)
+    # config rides the aux entry (first write wins) so a later maintenance
+    # run — possibly a CLI engine constructed with defaults — rebuilds with
+    # the parameters the artifact was BUILT with; rows_add feeds the
+    # stale-fraction maintenance trigger (footer metadata, no job)
+    aux = {
+        AUX_NAME: {
+            "files": band_files,
+            "config": {"text_col": index.text_col},
+            "rows_add": _parquet_rows(index.table.root, band_files),
+        }
+    }
+    if labels is not None:
+        delta = labels.delta_for_epoch(spark, batch, epoch, bands=bands)
+        aux[LABELS_AUX] = {
+            "files": labels.write_epoch(delta, tag),
+            "config": {"threshold": labels.threshold, "max_bucket": labels.max_bucket},
+        }
+    return aux
+
+
 def ingest_documents(
     spark: SparkSession,
     root: str,
@@ -954,16 +998,14 @@ def ingest_documents(
     relation and ingest it as one epoch with the band index (and, with
     ``dedup_labels=True``, the incremental group labeling) maintained in
     the same atomic commit — the corpus-bootstrap path (and the fixture
-    for the ``lsh_index_candidates`` / ``engine_dedup_labels`` registry
-    queries). Pass the returned ``table`` back in to apply FURTHER
-    epochs incrementally. Idempotent under redelivery: an epoch already
-    in ``committed_epochs`` skips BOTH the data apply and the aux write
+    for the ``lsh_index_candidates`` / ``engine_dedup_labels`` oracle
+    queries in queries.py). Pass the returned ``table`` back in to apply
+    FURTHER epochs incrementally. Idempotent under redelivery: an epoch
+    already in ``committed_epochs`` skips BOTH the data apply and the aux write
     (round-5 ADVICE: the old deterministic ``e{epoch}`` tag rmtree'd the
     COMMITTED index dir on re-invocation, leaving the snapshot pointing
     at deleted files while the data apply skipped; tags are now unique
     per attempt, same as the engine's)."""
-    import uuid
-
     from .operators.merge import apply_delta_epoch
 
     if table is None:
@@ -980,27 +1022,8 @@ def ingest_documents(
     batch = docs.select(id_col, text_col).withColumns(
         {"op": F.lit("U"), "lsn": F.lit(epoch).cast("long")}
     )
-    tag = f"e{epoch:06d}-{uuid.uuid4().hex[:8]}"
-    # the labels need the batch's bands on the driver anyway; without
-    # them the band rows stay distributed
-    bands = index.batch_bands(batch, epoch) if dedup_labels else None
-    band_files = index.write_epoch(bands or index.rows_for(batch, epoch), tag)
-    aux_add = {
-        AUX_NAME: {
-            "files": band_files,
-            "config": {"text_col": text_col},
-            "rows_add": _parquet_rows(table.root, band_files),
-        }
-    }
-    if dedup_labels:
-        mb = DEFAULT_MAX_BUCKET if max_bucket == "auto" else max_bucket
-        labels = DedupLabels(table, index, max_bucket=mb)
-        aux_add[LABELS_AUX] = {
-            "files": labels.write_epoch(
-                labels.delta_for_epoch(spark, batch, epoch, bands=bands), tag
-            ),
-            "config": {"threshold": labels.threshold, "max_bucket": mb},
-        }
+    labels = DedupLabels(table, index, max_bucket=max_bucket) if dedup_labels else None
+    aux_add = write_epoch_aux(spark, index, labels, batch, epoch)
     apply_delta_epoch(spark, table, batch, epoch=epoch, aux_add=aux_add)
     release_caches()
     return table, index

@@ -218,11 +218,9 @@ class CDCEngine:
         self.metrics_dir = os.path.join(table_root, "metrics")
         self._applied_since_compact = 0
         if lsh_index or dedup_labels:
-            from .band_index import DEFAULT_MAX_BUCKET, DedupLabels, LshBandIndex
+            from .band_index import DedupLabels, LshBandIndex
 
             self.lsh_index = LshBandIndex(self.table, text_col=lsh_text_col)
-            if dedup_max_bucket == "auto":
-                dedup_max_bucket = DEFAULT_MAX_BUCKET
             self.dedup_labels = (
                 DedupLabels(
                     self.table,
@@ -312,60 +310,14 @@ class CDCEngine:
         aux_add = None
         persisted = None
         if self.lsh_index is not None:
-            # the batch feeds two consumers now (band rows + apply), so
-            # pin it once instead of recomputing the reduce shuffle;
-            # index files hit disk BEFORE the commit that references them
-            # (a failed commit leaves an orphan dir, swept by expiry)
-            persisted = reduced.persist()
-            import uuid
+            from .band_index import write_epoch_aux
 
-            from .band_index import AUX_NAME, LABELS_AUX, _parquet_rows
-
-            # unique per attempt: a deterministic tag could collide with
-            # a COMMITTED dir on raced redelivery and rmtree files the
-            # snapshot references; an abandoned attempt's dir is just an
-            # unreferenced orphan (expire_snapshots sweeps it)
-            tag = f"e{epoch:06d}-{uuid.uuid4().hex[:8]}"
-            # with labels, the batch's bands are collected once and feed
-            # both the band write and the label delta
-            bands = (
-                self.lsh_index.batch_bands(persisted, epoch)
-                if self.dedup_labels is not None
-                else None
+            # the batch feeds two consumers (aux artifacts + apply), so
+            # pin it once instead of recomputing the reduce shuffle
+            persisted = reduced = reduced.persist()
+            aux_add = write_epoch_aux(
+                self.spark, self.lsh_index, self.dedup_labels, reduced, epoch
             )
-            band_files = self.lsh_index.write_epoch(
-                bands or self.lsh_index.rows_for(persisted, epoch), tag
-            )
-            # config rides the aux entry (first write wins) so a later
-            # maintenance run — possibly a CLI engine constructed with
-            # defaults — rebuilds with the parameters the index was
-            # BUILT with, not silently different ones (round-5 ADVICE);
-            # rows_add feeds the stale-fraction maintenance trigger
-            # (footer metadata, no job)
-            aux_add = {
-                AUX_NAME: {
-                    "files": band_files,
-                    "config": {"text_col": self.lsh_index.text_col},
-                    "rows_add": _parquet_rows(self.table.root, band_files),
-                }
-            }
-            if self.dedup_labels is not None:
-                # computed against the PRE-commit snapshot (index/labels
-                # as of the previous epoch) and written before the data
-                # commit references it
-                aux_add[LABELS_AUX] = {
-                    "files": self.dedup_labels.write_epoch(
-                        self.dedup_labels.delta_for_epoch(
-                            self.spark, persisted, epoch, bands=bands
-                        ),
-                        tag,
-                    ),
-                    "config": {
-                        "threshold": self.dedup_labels.threshold,
-                        "max_bucket": self.dedup_labels.max_bucket,
-                    },
-                }
-            reduced = persisted
         try:
             if self.mode == "mor":
                 stats = apply_delta_epoch(

@@ -31,8 +31,8 @@ Murmur3 ``hash`` — see :func:`bucket_expr`), the shape of the Iceberg
 ``bucket(N, conv_id)`` transform, so a MERGE touches and
 rewrites only the buckets its batch hits (partition-pruned rewrite), and
 at cluster scale the merge join is a co-partitioned storage-partitioned
-join. The call-site API (``merge`` in merge.py) mirrors Iceberg so a real
-Iceberg backend can replace icelite without touching the engine.
+join. The engine writes through two calls in operators/merge.py:
+``merge_epoch`` (copy-on-write) and ``apply_delta_epoch`` (merge-on-read).
 
 Reference analog: the reference's final combined table is fully rebuilt
 per edition and diffed across runs
@@ -878,10 +878,13 @@ class IceliteTable:
     def expire_snapshots(self, keep_last: int = 1, aux_min_age_s: float = 600.0) -> dict:
         """Iceberg-style snapshot expiry: delete snapshot manifests older
         than the newest ``keep_last`` and any data directory no longer
-        referenced by a surviving snapshot. Time-travel back to expired
-        versions is gone; the live view is untouched. Safe against crash:
-        manifests are deleted before data dirs, and an unreferenced dir
-        is also what a crashed commit leaves (cleaned the same way).
+        referenced by a surviving snapshot. The live (``CURRENT``)
+        snapshot always survives, so ``keep_last=0`` keeps only it; a
+        negative ``keep_last`` raises ``ValueError``. Time-travel back to
+        expired versions is gone; the live view is untouched. Safe
+        against crash: manifests are deleted before data dirs, and an
+        unreferenced dir is also what a crashed commit leaves (cleaned
+        the same way).
 
         ``aux_min_age_s``: unreferenced index dirs YOUNGER than this are
         kept — an in-flight ``apply_epoch`` writes its band/label files
@@ -892,8 +895,10 @@ class IceliteTable:
         commit's write→CAS gap exceeds it; pass ``0`` only when no
         writer can be in flight (single-writer maintenance window)."""
         import time as _time
+        if keep_last < 0:
+            raise ValueError(f"keep_last must be >= 0, got {keep_last}")
         names = self.io.list_manifests()
-        keep = set(names[-keep_last:])
+        keep = set(names[-keep_last:] if keep_last else [])
         keep.add(self.io.read_current())
         referenced: set[str] = set()
         for name in keep:

@@ -1,2 +1,3 @@
-"""Operator library: CDC reducers/merge plus training-data-pipeline ops
-(dedup, similarity search, text analysis)."""
+"""Operator library: the CDC reducer, merge and schema evolution, the
+snapshot diff, and the near-duplicate operators (text_dedup, graph)
+behind the band index and dedup labels."""

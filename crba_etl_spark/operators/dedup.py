@@ -1,18 +1,22 @@
-"""CDC batch reducer: LSN dedup + latest-event-per-key (M2).
+"""CDC batch reducer: latest event per key, duplicate LSNs absorbed.
 
 This is the Spark-first re-expression of the reference's
 keep-latest-datapoint-per-key cleanse step (FILT-LATEST,
 ``/root/reference/etl/transformation/cleanse.py:1-3`` — most recent year
 per (country, indicator)); here it is max-LSN per (conv_id, turn_idx).
 
-Skew note (hot Zipf conversation keys): the reduce is expressed as a
-hash aggregation ``groupBy(key).agg(max(struct(lsn, ...)))`` rather than
-a ``row_number()`` window. Catalyst plans a hash agg as partial
-(map-side combine) + final, so a hot key is collapsed to one row per
-input partition *before* the shuffle — the classic salted two-phase
-reduce, done automatically and allocation-free. A window, by contrast,
-shuffles and sorts every event of the hot key into one partition.
-An explicit-salt variant is provided for verification/benchmarks.
+Skew note (hot Zipf conversation keys): the reduce is an aggregation
+``groupBy(key).agg(max_by(struct(payload), lsn))``, not a
+``row_number()`` window. A ``max_by`` over a struct buffer cannot use
+hash aggregation, so Spark plans it as a ``SortAggregate`` pair: a
+partial ``partial_max_by`` (map-side combine) below the exchange and a
+final ``max_by`` above it, each behind a sort on the group key. The
+partial step collapses a hot key to one row per input partition
+*before* the shuffle — the classic salted two-phase reduce, done by the
+planner. A window, by contrast, shuffles and sorts every event of the
+hot key into one partition. When the input is already clustered by
+``conv_id`` (the engine's MOR repartition), both steps run in the same
+stage and the reduce adds no exchange (see PLANS.md, "CDC epoch apply").
 """
 
 from __future__ import annotations
@@ -20,13 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..schema import KEY_COLS
-
-
-def dedup_lsn(events: DataFrame) -> DataFrame:
-    """Drop duplicate-LSN redeliveries (identical logical changes delivered
-    more than once). LSN is unique per logical change, so (key, lsn)
-    identifies one change."""
-    return events.dropDuplicates(KEY_COLS + ["lsn"])
 
 
 def reduce_latest(
@@ -37,9 +34,10 @@ def reduce_latest(
     """One row per key: the event with the highest ``order_col``.
 
     Emits the full event row (op included) so the merge can distinguish
-    upserts from tombstones. Two-phase (partial + final) hash agg — see
-    module docstring for the skew rationale. Also the merge-on-read
-    resolution operator (order_col="__lsn" over base ∪ delta files).
+    upserts from tombstones. Plans as a partial + final ``SortAggregate``
+    — see the module docstring for the plan and the skew rationale. Also
+    the merge-on-read resolution operator (order_col="__lsn" over base ∪
+    delta files).
     """
     keys = key_cols or KEY_COLS
     payload = [c for c in events.columns if c not in keys]
@@ -53,31 +51,13 @@ def reduce_latest(
     return reduced.select(*keys, "_m.*")
 
 
-def reduce_latest_salted(
-    events: DataFrame, n_salts: int = 8, key_cols: list[str] | None = None
-) -> DataFrame:
-    """Explicit two-phase salted reduce (equivalent result to
-    ``reduce_latest``): phase 1 reduces (key, salt) groups, phase 2
-    reduces keys. Kept for demonstration/benchmark comparison — Catalyst's
-    partial aggregation already gives ``reduce_latest`` this shape."""
-    keys = key_cols or KEY_COLS
-    payload = [c for c in events.columns if c not in keys]
-    struct = F.struct(*[F.col("lsn"), *[F.col(c) for c in payload if c != "lsn"]])
-    salted = events.withColumn("_salt", F.pmod(F.xxhash64("lsn"), F.lit(n_salts)))
-    phase1 = salted.groupBy(*keys, "_salt").agg(F.max(struct).alias("_m"))
-    phase2 = phase1.groupBy(*keys).agg(F.max("_m").alias("_m"))
-    return phase2.select(*keys, "_m.*")
-
-
 def reduce_batch(events: DataFrame) -> DataFrame:
     """Full reducer: LSN dedup + latest-per-key in ONE shuffle.
 
     A duplicate-LSN redelivery is byte-identical in every payload column
-    (same logical change), so the max-struct aggregation absorbs it: on
-    an lsn tie the tie-break fields are compared, but whichever copy wins
-    yields the same stored row. Running ``dedup_lsn`` first would add a
-    second shuffle for no semantic difference — measured as pure loss.
-    ``dedup_lsn`` remains available for pipelines that need the deduped
-    *event stream* itself (e.g. exact redelivery-rate metrics).
+    (same logical change), so the ``max_by`` aggregation absorbs it:
+    whichever copy wins an lsn tie yields the same stored row. A
+    separate ``dropDuplicates`` on (key, lsn) first would add a second
+    shuffle for no semantic difference — measured as pure loss.
     """
     return reduce_latest(events)

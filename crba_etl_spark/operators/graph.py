@@ -1,6 +1,6 @@
 """Distributed connected components over candidate-pair edges.
 
-The missing last step of every dedup pipeline: LSH/SimHash produce
+The missing last step of every dedup pipeline: MinHash-LSH produces
 near-duplicate PAIRS, but dedup decisions need transitive GROUPS — if
 A~B and B~C, one keeper must survive for {A,B,C} even though A~C was
 never emitted. Components also scope clustering, per-group sampling

@@ -1,5 +1,5 @@
 """Regenerate PLANS.md: captured physical plans for the load-bearing
-queries, with commentary on what each plan proves at scale. Run from the
+operators, with commentary on what each plan proves at scale. Run from the
 repository root:
     python scripts/dump_plans.py PLANS.md
 tests/test_plans.py builds the same sections and asserts the invariants
@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -26,25 +27,26 @@ def plan_of(df) -> str:
 
 def build_sections(spark) -> list[tuple[str, str, str]]:
     from crba_etl_spark import queries as Q
+    from crba_etl_spark.gen import StreamSpec, generate_stream
     from crba_etl_spark.icelite import BUCKET_COL, bucket_expr
     from crba_etl_spark.operators.dedup import reduce_batch
 
-    from __spark_entry__ import _events_as_cdc
-
     sections = []
 
-    # 1. the CDC epoch apply (single-shuffle path)
-    cdc = _events_as_cdc(spark, SF).repartition(8, F.col("conv_id"))
-    red = reduce_batch(cdc)
-    delta = red.withColumn(BUCKET_COL, bucket_expr(8))
-    sections.append((
-        "CDC epoch apply (repartition → reduce → bucketed delta)",
-        """What to look for: exactly ONE `Exchange hashpartitioning(conv_id, N)`
+    # 1. the CDC epoch apply (single-shuffle path) over one generated epoch
+    with tempfile.TemporaryDirectory(prefix="plans_stream_") as d:
+        generate_stream(d, StreamSpec(seed=1, n_events=2_000, n_epochs=1))
+        events = spark.read.parquet(os.path.join(d, "epoch=0"))
+        red = reduce_batch(events.repartition(8, F.col("conv_id")))
+        delta = red.withColumn(BUCKET_COL, bucket_expr(8))
+        sections.append((
+            "CDC epoch apply (repartition → reduce → bucketed delta)",
+            """What to look for: exactly ONE `Exchange hashpartitioning(conv_id, N)`
 (the repartition); `partial_max_by` + final `max_by` aggregate with NO
 second exchange (map-side combine = the Zipf-hot-key defense); the write
 adds no shuffle because rows already sit in their bucket's partition.""",
-        plan_of(delta),
-    ))
+            plan_of(delta),
+        ))
 
     # 2. filter pushdown + column pruning
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
@@ -57,15 +59,7 @@ columns — at 100 TB the scan reads a fraction of the table.""",
         plan_of(q),
     ))
 
-    # 3. broadcast star join
-    sections.append((
-        "Star join with broadcast dimensions (revenue_by_nation)",
-        """Dimension sides show `BroadcastHashJoin` / `BroadcastExchange` —
-no shuffle of the fact table against small dims.""",
-        plan_of(Q.q_revenue_by_nation(spark, SF)),
-    ))
-
-    # 4. minhash LSH candidates
+    # 3. minhash LSH candidates
     sections.append((
         "MinHash + banded LSH candidate pairs (text)",
         """All hashing is Catalyst expressions (md5/conv) inside
@@ -73,27 +67,6 @@ WholeStageCodegen; candidates come from an equi-join on (band_idx,
 band_hash) — uniform keys, no skew; the quadratic Jaccard verification
 join runs only on candidates (lsh_verified_pairs).""",
         plan_of(Q.q_minhash_lsh_candidates(spark, SF)),
-    ))
-
-    # 5. embedding near-dup, LSH path (round 2: replaced the all-pairs join)
-    sections.append((
-        "Hyperplane-LSH embedding near-dup (candidates + exact verify)",
-        """The round-1 all-pairs `id_a < id_b` theta join
-(BroadcastNestedLoopJoin, O(n²)) is GONE from the production path: sign-
-bit signatures against literal hyperplanes are per-row projections, the
-candidate join is an equi-join on (band_idx, band_val), and the exact
-cosine verification joins back to the vectors by id — every join below
-is a hash/sort-merge EQUI-join.""",
-        plan_of(Q.q_cosine_near_dup(spark, SF)),
-    ))
-
-    # 6. simhash Hamming search
-    sections.append((
-        "SimHash Hamming-radius search (byte-block bucketing)",
-        """Pairs within Hamming distance 3 are found with an equi-join on
-(block_idx, block_val) — complete by pigeonhole over 4 byte blocks —
-then `bit_count(xor)` verifies; no quadratic scan.""",
-        plan_of(Q.q_simhash_near_pairs(spark, SF)),
     ))
 
     return sections
@@ -106,8 +79,9 @@ def write_plans_md(sections, path: str) -> None:
             "Regenerated by `python scripts/dump_plans.py PLANS.md`;\n"
             "tests/test_plans.py asserts the key invariants on the live plans\n"
             "— one exchange in the CDC apply, partial `max_by`, PushedFilters\n"
-            "at the scan, broadcast dims, no nested-loop joins in any LSH path.\n"
-            "(sf0.01 inputs; plan shapes are scale-independent.)\n"
+            "at the scan, no nested-loop join in the MinHash LSH path.\n"
+            "(A 2k-event generated epoch and sf0.01 inputs; plan shapes are\n"
+            "scale-independent.)\n"
         )
         for title, why, plan in sections:
             f.write(f"\n## {title}\n\n{why}\n\n```\n{plan}\n```\n")

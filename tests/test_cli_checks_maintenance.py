@@ -1,5 +1,5 @@
 """CLI entrypoint (python -m crba_etl_spark), quality-report checks,
-snapshot expiry, stateful streaming operator, and hot-key skew."""
+snapshot expiry, and hot-key skew."""
 
 import json
 import os
@@ -130,6 +130,26 @@ def test_expire_snapshots(spark, stream, tmpdir_):
     assert res["removed_data_dirs"]
 
 
+def test_expire_snapshots_keep_last_zero_keeps_only_current(tmpdir_):
+    """keep_last=0 keeps only the live snapshot (a ``names[-0:]`` slice
+    would keep every one), and a negative keep_last is rejected before
+    anything is deleted."""
+    from crba_etl_spark.icelite import IceliteTable
+    from crba_etl_spark.schema import TRANSCRIPT
+
+    t = IceliteTable.create(os.path.join(tmpdir_, "t"), TRANSCRIPT, n_buckets=2)
+    for k in range(3):
+        t.mark_epoch_committed(k)
+    assert len(t.io.list_manifests()) == 4
+    with pytest.raises(ValueError):
+        t.expire_snapshots(keep_last=-1)
+    assert len(t.io.list_manifests()) == 4
+    res = t.expire_snapshots(keep_last=0)
+    assert t.io.list_manifests() == [t.io.read_current()]
+    assert len(res["expired_snapshots"]) == 3
+    assert t.committed_epochs() == {0, 1, 2}
+
+
 def test_hot_key_skew_correctness(spark, tmpdir_):
     """A single conversation carrying 60% of an epoch (Zipf worst case)
     still reduces and applies exactly (partial agg collapses it map-side)."""
@@ -153,41 +173,6 @@ def test_hot_key_skew_correctness(spark, tmpdir_):
     for turn in range(50):
         expect_lsn = (turn + 1) * 60
         assert hot[turn] == f"hot {turn} rev {expect_lsn}"
-
-
-def test_stateful_conversation_progress(spark, stream, tmpdir_):
-    from crba_etl_spark.schema import CHANGE_EVENT
-    from crba_etl_spark.streaming.stateful import conversation_progress
-
-    tail = (
-        spark.readStream.schema(CHANGE_EVENT)
-        .option("basePath", stream)
-        .parquet(stream + "/epoch=*")
-    )
-    out = conversation_progress(tail)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("conv_progress")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout=300)
-    got = spark.sql(
-        "SELECT conv_id, max(turns) AS turns, max(max_lsn) AS max_lsn "
-        "FROM conv_progress GROUP BY conv_id"
-    ).toPandas().set_index("conv_id")
-    ev = spark.read.option("mergeSchema", "true").parquet(stream + "/epoch=*")
-    exp = (
-        ev.groupBy("conv_id")
-        .agg(F.count(F.lit(1)).alias("turns"), F.max("lsn").alias("max_lsn"))
-        .toPandas()
-        .set_index("conv_id")
-    )
-    assert len(got) == len(exp)
-    joined = got.join(exp, lsuffix="_g", rsuffix="_e")
-    assert (joined["max_lsn_g"] == joined["max_lsn_e"]).all()
-    assert (joined["turns_g"] == joined["turns_e"]).all()
 
 
 def test_check_html_report_renders(spark, stream, tmpdir_):

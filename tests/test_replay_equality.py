@@ -53,18 +53,3 @@ def test_mor_compaction_preserves_state(spark, stream, tmpdir_):
     pd.testing.assert_frame_equal(got2, exp, check_dtype=False)
 
 
-def test_salted_reduce_equivalence(spark, stream):
-    """Explicit salted two-phase reduce == hash-agg reduce."""
-    from crba_etl_spark.operators.dedup import (
-        dedup_lsn,
-        reduce_latest,
-        reduce_latest_salted,
-    )
-
-    ev = dedup_lsn(spark.read.parquet(os.path.join(stream, "epoch=3")))
-    a = reduce_latest(ev).orderBy("conv_id", "turn_idx").toPandas()
-    b = reduce_latest_salted(ev).orderBy("conv_id", "turn_idx").toPandas()
-    pd.testing.assert_frame_equal(
-        a.reset_index(drop=True)[sorted(a.columns)],
-        b.reset_index(drop=True)[sorted(b.columns)],
-    )

@@ -1,6 +1,5 @@
-"""Key-resolution and snapshot-diff operators (round-2 additions):
+"""Snapshot-diff operators (round-2 additions):
 
-- resolve_keys: canonical-tier, synonym-tier, unresolved audit;
 - table_diff / snapshot_diff: per-key adds/drops/changes between two
   icelite snapshot versions (time travel), incl. schema evolution;
 - the `python -m crba_etl_spark diff` CLI summary.
@@ -12,65 +11,6 @@ import os
 from conftest import make_events
 from crba_etl_spark.engine import CDCEngine
 from crba_etl_spark.operators.diff import diff_summary, snapshot_diff, table_diff
-from crba_etl_spark.operators.resolve import resolve_keys, unresolved_audit
-
-
-def test_resolve_keys_tiers_and_audit(spark):
-    dirty = spark.createDataFrame(
-        [
-            (1, "FRANCE"),          # canonical exact
-            (2, "  france.  "),     # canonical after normalization
-            (3, "@ecnarf"),         # synonym alias
-            (4, "atlantis"),        # unresolved
-            (5, "atlantis"),
-        ],
-        "id int, raw string",
-    )
-    canon = spark.createDataFrame([("FRANCE",), ("EGYPT",)], "name string")
-    syn = spark.createDataFrame(
-        [("@ecnarf", "FRANCE")], "alias string, canonical string"
-    )
-    r = resolve_keys(dirty, "raw", canonical=canon, canon_col="name", synonyms=syn)
-    got = {row["id"]: (row["resolved"], row["method"]) for row in r.collect()}
-    assert got == {
-        1: ("FRANCE", "canonical"),
-        2: ("FRANCE", "canonical"),
-        3: ("FRANCE", "synonym"),
-        4: (None, "unresolved"),
-        5: (None, "unresolved"),
-    }
-    audit = unresolved_audit(r, "raw").collect()
-    assert [(a["raw"], a["n"]) for a in audit] == [("atlantis", 2)]
-
-
-def test_resolve_keys_norm_collision_no_fanout(spark):
-    """Round-2 ADVICE: two canonical keys (or synonym targets) that
-    normalize to the same string must NOT fan input rows out into
-    duplicates — each lookup side collapses to one row per norm
-    (deterministic min winner) and the collision is labeled
-    *_ambiguous."""
-    dirty = spark.createDataFrame(
-        [(1, "france"), (2, "egypt"), (3, "@tpyge")], "id int, raw string"
-    )
-    # "France." and "france" both normalize to "france"
-    canon = spark.createDataFrame(
-        [("France.",), ("france",), ("EGYPT",)], "name string"
-    )
-    # two synonym rows whose alias normalizes identically but map to
-    # different canonicals
-    syn = spark.createDataFrame(
-        [("@tpyge", "EGYPT"), ("@tpyge!", "EGYPT-ALT")],
-        "alias string, canonical string",
-    )
-    r = resolve_keys(dirty, "raw", canonical=canon, canon_col="name", synonyms=syn)
-    rows = r.collect()
-    assert len(rows) == 3  # the documented contract: no row fan-out
-    got = {row["id"]: (row["resolved"], row["method"]) for row in rows}
-    assert got == {
-        1: ("France.", "canonical_ambiguous"),  # min("France.", "france")
-        2: ("EGYPT", "canonical"),
-        3: ("EGYPT", "synonym_ambiguous"),      # min("EGYPT", "EGYPT-ALT")
-    }
 
 
 def test_table_diff_statuses(spark):

@@ -1,57 +1,25 @@
 """Round-2 hardening regressions:
 
-1. as-of join carries the WHOLE latest right row (a NULL value column in
-   the newest right row must not be backfilled from an older right row);
-2. streaming exactly-once when one epoch's files span micro-batches
+1. streaming exactly-once when one epoch's files span micro-batches
    (maxFilesPerTrigger) — previously the first partial slice committed
    the epoch marker and later slices were silently dropped;
-3. COW merge honors a table's custom key_cols (was hardwired to
+2. COW merge honors a table's custom key_cols (was hardwired to
    conv_id/turn_idx);
-4. compaction quarantine write is crash-retry idempotent (overwrite into
+3. compaction quarantine write is crash-retry idempotent (overwrite into
    the version-named dir, not append).
 """
 
-import datetime as dt
 import os
 
 import pandas as pd
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import types as T
 
 from conftest import make_events
 from crba_etl_spark.engine import CDCEngine
 from crba_etl_spark.gen import StreamSpec, generate_stream, oracle_final
 from crba_etl_spark.icelite import CURRENT, IceliteTable
-from crba_etl_spark.operators.asof import asof_join
 from crba_etl_spark.operators.merge import merge_epoch
 from crba_etl_spark.streaming.tail import stream_apply
-
-
-def test_asof_null_in_latest_right_row_is_carried(spark):
-    t0 = dt.datetime(2025, 1, 1)
-
-    def ts(s):
-        return t0 + dt.timedelta(seconds=s)
-
-    left = spark.createDataFrame(
-        [("k", ts(10)), ("k", ts(1))], "key string, t timestamp"
-    )
-    right = spark.createDataFrame(
-        [
-            ("k", ts(2), 100, "old"),
-            ("k", ts(5), None, "new"),  # newest right row: val_a IS NULL
-        ],
-        "key string, rt timestamp, val_a int, val_b string",
-    )
-    out = asof_join(
-        left, right, on=["key"], left_ts="t", right_ts="rt",
-        right_values=["val_a", "val_b"],
-    )
-    rows = {r["t"]: (r["asof_val_a"], r["asof_val_b"]) for r in out.collect()}
-    # left at t=10 sees right row (t=5): val_a NULL must stay NULL — a
-    # per-column carry would resurrect 100 from the t=2 row
-    assert rows[ts(10)] == (None, "new")
-    # left at t=1 precedes every right row → all-null
-    assert rows[ts(1)] == (None, None)
 
 
 def test_stream_partial_epochs_across_microbatches(spark, tmpdir_):
