@@ -17,7 +17,10 @@ re-runs) re-expressed Spark-first:
   drift, ``/root/reference/config/{2020,2023}/in/data/staging/``);
 - per-partition lineage + apply-rate metrics;
 - optionally, a MinHash band index and near-duplicate group labels
-  maintained in the same commit as each epoch's data (``band_index``).
+  maintained in the same commit as each epoch's data (``band_index``);
+- an oracle-checked query registry (``queries``) over the testdata
+  tables, and the source adapters (``sources``) of the reference ETL's
+  xlsx/csv/API inputs.
 
 Everything is DataFrame-API / Catalyst-optimized; per-row Python is never
 used in the hot path.

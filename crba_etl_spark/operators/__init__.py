@@ -1,3 +1,4 @@
 """Operator library: the CDC reducer, merge and schema evolution, the
-snapshot diff, and the near-duplicate operators (text_dedup, graph)
-behind the band index and dedup labels."""
+snapshot diff, the near-duplicate operators (text_dedup, graph) behind
+the band index and dedup labels, and the text-analysis operators
+(text_analysis) of the training-data queries."""

@@ -59,7 +59,15 @@ columns — at 100 TB the scan reads a fraction of the table.""",
         plan_of(q),
     ))
 
-    # 3. minhash LSH candidates
+    # 3. broadcast star join
+    sections.append((
+        "Star join with broadcast dimensions (revenue_by_nation)",
+        """Dimension sides show `BroadcastHashJoin` / `BroadcastExchange` —
+no shuffle of the fact table against small dims.""",
+        plan_of(Q.q_revenue_by_nation(spark, SF)),
+    ))
+
+    # 4. minhash LSH candidates
     sections.append((
         "MinHash + banded LSH candidate pairs (text)",
         """All hashing is Catalyst expressions (md5/conv) inside
@@ -67,6 +75,15 @@ WholeStageCodegen; candidates come from an equi-join on (band_idx,
 band_hash) — uniform keys, no skew; the quadratic Jaccard verification
 join runs only on candidates (lsh_verified_pairs).""",
         plan_of(Q.q_minhash_lsh_candidates(spark, SF)),
+    ))
+
+    # 5. simhash Hamming search
+    sections.append((
+        "SimHash Hamming-radius search (byte-block bucketing)",
+        """Pairs within Hamming distance 3 are found with an equi-join on
+(block_idx, block_val) — complete by pigeonhole over 4 byte blocks —
+then `bit_count(xor)` verifies; no quadratic scan.""",
+        plan_of(Q.q_simhash_near_pairs(spark, SF)),
     ))
 
     return sections
@@ -79,7 +96,7 @@ def write_plans_md(sections, path: str) -> None:
             "Regenerated by `python scripts/dump_plans.py PLANS.md`;\n"
             "tests/test_plans.py asserts the key invariants on the live plans\n"
             "— one exchange in the CDC apply, partial `max_by`, PushedFilters\n"
-            "at the scan, no nested-loop join in the MinHash LSH path.\n"
+            "at the scan, broadcast dims, no nested-loop joins in any LSH path.\n"
             "(A 2k-event generated epoch and sf0.01 inputs; plan shapes are\n"
             "scale-independent.)\n"
         )

@@ -11,7 +11,10 @@ import pytest
 from crba_etl_spark import queries as Q
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = ["events", "documents"]
+TABLES = [
+    "region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents",
+]
 
 
 @pytest.fixture(scope="module")

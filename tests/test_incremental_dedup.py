@@ -55,3 +55,35 @@ def test_no_candidates_when_disjoint(spark):
     assert incremental_lsh_candidates(new, existing).count() == 0
 
 
+def test_decontaminate_overlap_planted(spark):
+    """Planted eval contamination is flagged with exact counts; a
+    disjoint-alphabet corpus doc is not; the eval-side posting-list cap
+    drops boilerplate shingles shared across many eval docs."""
+    from crba_etl_spark.operators.text_dedup import (
+        decontaminate_overlap,
+        shingles,
+    )
+
+    eval_docs = _docs(
+        spark,
+        [
+            (100, "what is the capital of france paris obviously " * 3),
+            (101, "solve for x in two x plus three equals seven " * 3),
+        ],
+    )
+    leaked = "what is the capital of france paris obviously " * 3
+    corpus = _docs(
+        spark,
+        [
+            (1, leaked),  # verbatim eval leak
+            (2, "zzzz qqqq jjjj xxxx wwww vvvv " * 10),  # disjoint alphabet
+        ],
+    )
+    got = {r["doc_id"]: r for r in decontaminate_overlap(corpus, eval_docs).collect()}
+    assert 2 not in got
+    # the leak shares exactly its own shingle set with eval doc 100
+    n_sh = shingles(corpus.filter(F.col("doc_id") == 1)).count()
+    assert got[1]["n_eval_docs"] == 1
+    assert got[1]["n_shared_shingles"] == n_sh
+    # cap = 0 excludes every eval shingle -> nothing flagged
+    assert decontaminate_overlap(corpus, eval_docs, max_doc_freq=0).count() == 0

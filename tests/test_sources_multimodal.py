@@ -1,5 +1,5 @@
-"""Sources registry, multimodal plumbing, vectorized-UDF twins, and
-plan-shape assertions (pushdown / pruning / broadcast)."""
+"""Sources registry, vectorized-UDF twins, and plan-shape assertions
+(pushdown / pruning / broadcast)."""
 
 import os
 
@@ -10,12 +10,6 @@ from crba_etl_spark.functions.vectorized import (
     normalize_text_catalyst,
     normalize_text_vec,
     token_count_vec,
-)
-from crba_etl_spark.operators.multimodal import (
-    decode_image,
-    extract_features,
-    frame_sample_plan,
-    synthesize_media,
 )
 from crba_etl_spark.operators.text_analysis import token_stats
 from crba_etl_spark.sources import SourceSpec, read_source
@@ -67,34 +61,6 @@ def test_pandas_files_source(spark, tmpdir_):
 def test_unknown_format_rejected(spark):
     with pytest.raises(ValueError, match="unknown source format"):
         read_source(spark, SourceSpec("S-4", "xls", "/nope"))
-
-
-# --- multimodal --------------------------------------------------------------
-
-
-def test_decode_stub_raises_without_fake():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"abc")
-
-
-def test_extract_features_distributed(spark):
-    media = synthesize_media(spark, n=48)
-    feats = extract_features(media, feature_dim=8)
-    rows = feats.collect()
-    assert len(rows) == 48
-    assert all(len(r.feature) == 8 for r in rows)
-    # deterministic: same id -> same feature
-    again = {r.media_id: r.feature for r in extract_features(media).collect()}
-    assert all(again[r.media_id] == r.feature for r in rows)
-
-
-def test_frame_sample_plan(spark):
-    media = synthesize_media(spark, n=30)
-    frames = frame_sample_plan(media, every_ms=500)
-    df = frames.toPandas()
-    assert (df.frame_ts_ms % 500 == 0).all()
-    vids = media.filter("kind = 'video' AND duration_ms IS NOT NULL").count()
-    assert df.media_id.nunique() == vids
 
 
 # --- vectorized twins ---------------------------------------------------------
