@@ -189,7 +189,8 @@ class LshBandIndex:
         ks = sorted({k} | {p[0] for p in map(self._file_part, self.files()) if p})
         # grouped by the KEY columns, not the derived doc_id: a batch the
         # engine already clustered by key (the MOR bucket repartition,
-        # the COW reduce) then aggregates without another exchange
+        # or in COW mode the reduce's own exchange on the key) then
+        # aggregates without another exchange
         kc = self.table.key_cols()
         docs = self._live(batch).select(
             *kc, F.col(self.text_col).alias("text"), F.md5(self.text_col).alias("__d")

@@ -120,10 +120,12 @@ class CDCEngine:
           amplification where a file count cannot), or every
           ``compact_every`` epochs if set. All three are driver-local
           metadata checks (manifest + file sizes), zero Spark jobs.
-        - ``"cow"`` (copy-on-write): each epoch eagerly merges and rewrites
-          the affected buckets — reads are pure scans, but apply cost grows
-          with table size. Right when batches are huge relative to the
-          table or reads vastly outnumber writes.
+        - ``"cow"`` (copy-on-write): each epoch folds its batch into the
+          affected buckets with the same max-LSN resolution reads use
+          (stored ∪ batch rows; the stored row wins an LSN tie) and
+          rewrites them — reads are pure scans, but apply cost grows with
+          table size. Right when batches are huge relative to the table
+          or reads vastly outnumber writes.
 
         ``quarantine`` controls stale/low-LSN event auditing:
 
@@ -131,9 +133,13 @@ class CDCEngine:
           from the stored ``__epoch``/``__lsn`` columns — zero per-epoch
           cost (measured: eager auditing costs ~3x apply throughput,
           because it re-scans the table every epoch → O(table²) total).
-        - ``"eager"``: per-epoch audit; the quarantine table for epoch k is
-          complete the moment k commits (COW mode audits eagerly for free —
-          the merge join already sees both sides).
+        - ``"eager"``: per-epoch audit (a column-pruned max-``__lsn`` scan
+          of the affected buckets joined with the batch); the quarantine
+          table for epoch k (``quarantine/epoch=<k>``, plus one sibling
+          directory per streaming slice) is complete the moment k
+          commits. COW mode always audits eagerly: its fold already
+          counts the stale events, so the audit runs only when there
+          are any.
         - ``False``: off.
 
         ``lsh_index=True`` maintains the persisted MinHash band index
@@ -301,7 +307,7 @@ class CDCEngine:
             )
         reduced = reduce_batch(events)
         # MOR + lazy: per-epoch audit skipped; compaction extracts stale
-        # rows from __epoch/__lsn (COW audits in the merge join anyway)
+        # rows from __epoch/__lsn (a COW fold counts its stale rows anyway)
         eager_dir = (
             self.quarantine_dir
             if (self.quarantine == "eager" or self.mode == "cow")

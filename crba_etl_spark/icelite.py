@@ -23,16 +23,17 @@ Layout::
       data/e<epoch>-v<version>/__bucket=<b>/part-*.parquet
       snapshots/snapshot-<version>.json
       CURRENT                      # name of the live snapshot (atomic replace)
-      quarantine/epoch=<k>/        # late/low-LSN events (appended per epoch)
+      quarantine/epoch=<k>[.<slice>]/  # late/low-LSN events, one dir per applied unit
       metrics/                     # per-epoch lineage + apply metrics
 
 The table is hash-bucketed by ``conv_id`` (``pmod(hash(conv_id), N)``, Spark's
 Murmur3 ``hash`` — see :func:`bucket_expr`), the shape of the Iceberg
-``bucket(N, conv_id)`` transform, so a MERGE touches and
-rewrites only the buckets its batch hits (partition-pruned rewrite), and
-at cluster scale the merge join is a co-partitioned storage-partitioned
-join. The engine writes through two calls in operators/merge.py:
-``merge_epoch`` (copy-on-write) and ``apply_delta_epoch`` (merge-on-read).
+``bucket(N, conv_id)`` transform, so a copy-on-write apply reads and
+rewrites only the buckets its batch hits (partition-pruned rewrite). The
+engine writes through two calls in operators/merge.py, one apply body:
+``apply_delta_epoch`` (merge-on-read: the batch becomes delta files) and
+``merge_epoch`` (copy-on-write: the batch is folded into its buckets by
+the max-``__lsn`` resolution :meth:`IceliteTable.read_resolved` uses).
 
 Reference analog: the reference's final combined table is fully rebuilt
 per edition and diffed across runs

@@ -45,20 +45,23 @@ def _bucket_lineage(table, epoch: int, version: int) -> list[dict]:
     return rows
 
 
+def unit_name(epoch: int, slice_marker: str | None = None) -> str:
+    """Name of one applied unit's artifacts: ``epoch=<k>`` for a whole
+    epoch, ``epoch=<k>.<marker>`` for a streaming slice — several slices
+    may apply parts of one epoch, and none may overwrite another's."""
+    if not slice_marker:
+        return f"epoch={epoch}"
+    return f"epoch={epoch}." + str(slice_marker).replace(":", "_").replace("/", "_")
+
+
 def write_epoch_metrics(table, metrics_dir: str, stats: dict) -> None:
     os.makedirs(os.path.join(metrics_dir, "lineage"), exist_ok=True)
     epoch = stats["epoch"]
-    # a streaming slice is its own metrics row (several slices may apply
-    # parts of one epoch — don't overwrite each other's stats)
-    suffix = ""
-    if stats.get("slice"):
-        suffix = "." + str(stats["slice"]).replace(":", "_").replace("/", "_")
-    with open(os.path.join(metrics_dir, f"epoch={epoch}{suffix}.json"), "w") as f:
+    name = unit_name(epoch, stats.get("slice"))
+    with open(os.path.join(metrics_dir, f"{name}.json"), "w") as f:
         json.dump(stats, f)
     lineage = _bucket_lineage(table, epoch, stats["version"])
-    with open(
-        os.path.join(metrics_dir, "lineage", f"epoch={epoch}{suffix}.json"), "w"
-    ) as f:
+    with open(os.path.join(metrics_dir, "lineage", f"{name}.json"), "w") as f:
         json.dump(lineage, f)
 
 

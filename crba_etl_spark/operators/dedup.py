@@ -21,7 +21,7 @@ stage and the reduce adds no exchange (see PLANS.md, "CDC epoch apply").
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..schema import KEY_COLS
 
@@ -29,24 +29,26 @@ from ..schema import KEY_COLS
 def reduce_latest(
     events: DataFrame,
     key_cols: list[str] | None = None,
-    order_col: str = "lsn",
+    order_col: str | Column = "lsn",
 ) -> DataFrame:
     """One row per key: the event with the highest ``order_col``.
 
     Emits the full event row (op included) so the merge can distinguish
     upserts from tombstones. Plans as a partial + final ``SortAggregate``
     — see the module docstring for the plan and the skew rationale. Also
-    the merge-on-read resolution operator (order_col="__lsn" over base ∪
-    delta files).
+    the table's resolution operator (order_col="__lsn" over base ∪ delta
+    files, and over stored ∪ batch rows in a copy-on-write apply, which
+    passes a ``struct`` to break LSN ties).
     """
     keys = key_cols or KEY_COLS
     payload = [c for c in events.columns if c not in keys]
-    # max_by(struct(payload), order_col): argmax comparing ONLY the
-    # order key — measured ~17% faster than max(struct(order, ...)),
-    # which compares whole rows lexicographically. Ties (duplicate-LSN
+    order = F.col(order_col) if isinstance(order_col, str) else order_col
+    # max_by(struct(payload), order): argmax comparing ONLY the order
+    # key — measured ~17% faster than max(struct(order, ...)), which
+    # compares whole rows lexicographically. Ties (duplicate-LSN
     # redeliveries) carry identical stored payloads, so the arbitrary
-    # tie-pick cannot change the result.
-    m = F.max_by(F.struct(*[F.col(c) for c in payload]), F.col(order_col))
+    # tie-pick cannot change the payload.
+    m = F.max_by(F.struct(*[F.col(c) for c in payload]), order)
     reduced = events.groupBy(*keys).agg(m.alias("_m"))
     return reduced.select(*keys, "_m.*")
 

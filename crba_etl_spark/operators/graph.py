@@ -359,9 +359,48 @@ def merge_components(
         # over the cap: reuse the materialized edge relation for the
         # distributed path (the expensive plan already executed once)
         new_edges, src, dst = e_df, "a", "b"
-    # truncate lineage at the edge set — same rationale as
-    # merge_components_delta (multiple consuming branches + broadcast
-    # exchanges + per-action plan-string cost)
+    ends, mapping, new_rows = _condense_and_map(
+        lab, new_edges, src, dst, reliable_checkpoint
+    )
+    # relabel only touched components: one streamed pass over labels
+    updated = lab.join(mapping, lab["label"] == F.col("_old"), "left").select(
+        "node", F.coalesce("_new", "label").alias("label")
+    )
+    out = updated.union(new_rows)
+    if new_nodes is not None:
+        singles = (
+            new_nodes.select(F.col(node_col).alias("node"))
+            .distinct()
+            .join(F.broadcast(ends), "node", "left_anti")
+            .select("node", F.col("node").alias("label"))
+        )
+        out = out.union(singles)
+    return out
+
+
+def _condense_and_map(
+    lab: DataFrame,
+    new_edges: DataFrame,
+    src: str,
+    dst: str,
+    reliable_checkpoint: str | None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The distributed body of :func:`merge_components` and
+    :func:`merge_components_delta`: materialize the new edge set, look up
+    each endpoint's current label (endpoints unseen by the labeling
+    label themselves), run ``connected_components_star`` over the
+    condensed label graph and broadcast its old → new label mapping.
+    Returns ``(ends, mapping, new_rows)``: the distinct endpoints, the
+    broadcast ``(_old, _new)`` mapping, and the (node, label) rows of
+    the endpoints the labeling lacks.
+
+    The edge set is a lineage cut: it feeds several output branches and
+    broadcast exchanges, each of which re-executes the caller's full
+    candidate+verify pipeline (337 s vs ~20 s on a 2k-doc batch) — and
+    worse, every downstream action's listener-event plan string
+    re-prints that whole subtree (cached relations don't shrink it;
+    observed 540 s of single-threaded explainString per epoch).
+    localCheckpoint executes the subtree ONCE and leaves a leaf node."""
     with _no_constraint_propagation(new_edges.sparkSession):
         e = _materialize(
             new_edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -375,7 +414,7 @@ def merge_components(
         .distinct()
     )
     # existing label of each endpoint (streamed big side ⨝ broadcast
-    # endpoints); endpoints unseen by the labeling label themselves
+    # endpoints)
     matched = persist_tracked(lab.join(F.broadcast(ends), "node"))
     unmatched = ends.join(
         F.broadcast(matched.select("node")), "node", "left_anti"
@@ -383,7 +422,6 @@ def merge_components(
     ep = persist_tracked(
         matched.union(unmatched.select("node", F.col("node").alias("label")))
     )
-
     cond = (
         e.join(F.broadcast(ep.withColumnRenamed("node", "a")), "a")
         .withColumnRenamed("label", "la")
@@ -398,23 +436,10 @@ def merge_components(
             F.col("node").alias("_old"), F.col("label").alias("_new")
         )
     )
-    # relabel only touched components: one streamed pass over labels
-    updated = lab.join(mapping, lab["label"] == F.col("_old"), "left").select(
-        "node", F.coalesce("_new", "label").alias("label")
-    )
     new_rows = unmatched.join(
         mapping, unmatched["node"] == F.col("_old"), "left"
     ).select("node", F.coalesce("_new", "node").alias("label"))
-    out = updated.union(new_rows)
-    if new_nodes is not None:
-        singles = (
-            new_nodes.select(F.col(node_col).alias("node"))
-            .distinct()
-            .join(F.broadcast(ends), "node", "left_anti")
-            .select("node", F.col("node").alias("label"))
-        )
-        out = out.union(singles)
-    return out
+    return ends, mapping, new_rows
 
 
 def _merge_driver(
@@ -540,54 +565,14 @@ def merge_components_delta(
                 lab, edges, new_nodes, node_col, delta_only=True
             )
         new_edges, src, dst = e_df, "a", "b"
-    # TRUNCATE lineage at the edge set: it feeds several output branches
-    # and broadcast exchanges, each of which re-executes the caller's
-    # full candidate+verify pipeline (337 s vs ~20 s on a 2k-doc batch)
-    # — and worse, every downstream action's listener-event plan string
-    # re-prints that whole subtree (cached relations don't shrink it;
-    # observed 540 s of single-threaded explainString per epoch).
-    # localCheckpoint executes the subtree ONCE and leaves a leaf node.
-    with _no_constraint_propagation(new_edges.sparkSession):
-        e = _materialize(
-            new_edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct(),
-            reliable_checkpoint,
-        )
-    ends = persist_tracked(
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    matched = persist_tracked(lab.join(F.broadcast(ends), "node"))
-    unmatched = ends.join(
-        F.broadcast(matched.select("node")), "node", "left_anti"
-    )
-    ep = persist_tracked(
-        matched.union(unmatched.select("node", F.col("node").alias("label")))
-    )
-    cond = (
-        e.join(F.broadcast(ep.withColumnRenamed("node", "a")), "a")
-        .withColumnRenamed("label", "la")
-        .join(F.broadcast(ep.withColumnRenamed("node", "b")), "b")
-        .select(F.col("la").alias("id_a"), F.col("label").alias("id_b"))
-    )
-    comp = connected_components_star(
-        cond, reliable_checkpoint=reliable_checkpoint
-    )
-    mapping = F.broadcast(
-        comp.filter(F.col("node") != F.col("label")).select(
-            F.col("node").alias("_old"), F.col("label").alias("_new")
-        )
+    ends, mapping, new_rows = _condense_and_map(
+        lab, new_edges, src, dst, reliable_checkpoint
     )
     # rows whose label is remapped — _new != _old == their current label,
     # so every emitted row is a real change
     changed = lab.join(mapping, lab["label"] == F.col("_old")).select(
         "node", F.col("_new").alias("label")
     )
-    new_rows = unmatched.join(
-        mapping, unmatched["node"] == F.col("_old"), "left"
-    ).select("node", F.coalesce("_new", "node").alias("label"))
     out = changed.union(new_rows)
     if new_nodes is not None:
         nn = new_nodes.select(F.col(node_col).alias("node")).distinct()

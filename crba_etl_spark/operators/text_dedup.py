@@ -6,24 +6,16 @@ operator here has an exact cross-engine oracle. Everything is pure
 DataFrame/Catalyst column expressions (JVM-side, codegen'd) — no Python
 UDFs anywhere.
 
-Scale notes (100 TB):
-- exact dedup is a hash groupBy — map-side partial agg, one shuffle on
-  the 128-bit digest (uniform, no skew);
-- shingling multiplies rows ×~L; the shingle->doc join for Jaccard is
-  quadratic in posting-list length, so it is for *verification of
-  candidates*; MinHash+LSH is the scale path: signature is a fixed-width
-  row per doc, candidates come from equi-joins on band hashes (uniform
-  keys), and only candidates pay the verification join;
-- SimHash reduces each doc to one 32-bit value: near-dup = small Hamming
-  distance; ``simhash_near_pairs`` buckets by 8-bit blocks (pigeonhole:
-  a pair within Hamming distance 3 agrees on >= 1 of the 4 blocks) so
-  the search is an equi-join, not an all-pairs scan — and it is COMPLETE
-  for radius <= 3.
+Scale notes (100 TB): shingling multiplies rows ×~L; the shingle->doc
+join for Jaccard is quadratic in posting-list length, so it is for
+*verification of candidates*; MinHash+LSH is the scale path: signature
+is a fixed-width row per doc, candidates come from equi-joins on band
+hashes (uniform keys), and only candidates pay the verification join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..cache import persist_tracked
 from ..spread import spread_compute
@@ -68,13 +60,6 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     first (no-op at corpus scale, see spread.py)."""
     base = spread_compute(docs.select(id_col, text_col))
     return base.select(id_col, F.explode(shingle_array(text_col)).alias("sh"))
-
-
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact duplicate groups by content digest: (text_md5, n_docs, keeper)."""
-    return docs.groupBy(F.md5(text_col).alias("text_md5")).agg(
-        F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keeper")
-    )
 
 
 def ngram_jaccard_pairs(
@@ -488,183 +473,3 @@ def minhash_lsh_candidates(
         "bkey", F.col("doc_id").alias("member"), "rep"
     )
     return pairs, mem, star
-
-
-def decontaminate_overlap(
-    corpus: DataFrame,
-    eval_docs: DataFrame,
-    id_col: str = "doc_id",
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """Training-data DECONTAMINATION: flag corpus documents sharing
-    character shingles with a held-out evaluation set — the check every
-    training pipeline runs before a benchmark claim means anything.
-    Output one row per contaminated corpus doc:
-    (doc_id, n_eval_docs, n_shared_shingles).
-
-    Shape: shingle equi-join (corpus shingles ⨝ eval shingles) + one
-    map-side-combinable agg — cost is bounded by |corpus shingles| +
-    matches, never corpus×eval. The eval side is tiny relative to the
-    corpus (benchmarks are), so at cluster scale it broadcast-joins.
-    ``max_doc_freq`` drops shingles appearing in more than that many
-    EVAL docs from the comparison — boilerplate n-grams shared by many
-    eval items signal template overlap, not contamination, and they
-    dominate join cost (same posting-list cap as the Jaccard join)."""
-    cs = shingles(corpus, id_col)
-    es = shingles(eval_docs, id_col).withColumnRenamed(id_col, "eval_id")
-    if max_doc_freq is not None:
-        rare = (
-            es.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("sh")
-        )
-        es = es.join(rare, "sh")
-    return (
-        cs.join(es, "sh")
-        .groupBy(id_col)
-        .agg(
-            F.countDistinct("eval_id").alias("n_eval_docs"),
-            F.countDistinct("sh").alias("n_shared_shingles"),
-        )
-    )
-
-
-def simhash32(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """32-bit SimHash per document over character shingles.
-
-    bit_i(doc) = sign of sum over shingles of (2*bit_i(h32(sh)) - 1).
-    """
-    sh = shingles(docs, id_col).withColumn("h", h32(F.col("sh")))
-    bit_sums = [
-        F.sum(
-            (F.expr(f"shiftright(h, {i}) & 1") * 2 - 1)
-        ).alias(f"bs{i}")
-        for i in range(32)
-    ]
-    agg = sh.groupBy(id_col).agg(*bit_sums)
-    sim = None
-    for i in range(32):
-        term = F.when(F.col(f"bs{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return agg.select(id_col, sim.cast("long").alias("simhash"))
-
-
-#: 8-bit blocks of the 32-bit SimHash — the Hamming-search bucketing unit
-HAMMING_BLOCKS = 4
-
-
-def simhash_near_pairs(
-    docs: DataFrame, max_hamming: int = 3, id_col: str = "doc_id"
-) -> DataFrame:
-    """All pairs within SimHash Hamming distance ``max_hamming``, found
-    sub-quadratically: split the 32-bit signature into 4 byte blocks; by
-    pigeonhole any pair with <= 3 differing bits agrees on at least one
-    FULL block, so an equi-join on (block_idx, block_val) generates a
-    complete candidate set (uniform 8-bit keys — no skew), and
-    ``bit_count(xor)`` verifies the exact distance. COMPLETE (not
-    approximate) for ``max_hamming <= HAMMING_BLOCKS - 1``; at 100 TB the
-    join fan-out per bucket is n/1024 per block on average instead of n.
-    Output: (id_a < id_b, hamming)."""
-    if max_hamming > HAMMING_BLOCKS - 1:
-        raise ValueError(
-            f"completeness holds only for max_hamming <= {HAMMING_BLOCKS - 1}"
-        )
-    # materialized (tracked) before the block self-join — same rationale
-    # as minhash_lsh_candidates: one signature subtree, not one per side
-    sig = persist_tracked(simhash32(docs, id_col))
-    blocks = sig.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("block_idx"),
-                        F.shiftright("simhash", 8 * j)
-                        .bitwiseAND(F.lit(255))
-                        .alias("block_val"),
-                    )
-                    for j in range(HAMMING_BLOCKS)
-                ]
-            )
-        ).alias("blk"),
-    ).select(id_col, "simhash", "blk.block_idx", "blk.block_val")
-    a, b = blocks.alias("a"), blocks.alias("b")
-    return (
-        a.join(b, on=["block_idx", "block_val"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def chunk_dedup(
-    docs: DataFrame, text_col: str = "text", chunk_words: int = 8
-) -> DataFrame:
-    """Corpus-wide exact CHUNK dedup (the span-granular form of exact
-    substring dedup, Lee et al. 2022 "Deduplicating Training Data Makes
-    Language Models Better" — public): split every document into
-    fixed-width word chunks, keep only the FIRST occurrence of each
-    distinct chunk corpus-wide (ordered by (doc_id, chunk_idx)), and
-    re-assemble each document from its surviving chunks. Removes
-    repeated spans (licenses, templated turns, quoted context) that
-    whole-document dedup misses. The reference deduplicates whole rows
-    with pandas drop_duplicates (etl/transformation/cleanse.py); this is
-    the sub-document distributed form.
-
-    Output: (doc_id, n_chunks, n_kept, kept_frac, cleaned_text) —
-    cleaned_text is '' when every chunk of the document appeared
-    earlier (a pure duplicate).
-
-    Scale shape: chunking is a per-row array op (flatMap via posexplode,
-    no shuffle); first-occurrence selection is a window keyed by the
-    chunk's md5 — ONE exchange on a uniform 128-bit key, group sizes =
-    duplicate multiplicity (bounded; no skew blowup since identical
-    boilerplate collapses to one group scanned once) — and re-assembly
-    is a groupBy(doc_id) whose collect_list is bounded by document
-    length. No join-back: the window form replaces the classic
-    agg+self-join (which would scan the exploded corpus twice)."""
-    ws = F.split(F.col(text_col), " ")
-    n_chunks = F.greatest(
-        F.ceil(F.size(ws) / F.lit(float(chunk_words))).cast("int"), F.lit(1)
-    )
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.array_join(F.slice(ws, i * chunk_words + 1, chunk_words), " "),
-    )
-    # chunk building (transform/slice/array_join lambdas) is interpreted
-    # per element — spread the narrow projection so a single-split scan
-    # doesn't serialize it (no-op on well-split inputs, see spread.py)
-    ch = spread_compute(docs.select("doc_id", text_col)).select(
-        "doc_id", F.posexplode(chunks).alias("chunk_idx", "chunk")
-    )
-    w = Window.partitionBy(F.md5("chunk")).orderBy("doc_id", "chunk_idx")
-    ranked = ch.select(
-        "doc_id", "chunk_idx", "chunk",
-        (F.row_number().over(w) == 1).alias("kept"),
-    )
-    n_kept = F.sum(F.col("kept").cast("int")).cast("long")
-    return ranked.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_chunks"),
-        n_kept.alias("n_kept"),
-        F.round(n_kept / F.count(F.lit(1)), 6).alias("kept_frac"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("kept"), F.struct("chunk_idx", "chunk"))
-                    )
-                ),
-                lambda x: x["chunk"],
-            ),
-            " ",
-        ).alias("cleaned_text"),
-    )

@@ -869,15 +869,6 @@ FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 # 3. training-data operators (documents)
 
 
-def q_dedup_exact_text(spark, sf_dir):
-    return text_dedup.exact_dedup_groups(load(spark, sf_dir, "documents"))
-
-
-SQL_DEDUP_EXACT_TEXT = """
-SELECT md5(text) AS text_md5, count(*) AS n_docs, min(doc_id) AS keeper
-FROM documents GROUP BY 1
-"""
-
 def _sql_shingles(src: str = "documents") -> str:
     """The shingle CTE pair, parameterized over its document source so
     compositions (e.g. near-dup dedup over a quality-FILTERED corpus)
@@ -1180,44 +1171,6 @@ def q_incremental_dedup_groups(spark, sf_dir):
     )
 
 
-def q_decontaminate_overlap(spark, sf_dir):
-    """Benchmark decontamination over the corpus: the 5% md5 slice
-    (bucket ≥ 95) stands in for a held-out eval set; every corpus doc
-    (bucket < 95) sharing ≥ 1 character shingle with any eval doc is
-    flagged with its overlap counts. A shingle equi-join + one agg —
-    at 100 TB the eval side is benchmark-sized and broadcasts; the
-    corpus pays exactly one shingle pass (`decontaminate_overlap`,
-    operators/text_dedup.py)."""
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long"),
-        F.lit(100),
-    )
-    corpus = docs.filter(bucket < 95)
-    eval_docs = docs.filter(bucket >= 95)
-    return text_dedup.decontaminate_overlap(corpus, eval_docs)
-
-
-def _sql_decontaminate_overlap():
-    return f"""
-WITH split AS (
-  SELECT doc_id, text,
-         (('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 100) AS b
-  FROM documents
-),
-corpus AS (SELECT doc_id, text FROM split WHERE b < 95),
-eval_docs AS (SELECT doc_id, text FROM split WHERE b >= 95),
-{_sql_shingles('corpus').replace('pos AS', 'cpos AS').replace('sh AS', 'csh AS').replace('FROM pos', 'FROM cpos')},
-{_sql_shingles('eval_docs').replace('pos AS', 'epos AS').replace('sh AS', 'esh AS').replace('FROM pos', 'FROM epos')}
-SELECT c.doc_id AS doc_id,
-       count(DISTINCT e.doc_id) AS n_eval_docs,
-       count(DISTINCT c.sh) AS n_shared_shingles
-FROM csh c JOIN esh e ON c.sh = e.sh
-GROUP BY 1
-"""
-
-
 def q_boilerplate_ngrams(spark, sf_dir):
     """Boilerplate mining: the character 5-grams shared by the most
     documents (document frequency ≥ 5), top 20 — the signal behind
@@ -1375,65 +1328,6 @@ SELECT g.doc_id, g.group_id, q.quality,
          PARTITION BY g.group_id ORDER BY q.quality DESC, g.doc_id ASC
        ) = 1 AS is_keeper
 FROM grp g JOIN q USING (doc_id)
-"""
-
-
-def q_simhash_near_pairs(spark, sf_dir):
-    """SimHash Hamming-radius search, sub-quadratic (byte-block
-    bucketing); COMPLETE for radius 3 — the oracle computes the same set
-    quadratically."""
-    return text_dedup.simhash_near_pairs(
-        load(spark, sf_dir, "documents"), max_hamming=3
-    )
-
-
-def _sql_simhash_near_pairs():
-    sums = ",\n         ".join(
-        f"sum(((h >> {i}) & 1) * 2 - 1) AS bs{i}" for i in range(32)
-    )
-    val = " + ".join(
-        f"CASE WHEN bs{i} > 0 THEN {1 << i} ELSE 0 END" for i in range(32)
-    )
-    return f"""
-WITH {_SQL_SHINGLES},
-hashed AS (
-  SELECT doc_id, ('0x' || substr(md5(sh), 1, 8))::BIGINT AS h FROM sh
-),
-bits AS (
-  SELECT doc_id,
-         {sums}
-  FROM hashed GROUP BY doc_id
-),
-s AS (SELECT doc_id, CAST({val} AS BIGINT) AS simhash FROM bits)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-"""
-
-
-def q_simhash(spark, sf_dir):
-    return text_dedup.simhash32(load(spark, sf_dir, "documents"))
-
-
-def _sql_simhash():
-    sums = ",\n         ".join(
-        f"sum(((h >> {i}) & 1) * 2 - 1) AS bs{i}" for i in range(32)
-    )
-    val = " + ".join(
-        f"CASE WHEN bs{i} > 0 THEN {1 << i} ELSE 0 END" for i in range(32)
-    )
-    return f"""
-WITH {_SQL_SHINGLES},
-hashed AS (
-  SELECT doc_id, ('0x' || substr(md5(sh), 1, 8))::BIGINT AS h FROM sh
-),
-bits AS (
-  SELECT doc_id,
-         {sums}
-  FROM hashed GROUP BY doc_id
-)
-SELECT doc_id, CAST({val} AS BIGINT) AS simhash FROM bits
 """
 
 
@@ -2439,37 +2333,6 @@ FROM per, stats
 """
 
 
-def q_chunk_dedup(spark, sf_dir):
-    """Corpus-wide exact chunk (sub-document span) dedup — keep the
-    first occurrence of every 8-word chunk, re-assemble documents
-    (operators/text_dedup.chunk_dedup; window form, one uniform-key
-    exchange, no join-back)."""
-    return text_dedup.chunk_dedup(load(spark, sf_dir, "documents"))
-
-
-SQL_CHUNK_DEDUP = """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-ch AS (
-  SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-         array_to_string(ws[(i*8+1):(i*8+8)], ' ') AS chunk
-  FROM w, UNNEST(range(greatest(CAST(ceil(len(ws) / 8.0) AS BIGINT), 1))) AS t(i)
-),
-r AS (
-  SELECT doc_id, chunk_idx, chunk,
-         row_number() OVER (PARTITION BY md5(chunk)
-                            ORDER BY doc_id, chunk_idx) = 1 AS kept
-  FROM ch
-)
-SELECT doc_id,
-       count(*)::BIGINT AS n_chunks,
-       (count(*) FILTER (kept))::BIGINT AS n_kept,
-       round((count(*) FILTER (kept)) / CAST(count(*) AS DOUBLE), 6) AS kept_frac,
-       coalesce(string_agg(chunk, ' ' ORDER BY chunk_idx) FILTER (kept), '')
-         AS cleaned_text
-FROM r GROUP BY doc_id
-"""
-
-
 def q_pack_conversations(spark, sf_dir, n_shards: int | None = None):
     """Context-window packing with CONVERSATIONS as the indivisible
     unit — a transcript must never straddle two training windows, so
@@ -2536,9 +2399,9 @@ def registry() -> dict[str, tuple]:
     exact DuckDB oracle, compared row for row by
     tests/test_entry_contract.py. One representative per operator family
     first — CDC, windows, TPC-H aggregates, sketches, reshape, sampling,
-    set ops, text dedup (exact/chunk/MinHash-LSH/SimHash/components/
-    incremental), text analysis, curation, analytics
-    (funnel/retention/interval/salted/BM25/profile) — then the twins,
+    set ops, text dedup (MinHash-LSH/components/incremental), text
+    analysis, curation, analytics (funnel/retention/interval/salted/BM25/
+    profile) — then the twins,
     intermediates and labeled quadratic baselines.
     """
     return {
@@ -2582,9 +2445,6 @@ def registry() -> dict[str, tuple]:
         "pii_redact": (q_pii_redact, _sql_pii_redact()),
         "pack_sharded": (q_pack_sharded_pinned, SQL_PACK_SHARDED),
         "weighted_sample": (q_weighted_sample, SQL_WEIGHTED_SAMPLE),
-        "dedup_exact_text": (q_dedup_exact_text, SQL_DEDUP_EXACT_TEXT),
-        # sub-document exact span dedup (round-5)
-        "chunk_dedup": (q_chunk_dedup, SQL_CHUNK_DEDUP),
         "minhash_lsh_candidates": (q_minhash_lsh_candidates, _sql_minhash_lsh()),
         "dedup_groups": (q_dedup_groups, _sql_dedup_groups()),
         "dedup_keepers": (q_dedup_keepers, _sql_dedup_keepers()),
@@ -2594,11 +2454,6 @@ def registry() -> dict[str, tuple]:
         # engine-maintained incremental labeling ≡ full recompute closure
         "engine_dedup_labels": (q_engine_dedup_labels, _sql_dedup_groups()),
         "boilerplate_ngrams": (q_boilerplate_ngrams, _sql_boilerplate_ngrams()),
-        "decontaminate_overlap": (
-            q_decontaminate_overlap,
-            _sql_decontaminate_overlap(),
-        ),
-        "simhash_near_pairs": (q_simhash_near_pairs, _sql_simhash_near_pairs()),
         "quality_score": (q_quality_score, SQL_QUALITY_SCORE),
         "lang_id": (q_lang_id, SQL_LANG_ID),
         "curation_near_dup_pipeline": (
@@ -2641,7 +2496,6 @@ def registry() -> dict[str, tuple]:
         # transcripts x packing composition (conversation-whole units)
         "pack_conversations": (q_pack_conversations_pinned, SQL_PACK_CONVERSATIONS),
         "minhash_signatures": (q_minhash_signatures, _sql_minhash_signatures()),
-        "simhash": (q_simhash, _sql_simhash()),
         # *_exact_baseline naming = the registry's own warning label: the
         # quadratic forms exist only as recall oracles for the LSH paths
         "ngram_jaccard_exact_baseline": (

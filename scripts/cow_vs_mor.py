@@ -1,4 +1,4 @@
-"""COW-vs-MOR apply-cost study → BENCH/COW_VS_MOR.md.
+"""COW-vs-MOR apply-cost study, written as a markdown report.
 
 Replays the identical change stream through both apply modes and records
 per-epoch apply seconds and rows rewritten. The point being measured:
@@ -6,17 +6,20 @@ per-epoch apply seconds and rows rewritten. The point being measured:
 - MOR (merge-on-read) apply is O(batch): each epoch appends per-bucket
   delta files; nothing existing is read or rewritten — apply time stays
   flat as the table grows.
-- COW (copy-on-write) apply is O(batch + touched-table): the full-outer
-  merge rewrites every row of every affected bucket, so apply time grows
-  with accumulated table size whenever the key space keeps widening (the
-  transcript workload: new conversations arrive every epoch). With Zipf
-  keys most epochs touch most buckets, so rows_carried ~ table size.
+- COW (copy-on-write) apply is O(batch + touched-table): the batch is
+  folded into every stored row of every affected bucket (max-LSN per
+  key over stored ∪ batch) and those buckets are rewritten, so apply
+  time grows with accumulated table size whenever the key space keeps
+  widening (the transcript workload: new conversations arrive every
+  epoch). With Zipf keys most epochs touch most buckets, so
+  rows_carried ~ table size.
 
 Crossover guidance (printed into the report): COW pays off only when
 epochs are large relative to the table (early bootstrap, full-refresh
 loads) or reads vastly outnumber writes and compaction lag is
 unacceptable; a sustained 10^10-event tail wants MOR + periodic
-compaction. Run: python scripts/cow_vs_mor.py
+compaction. Run: python scripts/cow_vs_mor.py BENCH/COW_VS_MOR.md
+(``CROSSOVER_EVENTS``/``CROSSOVER_EPOCHS`` size the stream).
 """
 
 from __future__ import annotations
@@ -34,10 +37,15 @@ N_EPOCHS = int(os.environ.get("CROSSOVER_EPOCHS", "8"))
 
 
 def main() -> None:
+    import argparse
+
     from crba_etl_spark.engine import CDCEngine
     from crba_etl_spark.gen import StreamSpec, generate_stream
     from crba_etl_spark.session import get_spark
 
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("out", help="path of the markdown report, e.g. BENCH/COW_VS_MOR.md")
+    args = ap.parse_args()
     spark = get_spark(
         app_name="cow-vs-mor",
         master="local[8]",
@@ -110,8 +118,7 @@ def main() -> None:
         "COW remains right for bootstrap loads (epoch >> table) or",
         "read-dominated tables that cannot tolerate resolve-on-read.",
     ]
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "COW_VS_MOR.md"), "w") as f:
+    with open(args.out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines))
     spark.stop()

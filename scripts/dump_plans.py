@@ -77,15 +77,6 @@ join runs only on candidates (lsh_verified_pairs).""",
         plan_of(Q.q_minhash_lsh_candidates(spark, SF)),
     ))
 
-    # 5. simhash Hamming search
-    sections.append((
-        "SimHash Hamming-radius search (byte-block bucketing)",
-        """Pairs within Hamming distance 3 are found with an equi-join on
-(block_idx, block_val) — complete by pigeonhole over 4 byte blocks —
-then `bit_count(xor)` verifies; no quadratic scan.""",
-        plan_of(Q.q_simhash_near_pairs(spark, SF)),
-    ))
-
     return sections
 
 

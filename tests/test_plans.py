@@ -40,14 +40,10 @@ def test_plan_invariants_and_regenerate_plans_md(spark, tmp_path):
     star = plans["Star join with broadcast dimensions"]
     assert "BroadcastHashJoin" in star
 
-    # --- every LSH path: equi-joins only, never nested-loop/cartesian ---
-    for name in (
-        "MinHash + banded LSH candidate pairs",
-        "SimHash Hamming-radius search",
-    ):
-        p = plans[name]
-        assert "BroadcastNestedLoopJoin" not in p, name
-        assert "CartesianProduct" not in p, name
+    # --- the LSH path: equi-joins only, never nested-loop/cartesian ---
+    p = plans["MinHash + banded LSH candidate pairs"]
+    assert "BroadcastNestedLoopJoin" not in p
+    assert "CartesianProduct" not in p
 
     # --- signature pipelines are materialized ONCE (round-2 VERDICT
     # wrong #1: two identical shingle→signature subtrees fed each LSH
@@ -70,8 +66,6 @@ def test_plan_invariants_and_regenerate_plans_md(spark, tmp_path):
 
     mh = fplan(Q.q_minhash_lsh_candidates(spark, SF))
     assert mh.count("sequence(1, greatest") == 1 and "InMemoryTableScan" in mh
-    sh = fplan(Q.q_simhash_near_pairs(spark, SF))
-    assert sh.count("sequence(1, greatest") == 1 and "InMemoryTableScan" in sh
 
     # --- registry-wide sweep: no data-sized nested-loop/cartesian join
     # anywhere. A BroadcastNestedLoopJoin whose broadcast side is ONE row

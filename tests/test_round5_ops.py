@@ -1,7 +1,7 @@
 """Round-5 operator additions and the oversized-band-bucket cap.
 
 Covers: Gopher-style repetition stats, PII redaction, domain mixture
-weights and chunk dedup (oracle equality for their registry entries is
+weights (oracle equality for their registry entries is
 asserted in test_entry_contract.py — here we pin hand-computed values
 and semantic invariants), and the ``max_bucket`` boilerplate/skew
 defense: a corpus of near-identical texts (shared 256-char suffix, the
@@ -170,27 +170,3 @@ def test_dedup_labels_degenerate_batch_completes(spark, tmpdir_):
     release_caches()
     assert len(labels) == 300
     assert len({r["label"] for r in labels}) == 1
-
-
-def test_chunk_dedup_first_occurrence_wins(spark):
-    """Doc 1 owns every chunk it introduces; doc 2 repeats doc 1's first
-    8-word chunk and adds a new tail chunk; doc 3 is a pure duplicate of
-    doc 1 and must come back empty."""
-    from crba_etl_spark.operators.text_dedup import chunk_dedup
-
-    c0 = "w0 w1 w2 w3 w4 w5 w6 w7"          # chunk A
-    c1 = "x0 x1 x2 x3 x4 x5 x6 x7"          # chunk B
-    tail = "fresh new words here"           # short final chunk C
-    df = spark.createDataFrame(
-        [(1, f"{c0} {c1}"), (2, f"{c0} {tail}"), (3, f"{c0} {c1}")],
-        "doc_id long, text string",
-    )
-    r = {x["doc_id"]: x for x in chunk_dedup(df).collect()}
-    assert r[1]["n_chunks"] == 2 and r[1]["n_kept"] == 2
-    assert r[1]["cleaned_text"] == f"{c0} {c1}"
-    # doc 2: chunk A already seen; its tail chunk survives alone
-    assert r[2]["n_chunks"] == 2 and r[2]["n_kept"] == 1
-    assert r[2]["cleaned_text"] == tail
-    assert r[2]["kept_frac"] == 0.5
-    # doc 3: everything seen before -> empty reassembly
-    assert r[3]["n_kept"] == 0 and r[3]["cleaned_text"] == ""
