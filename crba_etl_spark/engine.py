@@ -23,7 +23,7 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, types as T
 
-from .icelite import IceliteTable
+from .icelite import IceliteTable, cluster_by_bucket
 from .metrics import write_epoch_metrics
 from .operators.dedup import reduce_batch
 from .operators.merge import apply_delta_epoch, merge_epoch
@@ -271,40 +271,40 @@ class CDCEngine:
         ``source_aligned=True`` (MOR mode): the caller guarantees the
         events are ALREADY clustered by the table's bucket function —
         a Spark table bucketed by (n_buckets, conv_id), or a keyed
-        Kafka topic with partitions = buckets (icelite.bucket_expr is
-        deliberately identical to Spark's repartition/bucketBy murmur3
-        hash so such producers align without re-hashing). The apply
-        then runs EXCHANGE-FREE end to end: the reduce needs no
-        shuffle (bucket partitioning satisfies the group clustering)
-        and the bucketed write none either — measured, this removes
-        the per-epoch exchange (~45% of epoch cost locally; the only
-        network shuffle on a cluster; BENCH/EPOCH_PROFILE.md). Safe on
-        misaligned input: Catalyst inserts the missing exchange for
-        the reduce and the write assigns buckets by VALUE, so the
-        penalty is extra files per bucket — never wrong rows."""
+        Kafka topic with partitions = buckets. A producer with W
+        partitions for any W dividing n_buckets aligns too: each bucket
+        then sits wholly in one partition (icelite.bucket_expr is
+        deliberately Spark's repartition/bucketBy murmur3 hash, and
+        pmod(hash, N) mod W == pmod(hash, W)), so such producers align
+        without re-hashing. The apply then runs EXCHANGE-FREE end to
+        end: the reduce needs no shuffle (bucket partitioning satisfies
+        the group clustering) and the bucketed write none either —
+        measured, this removes the per-epoch exchange (~45% of epoch
+        cost locally; the only network shuffle on a cluster;
+        BENCH/EPOCH_PROFILE.md). Safe on misaligned input: Catalyst
+        inserts the missing exchange for the reduce and the write
+        assigns buckets by VALUE, so the penalty is extra files per
+        bucket — never wrong rows."""
         if skip := self.table.skip_if_committed(epoch, slice_marker, mark_epoch):
             return skip
         t0 = time.monotonic()
 
         obs = Observation(f"events-in-{epoch}")
         events = events.observe(obs, *_count_alias())
-        from pyspark.sql import functions as F
-
         pre_partitioned = self.mode == "mor"
         if pre_partitioned and source_aligned:
             # producer already clustered rows by the bucket function —
             # skip THE one exchange of the epoch entirely
             pass
         elif pre_partitioned:
-            # THE one exchange of the epoch: repartition(N, conv_id) with
-            # N = table bucket count and bucket = pmod(hash(conv_id), N)
-            # (see icelite.bucket_expr) both clusters rows for the
-            # latest-per-key reduce (conv_id ⊆ group key ⇒ no agg
-            # exchange) and lands each row in its bucket's partition
-            # (⇒ the bucketed delta write shuffles nothing)
-            events = events.repartition(
-                self.table.n_buckets(), F.col("conv_id")
-            )
+            # THE one exchange of the epoch: repartition(W, conv_id) with
+            # W a divisor of the table bucket count N no wider than the
+            # task slots (icelite.cluster_by_bucket) both clusters rows
+            # for the latest-per-key reduce (conv_id ⊆ group key ⇒ no agg
+            # exchange) and keeps each bucket wholly in one partition
+            # (⇒ the bucketed delta write shuffles nothing and emits one
+            # file per bucket)
+            events = cluster_by_bucket(events, self.table.n_buckets())
         reduced = reduce_batch(events)
         # MOR + lazy: per-epoch audit skipped; compaction extracts stale
         # rows from __epoch/__lsn (a COW fold counts its stale rows anyway)

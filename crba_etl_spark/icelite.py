@@ -187,15 +187,38 @@ class LocalManifestIO:
 def bucket_expr(n_buckets: int, col: str = "conv_id"):
     """Deterministic bucket id: pmod(hash(conv_id), N) — Iceberg's bucket
     transform shape, using Spark's Murmur3 ``hash`` so the bucket function
-    is IDENTICAL to ``repartition(N, col(conv_id))``'s partition id.
-    That alignment lets the apply path do ONE exchange per epoch: the
-    repartition simultaneously satisfies the reduce's clustering
-    requirement (conv_id ⊆ group key) and lands every row in its bucket's
-    partition, so neither the aggregation nor the bucketed write shuffles
-    again (verified: pmod(hash(c),N) == spark_partition_id() for all rows).
-    Computable from the key alone, so the bucket never needs to be stored
-    or reconstructed from paths."""
+    agrees with ``repartition(W, col(conv_id))``'s partition id for every
+    W dividing N: pmod(hash(c), N) mod W == pmod(hash(c), W), so each
+    bucket sits wholly in partition ``bucket mod W``. That alignment lets
+    the apply path do ONE exchange per epoch (:func:`cluster_by_bucket`):
+    the repartition satisfies the reduce's clustering requirement
+    (conv_id ⊆ group key) and keeps every bucket inside one partition, so
+    neither the aggregation nor the bucketed write shuffles again, and the
+    write emits one file per bucket. Computable from the key alone, so
+    the bucket never needs to be stored or reconstructed from paths."""
     return F.pmod(F.hash(F.col(col)), F.lit(n_buckets)).cast("int")
+
+
+def aligned_width(n_buckets: int, slots: int) -> int:
+    """Partition count of a bucket-aligned exchange: the largest divisor
+    of ``n_buckets`` no greater than ``slots`` (the executor's task
+    slots), or ``n_buckets`` itself when that divisor would leave more
+    than half the slots idle (a prime bucket count, say). A divisor keeps
+    each bucket in one partition (see :func:`bucket_expr`); at most one
+    wave of tasks keeps the per-task fixed cost to one per slot."""
+    width = max(d for d in range(1, min(n_buckets, slots) + 1) if n_buckets % d == 0)
+    return n_buckets if 2 * width < slots else width
+
+
+def cluster_by_bucket(df: DataFrame, n_buckets: int, col: str = "conv_id") -> DataFrame:
+    """THE exchange of a bucketed write: ``repartition(W, col)`` with
+    W = :func:`aligned_width` of the bucket count and the session's task
+    slots. Every bucket of ``bucket_expr(n_buckets, col)`` lands wholly
+    in one partition, so a reduce grouped by keys that include ``col``
+    adds no exchange and ``write_merged(repartition=False)`` writes one
+    file per bucket."""
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(aligned_width(n_buckets, slots), F.col(col))
 
 
 class IceliteTable:
@@ -392,6 +415,7 @@ class IceliteTable:
         buckets: set[int] | None = None,
         schema: T.StructType | None = None,
         version: int | None = None,
+        cluster: int | None = None,
     ) -> DataFrame:
         """Stored rows with merge-on-read resolution applied: one row per
         key (max-__lsn wins over base ∪ deltas), tombstones included.
@@ -399,9 +423,23 @@ class IceliteTable:
         Every stored file already holds one row per key (a delta file is
         one reduced batch, a base file one resolved bucket) and a key
         lives in one bucket, so the resolving aggregate — an exchange —
-        runs only when some bucket holds a delta beside another file."""
+        runs only when some bucket holds a delta beside another file.
+
+        ``cluster=N`` resolves for a rewrite into N buckets. It first
+        clusters the stored rows with :func:`cluster_by_bucket`, so that
+        one exchange serves the resolve and a
+        ``write_merged(repartition=False)`` of the result. A rewrite
+        stores ``__epoch`` again, so an LSN tie goes to the row of the
+        earlier epoch (a file written before ``__epoch`` existed counts
+        as earliest) — the rule a copy-on-write fold applies: an
+        equal-LSN redelivery resolves to the epoch that first applied it,
+        and compaction's lazy audit sees the later copy as stale. A read
+        keeps the bare ``__lsn`` order; tied rows carry the same change."""
         df = self.read_stored(spark, buckets=buckets, schema=schema, version=version)
         snap = self.snapshot_at(version)
+        keys = list(snap.get("key_cols", ["conv_id", "turn_idx"]))
+        if cluster is not None:
+            df = cluster_by_bucket(df, cluster, keys[0])
         touched = snap.get("deltas", {})
         if buckets is not None:
             touched = {b: v for b, v in touched.items() if int(b) in buckets}
@@ -410,7 +448,10 @@ class IceliteTable:
             return df  # no key can occur twice
         from .operators.dedup import reduce_latest
 
-        return reduce_latest(df, key_cols=self.key_cols(), order_col="__lsn")
+        order = F.col("__lsn")
+        if cluster is not None:
+            order = F.struct(order, -F.coalesce(F.col("__epoch"), F.lit(-1)))
+        return reduce_latest(df, key_cols=keys, order_col=order)
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """The table's visible (non-tombstone) rows, payload columns —
@@ -433,20 +474,20 @@ class IceliteTable:
         retry: a crashed attempt's dir is unreferenced and is removed
         before rewrite.
 
-        ``repartition=False`` when the caller already clustered rows by
-        the bucket function (repartition(N, conv_id) — see bucket_expr):
-        the partitioned write then emits exactly one file per bucket with
-        no extra exchange."""
+        ``repartition=True`` clusters the rows with
+        :func:`cluster_by_bucket` first, so each bucket sits wholly in one
+        of at most slot-count partitions and the commit emits one file per
+        bucket instead of tasks×buckets small files. ``repartition=False``
+        when the caller already clustered them that way (the partitioned
+        write then adds no exchange)."""
         rel = f"data/e{epoch:06d}-v{version:06d}"
         out = os.path.join(self.root, rel)
         if os.path.exists(out):
             shutil.rmtree(out)  # orphan from a crashed attempt — never referenced
         if repartition:
-            # cluster rows by bucket before the partitioned write so each
-            # commit emits ~one file per bucket instead of tasks×buckets
-            # small files (a real cluster would raise files-per-bucket by
-            # repartitioning on (bucket, salt) when buckets exceed task size)
-            df = df.repartition(self.n_buckets(), F.col(BUCKET_COL))
+            # a real cluster would raise files-per-bucket by repartitioning
+            # on (bucket, salt) when buckets exceed task size
+            df = cluster_by_bucket(df, self.n_buckets(), self.key_cols()[0])
         (
             df.write.partitionBy(BUCKET_COL)
             .mode("overwrite")
@@ -849,18 +890,16 @@ class IceliteTable:
                 cur = self.snapshot()
                 # read the EXACT version whose base is recorded (a commit
                 # landing between this read and the swap is caught by the
-                # swap's validation), re-clustered by the NEW bucket
-                # function (write_merged's own repartition would use the
-                # OLD count); the data dir claims the version the progress
-                # commit will take, so rewrite dirs never collide
+                # swap's validation), clustered for the NEW bucket count
+                # (write_merged's own repartition would use the OLD one);
+                # the data dir claims the version the progress commit
+                # will take, so rewrite dirs never collide
                 df = self.read_resolved(
-                    spark, buckets=set(g), version=cur["version"]
+                    spark, buckets=set(g), version=cur["version"],
+                    cluster=new_n_buckets,
                 ).withColumn(BUCKET_COL, bucket_expr(new_n_buckets, key))
                 new_files = self.write_merged(
-                    df.repartition(new_n_buckets, F.col(key)),
-                    epoch=-2,
-                    version=cur["version"] + 1,
-                    repartition=False,
+                    df, epoch=-2, version=cur["version"] + 1, repartition=False
                 )
                 groups_done[gk] = {
                     "base": {str(b): base_of(cur, b) for b in g},
@@ -975,7 +1014,8 @@ class IceliteTable:
                 buckets = set(range(n))
         if not buckets and not drop_tombstones:
             return snap
-        df = self.read_resolved(spark, buckets=buckets)
+        # one exchange: the clustering serves the resolve and the write
+        df = self.read_resolved(spark, buckets=buckets, cluster=n)
         if quarantine_dir is not None and had_deltas:
             keys = self.key_cols()
             stored = self.read_stored(spark, buckets=buckets)
@@ -1006,7 +1046,9 @@ class IceliteTable:
         if drop_tombstones:
             df = df.filter(~F.col("__deleted"))
         df = df.withColumn(BUCKET_COL, bucket_expr(n, self.key_cols()[0]))
-        new_files = self.write_merged(df, epoch=-1, version=snap["version"] + 1)
+        new_files = self.write_merged(
+            df, epoch=-1, version=snap["version"] + 1, repartition=False
+        )
 
         def fold(s: dict) -> None:
             # maintenance op: a commit since `snap` makes the rewrite stale

@@ -15,8 +15,10 @@ partial step collapses a hot key to one row per input partition
 *before* the shuffle — the classic salted two-phase reduce, done by the
 planner. A window, by contrast, shuffles and sorts every event of the
 hot key into one partition. When the input is already clustered by
-``conv_id`` (the engine's MOR repartition), both steps run in the same
-stage and the reduce adds no exchange (see PLANS.md, "CDC epoch apply").
+``conv_id`` (the engine's MOR exchange, ``icelite.cluster_by_bucket``:
+``repartition(W, conv_id)`` with W a divisor of the bucket count, so each
+bucket sits wholly in one partition), both steps run in the same stage
+and the reduce adds no exchange (see PLANS.md, "CDC epoch apply").
 """
 
 from __future__ import annotations
@@ -37,8 +39,9 @@ def reduce_latest(
     upserts from tombstones. Plans as a partial + final ``SortAggregate``
     — see the module docstring for the plan and the skew rationale. Also
     the table's resolution operator (order_col="__lsn" over base ∪ delta
-    files, and over stored ∪ batch rows in a copy-on-write apply, which
-    passes a ``struct`` to break LSN ties).
+    files; a rewrite of those, and a copy-on-write fold of stored ∪ batch
+    rows, pass a ``struct`` that breaks an LSN tie toward the earlier
+    epoch).
     """
     keys = key_cols or KEY_COLS
     payload = [c for c in events.columns if c not in keys]
@@ -46,8 +49,8 @@ def reduce_latest(
     # max_by(struct(payload), order): argmax comparing ONLY the order
     # key — measured ~17% faster than max(struct(order, ...)), which
     # compares whole rows lexicographically. Ties (duplicate-LSN
-    # redeliveries) carry identical stored payloads, so the arbitrary
-    # tie-pick cannot change the payload.
+    # redeliveries) carry identical payloads, so the arbitrary tie-pick
+    # of a bare LSN order cannot change the payload.
     m = F.max_by(F.struct(*[F.col(c) for c in payload]), order)
     reduced = events.groupBy(*keys).agg(m.alias("_m"))
     return reduced.select(*keys, "_m.*")

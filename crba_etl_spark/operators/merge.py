@@ -35,7 +35,13 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
-from ..icelite import BUCKET_COL, CommitConflict, IceliteTable, bucket_expr
+from ..icelite import (
+    BUCKET_COL,
+    CommitConflict,
+    IceliteTable,
+    bucket_expr,
+    cluster_by_bucket,
+)
 from ..metrics import unit_name
 from ..schema import DELETED_COL, EPOCH_COL, LSN_COL
 from .dedup import reduce_latest
@@ -79,7 +85,7 @@ def merge_epoch(
     retry), so a concurrent commit's rows are never silently dropped."""
     return _apply(
         spark, table, reduced, epoch, quarantine_dir, slice_marker,
-        mark_epoch, slice_files, aux_add, cow=True, repartition=True,
+        mark_epoch, slice_files, aux_add, cow=True, repartition=False,
     )
 
 
@@ -182,10 +188,15 @@ def _apply(
                 affected = {int(r[0]) for r in per_bucket}
                 keys = sum(int(r[1]) for r in per_bucket)
                 # stored ∪ batch, max (__lsn, stored) per key: the
-                # stored row wins an LSN tie, so a redelivery is stale
+                # stored row wins an LSN tie, so a redelivery is stale.
+                # One exchange clusters the union for the fold and the write
                 stored = table.read_stored(spark, affected, evolved, version=base)
-                both = stored.withColumn("_stored", F.lit(True)).unionByName(
-                    rows.drop(BUCKET_COL).withColumn("_stored", F.lit(False))
+                both = cluster_by_bucket(
+                    stored.withColumn("_stored", F.lit(True)).unionByName(
+                        rows.drop(BUCKET_COL).withColumn("_stored", F.lit(False))
+                    ),
+                    n_buckets,
+                    key_cols[0],
                 )
                 out = (
                     reduce_latest(both, key_cols, F.struct(LSN_COL, "_stored"))

@@ -19,7 +19,13 @@ epochs are large relative to the table (early bootstrap, full-refresh
 loads) or reads vastly outnumber writes and compaction lag is
 unacceptable; a sustained 10^10-event tail wants MOR + periodic
 compaction. Run: python scripts/cow_vs_mor.py BENCH/COW_VS_MOR.md
-(``CROSSOVER_EVENTS``/``CROSSOVER_EPOCHS`` size the stream).
+(``CROSSOVER_EVENTS``/``CROSSOVER_EPOCHS`` size the stream; ``--work-dir``
+puts the stream, the tables and Spark's scratch space in one directory
+instead of tmpfs and the temp dir).
+
+Before the timed replays, each mode replays the stream's first epoch
+into a scratch table, untimed: the first mode timed in a fresh JVM
+otherwise pays the JVM and codegen warm-up in its first epoch.
 """
 
 from __future__ import annotations
@@ -45,7 +51,11 @@ def main() -> None:
 
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("out", help="path of the markdown report, e.g. BENCH/COW_VS_MOR.md")
+    ap.add_argument("--work-dir", help="directory for the stream, tables and Spark scratch")
     args = ap.parse_args()
+    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    base = args.work_dir or shm or tempfile.gettempdir()
+    local_dir = args.work_dir or shm
     spark = get_spark(
         app_name="cow-vs-mor",
         master="local[8]",
@@ -53,15 +63,15 @@ def main() -> None:
         extra_conf={
             "spark.sql.files.maxPartitionBytes": "16m",
             **(
-                {"spark.local.dir": "/dev/shm/crba_crossover_local"}
-                if os.path.isdir("/dev/shm")
+                {"spark.local.dir": os.path.join(local_dir, "crba_crossover_local")}
+                if local_dir
                 else {}
             ),
         },
     )
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     stream = os.path.join(
-        tempfile.gettempdir(), f"crba_crossover_stream_{N_EVENTS}_{N_EPOCHS}"
+        args.work_dir or tempfile.gettempdir(),
+        f"crba_crossover_stream_{N_EVENTS}_{N_EPOCHS}",
     )
     if not os.path.exists(os.path.join(stream, "_DONE")):
         generate_stream(
@@ -71,6 +81,12 @@ def main() -> None:
         )
         open(os.path.join(stream, "_DONE"), "w").write("ok")
         os.sync()
+
+    for mode in ("mor", "cow"):  # untimed warm-up of both apply paths
+        root = os.path.join(base, f"crba_crossover_warm_{mode}")
+        shutil.rmtree(root, ignore_errors=True)
+        CDCEngine(spark, root, n_buckets=16, mode=mode).replay(stream, epochs=[0])
+        shutil.rmtree(root, ignore_errors=True)
 
     results: dict[str, list[dict]] = {}
     finals = {}
@@ -88,7 +104,8 @@ def main() -> None:
         "# COW vs MOR apply cost (identical stream, identical final state)",
         "",
         f"Stream: {N_EVENTS:,} events, {N_EPOCHS} epochs, Zipf keys, "
-        "~290-char texts; local[8]; table+shuffle on tmpfs. "
+        f"~290-char texts; local[8]; table+shuffle on {'tmpfs' if base == shm else 'disk'}; "
+        "both modes warmed up on epoch 0 first. "
         f"Final visible rows (both modes): {finals['mor']:,}.",
         "",
         "| epoch | MOR apply s | COW apply s | COW rows rewritten | COW/MOR |",

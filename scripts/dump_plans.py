@@ -28,7 +28,7 @@ def plan_of(df) -> str:
 def build_sections(spark) -> list[tuple[str, str, str]]:
     from crba_etl_spark import queries as Q
     from crba_etl_spark.gen import StreamSpec, generate_stream
-    from crba_etl_spark.icelite import BUCKET_COL, bucket_expr
+    from crba_etl_spark.icelite import BUCKET_COL, bucket_expr, cluster_by_bucket
     from crba_etl_spark.operators.dedup import reduce_batch
 
     sections = []
@@ -37,14 +37,16 @@ def build_sections(spark) -> list[tuple[str, str, str]]:
     with tempfile.TemporaryDirectory(prefix="plans_stream_") as d:
         generate_stream(d, StreamSpec(seed=1, n_events=2_000, n_epochs=1))
         events = spark.read.parquet(os.path.join(d, "epoch=0"))
-        red = reduce_batch(events.repartition(8, F.col("conv_id")))
+        red = reduce_batch(cluster_by_bucket(events, 8))
         delta = red.withColumn(BUCKET_COL, bucket_expr(8))
         sections.append((
             "CDC epoch apply (repartition → reduce → bucketed delta)",
-            """What to look for: exactly ONE `Exchange hashpartitioning(conv_id, N)`
-(the repartition); `partial_max_by` + final `max_by` aggregate with NO
-second exchange (map-side combine = the Zipf-hot-key defense); the write
-adds no shuffle because rows already sit in their bucket's partition.""",
+            """What to look for: exactly ONE `Exchange hashpartitioning(conv_id, W)`
+(the repartition, `icelite.cluster_by_bucket`: W is the largest divisor
+of the N = 8 buckets that fits the task slots, 4 on `local[4]`);
+`partial_max_by` + final `max_by` aggregate with NO second exchange
+(map-side combine = the Zipf-hot-key defense); the write adds no shuffle
+because each bucket sits wholly in one partition.""",
             plan_of(delta),
         ))
 

@@ -116,15 +116,17 @@ def test_cow_fold_matches_mor_on_stale_and_equal_lsn_redelivery(spark, tmpdir_):
         ],
     ]
     engines = {}
-    for mode in ("mor", "cow"):
+    for name, mode, quarantine in (
+        ("mor", "mor", "eager"), ("cow", "cow", "eager"), ("lazy", "mor", "lazy"),
+    ):
         eng = CDCEngine(
-            spark, os.path.join(tmpdir_, mode), n_buckets=4, mode=mode,
-            quarantine="eager",
+            spark, os.path.join(tmpdir_, name), n_buckets=4, mode=mode,
+            quarantine=quarantine,
         )
         for k, rows in enumerate(epochs):
             eng.apply_epoch(make_events(spark, rows), k)
-        engines[mode] = eng
-    mor, cow = engines["mor"], engines["cow"]
+        engines[name] = eng
+    mor, cow, lazy = engines["mor"], engines["cow"], engines["lazy"]
     final = {(r.conv_id, r.turn_idx): r.text for r in cow.read_final().collect()}
     assert final == {("c1", 0): "v10", ("c2", 0): "w20", ("c3", 0): "x30"}
     assert cow.read_final().orderBy("conv_id", "turn_idx").collect() == (
@@ -133,8 +135,31 @@ def test_cow_fold_matches_mor_on_stale_and_equal_lsn_redelivery(spark, tmpdir_):
     audit = {(5, "c1", 0), (20, "c2", 0), (10, "c1", 0), (3, "c3", 0)}
     assert _audited(spark, mor.table.root) == audit
     assert _audited(spark, cow.table.root) == audit
+    # lazy MOR resolves the equal-LSN tie to the earlier epoch too, so its
+    # compaction audits the same set
+    lazy.compact()
+    assert _audited(spark, lazy.table.root) == audit
     first = {
         r.conv_id: r["__epoch"]
         for r in cow.table.read_stored(spark).filter(F.col("turn_idx") == 0).collect()
     }
     assert first == {"c1": 0, "c2": 0, "c3": 1, "c4": 2}
+
+
+def test_lazy_audits_equal_lsn_redelivery_from_later_epoch(spark, tmpdir_):
+    """An equal-LSN redelivery in a later epoch loses the resolve to the
+    epoch that first applied it, so lazy compaction audits every one."""
+    root = os.path.join(tmpdir_, "t")
+    eng = CDCEngine(spark, root, n_buckets=4, mode="mor", quarantine="lazy")
+    for k in (0, 1):
+        eng.apply_epoch(make_events(spark, [
+            (20, k, "I", f"c{i}", 0, "user", f"v{i}", None, 0, k)
+            for i in range(8)
+        ]), k)
+    eng.compact()
+    q = spark.read.parquet(os.path.join(root, "quarantine") + "/*").collect()
+    assert {(r.lsn, r.conv_id, r.turn_idx, r.quarantine_epoch) for r in q} == {
+        (20, f"c{i}", 0, 1) for i in range(8)
+    }
+    first = {r.conv_id: r["__epoch"] for r in eng.table.read_stored(spark).collect()}
+    assert first == {f"c{i}": 0 for i in range(8)}
