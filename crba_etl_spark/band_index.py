@@ -665,7 +665,9 @@ class DedupLabels:
     streamed against broadcast key lists — the band-file probe of the
     hit partitions (no re-shingling), a bucket-PRUNED text scan of the
     candidate partners outside the batch, and the labels probe — no
-    corpus shuffle, no corpus rewrite.
+    corpus shuffle, no corpus rewrite. The premise is that one batch's
+    keys and verified pairs fit on the driver (operators/graph.py); a
+    bigger batch is sliced by epoch, not handed to another engine.
 
     Semantics: labels are the canonical min-labeling; groups are
     MONOTONE (an update to a member's text can add edges, never remove
@@ -681,16 +683,10 @@ class DedupLabels:
         threshold: float = 0.35,
         max_bucket: int | None | str = DEFAULT_MAX_BUCKET,
         reprobe: int = 8,
-        reliable_checkpoint: str | None = None,
     ):
         self.table = table
         self.index = index
         self.threshold = threshold
-        #: checkpoint dir for the verification result — makes an
-        #: executor loss while it is collected survivable on a real
-        #: cluster; None = fast localCheckpoint (see
-        #: operators.graph._materialize)
-        self.reliable_checkpoint = reliable_checkpoint
         #: oversized-band-bucket cap (see LshBandIndex.candidates /
         #: minhash_lsh_candidates) — ON BY DEFAULT since round 6. The
         #: cap bounds batches of near-identical texts (templated turns,
@@ -793,9 +789,8 @@ class DedupLabels:
           verified even when the star edge passes;
         - the union-find fold (``graph._merge_driver``).
 
-        The verification result is the one materialization
-        (``graph._materialize``), so ``reliable_checkpoint`` writes it
-        to a durable checkpoint before it is collected."""
+        The verified pairs are collected once, straight from the Jaccard
+        plan; nothing is persisted or checkpointed."""
         from .operators.graph import _merge_driver
 
         bb = bands if bands is not None else self.index.batch_bands(batch, epoch)
@@ -873,7 +868,6 @@ class DedupLabels:
         batch (read only from the buckets such partners live in), and
         not at all when it is an exact duplicate inside the batch (its
         representative carries its edges)."""
-        from .operators.graph import _materialize, _persistent_rdd_ids, _release_blocks
         from .operators.text_dedup import jaccard_verify_pairs
 
         if not pairs:
@@ -899,14 +893,10 @@ class DedupLabels:
             [T.StructField(c, T.StringType()) for c in ("id_a", "id_b")]
         )
         pdf = _local_frame(spark, pair_schema, sorted(pairs))
-        before = _persistent_rdd_ids(spark)
-        out = _materialize(
-            jaccard_verify_pairs(texts, pdf, threshold=self.threshold),
-            self.reliable_checkpoint,
-        )
-        verified = {(r["id_a"], r["id_b"]) for r in out.collect()}
-        _release_blocks(spark, _persistent_rdd_ids(spark) - before)
-        return verified
+        return {
+            (r["id_a"], r["id_b"])
+            for r in jaccard_verify_pairs(texts, pdf, threshold=self.threshold).collect()
+        }
 
     def write_epoch(self, rows: DataFrame, tag: str) -> list[str]:
         """Write ``rows`` as they are partitioned under

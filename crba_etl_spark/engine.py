@@ -105,7 +105,6 @@ class CDCEngine:
         dedup_labels: bool = False,
         dedup_max_bucket: int | None | str = "auto",
         stale_rebuild_threshold: float = 0.5,
-        reliable_cc_checkpoints: bool = False,
         labels_compact_epochs: int = 16,
     ):
         """``mode`` picks the apply strategy (both yield identical final
@@ -155,7 +154,10 @@ class CDCEngine:
         (band_index.DedupLabels): index candidates → exact-Jaccard
         verify → driver-side union-find fold — the complete dedup
         pipeline inside the exactly-once commit loop, O(changed) label
-        rows written per epoch.
+        rows written per epoch. The epoch's keys and candidate pairs are
+        collected to the driver (operators/graph.py); a batch too big
+        for it is sliced by epoch — smaller epochs, or
+        ``max_files_per_trigger`` slices in the streaming tail.
 
         ``dedup_max_bucket`` caps oversized LSH band buckets with
         representative star edges — O(batch) candidates under
@@ -183,13 +185,6 @@ class CDCEngine:
         #3). The estimate UNDERSTATES staleness (tombstones and
         null-text rows count as live), so it only ever triggers late,
         never spuriously. Set >1.0 to disable.
-
-        ``reliable_cc_checkpoints=True`` routes the dedup-labels
-        verification result's lineage truncation to durable
-        ``checkpoint()`` files under ``<table_root>/checkpoints/cc``
-        (executor loss while it is collected is then survivable on a real
-        cluster — with the default ``localCheckpoint`` it kills the job);
-        off locally, where there are no executors to lose.
 
         ``labels_compact_epochs``: the labels artifact is MOR-shaped —
         every epoch appends a delta file set and the per-epoch
@@ -232,11 +227,6 @@ class CDCEngine:
                     self.table,
                     self.lsh_index,
                     max_bucket=dedup_max_bucket,
-                    reliable_checkpoint=(
-                        os.path.join(table_root, "checkpoints", "cc")
-                        if reliable_cc_checkpoints
-                        else None
-                    ),
                 )
                 if dedup_labels
                 else None

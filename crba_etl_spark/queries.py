@@ -1001,27 +1001,6 @@ WHERE round(inter / (sa.n_sh + sb.n_sh - inter), 6) >= 0.35
 """
 
 
-def q_dedup_groups_star(spark, sf_dir):
-    """Same transitive near-dup grouping as `dedup_groups`, computed by
-    the large-star/small-star contraction instead of min-label
-    propagation — O(log n) rounds regardless of component diameter (the
-    variant for long-chain graphs). Sharing `dedup_groups`' oracle is
-    the point: the DuckDB recursive closure hash-checks that BOTH
-    algorithms produce the identical component labeling."""
-    from .operators.graph import connected_components_star
-
-    docs = load(spark, sf_dir, "documents")
-    pairs = text_dedup.jaccard_verify_pairs(
-        docs, text_dedup.minhash_lsh_candidates(docs), threshold=0.35
-    )
-    cc = connected_components_star(
-        pairs, nodes=docs.select(F.col("doc_id").alias("node"))
-    )
-    return cc.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("group_id")
-    )
-
-
 def _split_existing_new(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The incremental queries' md5 split of the corpus: the 80%
     'existing' slice and the 20% 'new' batch (``split`` in the SQL
@@ -1142,9 +1121,10 @@ def q_incremental_dedup_groups(spark, sf_dir):
     batch arrives (the 20% slice), its near-dup pairs — new×existing
     candidates PLUS new×new candidates, exact-Jaccard-verified — are
     folded into the existing labeling with
-    ``merge_components`` (operators/graph.py): one broadcast-map pass
-    over the big labels table plus a components run over a condensed
-    graph of size O(|new pairs|), never a recompute over the union.
+    ``merge_components`` (operators/graph.py): one filtered probe and
+    one relabel pass over the big labels table plus a driver union-find
+    over a condensed graph of size O(|new pairs|), never a recompute
+    over the union.
     The oracle is the FULL-RECOMPUTE closure (`dedup_groups`' recursive
     CTE verbatim), so the hash match proves incremental ≡ recompute —
     including cross-batch chains where a new doc bridges two existing
@@ -1203,8 +1183,8 @@ def q_dedup_groups(spark, sf_dir):
     into dedup decisions (if A~B and B~C, one keeper must survive for
     {A,B,C} even though A~C was never emitted): LSH candidates →
     exact-Jaccard-verified pairs (≥0.35, the `lsh_verified_pairs`
-    composition) → distributed connected components (iterative
-    min-label propagation, operators/graph.py). Every document gets
+    composition) → connected components (driver union-find over the
+    collected pairs, operators/graph.py). Every document gets
     (doc_id, group_id) with group_id = the component's smallest doc_id
     (deterministic, engine-portable, and the natural keeper id);
     documents with no near-dup edge label themselves. The DuckDB
@@ -2502,7 +2482,5 @@ def registry() -> dict[str, tuple]:
             q_ngram_jaccard_exact_baseline,
             SQL_NGRAM_JACCARD_PAIRS,
         ),
-        # cross-algorithm equivalence twin of dedup_groups (same oracle)
-        "dedup_groups_star": (q_dedup_groups_star, _sql_dedup_groups()),
         "curation_pipeline": (q_curation_pipeline, _sql_curation_pipeline()),
     }

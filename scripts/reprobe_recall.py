@@ -82,8 +82,8 @@ def main() -> None:
         "".join(rng.choice(string.ascii_lowercase) for _ in range(6))
         for _ in range(G * 40)
     ]
-    # numeric ids (connected_components' edge checksum sums labels):
-    # doc g,i -> 100*g + i, so subgroup = id // 100
+    # numeric ids, kept so the report is unchanged: doc g,i -> 100*g + i,
+    # so subgroup = id // 100
     rows = []
     for g in range(G):
         body = " ".join(words[g * 40 : (g + 1) * 40])

@@ -197,7 +197,7 @@ def test_engine_dedup_labels_incremental_state(spark, tmpdir_):
     epoch-1 delta must contain only changed/new rows, and redelivery
     must append nothing."""
     from crba_etl_spark.band_index import LABELS_AUX, DedupLabels
-    from crba_etl_spark.operators.graph import connected_components_star
+    from crba_etl_spark.operators.graph import connected_components
 
     t1 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     t2 = "kilo lima mike november oscar papa quebec romeo sierra tango"
@@ -246,9 +246,7 @@ def test_engine_dedup_labels_incremental_state(spark, tmpdir_):
         final_docs, text_dedup.minhash_lsh_candidates(final_docs)
     ).select("id_a", "id_b")
     old_pairs = spark.createDataFrame([("a#0", "b#0")], ["id_a", "id_b"])
-    # star variant: its convergence checksum hashes labels, so it is
-    # safe on STRING node ids (the min-label twin sums them numerically)
-    cc = connected_components_star(
+    cc = connected_components(
         cur_pairs.union(old_pairs),
         nodes=final_docs.select(F.col("doc_id").alias("node")),
     )

@@ -158,7 +158,7 @@ def test_rebucket_between_label_fold_and_commit(spark, tmpdir_):
     the commit (data + bands + labels in one aux_add) retries under the
     new bucketing. Labels are bucket-agnostic content, so the fold must
     land unchanged and equal a full-recompute closure."""
-    from crba_etl_spark.operators.graph import connected_components_star
+    from crba_etl_spark.operators.graph import connected_components
 
     eng = CDCEngine(
         spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor",
@@ -198,7 +198,7 @@ def test_rebucket_between_label_fold_and_commit(spark, tmpdir_):
     pairs = text_dedup.jaccard_verify_pairs(
         final, text_dedup.minhash_lsh_candidates(final)
     ).select("id_a", "id_b")
-    cc = connected_components_star(
+    cc = connected_components(
         pairs, nodes=final.select(F.col("doc_id").alias("node"))
     )
     want = {r["node"]: r["label"] for r in cc.collect()}

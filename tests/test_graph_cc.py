@@ -1,20 +1,24 @@
-"""connected_components (operators/graph.py): min-label propagation over
-candidate-pair edges — chains, multiple components, singletons from a
-wider node universe, and the bounded-rounds failure contract."""
+"""connected_components and the incremental merges (operators/graph.py):
+the driver union-find over collected candidate-pair edges — chains,
+multiple components, singletons from a wider node universe, any id type,
+and the incremental full/delta folds."""
+
+import hashlib
+import uuid
 
 import pytest
 
 from crba_etl_spark.operators.graph import connected_components
 
 
-def _cc(spark, edges, nodes=None, **kw):
+def _cc(spark, edges, nodes=None):
     e = spark.createDataFrame(edges, "id_a long, id_b long")
     n = (
         spark.createDataFrame([(x,) for x in nodes], "node long")
         if nodes is not None
         else None
     )
-    out = connected_components(e, nodes=n, **kw)
+    out = connected_components(e, nodes=n)
     return {r.node: r.label for r in out.collect()}
 
 
@@ -34,73 +38,6 @@ def test_label_is_component_min_regardless_of_edge_direction(spark):
     # min id sits at the dst side of every edge
     got = _cc(spark, [(7, 3), (9, 3)])
     assert got == {3: 3, 7: 3, 9: 3}
-
-
-def test_bounded_rounds_raise(spark):
-    # a 6-node chain has diameter 5 > max_iters=2 propagation budget
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        _cc(spark, [(i, i + 1) for i in range(1, 6)], max_iters=2)
-
-
-def _cc_star(spark, edges, nodes=None, **kw):
-    from crba_etl_spark.operators.graph import connected_components_star
-
-    e = spark.createDataFrame(edges, "id_a long, id_b long")
-    n = (
-        spark.createDataFrame([(x,) for x in nodes], "node long")
-        if nodes is not None
-        else None
-    )
-    out = connected_components_star(e, nodes=n, **kw)
-    return {r.node: r.label for r in out.collect()}
-
-
-def test_star_handles_long_chain_in_log_rounds(spark):
-    """The seam the min-label docstring promises: a 120-node chain
-    (diameter 119) converges for large/small-star within a logarithmic
-    round budget where min-label propagation would need ~119 rounds."""
-    edges = [(i, i + 1) for i in range(1, 120)]
-    got = _cc_star(spark, edges, max_iters=12)
-    assert set(got.values()) == {1} and len(got) == 120
-
-
-def test_star_equivalent_to_label_propagation(spark):
-    """Both algorithms must produce the identical (node, component-min)
-    labeling on a deterministic pseudo-random multi-component graph,
-    including singletons from a wider universe."""
-    import hashlib
-
-    def h(i):
-        return int(hashlib.md5(f"edge:{i}".encode()).hexdigest()[:8], 16)
-
-    edges = [(h(i) % 60, h(i + 1000) % 60) for i in range(80)]
-    edges = [(a, b) for a, b in edges if a != b]
-    universe = list(range(70))  # 60..69 untouched → singletons
-    a = _cc(spark, edges, nodes=universe)
-    b = _cc_star(spark, edges, nodes=universe)
-    assert a == b
-    assert all(b[x] == x for x in range(60, 70))
-
-
-def test_star_star_shaped_input_is_stable(spark):
-    got = _cc_star(spark, [(5, 1), (7, 1), (9, 1)])
-    assert got == {1: 1, 5: 1, 7: 1, 9: 1}
-
-
-def test_star_survives_checksum_collisions(spark, monkeypatch):
-    """Round-4 VERDICT #5 / ADVICE low: the star loop's edge-set
-    checksum is probabilistic — a collision must NOT terminate the loop
-    early. Simulate the worst case (every round's checksum collides) and
-    assert the exact exceptAll confirmation still drives the loop to the
-    true fixpoint with correct labels."""
-    from crba_etl_spark.operators import graph
-
-    monkeypatch.setattr(graph, "_edge_checksum", lambda df: (0, 0))
-    edges = [(i, i + 1) for i in range(1, 40)] + [(100, 101)]
-    got = _cc_star(spark, edges, max_iters=12)
-    assert set(got.items()) == (
-        {(i, 1) for i in range(1, 41)} | {(100, 100), (101, 100)}
-    )
 
 
 def _merge(spark, labels, new_edges, new_nodes=None):
@@ -191,68 +128,6 @@ def test_merge_delta_update_batch_never_dissolves_groups(spark):
     assert delta == {9: 9}  # 7 keeps label 3 (no row), 9 is genuinely new
 
 
-def test_cc_storage_is_o1_in_rounds(spark):
-    """Round-4 ADVICE low: each round's localCheckpoint blocks must be
-    freed when the next round materializes — a 30-round min-label run
-    (and a multi-round star run) may retain only the FINAL round plus
-    the tracked edge cache, not one block set per round."""
-    from crba_etl_spark.cache import release_caches
-    from crba_etl_spark.operators.graph import (
-        _persistent_rdd_ids,
-        connected_components,
-        connected_components_star,
-    )
-
-    release_caches()
-    e = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 31)], "id_a long, id_b long"
-    )
-    before = _persistent_rdd_ids(spark)
-    out = connected_components(e, max_iters=40)
-    assert {r.label for r in out.collect()} == {1}
-    retained = _persistent_rdd_ids(spark) - before
-    assert len(retained) <= 2, retained  # final labels + tracked sym cache
-
-    before = _persistent_rdd_ids(spark)
-    out = connected_components_star(e, max_iters=12)
-    assert {r.label for r in out.collect()} == {1}
-    retained = _persistent_rdd_ids(spark) - before
-    assert len(retained) <= 2, retained
-    release_caches()
-
-
-def test_merge_driver_path_equals_distributed(spark):
-    """Round-6: the driver-side union-find fast path (small condensed
-    graphs — the per-epoch norm) must produce byte-identical labelings
-    to the distributed star path, for both the full and the delta form,
-    and the cap must fall back to the distributed path when exceeded."""
-    from crba_etl_spark.operators.graph import (
-        merge_components,
-        merge_components_delta,
-    )
-
-    labels = {1: 1, 2: 1, 5: 5, 6: 5, 10: 10, 11: 10, 20: 20}
-    new_edges = [(2, 100), (100, 6), (11, 100), (30, 31)]
-    new_nodes = [100, 30, 31, 40, 20]  # 20 overlaps the labeled universe
-    lab = spark.createDataFrame(list(labels.items()), "node long, label long")
-    e = spark.createDataFrame(new_edges, "id_a long, id_b long")
-    n = spark.createDataFrame([(x,) for x in new_nodes], "node long")
-    for fn in (merge_components, merge_components_delta):
-        driver = {
-            r.node: r.label
-            for r in fn(lab, e, new_nodes=n, driver_cc_max_edges=10_000).collect()
-        }
-        dist = {
-            r.node: r.label
-            for r in fn(lab, e, new_nodes=n, driver_cc_max_edges=None).collect()
-        }
-        fallback = {
-            r.node: r.label
-            for r in fn(lab, e, new_nodes=n, driver_cc_max_edges=1).collect()
-        }
-        assert driver == dist == fallback, fn.__name__
-
-
 def test_merge_driver_no_edges_and_string_ids(spark):
     from crba_etl_spark.operators.graph import merge_components_delta
 
@@ -265,44 +140,70 @@ def test_merge_driver_no_edges_and_string_ids(spark):
     assert delta == {"z": "z"}  # known node keeps its group, new one is a singleton
 
 
-def test_reliable_checkpoint_option(spark, tmpdir_):
-    """Round-6 (r5 VERDICT #5): reliable_checkpoint= routes the CC
-    loops' lineage truncation to durable checkpoint() files — identical
-    labels, and the checkpoint dir actually receives data (the
-    cluster-survivability evidence localCheckpoint can't give)."""
-    import os
+def _closure(edges, universe=()):
+    """Pure-Python reference: component minimum of every node, by
+    depth-first search over the undirected graph."""
+    adj = {x: set() for x in universe}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for s in adj:
+        if s in out:
+            continue
+        comp, stack = {s}, [s]
+        while stack:
+            for y in adj[stack.pop()] - comp:
+                comp.add(y)
+                stack.append(y)
+        out.update((x, min(comp)) for x in comp)
+    return out
 
-    from crba_etl_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-        merge_components_delta,
-    )
 
-    e = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 12)] + [(50, 51)], "id_a long, id_b long"
+def _md5_edges():
+    def h(i):
+        return int(hashlib.md5(f"edge:{i}".encode()).hexdigest()[:8], 16)
+
+    edges = [(h(i) % 60, h(i + 1000) % 60) for i in range(80)]
+    return [(a, b) for a, b in edges if a != b]
+
+
+#: (id type, edges, node universe or None)
+CLOSURE_CASES = {
+    # diameter 119: a round-per-hop algorithm needs ~119 rounds
+    "long_chain_120": ("long", [(i, i + 1) for i in range(1, 120)], None),
+    "star_shaped": ("long", [(5, 1), (7, 1), (9, 1)], None),
+    # multi-component graph; 60..69 untouched → singletons
+    "md5_random_60_of_70": ("long", _md5_edges(), list(range(70))),
+    "string_chain": (
+        "string",
+        [("d", "c"), ("c", "b"), ("b", "a"), ("x", "y")],
+        None,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CLOSURE_CASES))
+def test_components_equal_python_closure(spark, case):
+    """One contract on any id type and any diameter: labels equal the
+    pure-Python closure, computed in at most 2 Spark jobs (the edge/node
+    collect and the caller's collect), leaving no persisted RDD behind."""
+    id_type, edges, universe = CLOSURE_CASES[case]
+    e = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    n = (
+        spark.createDataFrame([(x,) for x in universe], f"node {id_type}")
+        if universe is not None
+        else None
     )
-    want = {r.node: r.label for r in connected_components(e).collect()}
-    ckpt = os.path.join(tmpdir_, "cc_ckpt")
-    got = {
-        r.node: r.label
-        for r in connected_components(e, reliable_checkpoint=ckpt).collect()
-    }
-    assert got == want
-    got_star = {
-        r.node: r.label
-        for r in connected_components_star(e, reliable_checkpoint=ckpt).collect()
-    }
-    assert got_star == want
-    assert any(os.scandir(ckpt))  # durable files were written
-    # the incremental merge's distributed fallback threads it through too
-    lab = spark.createDataFrame([(1, 1), (2, 1)], "node long, label long")
-    delta = {
-        r.node: r.label
-        for r in merge_components_delta(
-            lab,
-            spark.createDataFrame([(2, 3)], "id_a long, id_b long"),
-            driver_cc_max_edges=None,
-            reliable_checkpoint=ckpt,
-        ).collect()
-    }
-    assert delta == {3: 1}
+    sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    group = f"cc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        got = {r.node: r.label for r in connected_components(e, nodes=n).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == _closure(edges, universe or ())
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 2, jobs
+    assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) == persisted
