@@ -20,13 +20,21 @@ swap as the data (``IceliteTable.commit*``'s ``aux_add`` →
   on (band_idx, band_hash), and nothing touches the corpus text again
   (plan-asserted in tests/test_band_index.py).
 
+The engine's dedup epoch (:class:`DedupLabels`) collects the batch's
+live ``(doc_id, text)`` once and computes its footprint — md5, MinHash,
+band hashes, Spark's murmur3 ``__bpart`` ids — and the Jaccard
+verification of its candidate pairs on the driver, bit-identical to the
+distributed operators (:meth:`LshBandIndex.rows_for`,
+``text_dedup.jaccard_verify_pairs``), which the rebuild path, an engine
+without labels and the queries keep using.
+
 Scale notes (100 TB): band files are written clustered by ``band_hash``
 (uniform md5 keys — no skew), so on a real cluster the candidates join
 is a co-located hash join on a small uniform key space and the index
 scan prunes to two narrow columns. The index is append-only; a document
 UPDATE appends the new text's band rows while the old rows remain.
 Stale rows only ever produce EXTRA candidates — candidates are verified
-against current text downstream (``jaccard_verify_pairs``), so
+against current text downstream (``DedupLabels._verify``), so
 correctness is unaffected; table compaction is the natural place to
 rewrite the index when the stale fraction grows (same rewrite protocol
 as data buckets, not yet wired).
@@ -42,24 +50,29 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import struct
 from collections import Counter, defaultdict
 from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .cache import persist_tracked, release_caches
 from .icelite import IceliteTable
-from .operators.graph import _local_frame
+from .operators.graph import _in_list, _local_frame
 from .operators.text_dedup import (
+    MINHASH_A,
+    MINHASH_B,
+    MINHASH_P,
     N_BANDS,
-    _band_hash_cols,
+    ROWS_PER_BAND,
+    SHINGLE_LEN,
     _band_rows,
     _bkey,
-    _minhash_agg,
     _slot_key,
     minhash_signatures,
 )
-from .spread import spread_compute
 
 #: name of this artifact in the snapshot's aux section
 AUX_NAME = "lsh_bands"
@@ -108,16 +121,99 @@ BAND_SCHEMA = T.StructType(
 )
 
 
+def _shingle_set(text: str) -> set[str]:
+    """Distinct character shingles of ``text``: the code-point
+    ``substr(text, i, SHINGLE_LEN)`` of :func:`text_dedup.shingle_array`
+    (a text shorter than a shingle is its own single shingle)."""
+    return {
+        text[i : i + SHINGLE_LEN]
+        for i in range(max(len(text) - (SHINGLE_LEN - 1), 1))
+    }
+
+
+def _signatures(texts: list[str]) -> np.ndarray:
+    """(len(texts), 16) MinHash slots, bit-identical to
+    :func:`text_dedup.minhash_signatures`: each distinct shingle of the
+    batch is md5-hashed once (h32 = its first 8 hex digits), and slot k
+    of a text is ``min((a_k·h32 + b_k) mod P)`` over its shingles
+    (below 2^39, so int64 cannot overflow)."""
+    h32: dict[str, int] = {}
+    flat: list[int] = []
+    starts = []
+    for text in texts:
+        sh = _shingle_set(text)
+        for s in sh - h32.keys():
+            h32[s] = int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+        starts.append(len(flat))
+        flat.extend(map(h32.__getitem__, sh))
+    hs = np.array(flat, dtype=np.int64)
+    return np.stack(
+        [
+            np.minimum.reduceat((a * hs + b) % MINHASH_P, starts)
+            for a, b in zip(MINHASH_A, MINHASH_B)
+        ],
+        axis=1,
+    )
+
+
+_M32 = 0xFFFFFFFF
+
+
+def _murmur3(data: bytes) -> int:
+    """Spark's ``hash`` of a string, as a signed 32-bit int:
+    ``Murmur3_x86_32.hashUnsafeBytes`` with seed 42 over its UTF-8
+    bytes — 4-byte little-endian blocks, then each tail byte mixed on
+    its own as a SIGNED int."""
+
+    def mix(h: int, k: int) -> int:
+        k = (k * 0xCC9E2D51) & _M32
+        k = ((k << 15) | (k >> 17)) & _M32
+        h ^= (k * 0x1B873593) & _M32
+        h = ((h << 13) | (h >> 19)) & _M32
+        return (h * 5 + 0xE6546B64) & _M32
+
+    n = len(data)
+    aligned = n - n % 4
+    h = 42
+    for (k,) in struct.iter_unpack("<I", data[:aligned]):
+        h = mix(h, k)
+    for b in data[aligned:]:
+        h = mix(h, b - 256 if b > 127 else b)
+    h ^= n
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & _M32
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+_MICRO = Decimal("1e-6")
+
+
+def _jaccard_passes(a: set, b: set, threshold: float) -> bool:
+    """:func:`text_dedup.jaccard_verify_pairs`'s test on two distinct-
+    shingle sets: a non-empty intersection and ``round(jaccard, 6) >=
+    threshold``, rounded as Spark rounds a double (HALF_UP on its
+    shortest decimal form)."""
+    inter = len(a & b)
+    if not inter:
+        return False
+    j = inter / (len(a) + len(b) - inter)
+    return float(Decimal(repr(j)).quantize(_MICRO, ROUND_HALF_UP)) >= threshold
+
+
 @dataclass
 class BatchBands:
     """A batch's LSH footprint on the driver (:meth:`LshBandIndex.batch_bands`):
-    O(batch) keys, no text."""
+    O(batch) keys and the batch's texts, which the label delta verifies
+    its pairs with."""
 
     spark: SparkSession
     epoch: int
     #: writer K of this epoch's band files
     k: int
-    #: doc_id -> md5(text), every live document with text
+    #: doc_id -> text, every live document with text
+    texts: dict[str, str]
+    #: doc_id -> md5(text)
     md5: dict[str, str]
     #: doc_id -> band_hash per band_idx
     bands: dict[str, tuple[str, ...]]
@@ -178,47 +274,43 @@ class LshBandIndex:
         )
 
     def batch_bands(self, batch: DataFrame, epoch: int) -> "BatchBands":
-        """The batch's whole LSH footprint, collected to the driver in ONE
-        Spark pass: per live document its md5(text), its band hashes, and
-        each band hash's ``__bpart`` part id under this epoch's writer K
-        and every K the index files were written under. The band write
-        and the label delta both work from it, so the signature pass
-        runs once per epoch. Raises ``ValueError`` when a ``doc_id``
-        carries two texts (the signature would mix them)."""
+        """The batch's whole LSH footprint, computed on the driver from ONE
+        collect of its live ``(doc_id, text)`` (which also materializes a
+        persisted batch): per live document its text, md5(text), band
+        hashes, and each band hash's ``__bpart`` part id under this
+        epoch's writer K and every K the index files were written under.
+        Every value is bit-identical to the Spark operators' (md5,
+        :func:`_signatures`, band md5s, :func:`_murmur3` for ``pmod(hash(·),
+        K)``). The band write and the label delta both work from it.
+        Raises ``ValueError`` when a ``doc_id`` carries two texts (its
+        signature would mix them)."""
         k = self.table.n_buckets()
         ks = sorted({k} | {p[0] for p in map(self._file_part, self.files()) if p})
-        # grouped by the KEY columns, not the derived doc_id: a batch the
-        # engine already clustered by key (the MOR bucket repartition,
-        # or in COW mode the reduce's own exchange on the key) then
-        # aggregates without another exchange
-        kc = self.table.key_cols()
-        docs = self._live(batch).select(
-            *kc, F.col(self.text_col).alias("text"), F.md5(self.text_col).alias("__d")
-        )
-        sig = _minhash_agg(spread_compute(docs), [*kc, "__d"])
-        bh = F.array(*_band_hash_cols())
-        rows = sig.select(
-            F.concat_ws("#", *kc).alias("doc_id"),
-            "__d",
-            bh.alias("bh"),
-            *[
-                F.array(
-                    *[F.pmod(F.hash(bh[b]), F.lit(kk)) for b in range(N_BANDS)]
-                ).alias(f"p{kk}")
-                for kk in ks
-            ],
-        ).collect()
-        out = BatchBands(batch.sparkSession, epoch, k, {}, {}, {kk: {} for kk in ks})
-        for r in rows:
-            if r["doc_id"] in out.md5:
+        arrow = self._live_docs(batch).toArrow()
+        texts: dict[str, str] = {}
+        for doc, text in zip(
+            arrow.column("doc_id").to_pylist(), arrow.column("text").to_pylist()
+        ):
+            if texts.setdefault(doc, text) != text:
                 raise ValueError(
-                    f"doc_id {r['doc_id']!r} occurs with two texts in one batch;"
+                    f"doc_id {doc!r} occurs with two texts in one batch;"
                     " a batch must hold one row per document"
                 )
-            out.md5[r["doc_id"]] = r["__d"]
-            out.bands[r["doc_id"]] = tuple(r["bh"])
+        sig = _signatures(list(texts.values())).tolist()
+        out = BatchBands(
+            batch.sparkSession, epoch, k, texts, {}, {}, {kk: {} for kk in ks}
+        )
+        r = ROWS_PER_BAND
+        for (doc, text), s in zip(texts.items(), sig):
+            out.md5[doc] = hashlib.md5(text.encode()).hexdigest()
+            out.bands[doc] = tuple(
+                hashlib.md5(":".join(map(str, s[b * r : b * r + r])).encode()).hexdigest()
+                for b in range(N_BANDS)
+            )
+        for h in {h for hs in out.bands.values() for h in hs}:
+            m = _murmur3(h.encode())
             for kk in ks:
-                out.parts[kk].update(zip(r["bh"], r[f"p{kk}"]))
+                out.parts[kk][h] = m % kk
         return out
 
     def write_epoch(self, rows: "DataFrame | BatchBands", tag: str) -> list[str]:
@@ -237,9 +329,9 @@ class LshBandIndex:
         identical murmur3 ``pmod(hash(·), K)`` as the ``__bpart`` value
         (the same alignment trick as icelite.bucket_expr), so the write
         emits one file per hit directory — or a collected
-        :class:`BatchBands`, whose part ids were computed in its Spark
-        pass: its rows are written from the driver by ONE task, one file
-        per hit directory, with no exchange.
+        :class:`BatchBands`, whose part ids were computed on the driver:
+        its rows are written from the driver by ONE task, one file per
+        hit directory, with no exchange.
 
         K rides IN the partition value, making every file self-
         describing: epochs written under different bucket counts (a
@@ -365,7 +457,7 @@ class LshBandIndex:
         rows = (
             self.read(bands.spark, files)
             .select(_bkey().alias("bkey"), "doc_id")
-            .filter(F.col("bkey").isin(sorted(bkeys)))
+            .filter(_in_list("bkey", sorted(bkeys)))
         )
         members = rows.select(
             "bkey",
@@ -402,7 +494,7 @@ class LshBandIndex:
             out.append((r["bkey"], "r", -1, *r["__rep"]))
             out += [(r["bkey"], "p", j, *r[f"__p{j}"]) for j in range(panel_size)]
         if small:
-            small_members = members.filter(F.col("bkey").isin(small))
+            small_members = members.filter(_in_list("bkey", small))
             out += [tuple(r) for r in small_members.collect()]
         return out
 
@@ -659,15 +751,17 @@ class DedupLabels:
     Storage is icelite-MOR-shaped: per-epoch parquet deltas of ONLY the
     rows whose label is new or changed, recorded in the snapshot aux
     section (same atomic CAS as the data and the band index); reads
-    resolve the smallest label per node. Per-batch cost: the batch is
-    collected to the driver as O(batch) keys (:class:`BatchBands`, no
-    text), and the corpus appears only in Spark passes that are
-    streamed against broadcast key lists — the band-file probe of the
-    hit partitions (no re-shingling), a bucket-PRUNED text scan of the
-    candidate partners outside the batch, and the labels probe — no
-    corpus shuffle, no corpus rewrite. The premise is that one batch's
-    keys and verified pairs fit on the driver (operators/graph.py); a
-    bigger batch is sliced by epoch, not handed to another engine.
+    resolve the smallest label per node. Per-batch cost: the batch's
+    live ``(doc_id, text)`` is collected to the driver once
+    (:class:`BatchBands`), which hashes it and verifies its pairs; the
+    corpus appears only in Spark passes filtered by driver id lists
+    (one SQL IN-list each) — the band-file probe of the hit partitions
+    (no re-shingling), a bucket-PRUNED text scan of the candidate
+    partners outside the batch, and the labels probe — no corpus
+    shuffle, no corpus rewrite. The premise: one batch's live texts,
+    keys and candidate pairs fit on the driver (as in
+    operators/graph.py); a bigger batch is sliced by epoch, not handed
+    to another engine.
 
     Semantics: labels are the canonical min-labeling; groups are
     MONOTONE (an update to a member's text can add edges, never remove
@@ -766,13 +860,14 @@ class DedupLabels:
         when the caller already has it (the engine shares it with the
         band write); otherwise it is collected here.
 
-        One path, whatever the batch size, on the premise the driver
-        union-find already made: the batch's keys and candidate pairs fit
-        on the driver. Spark does the hashing (:meth:`LshBandIndex.
-        batch_bands`), the index probe (:meth:`LshBandIndex.probe`, only
-        when the index has files), one Jaccard verification (the
-        partner text read only when a partner lies outside the batch)
-        and the labels probes. The driver does the rest:
+        One path, whatever the batch size, on the class's premise that
+        the batch fits on the driver. Spark collects the batch
+        (:meth:`LshBandIndex.batch_bands`) and runs the corpus-side
+        reads: the index probe (:meth:`LshBandIndex.probe`, only when the
+        index has files), the stored text of candidate partners outside
+        the batch (only when there are any) and the labels probes
+        (only when labels exist) — so an epoch from empty runs no job
+        here. The driver does the rest:
 
         - exact-dup collapse: one representative (min doc_id) per
           distinct md5(text) runs LSH and verification; the other
@@ -787,10 +882,8 @@ class DedupLabels:
           is a driver-side lookup and a re-probe costs no extra job. The
           price: up to ``reprobe`` extra pairs per star edge are
           verified even when the star edge passes;
-        - the union-find fold (``graph._merge_driver``).
-
-        The verified pairs are collected once, straight from the Jaccard
-        plan; nothing is persisted or checkpointed."""
+        - the exact-Jaccard verification (:meth:`_verify`);
+        - the union-find fold (``graph._merge_driver``)."""
         from .operators.graph import _merge_driver
 
         bb = bands if bands is not None else self.index.batch_bands(batch, epoch)
@@ -828,9 +921,7 @@ class DedupLabels:
             _norm(m, p) for bkey, m, _rep in star for p in panel.get(bkey, ()) if p != m
         }
 
-        verified = self._verify(
-            spark, batch, cand | probes, set(reps), set(bb.md5), bucket
-        )
+        verified = self._verify(spark, bb, cand | probes, set(reps), bucket)
         edges = {p for p in cand if p in verified} | exact
         for bkey, m, rep in star:
             if _norm(m, rep) not in verified:
@@ -847,7 +938,7 @@ class DedupLabels:
         if remapped:
             changed = [
                 (r["node"], mapping[r["label"]])
-                for r in labels.filter(F.col("label").isin(remapped)).collect()
+                for r in labels.filter(_in_list("label", remapped)).collect()
             ]
         return _local_frame(
             spark, LABELS_SCHEMA, [(n, l, epoch) for n, l in changed + local]
@@ -856,27 +947,24 @@ class DedupLabels:
     def _verify(
         self,
         spark: SparkSession,
-        batch: DataFrame,
+        bb: BatchBands,
         pairs: set[tuple[str, str]],
         reps: set[str],
-        batch_ids: set[str],
         bucket: dict[str, int],
     ) -> set[tuple[str, str]]:
         """The (id_a ≤ id_b) ``pairs`` whose exact Jaccard passes the
-        threshold. A document verifies with its batch text when it is a
-        batch representative, with its stored text when it is not in the
-        batch (read only from the buckets such partners live in), and
-        not at all when it is an exact duplicate inside the batch (its
+        threshold, computed on the driver from distinct-shingle sets with
+        :func:`text_dedup.jaccard_verify_pairs`'s rounding. A document
+        verifies with its batch text when it is a batch representative,
+        with its stored text when it is not in the batch (ONE collect,
+        read only from the buckets such partners live in), and not at
+        all when it is an exact duplicate inside the batch (its
         representative carries its edges)."""
-        from .operators.text_dedup import jaccard_verify_pairs
-
         if not pairs:
             return set()
         ids = {x for p in pairs for x in p}
-        texts = self.index._live_docs(batch).filter(
-            F.col("doc_id").isin(sorted(ids & reps))
-        )
-        outside = sorted(ids - batch_ids)
+        texts = {d: bb.texts[d] for d in ids & reps}
+        outside = sorted(ids - bb.texts.keys())
         if outside:
             kc = self.table.key_cols()
             stored = (
@@ -886,16 +974,14 @@ class DedupLabels:
                     F.concat_ws("#", *kc).alias("doc_id"),
                     F.col(self.index.text_col).alias("text"),
                 )
-                .filter(F.col("doc_id").isin(outside))
+                .filter(_in_list("doc_id", outside))
             )
-            texts = texts.unionByName(stored)
-        pair_schema = T.StructType(
-            [T.StructField(c, T.StringType()) for c in ("id_a", "id_b")]
-        )
-        pdf = _local_frame(spark, pair_schema, sorted(pairs))
+            texts.update((r[0], r[1]) for r in stored.collect() if r[1] is not None)
+        sh = {d: _shingle_set(t) for d, t in texts.items()}
         return {
-            (r["id_a"], r["id_b"])
-            for r in jaccard_verify_pairs(texts, pdf, threshold=self.threshold).collect()
+            (a, b)
+            for a, b in pairs
+            if a in sh and b in sh and _jaccard_passes(sh[a], sh[b], self.threshold)
         }
 
     def write_epoch(self, rows: DataFrame, tag: str) -> list[str]:

@@ -97,6 +97,25 @@ def _local_frame(
     )
 
 
+def _in_list(col: str, values) -> F.Column:
+    """``col IN (values...)`` for a driver list of str or int ids as ONE
+    SQL expression — one py4j call, where ``F.col(col).isin(values)``
+    makes one per literal. Strings are quoted with ``'`` and ``\\``
+    escaped (Spark's default escaped string literals); an empty list is
+    false."""
+    if not values:
+        return F.lit(False)
+    lits = []
+    for v in values:
+        if isinstance(v, str):
+            lits.append("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'")
+        elif isinstance(v, int) and not isinstance(v, bool):
+            lits.append(str(v))
+        else:
+            raise TypeError(f"_in_list takes str or int ids, not {type(v).__name__}")
+    return F.expr(f"`{col}` IN ({', '.join(lits)})")
+
+
 def _pair_schema(a: str, b: str, a_type: T.DataType, b_type: T.DataType) -> T.StructType:
     return T.StructType([T.StructField(a, a_type), T.StructField(b, b_type)])
 
@@ -128,15 +147,16 @@ def _probe_labels(
     lab: DataFrame, ids: set, extra_ids: set | None = None
 ) -> dict:
     """Current labels of ``ids ∪ extra_ids`` — ONE streamed pass over the
-    big labels relation, filtered by the id set (the only corpus-touching
-    job of the merge; the filter pushes below a resolving aggregate, so
-    only the probed nodes' rows shuffle)."""
+    big labels relation, filtered by the id set as one IN-list
+    (:func:`_in_list`). It is the only corpus-touching job of the merge;
+    the filter pushes below a resolving aggregate, so only the probed
+    nodes' rows shuffle."""
     probe = sorted(ids | (extra_ids or set()))
     if not probe:
         return {}
     return {
         r["node"]: r["label"]
-        for r in lab.filter(F.col("node").isin(probe)).collect()
+        for r in lab.filter(_in_list("node", probe)).collect()
     }
 
 

@@ -203,14 +203,8 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     base = spread_compute(
         docs.filter(F.col("text").isNotNull()).select(id_col, "text")
     )
-    return _minhash_agg(base, [id_col])
-
-
-def _minhash_agg(base: DataFrame, keys: list[str]) -> DataFrame:
-    """The signature pipeline of :func:`minhash_signatures` over a
-    (keys..., text) relation, grouped by ``keys``."""
     hashed = base.select(
-        *keys,
+        id_col,
         F.explode(
             F.sequence(
                 F.lit(1), F.greatest(F.length("text") - (SHINGLE_LEN - 1), F.lit(1))
@@ -218,7 +212,7 @@ def _minhash_agg(base: DataFrame, keys: list[str]) -> DataFrame:
         ).alias("__i"),
         "text",
     ).select(
-        *keys,
+        id_col,
         h32(F.col("text").substr(F.col("__i"), F.lit(SHINGLE_LEN))).alias("__h"),
     )
     aggs = [
@@ -227,12 +221,14 @@ def _minhash_agg(base: DataFrame, keys: list[str]) -> DataFrame:
         )
         for k, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
     ]
-    return hashed.groupBy(*keys).agg(*aggs)
+    return hashed.groupBy(id_col).agg(*aggs)
 
 
-def _band_hash_cols() -> list[F.Column]:
-    """``band_hash`` of each band of a signature relation, by band_idx."""
-    return [
+def _band_rows(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, band_idx, band_hash) rows from a signature relation — the
+    LSH bucketing unit shared by the self-join (dedup within a corpus)
+    and the new×existing join (incremental dedup against a corpus)."""
+    band_cols = [
         F.md5(
             F.concat_ws(
                 ":",
@@ -244,13 +240,6 @@ def _band_hash_cols() -> list[F.Column]:
         ).alias("band_hash")
         for b in range(N_BANDS)
     ]
-
-
-def _band_rows(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, band_idx, band_hash) rows from a signature relation — the
-    LSH bucketing unit shared by the self-join (dedup within a corpus)
-    and the new×existing join (incremental dedup against a corpus)."""
-    band_cols = _band_hash_cols()
     return sig.select(
         id_col,
         F.explode(
