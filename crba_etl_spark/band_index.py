@@ -26,7 +26,13 @@ band hashes, Spark's murmur3 ``__bpart`` ids — and the Jaccard
 verification of its candidate pairs on the driver, bit-identical to the
 distributed operators (:meth:`LshBandIndex.rows_for`,
 ``text_dedup.jaccard_verify_pairs``), which the rebuild path, an engine
-without labels and the queries keep using.
+without labels and the queries keep using. The epoch's two O(batch)
+artifacts, its band rows and its label delta, are then already on the
+driver, so the driver writes them as parquet with ``pyarrow`` — no
+Spark job ships them back into the JVM. The distributed inputs (the
+rebuild's and a label-less engine's band rows, the labels compaction)
+keep their Spark writes; both writers' files hold the same rows, in the
+same directories and parquet types (tested side by side).
 
 Scale notes (100 TB): band files are written clustered by ``band_hash``
 (uniform md5 keys — no skew), so on a real cluster the candidates join
@@ -54,13 +60,16 @@ import struct
 from collections import Counter, defaultdict
 from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Decimal
+from itertools import groupby
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .cache import persist_tracked, release_caches
 from .icelite import IceliteTable
-from .operators.graph import _in_list, _local_frame
+from .operators.graph import _arrow_table, _in_list
 from .operators.text_dedup import (
     MINHASH_A,
     MINHASH_B,
@@ -100,8 +109,6 @@ def _parquet_rows(
     for the LIVE bound it inflates the stale estimate (round-6 ADVICE
     low) — so callers that must not act on an undercount pass
     ``failures`` to learn which paths were skipped."""
-    import pyarrow.parquet as pq
-
     total = 0
     for p in relpaths:
         try:
@@ -110,6 +117,22 @@ def _parquet_rows(
             if failures is not None:
                 failures.append(p)
     return total
+
+
+def _write_parquet(table: pa.Table, dir_: str) -> None:
+    """Write a driver-held Arrow table as ONE snappy parquet file in
+    ``dir_`` — no Spark job. The serialized Arrow schema is left out of
+    the footer: the readers (Spark, with an explicit schema, and footer
+    row counts) never use it, and with it the files are about 4% larger
+    than Spark's."""
+    os.makedirs(dir_, exist_ok=True)
+    pq.write_table(
+        table,
+        os.path.join(dir_, "part-00000.snappy.parquet"),
+        compression="snappy",
+        store_schema=False,
+    )
+
 
 BAND_SCHEMA = T.StructType(
     [
@@ -220,6 +243,10 @@ class BatchBands:
     #: K -> band_hash -> pmod(hash(band_hash), K)
     parts: dict[int, dict[str, int]]
 
+    def n_rows(self) -> int:
+        """Number of band rows: one per document and band."""
+        return sum(map(len, self.bands.values()))
+
     def index_rows(self) -> list[tuple]:
         """(doc_id, band_idx, band_hash, __epoch, __bpart) of every
         document, clustered by partition and band_hash."""
@@ -327,11 +354,12 @@ class LshBandIndex:
         band_idx, band_hash, __epoch) — hashed here and
         ``repartition(K, band_hash)``-ed, whose partition id is the
         identical murmur3 ``pmod(hash(·), K)`` as the ``__bpart`` value
-        (the same alignment trick as icelite.bucket_expr), so the write
-        emits one file per hit directory — or a collected
+        (the same alignment trick as icelite.bucket_expr), so the Spark
+        write emits one file per hit directory — or a collected
         :class:`BatchBands`, whose part ids were computed on the driver:
-        its rows are written from the driver by ONE task, one file per
-        hit directory, with no exchange.
+        its rows become one Arrow table in ``BAND_SCHEMA``'s types, and
+        the driver writes one snappy file per hit directory with
+        ``pyarrow.parquet``, running no Spark job.
 
         K rides IN the partition value, making every file self-
         describing: epochs written under different bucket counts (a
@@ -350,10 +378,15 @@ class LshBandIndex:
         if os.path.exists(out):
             shutil.rmtree(out)
         if isinstance(rows, BatchBands):
-            schema = T.StructType(
-                [*BAND_SCHEMA.fields, T.StructField("__bpart", T.StringType())]
-            )
-            df = _local_frame(rows.spark, schema, rows.index_rows()).coalesce(1)
+            ixr = rows.index_rows()
+            table = _arrow_table(BAND_SCHEMA, [r[:4] for r in ixr])
+            start = 0
+            for part, run in groupby(r[4] for r in ixr):
+                n = sum(1 for _ in run)
+                _write_parquet(
+                    table.slice(start, n), os.path.join(out, f"__bpart={part}")
+                )
+                start += n
         else:
             k = self.table.n_buckets()
             df = rows.withColumn(
@@ -364,7 +397,7 @@ class LshBandIndex:
                     F.pmod(F.hash(F.col("band_hash")), F.lit(k)).cast("string"),
                 ),
             ).repartition(k, F.col("band_hash"))
-        df.write.partitionBy("__bpart").mode("overwrite").parquet(out)
+            df.write.partitionBy("__bpart").mode("overwrite").parquet(out)
         files = []
         for root_, _dirs, fnames in os.walk(out):
             for f in fnames:
@@ -851,9 +884,9 @@ class DedupLabels:
         batch: DataFrame,
         epoch: int,
         bands: BatchBands | None = None,
-    ) -> DataFrame:
+    ) -> pa.Table:
         """Label-delta rows (node, label, __epoch) this batch causes, as a
-        one-partition relation of driver rows. Must run against the
+        driver-held Arrow table in ``LABELS_SCHEMA``. Must run against the
         PRE-commit snapshot (the index/labels as of the previous epoch —
         the batch's own band rows join the snapshot only with this
         epoch's commit). ``bands`` is the batch's collected footprint
@@ -940,9 +973,7 @@ class DedupLabels:
                 (r["node"], mapping[r["label"]])
                 for r in labels.filter(_in_list("label", remapped)).collect()
             ]
-        return _local_frame(
-            spark, LABELS_SCHEMA, [(n, l, epoch) for n, l in changed + local]
-        ).coalesce(1)
+        return _arrow_table(LABELS_SCHEMA, [(n, l, epoch) for n, l in changed + local])
 
     def _verify(
         self,
@@ -984,16 +1015,20 @@ class DedupLabels:
             if a in sh and b in sh and _jaccard_passes(sh[a], sh[b], self.threshold)
         }
 
-    def write_epoch(self, rows: DataFrame, tag: str) -> list[str]:
-        """Write ``rows`` as they are partitioned under
-        ``index/dedup_labels/<tag>`` — one file for
-        :meth:`delta_for_epoch`'s driver rows — with the same
-        write/orphan protocol as :meth:`LshBandIndex.write_epoch`."""
+    def write_epoch(self, rows: "DataFrame | pa.Table", tag: str) -> list[str]:
+        """Write ``rows`` under ``index/dedup_labels/<tag>`` with the same
+        write/orphan protocol as :meth:`LshBandIndex.write_epoch`: a
+        distributed relation (:meth:`compact`) by Spark, one file per
+        partition; :meth:`delta_for_epoch`'s Arrow table by the driver,
+        as one file, with no Spark job."""
         rel = f"index/dedup_labels/{tag}"
         out = os.path.join(self.table.root, rel)
         if os.path.exists(out):
             shutil.rmtree(out)
-        rows.write.mode("overwrite").parquet(out)
+        if isinstance(rows, pa.Table):
+            _write_parquet(rows, out)
+        else:
+            rows.write.mode("overwrite").parquet(out)
         return sorted(
             f"{rel}/{f}" for f in os.listdir(out) if f.endswith(".parquet")
         )
@@ -1025,10 +1060,14 @@ def write_epoch_aux(
 ) -> dict:
     """Write one epoch's aux artifacts — the band rows and, with
     ``labels``, the label delta — and return the ``aux_add`` entries the
-    epoch's data commit records. Files hit disk BEFORE the commit that
-    references them: a failed commit leaves only an orphan dir, which
-    ``expire_snapshots`` sweeps. The label delta is computed against the
-    pre-commit snapshot (index and labels as of the previous epoch)."""
+    epoch's data commit records. With ``labels``, the batch is collected
+    once (:class:`BatchBands`) and both artifacts are written from the
+    driver with ``pyarrow``, running no Spark job; without, the band rows
+    stay distributed and Spark writes them. Files hit disk BEFORE the
+    commit that references them: a failed commit leaves only an orphan
+    dir, which ``expire_snapshots`` sweeps. The label delta is computed
+    against the pre-commit snapshot (index and labels as of the previous
+    epoch)."""
     import uuid
 
     # unique per attempt: a deterministic tag could collide with a
@@ -1042,12 +1081,18 @@ def write_epoch_aux(
     # config rides the aux entry (first write wins) so a later maintenance
     # run — possibly a CLI engine constructed with defaults — rebuilds with
     # the parameters the artifact was BUILT with; rows_add feeds the
-    # stale-fraction maintenance trigger (footer metadata, no job)
+    # stale-fraction maintenance trigger (the driver's own count, or the
+    # Spark-written files' footers; no job either way)
+    rows_add = (
+        bands.n_rows()
+        if bands is not None
+        else _parquet_rows(index.table.root, band_files)
+    )
     aux = {
         AUX_NAME: {
             "files": band_files,
             "config": {"text_col": index.text_col},
-            "rows_add": _parquet_rows(index.table.root, band_files),
+            "rows_add": rows_add,
         }
     }
     if labels is not None:

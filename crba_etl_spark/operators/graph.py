@@ -79,22 +79,27 @@ def _collect(
     return pairs.schema["a"].dataType, [e for e in rows if e[0] != e[1]], ids
 
 
+def _arrow_table(schema: T.StructType, rows: list[tuple]):
+    """Driver rows as a ``pyarrow.Table`` in ``schema``'s Arrow form
+    (``to_arrow_schema``: an IntegerType column is int32, LongType
+    int64)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+
+
 def _local_frame(
     spark: SparkSession, schema: T.StructType, rows: list[tuple]
 ) -> DataFrame:
     """Driver rows as a LocalRelation, shipped through Arrow — no Python
     worker runs (``createDataFrame`` over a list pickles the rows
     through one)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) if rows else [()] * len(arrow)
-    return spark.createDataFrame(
-        pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-        )
-    )
+    return spark.createDataFrame(_arrow_table(schema, rows))
 
 
 def _in_list(col: str, values) -> F.Column:

@@ -148,7 +148,7 @@ def test_delta_from_empty_runs_no_spark_job(spark, tmpdir_):
         spark, lambda: labels.delta_for_epoch(spark, batch, 1, bands=bb)
     )
     assert jobs == 0
-    rows = delta.collect()
+    rows = delta.to_pylist()
     assert {r["node"] for r in rows} == set(bb.texts)
     assert any(r["node"] != r["label"] for r in rows)
 

@@ -254,13 +254,13 @@ def test_dedup_labels_capped_default_equals_exact(spark, tmpdir_):
     exact = DedupLabels(table, index, threshold=thr, max_bucket=None)
     want = {
         (r["node"], r["label"])
-        for r in exact.delta_for_epoch(spark, batch, 1).select("node", "label").collect()
+        for r in exact.delta_for_epoch(spark, batch, 1).select(["node", "label"]).to_pylist()
     }
     release_caches()
     capped = DedupLabels(table, index, threshold=thr, max_bucket=2, reprobe=8)
     got = {
         (r["node"], r["label"])
-        for r in capped.delta_for_epoch(spark, batch, 1).select("node", "label").collect()
+        for r in capped.delta_for_epoch(spark, batch, 1).select(["node", "label"]).to_pylist()
     }
     release_caches()
     assert got == want
