@@ -20,19 +20,19 @@ swap as the data (``IceliteTable.commit*``'s ``aux_add`` →
   on (band_idx, band_hash), and nothing touches the corpus text again
   (plan-asserted in tests/test_band_index.py).
 
-The engine's dedup epoch (:class:`DedupLabels`) collects the batch's
-live ``(doc_id, text)`` once and computes its footprint — md5, MinHash,
-band hashes, Spark's murmur3 ``__bpart`` ids — and the Jaccard
-verification of its candidate pairs on the driver, bit-identical to the
-distributed operators (:meth:`LshBandIndex.rows_for`,
-``text_dedup.jaccard_verify_pairs``), which the rebuild path, an engine
-without labels and the queries keep using. The epoch's two O(batch)
-artifacts, its band rows and its label delta, are then already on the
-driver, so the driver writes them as parquet with ``pyarrow`` — no
-Spark job ships them back into the JVM. The distributed inputs (the
-rebuild's and a label-less engine's band rows, the labels compaction)
-keep their Spark writes; both writers' files hold the same rows, in the
-same directories and parquet types (tested side by side).
+Every engine epoch with an index, with or without labels, collects the
+batch's live ``(doc_id, text)`` once and computes its footprint on the
+driver — md5, MinHash, band hashes, Spark's murmur3 ``__bpart`` ids —
+and, with labels (:class:`DedupLabels`), the Jaccard verification of
+its candidate pairs, bit-identical to the distributed operators
+(:meth:`LshBandIndex.rows_for`, ``text_dedup.jaccard_verify_pairs``),
+which the rebuild path and the queries keep using. The epoch's
+O(batch) artifacts, its band rows and its label delta, are then
+already on the driver, so the driver writes them as parquet with
+``pyarrow`` — no Spark job ships them back into the JVM. The
+distributed inputs (the rebuild's corpus-sized band rows, the labels
+compaction) keep their Spark writes; both writers' files hold the same
+rows, in the same directories and parquet types (tested side by side).
 
 Scale notes (100 TB): band files are written clustered by ``band_hash``
 (uniform md5 keys — no skew), so on a real cluster the candidates join
@@ -292,9 +292,9 @@ class LshBandIndex:
     def rows_for(self, batch: DataFrame, epoch: int) -> DataFrame:
         """Band rows for a reduced batch's live rows as a distributed
         relation — one shingle→MinHash→band pass over the batch, O(batch)
-        and independent of table size. The rebuild path and an engine
-        without labels write these; :meth:`batch_bands` is the collected
-        form."""
+        and independent of table size. The rebuild path writes these
+        for its corpus-sized input; :meth:`batch_bands` is the collected
+        form every epoch writes."""
         sig = minhash_signatures(self._live_docs(batch))
         return _band_rows(sig, "doc_id").withColumn(
             "__epoch", F.lit(epoch).cast("long")
@@ -1060,39 +1060,31 @@ def write_epoch_aux(
 ) -> dict:
     """Write one epoch's aux artifacts — the band rows and, with
     ``labels``, the label delta — and return the ``aux_add`` entries the
-    epoch's data commit records. With ``labels``, the batch is collected
-    once (:class:`BatchBands`) and both artifacts are written from the
-    driver with ``pyarrow``, running no Spark job; without, the band rows
-    stay distributed and Spark writes them. Files hit disk BEFORE the
-    commit that references them: a failed commit leaves only an orphan
-    dir, which ``expire_snapshots`` sweeps. The label delta is computed
-    against the pre-commit snapshot (index and labels as of the previous
-    epoch)."""
+    epoch's data commit records. The batch is collected once
+    (:class:`BatchBands`), with or without ``labels``, and both artifacts
+    are written from the driver with ``pyarrow``, running no Spark job.
+    Files hit disk BEFORE the commit that references them: a failed
+    commit leaves only an orphan dir, which ``expire_snapshots`` sweeps.
+    The label delta is computed against the pre-commit snapshot (index
+    and labels as of the previous epoch)."""
     import uuid
 
     # unique per attempt: a deterministic tag could collide with a
     # COMMITTED dir on raced redelivery and rmtree files the snapshot
     # references; an abandoned attempt's dir is just an unreferenced orphan
     tag = f"e{epoch:06d}-{uuid.uuid4().hex[:8]}"
-    # with labels, the batch's bands are collected once and feed both the
-    # band write and the label delta; without them they stay distributed
-    bands = index.batch_bands(batch, epoch) if labels is not None else None
-    band_files = index.write_epoch(bands or index.rows_for(batch, epoch), tag)
+    # the batch's bands are collected once and feed both the band write
+    # and the label delta
+    bands = index.batch_bands(batch, epoch)
     # config rides the aux entry (first write wins) so a later maintenance
     # run — possibly a CLI engine constructed with defaults — rebuilds with
-    # the parameters the artifact was BUILT with; rows_add feeds the
-    # stale-fraction maintenance trigger (the driver's own count, or the
-    # Spark-written files' footers; no job either way)
-    rows_add = (
-        bands.n_rows()
-        if bands is not None
-        else _parquet_rows(index.table.root, band_files)
-    )
+    # the parameters the artifact was BUILT with; rows_add (the driver's
+    # own count) feeds the stale-fraction maintenance trigger
     aux = {
         AUX_NAME: {
-            "files": band_files,
+            "files": index.write_epoch(bands, tag),
             "config": {"text_col": index.text_col},
-            "rows_add": rows_add,
+            "rows_add": bands.n_rows(),
         }
     }
     if labels is not None:

@@ -146,8 +146,11 @@ class CDCEngine:
         written alongside the delta files and recorded in the SAME
         snapshot commit, so incremental near-dup candidate generation
         against the ingested corpus reads only the index — O(batch) per
-        batch, independent of corpus size. Costs one extra shingle pass
-        over the batch per epoch.
+        batch, independent of corpus size. Costs one collect of the
+        batch's live texts per epoch: the band rows are computed and
+        written on the driver (band_index.write_epoch_aux), so, as with
+        ``dedup_labels``, a batch too big for the driver is sliced by
+        epoch.
 
         ``dedup_labels=True`` (implies ``lsh_index``) additionally folds
         each batch into the persisted near-dup GROUP labeling

@@ -293,580 +293,7 @@ SQL_USER_HIGH_WATERMARK = (
 
 
 # --------------------------------------------------------------------------
-# 2. warehouse operators (reference ETL shapes on TPC-H-ish tables)
-
-
-def q_pricing_summary(spark, sf_dir):
-    """Scan→filter→agg with decimal-exact sums (AGG-MINMAX/AGG-STATS)."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") < F.lit("1998-09-01")
-    )
-    disc = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,6)"
-    )
-    g = li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("sum_base_price"),
-        F.sum(disc).cast("double").alias("sum_disc_price"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
-    return g.withColumn(
-        "avg_qty", F.round(F.col("sum_qty") / F.col("count_order"), 6)
-    )
-
-
-SQL_PRICING_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-       CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS sum_disc_price,
-       count(*) AS count_order,
-       round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*), 6) AS avg_qty
-FROM lineitem WHERE l_shipdate < TIMESTAMP '1998-09-01 00:00:00'
-GROUP BY 1, 2
-"""
-
-
-def q_revenue_by_nation(spark, sf_dir):
-    """Star join: fact × broadcast dims (JOIN-CTRY/JOIN-IND shape)."""
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(28,6)")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.sum(rev).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-SQL_REVENUE_BY_NATION = """
-SELECT n_name,
-       CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-GROUP BY 1
-"""
-
-
-def q_top_customers(spark, sf_dir):
-    """Top-k with deterministic tie-break (SORT/LIMIT §2.6)."""
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    agg = o.groupBy("o_custkey").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("revenue")
-    )
-    return (
-        agg.join(F.broadcast(c), agg.o_custkey == c.c_custkey)
-        .select(F.col("c_custkey").alias("custkey"), "c_name", "revenue")
-        .orderBy(F.desc("revenue"), "custkey")
-        .limit(10)
-    )
-
-
-SQL_TOP_CUSTOMERS = """
-SELECT c_custkey AS custkey, c_name,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY 1, 2 ORDER BY revenue DESC, custkey LIMIT 10
-"""
-
-
-def q_latest_order_per_customer(spark, sf_dir):
-    """Window row_number latest-per-key (the reference FILT-LATEST)."""
-    o = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_orderdate"), F.desc("o_orderkey")
-    )
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "o_custkey",
-            F.col("o_orderkey").alias("last_orderkey"),
-            _ts_s("o_orderdate").alias("last_order_s"),
-            "o_totalprice",
-        )
-    )
-
-
-SQL_LATEST_ORDER_PER_CUSTOMER = f"""
-WITH r AS (
-  SELECT *, row_number() OVER (PARTITION BY o_custkey
-            ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-  FROM orders
-)
-SELECT o_custkey, o_orderkey AS last_orderkey,
-       {_SQL_TS_S.format(c='o_orderdate')} AS last_order_s, o_totalprice
-FROM r WHERE rn = 1
-"""
-
-
-#: the TPC-H order priorities — static, so the pivot needs no extra
-#: distinct+collect job to discover its columns (the SQL oracle hardcodes
-#: the same list; at scale a value-discovery scan is a full extra pass)
-ORDER_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-
-
-def q_orderpriority_pivot(spark, sf_dir):
-    """RESHAPE-PIVOT (§2.8): long → wide with conditional counts."""
-    o = load(spark, sf_dir, "orders")
-    exprs = [
-        F.sum((F.col("o_orderpriority") == p).cast("long")).alias(
-            "n_" + p.split("-")[0].lower()
-        )
-        for p in ORDER_PRIORITIES
-    ]
-    return o.groupBy("o_orderstatus").agg(*exprs)
-
-
-def _sql_orderpriority_pivot():
-    # priorities are the TPC-H standard five; generated to keep both
-    # sides aligned by name
-    ps = ORDER_PRIORITIES
-    cols = ",\n       ".join(
-        f"CAST(sum(CASE WHEN o_orderpriority = '{p}' THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_{p.split('-')[0].lower()}"
-        for p in sorted(ps)
-    )
-    return f"SELECT o_orderstatus,\n       {cols}\nFROM orders GROUP BY 1"
-
-
-def q_unpivot_part(spark, sf_dir):
-    """RESHAPE-MELT (§2.8): wide → long with Spark 4 native unpivot."""
-    p = load(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.col("p_size").cast("double").alias("p_size"),
-        F.col("p_retailprice").cast("double").alias("p_retailprice"),
-    )
-    return p.unpivot("p_partkey", ["p_size", "p_retailprice"], "attr", "val")
-
-
-SQL_UNPIVOT_PART = """
-SELECT p_partkey, 'p_size' AS attr, p_size::DOUBLE AS val FROM part
-UNION ALL
-SELECT p_partkey, 'p_retailprice' AS attr, p_retailprice::DOUBLE AS val FROM part
-"""
-
-
-def q_rollup_region_acctbal(spark, sf_dir):
-    """Cascaded roll-up means (the reference's indicator→issue→index
-    hierarchy, AGG-MEAN §2.4): nation-level avg then region-level avg."""
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region")
-    lvl1 = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(F.round(F.avg("c_acctbal"), 6).alias("nation_avg"))
-    )
-    return lvl1.groupBy("r_name").agg(
-        F.round(F.avg("nation_avg"), 6).alias("region_avg_of_avgs"),
-        F.count(F.lit(1)).alias("n_nations"),
-    )
-
-
-SQL_ROLLUP_REGION_ACCTBAL = """
-WITH lvl1 AS (
-  SELECT r_name, n_name, round(avg(c_acctbal), 6) AS nation_avg
-  FROM customer
-  JOIN nation ON c_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  GROUP BY 1, 2
-)
-SELECT r_name, round(avg(nation_avg), 6) AS region_avg_of_avgs,
-       count(*) AS n_nations
-FROM lvl1 GROUP BY 1
-"""
-
-
-def q_hierarchy_rollup(spark, sf_dir):
-    """AGG-MEAN, the reference's full 3-level roll-up (indicator score →
-    issue → category → index per country; SURVEY §2.4 [S+K, high]):
-    cascaded avg-of-avgs — three chained groupBys, each a partial+final
-    hash agg, dims broadcast."""
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region")
-    base = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).join(
-        F.broadcast(r), n.n_regionkey == r.r_regionkey
-    )
-    lvl0 = base.groupBy("r_name", "n_name", "c_mktsegment").agg(
-        F.round(F.avg("c_acctbal"), 6).alias("seg_avg")
-    )
-    lvl1 = lvl0.groupBy("r_name", "n_name").agg(
-        F.round(F.avg("seg_avg"), 6).alias("nation_avg"),
-        F.count(F.lit(1)).alias("n_segments"),
-    )
-    return lvl1.groupBy("r_name").agg(
-        F.round(F.avg("nation_avg"), 6).alias("region_score"),
-        F.sum("n_segments").alias("n_segments"),
-        F.count(F.lit(1)).alias("n_nations"),
-    )
-
-
-SQL_HIERARCHY_ROLLUP = """
-WITH lvl0 AS (
-  SELECT r_name, n_name, c_mktsegment, round(avg(c_acctbal), 6) AS seg_avg
-  FROM customer
-  JOIN nation ON c_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  GROUP BY 1, 2, 3
-),
-lvl1 AS (
-  SELECT r_name, n_name, round(avg(seg_avg), 6) AS nation_avg,
-         count(*) AS n_segments
-  FROM lvl0 GROUP BY 1, 2
-)
-SELECT r_name, round(avg(nation_avg), 6) AS region_score,
-       CAST(sum(n_segments) AS BIGINT) AS n_segments, count(*) AS n_nations
-FROM lvl1 GROUP BY 1
-"""
-
-
-def q_minmax_scale_orders(spark, sf_dir):
-    """NUM-SCALE (§2.8): min-max normalize to 1..10 within groups — the
-    reference's published normalization formula as window arithmetic."""
-    o = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority")
-    mn, mx = F.min("o_totalprice").over(w), F.max("o_totalprice").over(w)
-    score = F.when(mx == mn, F.lit(5.5)).otherwise(
-        1 + 9 * (F.col("o_totalprice") - mn) / (mx - mn)
-    )
-    return o.select(
-        "o_orderkey", "o_orderpriority", F.round(score, 6).alias("scaled_1_10")
-    )
-
-
-SQL_MINMAX_SCALE_ORDERS = """
-SELECT o_orderkey, o_orderpriority,
-       round(CASE WHEN max(o_totalprice) OVER (PARTITION BY o_orderpriority)
-                     = min(o_totalprice) OVER (PARTITION BY o_orderpriority)
-                  THEN 5.5
-                  ELSE 1 + 9 * (o_totalprice - min(o_totalprice) OVER (PARTITION BY o_orderpriority))
-                       / (max(o_totalprice) OVER (PARTITION BY o_orderpriority)
-                          - min(o_totalprice) OVER (PARTITION BY o_orderpriority))
-             END, 6) AS scaled_1_10
-FROM orders
-"""
-
-
-def q_scale_inverted_log(spark, sf_dir):
-    """NUM-SCALE, full published methodology (SURVEY §2.8 [S+K, high]):
-    log10 transform for skewed magnitudes, min-max to 1..10 within the
-    group, and an INVERTED (11 - s) scale for negative-direction
-    groups — all pure window/column arithmetic, no UDF."""
-    o = load(spark, sf_dir, "orders")
-    x = F.log10("o_totalprice")
-    w = Window.partitionBy("o_orderpriority")
-    mn, mx = F.min(x).over(w), F.max(x).over(w)
-    s = F.when(mx == mn, F.lit(5.5)).otherwise(1 + 9 * (x - mn) / (mx - mn))
-    inverted = F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
-    return o.select(
-        "o_orderkey",
-        "o_orderpriority",
-        inverted.alias("inverted"),
-        F.round(F.when(inverted, 11 - s).otherwise(s), 6).alias("score_1_10"),
-    )
-
-
-SQL_SCALE_INVERTED_LOG = """
-WITH s AS (
-  SELECT o_orderkey, o_orderpriority,
-         o_orderpriority IN ('1-URGENT', '5-LOW') AS inverted,
-         CASE WHEN max(log10(o_totalprice)) OVER (PARTITION BY o_orderpriority)
-                 = min(log10(o_totalprice)) OVER (PARTITION BY o_orderpriority)
-              THEN 5.5
-              ELSE 1 + 9 * (log10(o_totalprice)
-                            - min(log10(o_totalprice)) OVER (PARTITION BY o_orderpriority))
-                   / (max(log10(o_totalprice)) OVER (PARTITION BY o_orderpriority)
-                      - min(log10(o_totalprice)) OVER (PARTITION BY o_orderpriority))
-         END AS raw_s
-  FROM orders
-)
-SELECT o_orderkey, o_orderpriority, inverted,
-       round(CASE WHEN inverted THEN 11 - raw_s ELSE raw_s END, 6) AS score_1_10
-FROM s
-"""
-
-
-def q_order_price_quantiles(spark, sf_dir):
-    """AGG-STATS extension: exact interpolated percentiles per group
-    (apply-latency-style distribution metrics). Spark `percentile` and
-    DuckDB `quantile_cont` share the linear-interpolation definition, so
-    the oracle is exact. At scale swap for `approx_percentile`
-    (t-digest) — same call shape, documented accuracy trade."""
-    o = load(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.round(F.expr("percentile(o_totalprice, 0.5)"), 4).alias("p50"),
-        F.round(F.expr("percentile(o_totalprice, 0.9)"), 4).alias("p90"),
-        F.round(F.expr("percentile(o_totalprice, 0.99)"), 4).alias("p99"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-SQL_ORDER_PRICE_QUANTILES = """
-SELECT o_orderpriority,
-       round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
-       round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
-       round(quantile_cont(o_totalprice, 0.99), 4) AS p99,
-       count(*) AS n
-FROM orders GROUP BY 1
-"""
-
-
-def q_order_price_quantiles_approx(spark, sf_dir):
-    """The form actually RUN at 100 TB: single-pass sketch percentiles
-    (Greenwald-Khanna summaries, bounded memory per group) instead of
-    exact `percentile`, which buffers every group value. Same call
-    shape, same output schema as the exact twin. No SQL oracle by
-    design — sketch internals are engine-specific, so the driver records
-    the weaker rows-only check; accuracy vs the exact twin is asserted
-    in tests/test_approx_sketches.py instead."""
-    o = load(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.round(F.expr("approx_percentile(o_totalprice, 0.5, 10000)"), 4).alias("p50"),
-        F.round(F.expr("approx_percentile(o_totalprice, 0.9, 10000)"), 4).alias("p90"),
-        F.round(F.expr("approx_percentile(o_totalprice, 0.99, 10000)"), 4).alias("p99"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def q_distinct_users_approx(spark, sf_dir):
-    """approx_count_distinct (HyperLogLog++, rsd=1%) per event type — the
-    100 TB form of AGG-DISTINCT: fixed-size sketch per group, map-side
-    combinable, vs exact count_distinct's expanded shuffle. No SQL
-    oracle (HLL registers are engine-specific); error vs the exact
-    count is asserted in tests/test_approx_sketches.py."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=0.01).alias("approx_users"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-def q_order_price_quantiles_sketch_check(spark, sf_dir):
-    """Oracle-checkable sketch harness (round-3 VERDICT #3): ONE pass
-    computes both the Greenwald-Khanna approx percentiles (the 100 TB
-    form — see :func:`q_order_price_quantiles_approx` for the pure
-    twin) and the exact percentiles, and emits per group the EXACT
-    values plus ``sketch_violations`` = how many of the three quantiles
-    the sketch missed by more than 1e-3 relative error. DuckDB
-    reproduces the exact side and pins violations at 0, so the
-    accuracy bound itself is now a rows+schema+hash-checked contract
-    instead of a pytest-only assertion: any sketch drift beyond the
-    bound breaks the hash."""
-    o = load(spark, sf_dir, "orders")
-    g = o.groupBy("o_orderpriority").agg(
-        *[
-            F.expr(f"percentile(o_totalprice, {p})").alias(f"e{t}")
-            for p, t in ((0.5, 50), (0.9, 90), (0.99, 99))
-        ],
-        *[
-            F.expr(f"approx_percentile(o_totalprice, {p}, 10000)").alias(f"a{t}")
-            for p, t in ((0.5, 50), (0.9, 90), (0.99, 99))
-        ],
-        F.count(F.lit(1)).alias("n"),
-    )
-    viol = sum(
-        (F.abs(F.col(f"a{t}") - F.col(f"e{t}")) / F.abs(F.col(f"e{t}")) > 1e-3)
-        .cast("int")
-        for t in (50, 90, 99)
-    )
-    return g.select(
-        "o_orderpriority",
-        F.round("e50", 4).alias("p50"),
-        F.round("e90", 4).alias("p90"),
-        F.round("e99", 4).alias("p99"),
-        "n",
-        viol.alias("sketch_violations"),
-    )
-
-
-SQL_ORDER_PRICE_QUANTILES_SKETCH_CHECK = """
-SELECT o_orderpriority,
-       round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
-       round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
-       round(quantile_cont(o_totalprice, 0.99), 4) AS p99,
-       count(*) AS n,
-       CAST(0 AS INT) AS sketch_violations
-FROM orders GROUP BY 1
-"""
-
-
-def q_distinct_users_sketch_check(spark, sf_dir):
-    """Oracle-checkable HLL++ harness (round-3 VERDICT #3): computes the
-    rsd=1% approximate distinct count alongside the exact one, emits the
-    exact count plus a 5%-relative-error violation flag per group; the
-    DuckDB oracle pins violations at 0. (The pure sketch-only twin —
-    the form actually run at 100 TB, where exact count_distinct's
-    expanded shuffle is the thing being avoided — is
-    :func:`q_distinct_users_approx`; this harness is its standing
-    cross-engine accuracy gate.)"""
-    ev = load(spark, sf_dir, "events")
-    g = ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=0.01).alias("a"),
-        F.count_distinct("user_id").alias("exact_users"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    return g.select(
-        "event_type",
-        "exact_users",
-        "n_events",
-        (
-            F.abs(F.col("a") - F.col("exact_users")) / F.col("exact_users") > 0.05
-        )
-        .cast("int")
-        .alias("sketch_violations"),
-    )
-
-
-SQL_DISTINCT_USERS_SKETCH_CHECK = """
-SELECT event_type,
-       count(DISTINCT user_id) AS exact_users,
-       count(*) AS n_events,
-       CAST(0 AS INT) AS sketch_violations
-FROM events GROUP BY 1
-"""
-
-
-def q_universe_fill(spark, sf_dir):
-    """JOIN-UNIVERSE + FILL (§2.3, §2.8): every nation appears even with
-    zero customers — the reference's right-join to the country universe
-    with 'No data' sentinel."""
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    per_nation = c.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n_customers"))
-    return (
-        n.join(F.broadcast(per_nation), n.n_nationkey == per_nation.c_nationkey, "left")
-        .select(
-            "n_name",
-            F.coalesce("n_customers", F.lit(0)).alias("n_customers"),
-            F.when(F.col("n_customers").isNull(), "No data")
-            .otherwise("ok")
-            .alias("status"),
-        )
-    )
-
-
-SQL_UNIVERSE_FILL = """
-SELECT n_name,
-       coalesce(n_customers, 0) AS n_customers,
-       CASE WHEN n_customers IS NULL THEN 'No data' ELSE 'ok' END AS status
-FROM nation
-LEFT JOIN (SELECT c_nationkey, count(*) AS n_customers FROM customer GROUP BY 1) c
-  ON n_nationkey = c_nationkey
-"""
-
-
-def q_users_without_purchase(spark, sf_dir):
-    """SET-DIFF (§2.7) via left_anti — the reference's unknown-code
-    filter (scripts/filter_unknown_issus.py analog)."""
-    ev = load(spark, sf_dir, "events")
-    buyers = ev.filter(F.col("event_type") == "purchase").select("user_id").distinct()
-    return (
-        ev.select("user_id").distinct().join(buyers, "user_id", "left_anti")
-    )
-
-
-SQL_USERS_WITHOUT_PURCHASE = """
-SELECT DISTINCT user_id FROM events
-EXCEPT
-SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-"""
-
-
-def q_union_drift(spark, sf_dir):
-    """SET-UNION with column drift (§2.7): unionByName with missing
-    columns — the reference's edition-over-edition combine."""
-    ev = load(spark, sf_dir, "events")
-    a = ev.filter(F.col("event_type") == "click").groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    b = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-    )
-    return a.unionByName(b, allowMissingColumns=True)
-
-
-SQL_UNION_DRIFT = """
-SELECT user_id, count(*) AS n, NULL::DOUBLE AS sum_value
-FROM events WHERE event_type = 'click' GROUP BY 1
-UNION ALL
-SELECT user_id, count(*) AS n,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM events WHERE event_type = 'view' GROUP BY 1
-"""
-
-
-def q_value_map_encode(spark, sf_dir):
-    """COND-ENC (§2.8): categorical → numeric score CASE chain (the
-    reference's value_mapping tables)."""
-    ev = load(spark, sf_dir, "events")
-    score = (
-        F.when(F.col("event_type") == "purchase", 10.0)
-        .when(F.col("event_type") == "signup", 8.0)
-        .when(F.col("event_type") == "click", 3.0)
-        .when(F.col("event_type") == "view", 1.0)
-        .otherwise(0.0)
-    )
-    return ev.groupBy("event_type").agg(
-        F.round(F.sum(score), 1).alias("total_score"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-SQL_VALUE_MAP_ENCODE = """
-SELECT event_type,
-       CAST(round(sum(CASE event_type WHEN 'purchase' THEN 10.0 WHEN 'signup' THEN 8.0
-                 WHEN 'click' THEN 3.0 WHEN 'view' THEN 1.0 ELSE 0.0 END), 1) AS DOUBLE) AS total_score,
-       count(*) AS n
-FROM events GROUP BY 1
-"""
-
-
-def q_rollup_order_stats(spark, sf_dir):
-    """ROLLUP / grouping-sets aggregate with grouping indicators."""
-    o = load(spark, sf_dir, "orders")
-    return (
-        o.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("revenue"),
-            F.grouping("o_orderstatus").cast("int").alias("g_status"),
-            F.grouping("o_orderpriority").cast("int").alias("g_priority"),
-        )
-    )
-
-
-SQL_ROLLUP_ORDER_STATS = """
-SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-       CAST(grouping(o_orderstatus) AS INT) AS g_status,
-       CAST(grouping(o_orderpriority) AS INT) AS g_priority
-FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-"""
-
-
-# --------------------------------------------------------------------------
-# 3. training-data operators (documents)
+# 2. training-data operators (documents)
 
 
 def _sql_shingles(src: str = "documents") -> str:
@@ -1768,233 +1195,6 @@ SELECT doc_id, lang_pred, sample_rank FROM r WHERE sample_rank <= 3
 """
 
 
-#: salt fan-out for the skew-join demonstration
-SALT_N = 8
-
-
-def q_salted_skew_join(spark, sf_dir):
-    """Skew-defused fact×dim join by SALTING — the standard fix when a
-    Zipf-hot join key (here: the events table's heavy-hitter users)
-    funnels one shuffle partition and the join can't be pre-aggregated
-    (the dim attribute must ride every fact row). Fact rows get a salt
-    from a ROW-LEVEL hash (event_id — uniform, content-stable, never
-    rand()); the dim side replicates each row across all SALT_N salts
-    (an explode of a literal range — dim×8 rows, still broadcast-sized);
-    the join key becomes (user_id, salt), splitting each hot key's rows
-    across 8 reducers. Result: per-segment event totals — identical to
-    the unsalted join (the oracle), which is the whole point: salting
-    changes the DISTRIBUTION of work, never the answer. At 100 TB the
-    same shape applies with AQE skew-join as the automatic first resort
-    and explicit salting when a single key exceeds what one task can
-    hold even after AQE splits."""
-    ev = load(spark, sf_dir, "events")
-    # derived user dim: stable segment attribute per distinct user
-    dim = (
-        ev.select("user_id")
-        .distinct()
-        .withColumn("segment", F.pmod(F.col("user_id"), F.lit(10)).cast("int"))
-    )
-    fact = ev.withColumn("_salt", F.pmod(F.hash("event_id"), F.lit(SALT_N)))
-    dim_rep = dim.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(s) for s in range(SALT_N)]))
-    )
-    return (
-        fact.join(dim_rep, on=["user_id", "_salt"])
-        .groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.count_distinct("user_id").alias("n_users"),
-        )
-    )
-
-
-SQL_SALTED_SKEW_JOIN = """
-WITH dim AS (
-  SELECT DISTINCT user_id, (user_id % 10)::INT AS segment FROM events
-)
-SELECT segment, count(*) AS n_events, count(DISTINCT e.user_id) AS n_users
-FROM events e JOIN dim USING (user_id)
-GROUP BY 1
-"""
-
-
-def q_funnel_conversion(spark, sf_dir):
-    """Ordered funnel conversion (signup → click → purchase): per user,
-    stage k counts only if it happened strictly AFTER the user's stage
-    k-1 time — the ordering constraint is what separates a funnel from
-    three independent counts. Shape: one filtered min-agg per stage,
-    each joined to the previous stage's per-user time (all three are
-    user-keyed equi-joins over shrinking sets); no windows, no UDFs.
-    Output: (stage, n_users), one row per funnel stage."""
-    ev = load(spark, sf_dir, "events")
-    s1 = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == "click")
-        .join(s1, "user_id")
-        .filter(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .filter(F.col("ts") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-    return (
-        s1.agg(F.lit("1_signup").alias("stage"), F.count(F.lit(1)).alias("n_users"))
-        .union(
-            s2.agg(
-                F.lit("2_signup_then_click").alias("stage"),
-                F.count(F.lit(1)).alias("n_users"),
-            )
-        )
-        .union(
-            s3.agg(
-                F.lit("3_then_purchase").alias("stage"),
-                F.count(F.lit(1)).alias("n_users"),
-            )
-        )
-    )
-
-
-SQL_FUNNEL_CONVERSION = """
-WITH s1 AS (
-  SELECT user_id, min(ts) AS t1 FROM events
-  WHERE event_type = 'signup' GROUP BY 1
-),
-s2 AS (
-  SELECT e.user_id, min(e.ts) AS t2
-  FROM events e JOIN s1 USING (user_id)
-  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1
-),
-s3 AS (
-  SELECT e.user_id, min(e.ts) AS t3
-  FROM events e JOIN s2 USING (user_id)
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1
-)
-SELECT '1_signup' AS stage, count(*) AS n_users FROM s1
-UNION ALL
-SELECT '2_signup_then_click', count(*) FROM s2
-UNION ALL
-SELECT '3_then_purchase', count(*) FROM s3
-"""
-
-
-def q_retention_cohorts(spark, sf_dir):
-    """Weekly retention cohorts: users grouped by their first-signup
-    week; for each cohort, distinct active users at each non-negative
-    week offset. The standard product-analytics matrix, computed as two
-    map-side-combinable aggs + one user-keyed join — the distinct
-    (user, week) activity set is formed BEFORE the join, so the join
-    input is already deduplicated (no row explosion on active users).
-    Week truncation is ISO-Monday in both engines."""
-    ev = load(spark, sf_dir, "events")
-    cohort = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week"))
-    )
-    activity = ev.select(
-        "user_id", F.date_trunc("week", "ts").cast("date").alias("week")
-    ).distinct()
-    return (
-        activity.join(cohort, "user_id")
-        .select(
-            "cohort_week",
-            (F.datediff("week", "cohort_week") / 7).cast("int").alias("week_offset"),
-        )
-        .filter(F.col("week_offset") >= 0)
-        .groupBy("cohort_week", "week_offset")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )
-
-
-SQL_RETENTION_COHORTS = """
-WITH cohort AS (
-  SELECT user_id, date_trunc('week', min(ts))::DATE AS cohort_week
-  FROM events WHERE event_type = 'signup' GROUP BY 1
-),
-activity AS (
-  SELECT DISTINCT user_id, date_trunc('week', ts)::DATE AS week FROM events
-)
-SELECT cohort_week,
-       (date_diff('day', cohort_week, week) / 7)::INT AS week_offset,
-       count(*) AS n_users
-FROM activity JOIN cohort USING (user_id)
-WHERE date_diff('day', cohort_week, week) >= 0
-GROUP BY 1, 2
-"""
-
-
-def q_interval_join_binned(spark, sf_dir):
-    """Scale-safe INTERVAL (range) join with NO equi key — the join
-    shape Spark has no native strategy for: windows = the 5 busiest
-    hours of the event stream widened ±30 minutes, count the events
-    inside each. The naive ``ts BETWEEN w_start AND w_end`` join is a
-    nested-loop/cartesian (forbidden by this repo's registry-wide plan
-    sweep); the standard scale fix BINS time at the window-length
-    granularity: each window explodes into the hour bins it covers
-    (≤3 rows per window), each event lands in exactly one bin, the
-    join becomes an EQUI-join on the bin, and exact containment is a
-    post-filter. Cost O(events + windows×bins) with uniform keys —
-    survives any corpus size, and AQE broadcasts the tiny exploded
-    window side. Overlapping windows are handled naturally (an event
-    counts in every window containing it)."""
-    ev = load(spark, sf_dir, "events").select("ts")
-    hours = (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("hr"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "hr")
-        .limit(5)
-    )
-    w = hours.select(
-        (F.col("hr") - F.expr("INTERVAL 30 MINUTES")).alias("w_start"),
-        (F.col("hr") + F.expr("INTERVAL 90 MINUTES")).alias("w_end"),
-    )
-    wb = w.select(
-        "w_start",
-        "w_end",
-        F.explode(
-            F.sequence(
-                F.floor(F.unix_timestamp("w_start") / 3600).cast("long"),
-                F.floor((F.unix_timestamp("w_end") - 1) / 3600).cast("long"),
-            )
-        ).alias("bin"),
-    )
-    eb = ev.select(
-        "ts", F.floor(F.unix_timestamp("ts") / 3600).cast("long").alias("bin")
-    )
-    return (
-        eb.join(F.broadcast(wb), "bin")
-        .filter((F.col("ts") >= F.col("w_start")) & (F.col("ts") < F.col("w_end")))
-        .groupBy("w_start", "w_end")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-SQL_INTERVAL_JOIN_BINNED = """
-WITH h AS (
-  SELECT date_trunc('hour', ts) AS hr, count(*) AS n
-  FROM events GROUP BY 1
-  ORDER BY n DESC, hr LIMIT 5
-),
-w AS (
-  SELECT hr - INTERVAL 30 MINUTE AS w_start,
-         hr + INTERVAL 90 MINUTE AS w_end
-  FROM h
-)
-SELECT w.w_start, w.w_end, count(*) AS n_events
-FROM w JOIN events e ON e.ts >= w.w_start AND e.ts < w.w_end
-GROUP BY 1, 2
-"""
-
-
 def q_weighted_sample(spark, sf_dir):
     """Deterministic weighted sampling WITHOUT replacement
     (Efraimidis–Spirakis A-ES): each document draws key = u^(1/w) with
@@ -2033,161 +1233,6 @@ WITH k AS (
 SELECT doc_id, doc_len, round(_k, 6) AS sample_key
 FROM k ORDER BY _k DESC, doc_id LIMIT 25
 """
-
-
-#: BM25 constants (the standard Robertson defaults) + a fixed demo query
-BM25_K1, BM25_B = 1.2, 0.75
-BM25_TERMS = ("data", "model", "system")
-
-
-def q_bm25_topk(spark, sf_dir):
-    """BM25 ranked retrieval over the documents table (corpus search is
-    how curation teams FIND the data worth keeping/dropping), as ONE
-    declarative plan — round-4 VERDICT #4: the previous form collected
-    ``n_docs``/``avgdl`` driver-side mid-query, so the corpus-wide
-    tokenize+agg pass ran twice across three Spark jobs. Now: tokenize →
-    a single per-doc aggregate carrying doc length AND one conditional
-    tf counter per (fixed, tiny) query-term list → corpus stats
-    (N, avgdl, per-term df) as a 1-row aggregate folded back in via
-    ``crossJoin(F.broadcast(...))`` (the queries.py:147 shape) → score →
-    top-15. The per-doc aggregate's shuffle is identical in the stats
-    branch and the scoring branch, so Spark's exchange reuse runs the
-    tokenize subtree ONCE; no UDFs, no global window, no driver scalars.
-    Scores round(6) for cross-engine double stability."""
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower("text"), "[^a-z0-9]+")).alias("tok"),
-    )
-    per_doc = toks.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("tok") != "", 1).otherwise(0)).alias("dl"),
-        *[
-            F.sum(F.when(F.col("tok") == t, 1).otherwise(0)).alias(f"tf_{i}")
-            for i, t in enumerate(BM25_TERMS)
-        ],
-    )
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("dl").alias("avgdl"),
-        *[
-            F.sum((F.col(f"tf_{i}") > 0).cast("int")).alias(f"df_{i}")
-            for i in range(len(BM25_TERMS))
-        ],
-    )
-    any_term = None
-    score = F.lit(0.0)
-    for i in range(len(BM25_TERMS)):
-        tf, dfq = F.col(f"tf_{i}"), F.col(f"df_{i}")
-        idf = F.log(F.lit(1.0) + (F.col("n") - dfq + 0.5) / (dfq + 0.5))
-        norm = tf + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-        score = score + F.when(tf > 0, idf * (tf * (BM25_K1 + 1)) / norm).otherwise(
-            0.0
-        )
-        any_term = (tf > 0) if any_term is None else (any_term | (tf > 0))
-    scored = (
-        per_doc.filter(any_term)
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", F.round(score, 6).alias("bm25"))
-    )
-    return scored.orderBy(F.desc("bm25"), "doc_id").limit(15)
-
-
-def _sql_bm25_topk():
-    tf_cols = ",\n         ".join(
-        f"count(*) FILTER (WHERE tok = '{t}') AS tf_{i}"
-        for i, t in enumerate(BM25_TERMS)
-    )
-    df_cols = ",\n         ".join(
-        f"sum(CASE WHEN tf_{i} > 0 THEN 1 ELSE 0 END) AS df_{i}"
-        for i in range(len(BM25_TERMS))
-    )
-    term_scores = "\n       + ".join(
-        f"""CASE WHEN tf_{i} > 0 THEN
-             ln(1.0 + (n - df_{i} + 0.5) / (df_{i} + 0.5))
-             * (tf_{i} * ({BM25_K1} + 1))
-             / (tf_{i} + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * dl / avgdl))
-           ELSE 0.0 END"""
-        for i in range(len(BM25_TERMS))
-    )
-    any_term = " OR ".join(f"tf_{i} > 0" for i in range(len(BM25_TERMS)))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS tok
-  FROM documents
-),
-per_doc AS (
-  SELECT doc_id,
-         count(*) FILTER (WHERE tok <> '') AS dl,
-         {tf_cols}
-  FROM toks GROUP BY 1
-),
-stats AS (
-  SELECT count(*) AS n, avg(dl) AS avgdl,
-         {df_cols}
-  FROM per_doc
-),
-scored AS (
-  SELECT doc_id,
-         ({term_scores}) AS s
-  FROM per_doc, stats
-  WHERE {any_term}
-)
-SELECT doc_id, round(s, 6) AS bm25
-FROM scored ORDER BY round(s, 6) DESC, doc_id LIMIT 15
-"""
-
-
-#: columns profiled by q_table_profile — a fixed, mixed-type projection
-PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
-
-
-def q_table_profile(spark, sf_dir):
-    """Column-level data profiling (the first query every ingest/debug
-    session runs; the reference's completeness/log-report stats are the
-    same idea per staging file — SURVEY §2.4 AGG-STATS): one row per
-    profiled column with row count, null count, distinct count and
-    min/max (stringified so mixed types share one schema). Shape: ONE
-    pass over the table computing all columns' aggregates side by side
-    (map-side combinable), then a tiny driver-side unpivot of the 1-row
-    result — never a per-column scan."""
-    o = load(spark, sf_dir, "orders")
-    aggs = []
-    for c in PROFILE_COLS:
-        aggs += [
-            F.count(F.lit(1)).alias(f"{c}__rows"),
-            F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-            F.count_distinct(F.col(c)).alias(f"{c}__distinct"),
-            F.min(F.col(c).cast("string")).alias(f"{c}__min"),
-            F.max(F.col(c).cast("string")).alias(f"{c}__max"),
-        ]
-    row = load(spark, sf_dir, "orders").agg(*aggs)
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col(f"{c}__rows").alias("n_rows"),
-                F.col(f"{c}__nulls").alias("n_nulls"),
-                F.col(f"{c}__distinct").alias("n_distinct"),
-                F.col(f"{c}__min").alias("min_str"),
-                F.col(f"{c}__max").alias("max_str"),
-            )
-            for c in PROFILE_COLS
-        ]
-    )
-    return row.select(F.explode(structs).alias("p")).select("p.*")
-
-
-def _sql_table_profile():
-    parts = [
-        f"""
-SELECT '{c}' AS column, count(*) AS n_rows,
-       count(*) - count({c}) AS n_nulls,
-       count(DISTINCT {c}) AS n_distinct,
-       min({c}::VARCHAR) AS min_str, max({c}::VARCHAR) AS max_str
-FROM orders"""
-        for c in PROFILE_COLS
-    ]
-    return "\nUNION ALL\n".join(parts)
 
 
 def q_pii_redact(spark, sf_dir):
@@ -2280,8 +1325,7 @@ def q_domain_mix_weights(spark, sf_dir):
     weight_d = n_d^0.5 / Σ n^0.5 — upweights small domains, downweights
     dominant ones. ONE shuffle: the per-domain agg; the corpus totals
     (Σn, Σ√n) fold back in via crossJoin(F.broadcast(1-row agg)) over
-    the SAME aggregated child, so exchange reuse scans the table once
-    (the bm25 single-plan shape, round-4 VERDICT #4)."""
+    the SAME aggregated child, so exchange reuse scans the table once."""
     docs = load(spark, sf_dir, "documents")
     per = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"), F.sum("n_chars").alias("n_chars")
@@ -2378,11 +1422,10 @@ def registry() -> dict[str, tuple]:
     """name → (spark_fn, oracle_sql): every query here paired with its
     exact DuckDB oracle, compared row for row by
     tests/test_entry_contract.py. One representative per operator family
-    first — CDC, windows, TPC-H aggregates, sketches, reshape, sampling,
-    set ops, text dedup (MinHash-LSH/components/incremental), text
-    analysis, curation, analytics (funnel/retention/interval/salted/BM25/
-    profile) — then the twins,
-    intermediates and labeled quadratic baselines.
+    first — CDC and windows over the events stream, then the documents
+    pipeline: sampling, packing, text dedup (MinHash-LSH, components,
+    the engine's band index and labels), text analysis and curation —
+    then the twins, intermediates and labeled quadratic baselines.
     """
     return {
         # --- CDC / temporal -------------------------------------------
@@ -2391,35 +1434,6 @@ def registry() -> dict[str, tuple]:
         "snapshot_diff_events": (q_snapshot_diff_events, SQL_SNAPSHOT_DIFF_EVENTS),
         "sessionize": (q_sessionize, SQL_SESSIONIZE),
         "tumbling_hourly": (q_tumbling_hourly, SQL_TUMBLING_HOURLY),
-        # --- relational / TPC-H-ish -----------------------------------
-        "pricing_summary": (q_pricing_summary, SQL_PRICING_SUMMARY),
-        "revenue_by_nation": (q_revenue_by_nation, SQL_REVENUE_BY_NATION),
-        "top_customers": (q_top_customers, SQL_TOP_CUSTOMERS),
-        "latest_order_per_customer": (
-            q_latest_order_per_customer,
-            SQL_LATEST_ORDER_PER_CUSTOMER,
-        ),
-        "orderpriority_pivot": (q_orderpriority_pivot, _sql_orderpriority_pivot()),
-        "unpivot_part": (q_unpivot_part, SQL_UNPIVOT_PART),
-        "rollup_region_acctbal": (q_rollup_region_acctbal, SQL_ROLLUP_REGION_ACCTBAL),
-        "minmax_scale_orders": (q_minmax_scale_orders, SQL_MINMAX_SCALE_ORDERS),
-        "order_price_quantiles": (q_order_price_quantiles, SQL_ORDER_PRICE_QUANTILES),
-        # sketch row, ORACLE-CHECKABLE (round-3 VERDICT #3): the registry
-        # runs the bound-check harness — exact values + a violations
-        # counter the oracle pins at 0 — so sketch accuracy is a
-        # hash-checked contract; the PURE sketch twins (the actual 100 TB
-        # forms) remain exported and pytest-asserted
-        "distinct_users_approx": (
-            q_distinct_users_sketch_check,
-            SQL_DISTINCT_USERS_SKETCH_CHECK,
-        ),
-        "universe_fill": (q_universe_fill, SQL_UNIVERSE_FILL),
-        "users_without_purchase": (
-            q_users_without_purchase,
-            SQL_USERS_WITHOUT_PURCHASE,
-        ),
-        "union_drift": (q_union_drift, SQL_UNION_DRIFT),
-        "value_map_encode": (q_value_map_encode, SQL_VALUE_MAP_ENCODE),
         # --- documents / training-data pipeline -----------------------
         "repetition_stats": (q_repetition_stats, SQL_REPETITION_STATS),
         "pii_redact": (q_pii_redact, _sql_pii_redact()),
@@ -2440,13 +1454,6 @@ def registry() -> dict[str, tuple]:
             q_curation_near_dup_pipeline,
             _sql_curation_near_dup_pipeline(),
         ),
-        # --- analytics (round-4 additions) ----------------------------
-        "interval_join_binned": (q_interval_join_binned, SQL_INTERVAL_JOIN_BINNED),
-        "funnel_conversion": (q_funnel_conversion, SQL_FUNNEL_CONVERSION),
-        "salted_skew_join": (q_salted_skew_join, SQL_SALTED_SKEW_JOIN),
-        "retention_cohorts": (q_retention_cohorts, SQL_RETENTION_COHORTS),
-        "bm25_topk": (q_bm25_topk, _sql_bm25_topk()),
-        "table_profile": (q_table_profile, _sql_table_profile()),
         # --- twins / intermediates / labeled baselines ------------------
         "domain_mix_weights": (q_domain_mix_weights, SQL_DOMAIN_MIX_WEIGHTS),
         # intermediate of dedup_groups (in-window), still oracled here
@@ -2463,13 +1470,6 @@ def registry() -> dict[str, tuple]:
         "user_high_watermark": (q_user_high_watermark, SQL_USER_HIGH_WATERMARK),
         "stratified_sample": (q_stratified_sample, _sql_stratified_sample()),
         "hash_split_sample": (q_hash_split_sample, SQL_HASH_SPLIT_SAMPLE),
-        "hierarchy_rollup": (q_hierarchy_rollup, SQL_HIERARCHY_ROLLUP),
-        "rollup_order_stats": (q_rollup_order_stats, SQL_ROLLUP_ORDER_STATS),
-        "scale_inverted_log": (q_scale_inverted_log, SQL_SCALE_INVERTED_LOG),
-        "order_price_quantiles_approx": (
-            q_order_price_quantiles_sketch_check,
-            SQL_ORDER_PRICE_QUANTILES_SKETCH_CHECK,
-        ),
         "length_histogram": (q_length_histogram, SQL_LENGTH_HISTOGRAM),
         # global-window oracle twin of pack_sharded (N_PACK_SHARDS=1)
         "pack_contiguous": (q_pack_contiguous, SQL_PACK_CONTIGUOUS),

@@ -22,12 +22,11 @@ form of this tail (editions = epochs) — SURVEY.md §2.9.
 
 from __future__ import annotations
 
-import json
 import os.path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..engine import CDCEngine
+from ..engine import CDCEngine, _declared_files
 from ..schema import CHANGE_EVENT
 
 
@@ -93,14 +92,6 @@ def stream_apply(
         spark, events_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
 
-    def _declared_files(k: int) -> set[str] | None:
-        """The producer's epoch-complete declaration — a GET, not a LIST.
-        Shared with the batch replay path (engine._declared_files), which
-        honors the same contract."""
-        from ..engine import _declared_files as declared
-
-        return declared(events_dir, k)
-
     def _sweep_open_epochs() -> None:
         """Promote every still-open epoch whose applied-file union now
         covers its (possibly late-landing) _DONE declaration. An epoch
@@ -111,7 +102,7 @@ def stream_apply(
         marker is missed (round-3 ADVICE). Metadata-only commits; runs
         at stream start (the no-new-traffic case) and after each batch."""
         for k_str, applied in engine.table.epoch_files().items():
-            declared = _declared_files(int(k_str))
+            declared = _declared_files(events_dir, int(k_str))
             if declared is not None and set(applied) >= declared:
                 engine.table.mark_epoch_committed(int(k_str))
 
@@ -142,7 +133,7 @@ def stream_apply(
                 # sweep below promotes the marker once _DONE covers it)
                 continue
             ev = batch.filter(F.col("epoch") == k)
-            declared = _declared_files(k)
+            declared = _declared_files(events_dir, k)
             union = set(applied_so_far.get(str(k), [])) | files_in_batch[k]
             complete = declared is not None and union >= declared
             engine.apply_epoch(

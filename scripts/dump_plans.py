@@ -61,15 +61,7 @@ columns — at 100 TB the scan reads a fraction of the table.""",
         plan_of(q),
     ))
 
-    # 3. broadcast star join
-    sections.append((
-        "Star join with broadcast dimensions (revenue_by_nation)",
-        """Dimension sides show `BroadcastHashJoin` / `BroadcastExchange` —
-no shuffle of the fact table against small dims.""",
-        plan_of(Q.q_revenue_by_nation(spark, SF)),
-    ))
-
-    # 4. minhash LSH candidates
+    # 3. minhash LSH candidates
     sections.append((
         "MinHash + banded LSH candidate pairs (text)",
         """All hashing is Catalyst expressions (md5/conv) inside
@@ -89,7 +81,7 @@ def write_plans_md(sections, path: str) -> None:
             "Regenerated by `python scripts/dump_plans.py PLANS.md`;\n"
             "tests/test_plans.py asserts the key invariants on the live plans\n"
             "— one exchange in the CDC apply, partial `max_by`, PushedFilters\n"
-            "at the scan, broadcast dims, no nested-loop joins in any LSH path.\n"
+            "at the scan, no nested-loop joins in any LSH path.\n"
             "(A 2k-event generated epoch and sf0.01 inputs; plan shapes are\n"
             "scale-independent.)\n"
         )

@@ -78,8 +78,10 @@ def test_driver_label_delta_equals_local_relation_write(spark, tmpdir_):
     """The label delta is an Arrow table in LABELS_SCHEMA; written from
     the driver it is one file equal to the Spark write of the same rows
     as a one-partition LocalRelation. From an empty index, the whole
-    aux write runs one Spark job (the batch collect), and the band
-    entry's rows_add equals its files' footer row count."""
+    aux write runs one Spark job (the batch collect), with labels and
+    for an index alone, and the band entry's rows_add equals its files'
+    footer row count; the index-only band files hold the rows and
+    __bpart directories of the Spark write of rows_for."""
     docs = _docs(spark)
     table, index = ingest_documents(
         spark, os.path.join(tmpdir_, "t"), docs.limit(0), n_buckets=4
@@ -98,13 +100,22 @@ def test_driver_label_delta_equals_local_relation_write(spark, tmpdir_):
     want = _rows(spark, LABELS_SCHEMA, table.root, spk)
     assert want and _rows(spark, LABELS_SCHEMA, table.root, drv) == want
 
-    aux, jobs = _count_jobs(
-        spark, lambda: write_epoch_aux(spark, index, labels, batch, 1)
+    for lab in (labels, None):
+        aux, jobs = _count_jobs(
+            spark, lambda: write_epoch_aux(spark, index, lab, batch, 1)
+        )
+        assert jobs == 1
+        band = aux[AUX_NAME]
+        assert band["rows_add"] == _parquet_rows(table.root, band["files"]) > 0
+        if lab is not None:
+            label_files = aux[LABELS_AUX]["files"]
+            assert _parquet_rows(table.root, label_files) == delta.num_rows
+    assert LABELS_AUX not in aux
+    spk = index.write_epoch(index.rows_for(batch, 1), "spk")
+    assert _rows(spark, BAND_SCHEMA, table.root, band["files"]) == _rows(
+        spark, BAND_SCHEMA, table.root, spk
     )
-    assert jobs == 1
-    band = aux[AUX_NAME]
-    assert band["rows_add"] == _parquet_rows(table.root, band["files"]) > 0
-    assert _parquet_rows(table.root, aux[LABELS_AUX]["files"]) == delta.num_rows
+    assert _dirs(band["files"]) == _dirs(spk)
 
 
 def test_probe_and_candidates_over_mixed_writers(spark, tmpdir_):

@@ -11,10 +11,7 @@ import pytest
 from crba_etl_spark import queries as Q
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents",
-]
+TABLES = ["events", "documents"]
 
 
 @pytest.fixture(scope="module")

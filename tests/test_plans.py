@@ -36,10 +36,6 @@ def test_plan_invariants_and_regenerate_plans_md(spark, tmp_path):
     assert "LessThan(l_shipdate" in scan  # PushedFilters reached parquet
     assert "l_comment" not in scan  # ReadSchema pruned to needed columns
 
-    # --- star join: dims broadcast, fact not shuffled against them ------
-    star = plans["Star join with broadcast dimensions"]
-    assert "BroadcastHashJoin" in star
-
     # --- the LSH path: equi-joins only, never nested-loop/cartesian ---
     p = plans["MinHash + banded LSH candidate pairs"]
     assert "BroadcastNestedLoopJoin" not in p
@@ -73,8 +69,7 @@ def test_plan_invariants_and_regenerate_plans_md(spark, tmp_path):
     # scale-safe — and is allowlisted per query:
     SCALAR_BROADCAST_OK = {
         "snapshot_diff_events",  # half-max-LSN cutoff (1-row agg)
-        "bm25_topk",             # corpus stats (1-row agg, round-4 VERDICT #4)
-        "domain_mix_weights",    # corpus totals (1-row agg, bm25 shape)
+        "domain_mix_weights",    # corpus totals (1-row agg)
     }
     # ... and no UNPARTITIONED ORDERED window (single-task sort of the
     # whole input — the round-3 VERDICT pack_contiguous scale-killer)
@@ -88,16 +83,6 @@ def test_plan_invariants_and_regenerate_plans_md(spark, tmp_path):
     GLOBAL_WINDOW_OK = {
         "pack_contiguous",  # the per-shard oracle of pack_sharded
     }
-    # --- BM25 is ONE plan with the tokenize subtree executed once: the
-    # per-doc aggregate's exchange is shared between the corpus-stats
-    # branch and the scoring branch (round-4 VERDICT #4 replaced two
-    # driver-side collects that re-ran the tokenize pass). Exchange
-    # reuse is an AQE runtime decision, so assert on the EXECUTED plan.
-    bm = Q.q_bm25_topk(spark, SF)
-    bm.collect()
-    executed = bm._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in executed
-
     for qname, (qfn, _sql) in Q.registry().items():
         p = plan_of(qfn(spark, SF))
         if unpartitioned_win.search(p):

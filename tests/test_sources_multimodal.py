@@ -1,5 +1,5 @@
 """Sources registry, vectorized-UDF twins, and plan-shape assertions
-(pushdown / pruning / broadcast)."""
+(pushdown / pruning / partial aggregation)."""
 
 import os
 
@@ -102,13 +102,6 @@ def test_column_pruning_reaches_scan(spark):
     plan = _plan(q)
     # only the needed column is read
     assert "ReadSchema: struct<l_returnflag:string>" in plan
-
-
-def test_broadcast_join_chosen_for_dims(spark):
-    from crba_etl_spark.queries import q_revenue_by_nation
-
-    plan = _plan(q_revenue_by_nation(spark, SF))
-    assert "BroadcastHashJoin" in plan
 
 
 def test_partial_aggregation_in_reduce(spark):
