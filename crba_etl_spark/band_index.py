@@ -20,10 +20,15 @@ swap as the data (``IceliteTable.commit*``'s ``aux_add`` →
   on (band_idx, band_hash), and nothing touches the corpus text again
   (plan-asserted in tests/test_band_index.py).
 
-Every engine epoch with an index, with or without labels, collects the
-batch's live ``(doc_id, text)`` once and computes its footprint on the
-driver — md5, MinHash, band hashes, Spark's murmur3 ``__bpart`` ids —
-and, with labels (:class:`DedupLabels`), the Jaccard verification of
+Every engine epoch with an index, with or without labels, writes its
+data first and then indexes what it wrote (:class:`EpochAux`, the apply
+body's hook between the data write and the commit): the epoch's live
+``(doc_id, text)`` comes to the driver as Arrow — read back with
+``pyarrow`` from the delta files the merge-on-read write just left on
+local disk, or, copy-on-write, taken from the batch the fold already
+holds — with no Spark job of its own. The driver computes the batch's
+footprint — md5, MinHash, band hashes, Spark's murmur3 ``__bpart`` ids
+— and, with labels (:class:`DedupLabels`), the Jaccard verification of
 its candidate pairs, bit-identical to the distributed operators
 (:meth:`LshBandIndex.rows_for`, ``text_dedup.jaccard_verify_pairs``),
 which the rebuild path and the queries keep using. The epoch's
@@ -58,12 +63,13 @@ import os
 import shutil
 import struct
 from collections import Counter, defaultdict
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from decimal import ROUND_HALF_UP, Decimal
 from itertools import groupby
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -82,6 +88,7 @@ from .operators.text_dedup import (
     _slot_key,
     minhash_signatures,
 )
+from .schema import DELETED_COL
 
 #: name of this artifact in the snapshot's aux section
 AUX_NAME = "lsh_bands"
@@ -132,6 +139,27 @@ def _write_parquet(table: pa.Table, dir_: str) -> None:
         compression="snappy",
         store_schema=False,
     )
+
+
+#: key column types whose Arrow cast to string equals Spark's (pinned in
+#: tests/test_driver_writes.py), so a driver-built ``doc_id`` is byte-equal
+#: to ``concat_ws("#", keys...)``; the band index refuses other key types
+DOC_ID_TYPES = (T.StringType, T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _check_doc_id_types(schema: T.StructType, key_cols: list[str]) -> None:
+    """Raise ``ValueError`` unless every key column has a type in
+    :data:`DOC_ID_TYPES`."""
+    bad = [
+        f"{k} {schema[k].dataType.simpleString()}"
+        for k in key_cols
+        if not isinstance(schema[k].dataType, DOC_ID_TYPES)
+    ]
+    if bad:
+        raise ValueError(
+            "the band index builds doc_id on the driver only from string and"
+            f" integer key columns; got {', '.join(bad)}"
+        )
 
 
 BAND_SCHEMA = T.StructType(
@@ -293,40 +321,54 @@ class LshBandIndex:
         """Band rows for a reduced batch's live rows as a distributed
         relation — one shingle→MinHash→band pass over the batch, O(batch)
         and independent of table size. The rebuild path writes these
-        for its corpus-sized input; :meth:`batch_bands` is the collected
+        for its corpus-sized input; :meth:`batch_bands` is the driver
         form every epoch writes."""
         sig = minhash_signatures(self._live_docs(batch))
         return _band_rows(sig, "doc_id").withColumn(
             "__epoch", F.lit(epoch).cast("long")
         )
 
-    def batch_bands(self, batch: DataFrame, epoch: int) -> "BatchBands":
-        """The batch's whole LSH footprint, computed on the driver from ONE
-        collect of its live ``(doc_id, text)`` (which also materializes a
-        persisted batch): per live document its text, md5(text), band
-        hashes, and each band hash's ``__bpart`` part id under this
-        epoch's writer K and every K the index files were written under.
-        Every value is bit-identical to the Spark operators' (md5,
-        :func:`_signatures`, band md5s, :func:`_murmur3` for ``pmod(hash(·),
-        K)``). The band write and the label delta both work from it.
-        Raises ``ValueError`` when a ``doc_id`` carries two texts (its
-        signature would mix them)."""
+    def doc_texts(self, rows: pa.Table) -> tuple[list[str], list[str]]:
+        """(doc_ids, texts) of the live rows with text among stored
+        ``rows`` (key columns, text, ``__deleted``) — the driver form of
+        :meth:`_live_docs`: a tombstone (``__deleted`` true or null) or a
+        null text is dropped, and ``doc_id`` is the key columns cast to
+        string by Arrow, nulls skipped and joined with ``#``, as
+        ``concat_ws`` builds it."""
+        if not rows.num_rows:
+            return [], []
+        live = rows.filter(
+            pc.and_(pc.invert(rows[DELETED_COL]), pc.is_valid(rows[self.text_col]))
+        )
+        keys = [
+            pc.cast(live[k], pa.string()).to_pylist() for k in self.table.key_cols()
+        ]
+        docs = ["#".join(v for v in vals if v is not None) for vals in zip(*keys)]
+        return docs, live[self.text_col].to_pylist()
+
+    def batch_bands(
+        self, spark: SparkSession, rows: pa.Table, epoch: int
+    ) -> "BatchBands":
+        """The batch's whole LSH footprint, computed on the driver from
+        its stored ``rows`` (see :meth:`doc_texts`): per live document
+        its text, md5(text), band hashes, and each band hash's
+        ``__bpart`` part id under this epoch's writer K and every K the
+        index files were written under. Every value is bit-identical to
+        the Spark operators' (md5, :func:`_signatures`, band md5s,
+        :func:`_murmur3` for ``pmod(hash(·), K)``). The band write and
+        the label delta both work from it. Raises ``ValueError`` when a
+        ``doc_id`` carries two texts (its signature would mix them)."""
         k = self.table.n_buckets()
         ks = sorted({k} | {p[0] for p in map(self._file_part, self.files()) if p})
-        arrow = self._live_docs(batch).toArrow()
         texts: dict[str, str] = {}
-        for doc, text in zip(
-            arrow.column("doc_id").to_pylist(), arrow.column("text").to_pylist()
-        ):
+        for doc, text in zip(*self.doc_texts(rows)):
             if texts.setdefault(doc, text) != text:
                 raise ValueError(
                     f"doc_id {doc!r} occurs with two texts in one batch;"
                     " a batch must hold one row per document"
                 )
         sig = _signatures(list(texts.values())).tolist()
-        out = BatchBands(
-            batch.sparkSession, epoch, k, texts, {}, {}, {kk: {} for kk in ks}
-        )
+        out = BatchBands(spark, epoch, k, texts, {}, {}, {kk: {} for kk in ks})
         r = ROWS_PER_BAND
         for (doc, text), s in zip(texts.items(), sig):
             out.md5[doc] = hashlib.md5(text.encode()).hexdigest()
@@ -355,7 +397,7 @@ class LshBandIndex:
         ``repartition(K, band_hash)``-ed, whose partition id is the
         identical murmur3 ``pmod(hash(·), K)`` as the ``__bpart`` value
         (the same alignment trick as icelite.bucket_expr), so the Spark
-        write emits one file per hit directory — or a collected
+        write emits one file per hit directory — or a driver-held
         :class:`BatchBands`, whose part ids were computed on the driver:
         its rows become one Arrow table in ``BAND_SCHEMA``'s types, and
         the driver writes one snappy file per hit directory with
@@ -785,8 +827,9 @@ class DedupLabels:
     rows whose label is new or changed, recorded in the snapshot aux
     section (same atomic CAS as the data and the band index); reads
     resolve the smallest label per node. Per-batch cost: the batch's
-    live ``(doc_id, text)`` is collected to the driver once
-    (:class:`BatchBands`), which hashes it and verifies its pairs; the
+    live ``(doc_id, text)`` reaches the driver once, as the Arrow rows
+    the epoch just stored (:class:`EpochAux`, :class:`BatchBands`),
+    and the driver hashes it and verifies its pairs; the
     corpus appears only in Spark passes filtered by driver id lists
     (one SQL IN-list each) — the band-file probe of the hit partitions
     (no re-shingling), a bucket-PRUNED text scan of the candidate
@@ -878,24 +921,16 @@ class DedupLabels:
             "int"
         )
 
-    def delta_for_epoch(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        epoch: int,
-        bands: BatchBands | None = None,
-    ) -> pa.Table:
-        """Label-delta rows (node, label, __epoch) this batch causes, as a
-        driver-held Arrow table in ``LABELS_SCHEMA``. Must run against the
-        PRE-commit snapshot (the index/labels as of the previous epoch —
-        the batch's own band rows join the snapshot only with this
-        epoch's commit). ``bands`` is the batch's collected footprint
-        when the caller already has it (the engine shares it with the
-        band write); otherwise it is collected here.
+    def delta_for_epoch(self, bands: BatchBands) -> pa.Table:
+        """Label-delta rows (node, label, __epoch) the batch whose
+        footprint is ``bands`` (:meth:`LshBandIndex.batch_bands`, shared
+        with the band write) causes, as a driver-held Arrow table in
+        ``LABELS_SCHEMA``. Must run against the PRE-commit snapshot (the
+        index/labels as of the previous epoch — the batch's own band rows
+        join the snapshot only with this epoch's commit).
 
         One path, whatever the batch size, on the class's premise that
-        the batch fits on the driver. Spark collects the batch
-        (:meth:`LshBandIndex.batch_bands`) and runs the corpus-side
+        the batch fits on the driver. Spark runs only the corpus-side
         reads: the index probe (:meth:`LshBandIndex.probe`, only when the
         index has files), the stored text of candidate partners outside
         the batch (only when there are any) and the labels probes
@@ -919,7 +954,7 @@ class DedupLabels:
         - the union-find fold (``graph._merge_driver``)."""
         from .operators.graph import _merge_driver
 
-        bb = bands if bands is not None else self.index.batch_bands(batch, epoch)
+        bb, spark = bands, bands.spark
         # exact-dup collapse: the min doc_id of each distinct text
         rep_of: dict[str, str] = {}
         for doc in sorted(bb.md5):
@@ -973,7 +1008,9 @@ class DedupLabels:
                 (r["node"], mapping[r["label"]])
                 for r in labels.filter(_in_list("label", remapped)).collect()
             ]
-        return _arrow_table(LABELS_SCHEMA, [(n, l, epoch) for n, l in changed + local])
+        return _arrow_table(
+            LABELS_SCHEMA, [(n, l, bb.epoch) for n, l in changed + local]
+        )
 
     def _verify(
         self,
@@ -1051,49 +1088,67 @@ class DedupLabels:
         return self.table.set_aux(LABELS_AUX, files, base_files=base)
 
 
-def write_epoch_aux(
-    spark: SparkSession,
-    index: LshBandIndex,
-    labels: "DedupLabels | None",
-    batch: DataFrame,
-    epoch: int,
-) -> dict:
-    """Write one epoch's aux artifacts — the band rows and, with
-    ``labels``, the label delta — and return the ``aux_add`` entries the
-    epoch's data commit records. The batch is collected once
-    (:class:`BatchBands`), with or without ``labels``, and both artifacts
-    are written from the driver with ``pyarrow``, running no Spark job.
-    Files hit disk BEFORE the commit that references them: a failed
-    commit leaves only an orphan dir, which ``expire_snapshots`` sweeps.
-    The label delta is computed against the pre-commit snapshot (index
-    and labels as of the previous epoch)."""
-    import uuid
+@dataclass
+class EpochAux:
+    """The apply body's aux hook for one epoch (``operators/merge.py``):
+    called once, after the data write and before the commit, with the
+    epoch's stored rows in :attr:`columns` (see
+    :meth:`LshBandIndex.doc_texts`) — read back with ``pyarrow`` from the
+    delta files a merge-on-read write just left, or taken from the batch
+    a copy-on-write fold holds. It writes the epoch's aux artifacts —
+    the band rows and, with ``labels``, the label delta — from the
+    driver with ``pyarrow``, running no Spark job, and returns the
+    ``aux_add`` entries the epoch's data commit records. Files hit disk
+    BEFORE the commit that references them: a failed commit leaves only
+    orphan dirs, which ``expire_snapshots`` sweeps. The label delta is
+    computed against the pre-commit snapshot (index and labels as of the
+    previous epoch). Construction checks the table's key types
+    (:data:`DOC_ID_TYPES`), so a key the driver cannot turn into Spark's
+    ``doc_id`` fails before any write."""
 
-    # unique per attempt: a deterministic tag could collide with a
-    # COMMITTED dir on raced redelivery and rmtree files the snapshot
-    # references; an abandoned attempt's dir is just an unreferenced orphan
-    tag = f"e{epoch:06d}-{uuid.uuid4().hex[:8]}"
-    # the batch's bands are collected once and feed both the band write
-    # and the label delta
-    bands = index.batch_bands(batch, epoch)
-    # config rides the aux entry (first write wins) so a later maintenance
-    # run — possibly a CLI engine constructed with defaults — rebuilds with
-    # the parameters the artifact was BUILT with; rows_add (the driver's
-    # own count) feeds the stale-fraction maintenance trigger
-    aux = {
-        AUX_NAME: {
-            "files": index.write_epoch(bands, tag),
-            "config": {"text_col": index.text_col},
-            "rows_add": bands.n_rows(),
+    spark: SparkSession
+    index: LshBandIndex
+    labels: "DedupLabels | None"
+    epoch: int
+    #: the stored columns the hook reads: keys, text, ``__deleted``
+    columns: list[str] = field(init=False)
+
+    def __post_init__(self):
+        table = self.index.table
+        keys = table.key_cols()
+        _check_doc_id_types(table.schema(), keys)
+        self.columns = [*keys, self.index.text_col, DELETED_COL]
+
+    def __call__(self, rows: pa.Table) -> dict:
+        import uuid
+
+        index, labels = self.index, self.labels
+        # unique per attempt: a deterministic tag could collide with a
+        # COMMITTED dir on raced redelivery and rmtree files the snapshot
+        # references; an abandoned attempt's dir is just an unreferenced orphan
+        tag = f"e{self.epoch:06d}-{uuid.uuid4().hex[:8]}"
+        # one footprint feeds both the band write and the label delta
+        bands = index.batch_bands(self.spark, rows, self.epoch)
+        # config rides the aux entry (first write wins) so a later maintenance
+        # run — possibly a CLI engine constructed with defaults — rebuilds with
+        # the parameters the artifact was BUILT with; rows_add (the driver's
+        # own count) feeds the stale-fraction maintenance trigger
+        aux = {
+            AUX_NAME: {
+                "files": index.write_epoch(bands, tag),
+                "config": {"text_col": index.text_col},
+                "rows_add": bands.n_rows(),
+            }
         }
-    }
-    if labels is not None:
-        delta = labels.delta_for_epoch(spark, batch, epoch, bands=bands)
-        aux[LABELS_AUX] = {
-            "files": labels.write_epoch(delta, tag),
-            "config": {"threshold": labels.threshold, "max_bucket": labels.max_bucket},
-        }
-    return aux
+        if labels is not None:
+            aux[LABELS_AUX] = {
+                "files": labels.write_epoch(labels.delta_for_epoch(bands), tag),
+                "config": {
+                    "threshold": labels.threshold,
+                    "max_bucket": labels.max_bucket,
+                },
+            }
+        return aux
 
 
 def ingest_documents(
@@ -1123,6 +1178,7 @@ def ingest_documents(
     from .operators.merge import apply_delta_epoch
 
     if table is None:
+        _check_doc_id_types(docs.schema, [id_col])
         payload = T.StructType(
             [f for f in docs.schema.fields if f.name in (id_col, text_col)]
         )
@@ -1137,7 +1193,7 @@ def ingest_documents(
         {"op": F.lit("U"), "lsn": F.lit(epoch).cast("long")}
     )
     labels = DedupLabels(table, index, max_bucket=max_bucket) if dedup_labels else None
-    aux_add = write_epoch_aux(spark, index, labels, batch, epoch)
-    apply_delta_epoch(spark, table, batch, epoch=epoch, aux_add=aux_add)
+    aux = EpochAux(spark, index, labels, epoch)
+    apply_delta_epoch(spark, table, batch, epoch=epoch, aux=aux)
     release_caches()
     return table, index

@@ -146,11 +146,13 @@ class CDCEngine:
         written alongside the delta files and recorded in the SAME
         snapshot commit, so incremental near-dup candidate generation
         against the ingested corpus reads only the index — O(batch) per
-        batch, independent of corpus size. Costs one collect of the
-        batch's live texts per epoch: the band rows are computed and
-        written on the driver (band_index.write_epoch_aux), so, as with
-        ``dedup_labels``, a batch too big for the driver is sliced by
-        epoch.
+        batch, independent of corpus size. Costs no Spark job of its
+        own: after the data write, the epoch's live texts reach the
+        driver as Arrow — read back with pyarrow from the delta files
+        just written (MOR), or from the batch the fold holds (COW) — and
+        the band rows are computed and written there
+        (band_index.EpochAux), so, as with ``dedup_labels``, a batch
+        too big for the driver is sliced by epoch.
 
         ``dedup_labels=True`` (implies ``lsh_index``) additionally folds
         each batch into the persisted near-dup GROUP labeling
@@ -158,7 +160,7 @@ class CDCEngine:
         verify → driver-side union-find fold — the complete dedup
         pipeline inside the exactly-once commit loop, O(changed) label
         rows written per epoch. The epoch's keys and candidate pairs are
-        collected to the driver (operators/graph.py); a batch too big
+        held on the driver (operators/graph.py); a batch too big
         for it is sliced by epoch — smaller epochs, or
         ``max_files_per_trigger`` slices in the streaming tail.
 
@@ -306,46 +308,38 @@ class CDCEngine:
             if (self.quarantine == "eager" or self.mode == "cow")
             else None
         )
-        aux_add = None
-        persisted = None
+        aux = None
         if self.lsh_index is not None:
-            from .band_index import write_epoch_aux
+            from .band_index import EpochAux
 
-            # the batch feeds two consumers (aux artifacts + apply), so
-            # pin it once instead of recomputing the reduce shuffle
-            persisted = reduced = reduced.persist()
-            aux_add = write_epoch_aux(
-                self.spark, self.lsh_index, self.dedup_labels, reduced, epoch
+            # indexes the epoch's stored rows after the data write, before
+            # the commit; the batch itself is evaluated once, by the write
+            aux = EpochAux(self.spark, self.lsh_index, self.dedup_labels, epoch)
+        if self.mode == "mor":
+            stats = apply_delta_epoch(
+                self.spark,
+                self.table,
+                reduced,
+                epoch,
+                quarantine_dir=eager_dir,
+                pre_partitioned=True,
+                slice_marker=slice_marker,
+                mark_epoch=mark_epoch,
+                slice_files=slice_files,
+                aux=aux,
             )
-        try:
-            if self.mode == "mor":
-                stats = apply_delta_epoch(
-                    self.spark,
-                    self.table,
-                    reduced,
-                    epoch,
-                    quarantine_dir=eager_dir,
-                    pre_partitioned=True,
-                    slice_marker=slice_marker,
-                    mark_epoch=mark_epoch,
-                    slice_files=slice_files,
-                    aux_add=aux_add,
-                )
-            else:
-                stats = merge_epoch(
-                    self.spark,
-                    self.table,
-                    reduced,
-                    epoch,
-                    quarantine_dir=eager_dir,
-                    slice_marker=slice_marker,
-                    mark_epoch=mark_epoch,
-                    slice_files=slice_files,
-                    aux_add=aux_add,
-                )
-        finally:
-            if persisted is not None:
-                persisted.unpersist()
+        else:
+            stats = merge_epoch(
+                self.spark,
+                self.table,
+                reduced,
+                epoch,
+                quarantine_dir=eager_dir,
+                slice_marker=slice_marker,
+                mark_epoch=mark_epoch,
+                slice_files=slice_files,
+                aux=aux,
+            )
         if not stats.get("skipped"):
             stats["events_in"] = int(obs.get["events_in"])
             if slice_marker is not None:

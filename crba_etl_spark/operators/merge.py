@@ -26,13 +26,24 @@ Row counts ride the write job via ``Observation``. The stale audit is
 one column-pruned scan (key + ``__lsn``) of the affected buckets joined
 with the batch; each applied unit (epoch or streaming slice) writes its
 own quarantine directory.
+
+An ``aux`` hook (``band_index.EpochAux``) runs once per apply, after the
+data write and before the commit, on the epoch's stored rows as Arrow:
+merge-on-read reads back the delta files it just wrote with ``pyarrow``
+(no Spark job); copy-on-write takes them from its persisted batch,
+because its written files also hold the buckets' other stored rows. The
+hook writes the epoch's aux artifacts and returns the ``aux_add`` the
+commit records with the data.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from typing import TYPE_CHECKING
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from ..icelite import (
@@ -46,6 +57,9 @@ from ..metrics import unit_name
 from ..schema import DELETED_COL, EPOCH_COL, LSN_COL
 from .dedup import reduce_latest
 from .evolve import align_to, merge_schemas
+
+if TYPE_CHECKING:
+    from ..band_index import EpochAux
 
 #: change-envelope columns that are not part of the stored payload
 ENVELOPE_COLS = {"op", "lsn", "epoch", "ingest_ts"}
@@ -67,6 +81,7 @@ def merge_epoch(
     mark_epoch: bool = True,
     slice_files: list[str] | None = None,
     aux_add: dict[str, list[str]] | None = None,
+    aux: "EpochAux | None" = None,
 ) -> dict:
     """Copy-on-write apply: fold one reduced batch (one row per key) into
     the buckets it hits, rewrite them and commit atomically with the
@@ -77,6 +92,9 @@ def merge_epoch(
     ``mark_epoch=False`` additionally withholds the epoch id from
     ``committed_epochs`` so a later batch replay won't skip the rest.
 
+    ``aux_add`` is recorded in the commit as given; ``aux`` (see the
+    module notes) computes it from the written epoch instead.
+
     Concurrency: the fold reads a PINNED base snapshot version and the
     commit validates the affected buckets against it (see
     ``IceliteTable.commit``) — if a concurrent writer touched one since,
@@ -85,7 +103,7 @@ def merge_epoch(
     retry), so a concurrent commit's rows are never silently dropped."""
     return _apply(
         spark, table, reduced, epoch, quarantine_dir, slice_marker,
-        mark_epoch, slice_files, aux_add, cow=True, repartition=False,
+        mark_epoch, slice_files, aux_add, aux, cow=True, repartition=False,
     )
 
 
@@ -100,6 +118,7 @@ def apply_delta_epoch(
     mark_epoch: bool = True,
     slice_files: list[str] | None = None,
     aux_add: dict[str, list[str]] | None = None,
+    aux: "EpochAux | None" = None,
 ) -> dict:
     """Merge-on-read apply (the sustained-throughput path): write the
     reduced batch as per-bucket **delta files** and commit — nothing in
@@ -111,7 +130,8 @@ def apply_delta_epoch(
     for the key) are additionally audited eagerly with a column-pruned
     scan of the affected buckets (reads only key + __lsn columns).
 
-    ``slice_marker``/``mark_epoch``: see :func:`merge_epoch`.
+    ``slice_marker``/``mark_epoch``/``aux_add``/``aux``: see
+    :func:`merge_epoch`.
 
     Concurrency: the commit validates that the table's BUCKET COUNT is
     still the one the delta files were written under — a rebucket
@@ -123,7 +143,7 @@ def apply_delta_epoch(
     """
     return _apply(
         spark, table, reduced, epoch, quarantine_dir, slice_marker,
-        mark_epoch, slice_files, aux_add, cow=False,
+        mark_epoch, slice_files, aux_add, aux, cow=False,
         repartition=not pre_partitioned,
     )
 
@@ -138,6 +158,7 @@ def _apply(
     mark_epoch: bool,
     slice_files: list[str] | None,
     aux_add: dict | None,
+    aux: "EpochAux | None",
     cow: bool,
     repartition: bool,
 ) -> dict:
@@ -145,7 +166,9 @@ def _apply(
     against the pinned base, write them (MOR) or their fold into the
     affected buckets (COW), audit stale events, commit. A COW attempt
     re-merges after any CommitConflict; a MOR attempt only after a
-    rebucket (its deltas are stale only under a new bucket function)."""
+    rebucket (its deltas are stale only under a new bucket function).
+    The ``aux`` hook runs on the first attempt's write; a retry commits
+    the ``aux_add`` it returned."""
     snap = table.snapshot()
     if skip := table.skip_if_committed(epoch, slice_marker, mark_epoch, snap):
         return skip
@@ -216,6 +239,15 @@ def _apply(
             m = obs.get
             if not cow:
                 affected, keys = set(new_files), int(m["rows"])
+            if aux is not None:
+                # COW's files also hold the buckets' other rows: take the
+                # batch's from its cache instead
+                written = (
+                    rows.select(*aux.columns).toArrow()
+                    if cow
+                    else _written_rows(table.root, new_files, aux.columns)
+                )
+                aux_add, aux = aux(written), None  # once: a retry reuses it
             # COW knows its stale count from the fold; MOR only by auditing
             stale = keys - int(m["fresh"]) if cow else 0
             if quarantine_dir is not None and (stale or not cow):
@@ -268,6 +300,18 @@ def _apply(
     finally:
         for df in held:
             df.unpersist()
+
+
+def _written_rows(
+    root: str, new_files: dict[int, list[str]], columns: list[str]
+) -> pa.Table:
+    """``columns`` of the rows in a write's files, read with pyarrow."""
+    parts = [
+        pq.ParquetFile(os.path.join(root, f)).read(columns=columns)
+        for files in new_files.values()
+        for f in files
+    ]
+    return pa.concat_tables(parts) if parts else pa.table({c: [] for c in columns})
 
 
 def _audit(

@@ -53,3 +53,16 @@ def make_events(spark, rows, with_tool=True):
         data.append(tuple(rec))
     schema = CHANGE_EVENT if with_tool else CHANGE_EVENT_V0
     return spark.createDataFrame(data, schema)
+
+
+def stored_rows(index, batch):
+    """A change batch's rows as the apply body hands them to the band
+    index's epoch hook (``band_index.EpochAux.columns``): key columns,
+    text and ``__deleted``, as Arrow."""
+    from pyspark.sql import functions as F
+
+    return batch.select(
+        *index.table.key_cols(),
+        index.text_col,
+        (F.col("op") == "D").alias("__deleted"),
+    ).toArrow()

@@ -17,7 +17,7 @@ Contract under test:
 import os
 import re
 
-from conftest import make_events
+from conftest import make_events, stored_rows
 
 from pyspark.sql import functions as F
 
@@ -531,10 +531,8 @@ def test_apply_s_covers_label_work(spark, tmpdir_, monkeypatch):
 
 def test_delta_rejects_a_doc_id_with_two_texts(spark, tmpdir_):
     """A batch is one row per document: a doc_id carrying two texts would
-    get a signature mixing both, so the collected batch refuses it."""
+    get a signature mixing both, so the batch's footprint refuses it."""
     import pytest
-
-    from crba_etl_spark.band_index import DedupLabels
 
     docs = spark.createDataFrame(
         [("d1", "alpha bravo charlie delta"), ("d1", "kilo lima mike november")],
@@ -543,7 +541,7 @@ def test_delta_rejects_a_doc_id_with_two_texts(spark, tmpdir_):
     table, index = ingest_documents(spark, os.path.join(tmpdir_, "t"), docs.limit(0))
     batch = docs.withColumns({"op": F.lit("U"), "lsn": F.lit(1).cast("long")})
     with pytest.raises(ValueError, match="d1"):
-        DedupLabels(table, index).delta_for_epoch(spark, batch, 1)
+        index.batch_bands(spark, stored_rows(index, batch), 1)
 
 
 def _template_docs(spark):
@@ -619,7 +617,7 @@ def test_indexed_buckets_equal_spark_reference(spark, tmpdir_):
         spark, os.path.join(tmpdir_, "t"), existing, n_buckets=4
     )
     batch = new.withColumns({"op": F.lit("U"), "lsn": F.lit(1).cast("long")})
-    bb = index.batch_bands(batch, 1)
+    bb = index.batch_bands(spark, stored_rows(index, batch), 1)
     bkeys = {f"{b}:{h}" for hs in bb.bands.values() for b, h in enumerate(hs)}
     stored = {
         r[0]: r[1]
@@ -664,9 +662,10 @@ def test_dedup_epochs_equal_exact_closure_within_job_budget(spark, tmpdir_):
     the monotone model — every pair at or above the threshold between a
     batch document and the batch or the table as of its epoch, grouped
     by union-find — and each applied epoch stays within its Spark job
-    budget: 4 from empty (the band and label files are written from
-    the driver, by no job), 12 and 11 for the epochs that probe the
-    index and fold into stored labels."""
+    budget: 2 from empty (the data write; the epoch's texts are read
+    back from its delta files and the band and label files written from
+    the driver, by no job), 10 and 9 for the epochs that probe the index
+    and fold into stored labels."""
     from crba_etl_spark.band_index import DedupLabels
     from crba_etl_spark.operators.graph import _driver_union_find
 
@@ -735,6 +734,6 @@ def test_dedup_epochs_equal_exact_closure_within_job_budget(spark, tmpdir_):
     got, jobs = run(reprobe=8)
     assert got == want
     assert want["b#0"] == want["d#0"] != want["a#0"]  # the false positives split
-    assert len(jobs) == 3 and all(n <= b for n, b in zip(jobs, [4, 12, 11])), jobs
+    assert len(jobs) == 3 and all(n <= b for n, b in zip(jobs, [2, 10, 9])), jobs
     # the re-probe is load-bearing on this corpus
     assert run(reprobe=0)[0] != want

@@ -8,7 +8,7 @@ retries."""
 
 import os
 
-from conftest import make_events
+from conftest import make_events, stored_rows
 
 from pyspark.sql import functions as F
 
@@ -182,7 +182,8 @@ def test_rebucket_between_label_fold_and_commit(spark, tmpdir_):
     index, labels = eng.lsh_index, eng.dedup_labels
     band_files = index.write_epoch(index.rows_for(reduced, 1), "e000001-race")
     label_files = labels.write_epoch(
-        labels.delta_for_epoch(spark, reduced, 1), "e000001-race"
+        labels.delta_for_epoch(index.batch_bands(spark, stored_rows(index, reduced), 1)),
+        "e000001-race",
     )
     table.rebucket(spark, 5)
     stats = apply_delta_epoch(

@@ -5,6 +5,7 @@ becomes one SQL IN-list filter."""
 
 import os
 
+from conftest import stored_rows
 from pyspark.sql import functions as F
 
 from crba_etl_spark.band_index import (
@@ -49,7 +50,7 @@ def test_batch_bands_equal_spark_reference(spark, tmpdir_):
     table, index = ingest_documents(
         spark, os.path.join(tmpdir_, "t"), docs.limit(0), n_buckets=8
     )
-    bb = index.batch_bands(_batch(docs), 1)
+    bb = index.batch_bands(spark, stored_rows(index, _batch(docs)), 1)
 
     assert bb.texts == {r["doc_id"]: r["text"] for r in docs.collect()}
     assert bb.md5 == {
@@ -107,7 +108,7 @@ def test_driver_verify_equals_jaccard_verify_pairs(spark, tmpdir_):
     table, index = ingest_documents(
         spark, os.path.join(tmpdir_, "t"), existing, n_buckets=4
     )
-    bb = index.batch_bands(_batch(new), 1)
+    bb = index.batch_bands(spark, stored_rows(index, _batch(new)), 1)
     ids = sorted(r[0] for r in docs.select("doc_id").collect())
     pairs = {
         (a, b) for i, a in enumerate(ids) for b in ids[i + 1 :]
@@ -136,17 +137,14 @@ def test_driver_verify_equals_jaccard_verify_pairs(spark, tmpdir_):
 
 
 def test_delta_from_empty_runs_no_spark_job(spark, tmpdir_):
-    """With the batch's footprint collected, a label delta against an
+    """With the batch's footprint on the driver, a label delta against an
     empty index and labeling is driver work only: buckets, verification
     and the union-find run no Spark job."""
     docs = _template_docs(spark)
     table, index = ingest_documents(spark, os.path.join(tmpdir_, "t"), docs.limit(0))
-    batch = _batch(docs)
-    bb = index.batch_bands(batch, 1)
+    bb = index.batch_bands(spark, stored_rows(index, _batch(docs)), 1)
     labels = DedupLabels(table, index)
-    delta, jobs = _count_jobs(
-        spark, lambda: labels.delta_for_epoch(spark, batch, 1, bands=bb)
-    )
+    delta, jobs = _count_jobs(spark, lambda: labels.delta_for_epoch(bb))
     assert jobs == 0
     rows = delta.to_pylist()
     assert {r["node"] for r in rows} == set(bb.texts)

@@ -1,15 +1,19 @@
-"""The dedup epoch's driver-side writes (band_index.py): the band rows and
-the label delta the driver already holds are written with pyarrow, and
-the files equal what the Spark writes of the same rows produce — same
-rows, same ``__bpart`` directories, same parquet types — so the readers
-(probe, candidates, the labels read) cannot tell them apart."""
+"""The dedup epoch's driver side of the write (band_index.py): the epoch's
+stored rows reach the driver as Arrow after the data write — read back
+from the merge-on-read delta files, or taken from the copy-on-write
+batch — and equal the Spark relation of the batch's live documents;
+the band rows and the label delta the driver then holds are written with
+pyarrow, and the files equal what the Spark writes of the same rows
+produce — same rows, same ``__bpart`` directories, same parquet types —
+so the readers (probe, candidates, the labels read) cannot tell them
+apart."""
 
 import os
 from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
-from conftest import make_events
+from conftest import make_events, stored_rows
 from pyspark.sql import functions as F
 
 from crba_etl_spark.band_index import (
@@ -18,12 +22,15 @@ from crba_etl_spark.band_index import (
     LABELS_AUX,
     LABELS_SCHEMA,
     DedupLabels,
+    EpochAux,
     _parquet_rows,
     ingest_documents,
-    write_epoch_aux,
 )
 from crba_etl_spark.engine import CDCEngine
+from crba_etl_spark.icelite import IceliteTable
+from crba_etl_spark.operators.dedup import reduce_batch
 from crba_etl_spark.operators.graph import _local_frame
+from crba_etl_spark.operators.text_dedup import N_BANDS
 
 from test_band_index import _count_jobs, _template_docs
 from test_driver_footprint import _batch, _docs
@@ -51,7 +58,7 @@ def test_driver_band_files_equal_spark_write(spark, tmpdir_):
         spark, os.path.join(tmpdir_, "t"), docs.limit(0), n_buckets=4
     )
     batch = _batch(docs)
-    drv = index.write_epoch(index.batch_bands(batch, 1), "drv")
+    drv = index.write_epoch(index.batch_bands(spark, stored_rows(index, batch), 1), "drv")
     spk = index.write_epoch(index.rows_for(batch, 1), "spk")
 
     want = _rows(spark, BAND_SCHEMA, table.root, spk)
@@ -78,9 +85,9 @@ def test_driver_label_delta_equals_local_relation_write(spark, tmpdir_):
     """The label delta is an Arrow table in LABELS_SCHEMA; written from
     the driver it is one file equal to the Spark write of the same rows
     as a one-partition LocalRelation. From an empty index, the whole
-    aux write runs one Spark job (the batch collect), with labels and
-    for an index alone, and the band entry's rows_add equals its files'
-    footer row count; the index-only band files hold the rows and
+    aux write from the batch's Arrow rows runs no Spark job, with labels
+    and for an index alone, and the band entry's rows_add equals its
+    files' footer row count; the index-only band files hold the rows and
     __bpart directories of the Spark write of rows_for."""
     docs = _docs(spark)
     table, index = ingest_documents(
@@ -88,23 +95,24 @@ def test_driver_label_delta_equals_local_relation_write(spark, tmpdir_):
     )
     labels = DedupLabels(table, index)
     batch = _batch(docs)
-    delta = labels.delta_for_epoch(spark, batch, 1)
+    rows = stored_rows(index, batch)
+    delta = labels.delta_for_epoch(index.batch_bands(spark, rows, 1))
     assert delta.schema.names == LABELS_SCHEMA.names
     assert [str(t) for t in delta.schema.types] == ["string", "string", "int64"]
     drv = labels.write_epoch(delta, "drv")
-    rows = [tuple(r.values()) for r in delta.to_pylist()]
     spk = labels.write_epoch(
-        _local_frame(spark, LABELS_SCHEMA, rows).coalesce(1), "spk"
+        _local_frame(
+            spark, LABELS_SCHEMA, [tuple(r.values()) for r in delta.to_pylist()]
+        ).coalesce(1),
+        "spk",
     )
     assert len(drv) == len(spk) == 1
     want = _rows(spark, LABELS_SCHEMA, table.root, spk)
     assert want and _rows(spark, LABELS_SCHEMA, table.root, drv) == want
 
     for lab in (labels, None):
-        aux, jobs = _count_jobs(
-            spark, lambda: write_epoch_aux(spark, index, lab, batch, 1)
-        )
-        assert jobs == 1
+        aux, jobs = _count_jobs(spark, lambda: EpochAux(spark, index, lab, 1)(rows))
+        assert jobs == 0
         band = aux[AUX_NAME]
         assert band["rows_add"] == _parquet_rows(table.root, band["files"]) > 0
         if lab is not None:
@@ -143,7 +151,7 @@ def test_probe_and_candidates_over_mixed_writers(spark, tmpdir_):
     names = {os.path.basename(p) for p in mixed.files()}
     assert "part-00000.snappy.parquet" in names and len(names) > 1
 
-    bb = mixed.batch_bands(_batch(new), 2)
+    bb = mixed.batch_bands(spark, stored_rows(mixed, _batch(new)), 2)
     bkeys = {f"{b}:{h}" for hs in bb.bands.values() for b, h in enumerate(hs)}
     bucket_of = DedupLabels(mixed_table, mixed)._bucket_of
     for cap in (None, 2):
@@ -160,12 +168,11 @@ def test_probe_and_candidates_over_mixed_writers(spark, tmpdir_):
 def test_crash_between_aux_write_and_commit_leaves_a_swept_orphan(
     spark, tmpdir_, monkeypatch
 ):
-    """A failure after the driver wrote an epoch's band and label files
-    but before the data commit leaves the snapshot as it was; the files
-    sit in unreferenced per-attempt dirs, which expire_snapshots removes
-    while the committed retry's files survive."""
-    import crba_etl_spark.engine as engine
-
+    """A failure after the epoch wrote its data files and the driver its
+    band and label files, but before the commit, leaves the snapshot as
+    it was; the files sit in unreferenced dirs — the epoch's data dir and
+    per-attempt aux dirs — which expire_snapshots removes, and the
+    retried epoch commits files that a later sweep leaves alone."""
     root = os.path.join(tmpdir_, "t")
     eng = CDCEngine(spark, root, n_buckets=2, dedup_labels=True)
     events = make_events(
@@ -180,25 +187,189 @@ def test_crash_between_aux_write_and_commit_leaves_a_swept_orphan(
     def crash(*_a, **_k):
         raise RuntimeError("crash before commit")
 
-    monkeypatch.setattr(engine, "apply_delta_epoch", crash)
+    monkeypatch.setattr(IceliteTable, "commit_deltas", crash)
     with pytest.raises(RuntimeError, match="crash before commit"):
         eng.apply_epoch(events, 0)
     monkeypatch.undo()
     assert eng.table.snapshot() == before
-    orphans = {
+    data = {f"data/{d}" for d in os.listdir(os.path.join(root, "data"))}
+    aux = {
         f"index/{name}/{d}"
         for name in ("lsh", "dedup_labels")
         for d in os.listdir(os.path.join(root, "index", name))
     }
-    assert {o.split("/")[1] for o in orphans} == {"lsh", "dedup_labels"}
+    assert len(data) == 1 and {o.split("/")[1] for o in aux} == {"lsh", "dedup_labels"}
+    res = eng.table.expire_snapshots(keep_last=1, aux_min_age_s=0.0)
+    removed = {
+        p if p.startswith("index/") else f"data/{p}" for p in res["removed_data_dirs"]
+    }
+    assert removed == data | aux
+    assert not any(os.path.exists(os.path.join(root, o)) for o in data | aux)
 
     eng.apply_epoch(events, 0)
-    aux = eng.table.aux()
-    committed = aux[AUX_NAME]["files"] + aux[LABELS_AUX]["files"]
-    assert committed and not any(p.startswith(tuple(orphans)) for p in committed)
-    res = eng.table.expire_snapshots(keep_last=1, aux_min_age_s=0.0)
-    assert orphans <= set(res["removed_data_dirs"])
-    assert not any(os.path.exists(os.path.join(root, o)) for o in orphans)
+    aux_ent = eng.table.aux()
+    committed = aux_ent[AUX_NAME]["files"] + aux_ent[LABELS_AUX]["files"]
+    assert committed and not any(p.startswith(tuple(aux)) for p in committed)
+    assert eng.table.expire_snapshots(keep_last=1, aux_min_age_s=0.0)[
+        "removed_data_dirs"
+    ] == []
     assert all(os.path.exists(os.path.join(root, p)) for p in committed)
     lab = {r["node"]: r["label"] for r in eng.dedup_labels.read(spark).collect()}
     assert lab == {"a#0": "a#0", "b#0": "a#0"}
+
+
+def _capture_aux(monkeypatch):
+    """Record the Arrow rows each EpochAux call receives."""
+    seen = []
+    real = EpochAux.__call__
+
+    def spy(self, rows):
+        seen.append(rows)
+        return real(self, rows)
+
+    monkeypatch.setattr(EpochAux, "__call__", spy)
+    return seen
+
+
+def _docs_of(index, rows):
+    return Counter(zip(*index.doc_texts(rows)))
+
+
+def _spark_docs(index, batch):
+    ref = index._live_docs(batch).toArrow()
+    return Counter(zip(ref["doc_id"].to_pylist(), ref["text"].to_pylist()))
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_epoch_rows_equal_spark_live_docs(spark, tmpdir_, monkeypatch, mode):
+    """The (doc_id, text) the aux hook sees — read back from the MOR delta
+    files, or taken from the COW batch — equal Spark's _live_docs of the
+    reduced batch as multisets: across a tombstone, a null text, an
+    update, an integer key column and a column added mid-stream."""
+    seen = _capture_aux(monkeypatch)
+    eng = CDCEngine(
+        spark, os.path.join(tmpdir_, mode), n_buckets=2, mode=mode, dedup_labels=True
+    )
+    epochs = [
+        make_events(
+            spark,
+            [
+                (1, 0, "I", "a", 0, "user", "alpha bravo charlie delta", None, 0, 0),
+                (2, 0, "I", "a", 1, "user", "echo foxtrot golf hotel", None, 1, 1),
+                (3, 0, "I", "b", 7, "user", None, None, 2, 2),
+                (4, 0, "I", "c", -3, "user", "india juliet kilo lima", None, 3, 3),
+            ],
+            with_tool=False,
+        ),
+        make_events(
+            spark,
+            [
+                (5, 1, "D", "a", 1, "user", None, None, 4, 4),
+                (6, 1, "U", "c", -3, "user", "india juliet kilo lima!", "t", 5, 5),
+                (7, 1, "I", "d", 12, "tool", "mike november oscar", "t", 6, 6),
+                (8, 1, "I", "b", 7, "user", None, "t", 7, 7),
+                (9, 1, "I", "a", 0, "user", "alpha bravo charlie delta", None, 0, 0),
+            ],
+        ),
+    ]
+    live = [{"a#0", "a#1", "c#-3"}, {"a#0", "c#-3", "d#12"}]
+    for k, events in enumerate(epochs):
+        eng.apply_epoch(events, k)
+        want = _spark_docs(eng.lsh_index, reduce_batch(events))
+        assert {d for d, _t in want} == live[k]
+        assert len(seen) == k + 1 and _docs_of(eng.lsh_index, seen[k]) == want, k
+    assert "tool" in eng.table.schema().fieldNames()
+
+
+@pytest.mark.parametrize("key_type", ["tinyint", "smallint", "int", "bigint"])
+def test_integer_key_doc_ids_equal_concat_ws(spark, tmpdir_, monkeypatch, key_type):
+    """With an integer key column, the driver's doc_ids (Arrow's cast to
+    string) equal Spark's concat_ws of the same column, extremes and
+    negatives included."""
+    seen = _capture_aux(monkeypatch)
+    bits = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}[key_type]
+    ids = [0, 1, -1, 42, 2 ** (bits - 1) - 1, -(2 ** (bits - 1))]
+    docs = spark.createDataFrame(
+        [(i, f"document text number {j} about {i}") for j, i in enumerate(ids)],
+        f"doc_id {key_type}, text string",
+    )
+    _table, index = ingest_documents(
+        spark, os.path.join(tmpdir_, "t"), docs, dedup_labels=True
+    )
+    batch = docs.withColumns({"op": F.lit("U"), "lsn": F.lit(0).cast("long")})
+    want = _spark_docs(index, batch)
+    assert _docs_of(index, seen[0]) == want
+    assert {d for d, _t in want} == {str(i) for i in ids}
+
+
+def test_unpinned_key_type_fails_before_any_write(spark, tmpdir_):
+    """A key type whose Arrow string cast is not pinned to Spark's is
+    refused with ValueError before any data or aux file is written."""
+    docs = spark.createDataFrame([(1.5, "some text")], "doc_id double, text string")
+    root = os.path.join(tmpdir_, "new")
+    with pytest.raises(ValueError, match="doc_id double"):
+        ingest_documents(spark, root, docs)
+    assert not os.path.exists(root)
+
+    root = os.path.join(tmpdir_, "given")
+    table = IceliteTable.create(root, docs.schema, n_buckets=2, key_cols=["doc_id"])
+    with pytest.raises(ValueError, match="doc_id double"):
+        ingest_documents(spark, root, docs, table=table)
+    assert os.listdir(os.path.join(root, "data")) == []
+    assert not os.path.exists(os.path.join(root, "index"))
+    assert table.snapshot()["committed_epochs"] == []
+
+
+def test_cow_epoch_indexes_the_batch_not_its_buckets(spark, tmpdir_):
+    """A COW dedup epoch into a bucket that already holds rows writes
+    N_BANDS band rows per live batch document — never rows for the
+    bucket's other stored rows, which its rewritten files also hold —
+    and its labels equal the MOR engine's."""
+    shared = "the quick brown fox jumps over the lazy dog near the river bank"
+    epochs = [
+        [(1, 0, "I", "a", 0, "user", shared, None, 0, 0),
+         (2, 0, "I", "b", 0, "user", "an unrelated sentence about spark", None, 1, 1),
+         (3, 0, "I", "c", 0, "user", "yet another distinct text here", None, 2, 2)],
+        [(4, 1, "I", "d", 0, "user", shared + "!", None, 3, 3),
+         (5, 1, "U", "b", 0, "user", "an unrelated sentence about spark.", None, 4, 4),
+         (6, 1, "D", "c", 0, "user", None, None, 5, 5)],
+    ]
+    labels = {}
+    for mode in ("cow", "mor"):
+        eng = CDCEngine(
+            spark, os.path.join(tmpdir_, mode), n_buckets=1, mode=mode,
+            dedup_labels=True,
+        )
+        for k, rows in enumerate(epochs):
+            prior = set(eng.lsh_index.files())
+            eng.apply_epoch(make_events(spark, rows), k)
+            new = sorted(set(eng.lsh_index.files()) - prior)
+            live = sum(1 for r in rows if r[2] != "D")
+            assert _parquet_rows(eng.table.root, new) == N_BANDS * live, (mode, k)
+        labels[mode] = {
+            r["node"]: r["label"] for r in eng.dedup_labels.read(spark).collect()
+        }
+    assert labels["cow"] == labels["mor"]
+    assert labels["mor"]["d#0"] == labels["mor"]["a#0"] == "a#0"
+
+
+def test_dedup_epoch_leaves_no_persisted_rdd(spark, tmpdir_):
+    """A dedup epoch, in either mode, leaves no RDD persisted."""
+    jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()
+    before = set(jsc.getPersistentRDDs().keys())
+    for mode in ("mor", "cow"):
+        eng = CDCEngine(
+            spark, os.path.join(tmpdir_, mode), n_buckets=2, mode=mode,
+            dedup_labels=True,
+        )
+        for k in range(2):
+            eng.apply_epoch(
+                make_events(
+                    spark,
+                    [(k + 1, k, "I", f"c{k}", 0, "user", f"text number {k} here", None, k, k)],
+                ),
+                k,
+            )
+            assert set(jsc.getPersistentRDDs().keys()) == before, (mode, k)
+    assert not before

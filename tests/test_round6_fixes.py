@@ -17,6 +17,7 @@
 
 import os
 
+from conftest import stored_rows
 from pyspark.sql import functions as F, types as T
 
 from crba_etl_spark.band_index import (
@@ -251,16 +252,17 @@ def test_dedup_labels_capped_default_equals_exact(spark, tmpdir_):
         spark, os.path.join(tmpdir_, "t"), docs.limit(0)
     )
     thr = 0.95
+    bands = index.batch_bands(spark, stored_rows(index, batch), 1)
     exact = DedupLabels(table, index, threshold=thr, max_bucket=None)
     want = {
         (r["node"], r["label"])
-        for r in exact.delta_for_epoch(spark, batch, 1).select(["node", "label"]).to_pylist()
+        for r in exact.delta_for_epoch(bands).select(["node", "label"]).to_pylist()
     }
     release_caches()
     capped = DedupLabels(table, index, threshold=thr, max_bucket=2, reprobe=8)
     got = {
         (r["node"], r["label"])
-        for r in capped.delta_for_epoch(spark, batch, 1).select(["node", "label"]).to_pylist()
+        for r in capped.delta_for_epoch(bands).select(["node", "label"]).to_pylist()
     }
     release_caches()
     assert got == want
