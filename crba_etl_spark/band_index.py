@@ -65,6 +65,7 @@ import struct
 from collections import Counter, defaultdict
 from dataclasses import dataclass, field
 from decimal import ROUND_HALF_UP, Decimal
+from functools import cached_property
 from itertools import groupby
 
 import numpy as np
@@ -147,9 +148,11 @@ def _write_parquet(table: pa.Table, dir_: str) -> None:
 DOC_ID_TYPES = (T.StringType, T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
-def _check_doc_id_types(schema: T.StructType, key_cols: list[str]) -> None:
+def check_doc_id_types(schema: T.StructType, key_cols: list[str]) -> None:
     """Raise ``ValueError`` unless every key column has a type in
-    :data:`DOC_ID_TYPES`."""
+    :data:`DOC_ID_TYPES`. Key columns and their types never change after
+    a table is created, so one check before a table's first indexed
+    epoch covers them all."""
     bad = [
         f"{k} {schema[k].dataType.simpleString()}"
         for k in key_cols
@@ -301,6 +304,11 @@ class LshBandIndex:
         self.table = table
         self.text_col = text_col
 
+    @cached_property
+    def key_cols(self) -> list[str]:
+        """The table's key columns (fixed when the table is created)."""
+        return self.table.key_cols()
+
     # --- write path (engine side) -------------------------------------
 
     def _live(self, batch: DataFrame) -> DataFrame:
@@ -313,7 +321,7 @@ class LshBandIndex:
     def _live_docs(self, batch: DataFrame) -> DataFrame:
         """(doc_id, text) of :meth:`_live` rows."""
         return self._live(batch).select(
-            F.concat_ws("#", *self.table.key_cols()).alias("doc_id"),
+            F.concat_ws("#", *self.key_cols).alias("doc_id"),
             F.col(self.text_col).alias("text"),
         )
 
@@ -340,9 +348,7 @@ class LshBandIndex:
         live = rows.filter(
             pc.and_(pc.invert(rows[DELETED_COL]), pc.is_valid(rows[self.text_col]))
         )
-        keys = [
-            pc.cast(live[k], pa.string()).to_pylist() for k in self.table.key_cols()
-        ]
+        keys = [pc.cast(live[k], pa.string()).to_pylist() for k in self.key_cols]
         docs = ["#".join(v for v in vals if v is not None) for vals in zip(*keys)]
         return docs, live[self.text_col].to_pylist()
 
@@ -1102,9 +1108,11 @@ class EpochAux:
     BEFORE the commit that references them: a failed commit leaves only
     orphan dirs, which ``expire_snapshots`` sweeps. The label delta is
     computed against the pre-commit snapshot (index and labels as of the
-    previous epoch). Construction checks the table's key types
-    (:data:`DOC_ID_TYPES`), so a key the driver cannot turn into Spark's
-    ``doc_id`` fails before any write."""
+    previous epoch). The data is written before the hook runs, so a
+    hook that raises leaves the epoch's data dir an unreferenced orphan
+    too. The key types must be in :data:`DOC_ID_TYPES`; the engine and
+    :func:`ingest_documents` check them (:func:`check_doc_id_types`)
+    before any write."""
 
     spark: SparkSession
     index: LshBandIndex
@@ -1114,10 +1122,7 @@ class EpochAux:
     columns: list[str] = field(init=False)
 
     def __post_init__(self):
-        table = self.index.table
-        keys = table.key_cols()
-        _check_doc_id_types(table.schema(), keys)
-        self.columns = [*keys, self.index.text_col, DELETED_COL]
+        self.columns = [*self.index.key_cols, self.index.text_col, DELETED_COL]
 
     def __call__(self, rows: pa.Table) -> dict:
         import uuid
@@ -1178,13 +1183,15 @@ def ingest_documents(
     from .operators.merge import apply_delta_epoch
 
     if table is None:
-        _check_doc_id_types(docs.schema, [id_col])
+        check_doc_id_types(docs.schema, [id_col])
         payload = T.StructType(
             [f for f in docs.schema.fields if f.name in (id_col, text_col)]
         )
         table = IceliteTable.create(
             root, payload, n_buckets=n_buckets, key_cols=[id_col], overwrite=True
         )
+    else:
+        check_doc_id_types(table.schema(), table.key_cols())
     index = LshBandIndex(table, text_col=text_col)
     if epoch in table.committed_epochs():
         return table, index  # redelivered epoch: data AND aux already committed

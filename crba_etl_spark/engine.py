@@ -152,7 +152,12 @@ class CDCEngine:
         just written (MOR), or from the batch the fold holds (COW) — and
         the band rows are computed and written there
         (band_index.EpochAux), so, as with ``dedup_labels``, a batch
-        too big for the driver is sliced by epoch.
+        too big for the driver is sliced by epoch. The driver builds each
+        row's ``doc_id`` (key columns joined with ``#``) the way Spark's
+        ``concat_ws`` does only for string and integer key columns
+        (band_index.DOC_ID_TYPES): with ``lsh_index`` or ``dedup_labels``
+        on, construction raises ``ValueError`` for a table keyed by any
+        other type (date, timestamp, decimal, double, ...).
 
         ``dedup_labels=True`` (implies ``lsh_index``) additionally folds
         each batch into the persisted near-dup GROUP labeling
@@ -224,8 +229,9 @@ class CDCEngine:
         self.metrics_dir = os.path.join(table_root, "metrics")
         self._applied_since_compact = 0
         if lsh_index or dedup_labels:
-            from .band_index import DedupLabels, LshBandIndex
+            from .band_index import DedupLabels, LshBandIndex, check_doc_id_types
 
+            check_doc_id_types(self.table.schema(), self.table.key_cols())
             self.lsh_index = LshBandIndex(self.table, text_col=lsh_text_col)
             self.dedup_labels = (
                 DedupLabels(

@@ -33,7 +33,8 @@ merge-on-read reads back the delta files it just wrote with ``pyarrow``
 (no Spark job); copy-on-write takes them from its persisted batch,
 because its written files also hold the buckets' other stored rows. The
 hook writes the epoch's aux artifacts and returns the ``aux_add`` the
-commit records with the data.
+commit records with the data. A hook failure, like a failed commit,
+leaves only unreferenced dirs behind.
 """
 
 from __future__ import annotations
@@ -80,7 +81,6 @@ def merge_epoch(
     slice_marker: str | None = None,
     mark_epoch: bool = True,
     slice_files: list[str] | None = None,
-    aux_add: dict[str, list[str]] | None = None,
     aux: "EpochAux | None" = None,
 ) -> dict:
     """Copy-on-write apply: fold one reduced batch (one row per key) into
@@ -92,8 +92,8 @@ def merge_epoch(
     ``mark_epoch=False`` additionally withholds the epoch id from
     ``committed_epochs`` so a later batch replay won't skip the rest.
 
-    ``aux_add`` is recorded in the commit as given; ``aux`` (see the
-    module notes) computes it from the written epoch instead.
+    ``aux``: the hook that computes the epoch's aux artifacts from its
+    written rows (see the module notes).
 
     Concurrency: the fold reads a PINNED base snapshot version and the
     commit validates the affected buckets against it (see
@@ -103,7 +103,7 @@ def merge_epoch(
     retry), so a concurrent commit's rows are never silently dropped."""
     return _apply(
         spark, table, reduced, epoch, quarantine_dir, slice_marker,
-        mark_epoch, slice_files, aux_add, aux, cow=True, repartition=False,
+        mark_epoch, slice_files, aux, cow=True, repartition=False,
     )
 
 
@@ -117,7 +117,6 @@ def apply_delta_epoch(
     slice_marker: str | None = None,
     mark_epoch: bool = True,
     slice_files: list[str] | None = None,
-    aux_add: dict[str, list[str]] | None = None,
     aux: "EpochAux | None" = None,
 ) -> dict:
     """Merge-on-read apply (the sustained-throughput path): write the
@@ -130,7 +129,7 @@ def apply_delta_epoch(
     for the key) are additionally audited eagerly with a column-pruned
     scan of the affected buckets (reads only key + __lsn columns).
 
-    ``slice_marker``/``mark_epoch``/``aux_add``/``aux``: see
+    ``slice_marker``/``mark_epoch``/``aux``: see
     :func:`merge_epoch`.
 
     Concurrency: the commit validates that the table's BUCKET COUNT is
@@ -143,7 +142,7 @@ def apply_delta_epoch(
     """
     return _apply(
         spark, table, reduced, epoch, quarantine_dir, slice_marker,
-        mark_epoch, slice_files, aux_add, aux, cow=False,
+        mark_epoch, slice_files, aux, cow=False,
         repartition=not pre_partitioned,
     )
 
@@ -157,7 +156,6 @@ def _apply(
     slice_marker: str | None,
     mark_epoch: bool,
     slice_files: list[str] | None,
-    aux_add: dict | None,
     aux: "EpochAux | None",
     cow: bool,
     repartition: bool,
@@ -168,12 +166,16 @@ def _apply(
     re-merges after any CommitConflict; a MOR attempt only after a
     rebucket (its deltas are stale only under a new bucket function).
     The ``aux`` hook runs on the first attempt's write; a retry commits
-    the ``aux_add`` it returned."""
+    the ``aux_add`` it returned. A hook that raises (e.g.
+    ``LshBandIndex.batch_bands`` on a ``doc_id`` with two texts) leaves
+    the snapshot as it was and the written data dir an unreferenced
+    orphan, which ``expire_snapshots`` sweeps."""
     snap = table.snapshot()
     if skip := table.skip_if_committed(epoch, slice_marker, mark_epoch, snap):
         return skip
     t0 = time.monotonic()
     key_cols = snap["key_cols"]  # honor custom keys persisted in the snapshot
+    aux_add = None
     held: list[DataFrame] = []
     try:
         for attempt in range(8):

@@ -66,3 +66,19 @@ def stored_rows(index, batch):
         index.text_col,
         (F.col("op") == "D").alias("__deleted"),
     ).toArrow()
+
+
+class FixedAux:
+    """An apply aux hook (the ``band_index.EpochAux`` protocol) that
+    records fixed ``aux_add`` entries: it reads only ``__deleted``, which
+    every stored file holds, and counts its calls."""
+
+    columns = ["__deleted"]
+
+    def __init__(self, entries):
+        self.entries = entries
+        self.calls = 0
+
+    def __call__(self, rows):
+        self.calls += 1
+        return self.entries

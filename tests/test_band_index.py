@@ -17,7 +17,7 @@ Contract under test:
 import os
 import re
 
-from conftest import make_events, stored_rows
+from conftest import FixedAux, make_events, stored_rows
 
 from pyspark.sql import functions as F
 
@@ -80,10 +80,9 @@ def test_commit_atomic_with_data(spark, tmpdir_):
     batch = existing.select("doc_id", "text").withColumns(
         {"op": F.lit("U"), "lsn": F.lit(0).cast("long")}
     )
-    stats = apply_delta_epoch(
-        spark, table, batch, epoch=0, aux_add={AUX_NAME: ["index/lsh/bogus/x.parquet"]}
-    )
-    assert stats["skipped"]
+    aux = FixedAux({AUX_NAME: ["index/lsh/bogus/x.parquet"]})
+    stats = apply_delta_epoch(spark, table, batch, epoch=0, aux=aux)
+    assert stats["skipped"] and aux.calls == 0
     assert table.snapshot()["aux"][AUX_NAME]["files"] == files
 
 

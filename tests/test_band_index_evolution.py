@@ -8,7 +8,7 @@ retries."""
 
 import os
 
-from conftest import make_events, stored_rows
+from conftest import FixedAux, make_events, stored_rows
 
 from pyspark.sql import functions as F
 
@@ -114,10 +114,9 @@ def test_rebucket_between_index_write_and_commit(spark, tmpdir_):
     # and the epoch's data commit
     table.rebucket(spark, 5)
     assert table.n_buckets() == 5
-    stats = apply_delta_epoch(
-        spark, table, reduced, epoch=1, aux_add={AUX_NAME: band_files}
-    )
-    assert not stats.get("skipped")
+    aux = FixedAux({AUX_NAME: band_files})
+    stats = apply_delta_epoch(spark, table, reduced, epoch=1, aux=aux)
+    assert not stats.get("skipped") and aux.calls == 1
     snap = table.snapshot()
     assert int(snap["n_buckets"]) == 5
     # (1) every committed delta file's rows hash to their bucket key
@@ -186,14 +185,9 @@ def test_rebucket_between_label_fold_and_commit(spark, tmpdir_):
         "e000001-race",
     )
     table.rebucket(spark, 5)
-    stats = apply_delta_epoch(
-        spark,
-        table,
-        reduced,
-        epoch=1,
-        aux_add={AUX_NAME: band_files, LABELS_AUX: label_files},
-    )
-    assert not stats.get("skipped")
+    aux = FixedAux({AUX_NAME: band_files, LABELS_AUX: label_files})
+    stats = apply_delta_epoch(spark, table, reduced, epoch=1, aux=aux)
+    assert not stats.get("skipped") and aux.calls == 1
     lab = {r["node"]: r["label"] for r in labels.read(spark).collect()}
     final = _final_docs(eng)
     pairs = text_dedup.jaccard_verify_pairs(

@@ -14,7 +14,7 @@ from collections import Counter
 import pyarrow.parquet as pq
 import pytest
 from conftest import make_events, stored_rows
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from crba_etl_spark.band_index import (
     AUX_NAME,
@@ -318,6 +318,40 @@ def test_unpinned_key_type_fails_before_any_write(spark, tmpdir_):
     assert os.listdir(os.path.join(root, "data")) == []
     assert not os.path.exists(os.path.join(root, "index"))
     assert table.snapshot()["committed_epochs"] == []
+
+    # the engine refuses such a table when it is constructed
+    payload = T.StructType(
+        [
+            T.StructField("conv_id", T.DateType()),
+            T.StructField("turn_idx", T.IntegerType()),
+            T.StructField("text", T.StringType()),
+        ]
+    )
+    root = os.path.join(tmpdir_, "eng")
+    with pytest.raises(ValueError, match="conv_id date"):
+        CDCEngine(spark, root, payload_schema=payload, dedup_labels=True)
+    assert os.listdir(os.path.join(root, "data")) == []
+
+
+def test_aux_hook_failure_leaves_a_swept_data_orphan(spark, tmpdir_):
+    """A hook that raises after the data write (here ``batch_bands`` on a
+    doc_id with two texts) leaves the snapshot as it was and the epoch's
+    data dir an unreferenced orphan, which expire_snapshots removes; no
+    aux file is written."""
+    docs = spark.createDataFrame(
+        [("d", "one text here"), ("d", "another text")], "doc_id string, text string"
+    )
+    root = os.path.join(tmpdir_, "t")
+    table = IceliteTable.create(root, docs.schema, n_buckets=2, key_cols=["doc_id"])
+    before = table.snapshot()
+    with pytest.raises(ValueError, match="two texts"):
+        ingest_documents(spark, root, docs, dedup_labels=True, table=table)
+    assert table.snapshot() == before
+    data = os.listdir(os.path.join(root, "data"))
+    assert len(data) == 1 and not os.path.exists(os.path.join(root, "index"))
+    res = table.expire_snapshots(keep_last=1, aux_min_age_s=0.0)
+    assert res["removed_data_dirs"] == data
+    assert os.listdir(os.path.join(root, "data")) == []
 
 
 def test_cow_epoch_indexes_the_batch_not_its_buckets(spark, tmpdir_):

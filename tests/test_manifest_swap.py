@@ -8,7 +8,7 @@ writer once over a non-POSIX manifest backend."""
 import copy
 import os
 
-from conftest import make_events
+from conftest import FixedAux, make_events
 from crba_etl_spark.icelite import IceliteTable
 from crba_etl_spark.operators.dedup import reduce_batch
 from crba_etl_spark.operators.merge import apply_delta_epoch, merge_epoch
@@ -68,7 +68,7 @@ def test_every_writer_carries_unknown_fields(spark, tmpdir_):
             [(1, 0, "I", "c1", 0, "user", "hello", None, 0, 0),
              (2, 0, "I", "c2", 0, "user", "hi", None, 0, 1)],
             slice_marker="e0:s0", mark_epoch=False, slice_files=["f0.parquet"],
-            aux_add={"idx": {"files": ["index/idx/a/p.parquet"], "rows_add": 3}},
+            aux=FixedAux({"idx": {"files": ["index/idx/a/p.parquet"], "rows_add": 3}}),
         ),
     )
     assert t.snapshot()["epoch_files"] == {"0": ["f0.parquet"]}
