@@ -35,6 +35,16 @@ engine writes through two calls in operators/merge.py, one apply body:
 ``merge_epoch`` (copy-on-write: the batch is folded into its buckets by
 the max-``__lsn`` resolution :meth:`IceliteTable.read_resolved` uses).
 
+The read path pins one manifest per read: :meth:`IceliteTable.read`
+reads ``CURRENT`` and that manifest once and builds the file list, the
+resolve decision and the projection from it, so a commit landing
+mid-read cannot pair one snapshot's files with another's layout. The
+live read keeps one relation per live snapshot (its plan and file index,
+no data) and returns it while the manifest is unchanged; a commit, a
+compaction, a rebucket, another writer or a table re-created at the same
+root moves the manifest, and the next read rebuilds. Compaction pins
+its snapshot the same way.
+
 Reference analog: the reference's final combined table is fully rebuilt
 per edition and diffed across runs
 (``/root/reference/validation/comparison_of_final_files/compare_two_final_csvs.py:1-3``);
@@ -184,6 +194,10 @@ class LocalManifestIO:
         os.remove(os.path.join(self.snap_dir, name))
 
 
+def _key_cols(snap: dict) -> list[str]:
+    return list(snap.get("key_cols", _MANIFEST["key_cols"]))
+
+
 def bucket_expr(n_buckets: int, col: str = "conv_id"):
     """Deterministic bucket id: pmod(hash(conv_id), N) — Iceberg's bucket
     transform shape, using Spark's Murmur3 ``hash`` so the bucket function
@@ -225,6 +239,8 @@ class IceliteTable:
     def __init__(self, root: str, io: LocalManifestIO | None = None):
         self.root = root
         self.io = io or LocalManifestIO(root)
+        #: (session, manifest, relation) of the last live read — see read
+        self._live: tuple[SparkSession, dict, DataFrame] | None = None
 
     # --- lifecycle ---------------------------------------------------------
 
@@ -297,7 +313,7 @@ class IceliteTable:
         return int(self.snapshot().get("n_buckets", 32))
 
     def key_cols(self) -> list[str]:
-        return list(self.snapshot().get("key_cols", ["conv_id", "turn_idx"]))
+        return _key_cols(self.snapshot())
 
     def deltas(self) -> dict[str, list[str]]:
         return self.snapshot().get("deltas", {})
@@ -374,37 +390,35 @@ class IceliteTable:
     # --- read path -----------------------------------------------------------
 
     def data_files(
-        self,
-        buckets: set[int] | None = None,
-        include_deltas: bool = True,
-        version: int | None = None,
+        self, buckets: set[int] | None = None, snap: dict | None = None
     ) -> list[str]:
-        snap = self.snapshot_at(version)
-        out: list[str] = []
-        sources = [snap["files"]]
-        if include_deltas:
-            sources.append(snap.get("deltas", {}))
-        for files in sources:
-            for b, fl in files.items():
-                if buckets is None or int(b) in buckets:
-                    out.extend(os.path.join(self.root, p) for p in fl)
-        return out
+        """Absolute paths of the base and delta files of ``buckets`` (default
+        all) in ``snap`` (default: the live snapshot)."""
+        snap = snap if snap is not None else self.snapshot()
+        return [
+            os.path.join(self.root, p)
+            for files in (snap["files"], snap.get("deltas", {}))
+            for b, fl in files.items()
+            if buckets is None or int(b) in buckets
+            for p in fl
+        ]
 
     def read_stored(
         self,
         spark: SparkSession,
         buckets: set[int] | None = None,
         schema: T.StructType | None = None,
-        version: int | None = None,
+        snap: dict | None = None,
     ) -> DataFrame:
         """Raw stored rows (payload + __lsn/__deleted incl. tombstones) of
-        the given buckets, projected to the current (or an explicitly
-        evolved) payload schema — missing columns in old files read back
-        as null. ``version`` time-travels to a retained snapshot."""
+        the given buckets of ``snap`` (default: the live snapshot),
+        projected to its payload schema or to an explicitly evolved one —
+        missing columns in old files read back as null."""
+        snap = snap if snap is not None else self.snapshot()
         if schema is None:
-            schema = T.StructType.fromJson(self.snapshot_at(version)["schema"])
+            schema = T.StructType.fromJson(snap["schema"])
         schema = stored_schema(schema)
-        paths = self.data_files(buckets, version=version)
+        paths = self.data_files(buckets, snap)
         if not paths:
             return spark.createDataFrame([], schema)
         return spark.read.schema(schema).parquet(*paths)
@@ -414,11 +428,14 @@ class IceliteTable:
         spark: SparkSession,
         buckets: set[int] | None = None,
         schema: T.StructType | None = None,
-        version: int | None = None,
+        snap: dict | None = None,
         cluster: int | None = None,
     ) -> DataFrame:
         """Stored rows with merge-on-read resolution applied: one row per
-        key (max-__lsn wins over base ∪ deltas), tombstones included.
+        key (max-__lsn wins over base ∪ deltas), tombstones included. The
+        file list and the decision below both come from ``snap`` (default:
+        the live snapshot, read once), so a commit landing mid-read cannot
+        pair one snapshot's files with another's delta layout.
 
         Every stored file already holds one row per key (a delta file is
         one reduced batch, a base file one resolved bucket) and a key
@@ -435,9 +452,9 @@ class IceliteTable:
         equal-LSN redelivery resolves to the epoch that first applied it,
         and compaction's lazy audit sees the later copy as stale. A read
         keeps the bare ``__lsn`` order; tied rows carry the same change."""
-        df = self.read_stored(spark, buckets=buckets, schema=schema, version=version)
-        snap = self.snapshot_at(version)
-        keys = list(snap.get("key_cols", ["conv_id", "turn_idx"]))
+        snap = snap if snap is not None else self.snapshot()
+        df = self.read_stored(spark, buckets=buckets, schema=schema, snap=snap)
+        keys = _key_cols(snap)
         if cluster is not None:
             df = cluster_by_bucket(df, cluster, keys[0])
         touched = snap.get("deltas", {})
@@ -455,14 +472,35 @@ class IceliteTable:
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """The table's visible (non-tombstone) rows, payload columns —
-        live by default, or as of a retained snapshot ``version``."""
+        live by default, or as of a retained snapshot ``version``.
+
+        Each call pins one manifest and builds the whole read from it. The
+        live read keeps the relation it built (the plan and the file index
+        of the files that manifest references; no data) and returns that
+        same ``DataFrame`` while ``spark`` is the session it was built in
+        and the live manifest still equals the pinned one, so a hit costs
+        one ``CURRENT`` and one manifest read and no DataSource
+        resolution, file listing or analysis. Any change to the manifest
+        rebuilds it: a commit, a compaction, a rebucket, another writer,
+        or a table re-created at the same root (compared by content, since
+        a re-created table starts again at version 0). Reuse is safe
+        because data files are immutable and ``expire_snapshots`` never
+        deletes a file the live snapshot references. A ``version`` read
+        is built from its own manifest and not kept."""
         snap = self.snapshot_at(version)
+        if version is None and self._live is not None:
+            live_spark, live_snap, df = self._live
+            if live_spark is spark and live_snap == snap:
+                return df
         cols = [f["name"] for f in snap["schema"]["fields"]]
-        return (
-            self.read_resolved(spark, version=version)
+        df = (
+            self.read_resolved(spark, snap=snap)
             .filter(~F.col("__deleted"))
             .select(*cols)
         )
+        if version is None:
+            self._live = (spark, snap, df)
+        return df
 
     # --- write path ------------------------------------------------------------
 
@@ -828,7 +866,7 @@ class IceliteTable:
         unaudited (final state is identical either way)."""
         snap = self.snapshot()
         old_n = int(snap.get("n_buckets", 32))
-        key = self.key_cols()[0]
+        key = _key_cols(snap)[0]
         chunk = int(chunk_old_buckets or old_n)
         prog = snap.get("rebucket_progress")
         if prog and int(prog.get("to", -1)) != int(new_n_buckets):
@@ -895,8 +933,7 @@ class IceliteTable:
                 # the data dir claims the version the progress commit
                 # will take, so rewrite dirs never collide
                 df = self.read_resolved(
-                    spark, buckets=set(g), version=cur["version"],
-                    cluster=new_n_buckets,
+                    spark, buckets=set(g), snap=cur, cluster=new_n_buckets,
                 ).withColumn(BUCKET_COL, bucket_expr(new_n_buckets, key))
                 new_files = self.write_merged(
                     df, epoch=-2, version=cur["version"] + 1, repartition=False
@@ -1004,9 +1041,13 @@ class IceliteTable:
         resolution to a row committed in an *earlier* epoch (i.e. they
         were stale/low-LSN on arrival) are written out for audit here —
         amortized into the compaction scan instead of a per-epoch table
-        re-scan (which would make apply O(table) instead of O(batch))."""
+        re-scan (which would make apply O(table) instead of O(batch)).
+
+        One pinned snapshot serves the resolve, the audit and the key and
+        schema lookups; the commit validates against that same snapshot."""
         snap = self.snapshot()
         n = snap.get("n_buckets", 32)
+        keys = _key_cols(snap)
         had_deltas = any(snap.get("deltas", {}).values())
         if buckets is None:
             buckets = {int(b) for b, v in snap.get("deltas", {}).items() if v}
@@ -1015,10 +1056,9 @@ class IceliteTable:
         if not buckets and not drop_tombstones:
             return snap
         # one exchange: the clustering serves the resolve and the write
-        df = self.read_resolved(spark, buckets=buckets, cluster=n)
+        df = self.read_resolved(spark, buckets=buckets, snap=snap, cluster=n)
         if quarantine_dir is not None and had_deltas:
-            keys = self.key_cols()
-            stored = self.read_stored(spark, buckets=buckets)
+            stored = self.read_stored(spark, buckets=buckets, snap=snap)
             winners = df.select(
                 *keys,
                 F.col("__lsn").alias("applied_lsn"),
@@ -1031,7 +1071,7 @@ class IceliteTable:
                     F.col("__epoch").alias("quarantine_epoch"),
                     F.col("__lsn").alias("lsn"),
                     *keys,
-                    *[f.name for f in self.schema().fields if f.name not in keys],
+                    *[f["name"] for f in snap["schema"]["fields"] if f["name"] not in keys],
                     F.col("__deleted").alias("was_delete"),
                     "applied_lsn",
                 )
@@ -1045,7 +1085,7 @@ class IceliteTable:
             )
         if drop_tombstones:
             df = df.filter(~F.col("__deleted"))
-        df = df.withColumn(BUCKET_COL, bucket_expr(n, self.key_cols()[0]))
+        df = df.withColumn(BUCKET_COL, bucket_expr(n, keys[0]))
         new_files = self.write_merged(
             df, epoch=-1, version=snap["version"] + 1, repartition=False
         )

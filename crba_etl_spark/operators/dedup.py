@@ -51,9 +51,17 @@ def reduce_latest(
     # compares whole rows lexicographically. Ties (duplicate-LSN
     # redeliveries) carry identical payloads, so the arbitrary tie-pick
     # of a bare LSN order cannot change the payload.
-    m = F.max_by(F.struct(*[F.col(c) for c in payload]), order)
+    m = F.max_by(_struct_of(payload), order)
     reduced = events.groupBy(*keys).agg(m.alias("_m"))
     return reduced.select(*keys, "_m.*")
+
+
+def _struct_of(cols: list[str]) -> Column:
+    """``struct(cols...)`` as ONE parsed expression, names backtick-quoted:
+    the same plan as ``F.struct(*map(F.col, cols))`` at one py4j call
+    instead of one per column."""
+    quoted = ", ".join("`" + c.replace("`", "``") + "`" for c in cols)
+    return F.expr(f"struct({quoted})")
 
 
 def reduce_batch(events: DataFrame) -> DataFrame:

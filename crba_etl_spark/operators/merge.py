@@ -215,7 +215,7 @@ def _apply(
                 # stored ∪ batch, max (__lsn, stored) per key: the
                 # stored row wins an LSN tie, so a redelivery is stale.
                 # One exchange clusters the union for the fold and the write
-                stored = table.read_stored(spark, affected, evolved, version=base)
+                stored = table.read_stored(spark, affected, evolved, snap=snap)
                 both = cluster_by_bucket(
                     stored.withColumn("_stored", F.lit(True)).unionByName(
                         rows.drop(BUCKET_COL).withColumn("_stored", F.lit(False))
@@ -254,7 +254,7 @@ def _apply(
             stale = keys - int(m["fresh"]) if cow else 0
             if quarantine_dir is not None and (stale or not cow):
                 stale = _audit(
-                    spark, table, batch, affected, evolved, base, key_cols,
+                    spark, table, batch, affected, evolved, snap, key_cols,
                     epoch, os.path.join(quarantine_dir, unit_name(epoch, slice_marker)),
                 )
             stats = {
@@ -322,23 +322,23 @@ def _audit(
     batch: DataFrame,
     affected: set[int],
     evolved: T.StructType,
-    base: int,
+    snap: dict,
     key_cols: list[str],
     epoch: int,
     path: str,
 ) -> int:
     """Write the batch's stale events — ``lsn`` at or below the key's
     applied high watermark, the max ``__lsn`` over the affected buckets'
-    stored rows at version ``base`` (a column-pruned scan: key + __lsn
-    reach the parquet reader) — to ``path``; return their count. A
-    retried unit overwrites only its own directory."""
+    stored rows in the base snapshot ``snap`` (a column-pruned scan: key
+    + __lsn reach the parquet reader) — to ``path``; return their count.
+    A retried unit overwrites only its own directory."""
     applied = (
-        table.read_stored(spark, affected, evolved, version=base)
+        table.read_stored(spark, affected, evolved, snap=snap)
         .select(*key_cols, LSN_COL)
         .groupBy(*key_cols)
         .agg(F.max(LSN_COL).alias("applied_lsn"))
     )
-    obs = Observation(f"stale-{os.path.basename(path)}-v{base}")
+    obs = Observation(f"stale-{os.path.basename(path)}-v{snap['version']}")
     (
         batch.join(applied, on=key_cols, how="inner")
         .filter(F.col("lsn") <= F.col("applied_lsn"))

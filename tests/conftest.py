@@ -9,6 +9,12 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+#: driver heap of every test JVM (the session fixture's, and the CLI and
+#: spark-submit subprocesses', which inherit the environment): get_spark
+#: defaults to 48g, more than a small shared host can back. An explicit
+#: SPARK_DRIVER_MEM wins.
+os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
+
 from crba_etl_spark.session import get_spark  # noqa: E402
 
 
