@@ -256,6 +256,7 @@ class CDCEngine:
         mark_epoch: bool = True,
         slice_files: list[str] | None = None,
         source_aligned: bool = False,
+        snap: dict | None = None,
     ) -> dict:
         """Dedup + reduce + merge + commit one epoch. No-op if the epoch
         is already committed (exactly-once under redelivery).
@@ -285,8 +286,13 @@ class CDCEngine:
         BENCH/EPOCH_PROFILE.md). Safe on misaligned input: Catalyst
         inserts the missing exchange for the reduce and the write
         assigns buckets by VALUE, so the penalty is extra files per
-        bucket — never wrong rows."""
-        if skip := self.table.skip_if_committed(epoch, slice_marker, mark_epoch):
+        bucket — never wrong rows.
+
+        ``snap``: the snapshot the epoch is applied against (default: the
+        live one, read here). One snapshot serves the skip decision, the
+        exchange width and the apply's first attempt."""
+        snap = snap if snap is not None else self.table.snapshot()
+        if skip := self.table.skip_if_committed(epoch, slice_marker, mark_epoch, snap):
             return skip
         t0 = time.monotonic()
 
@@ -305,7 +311,7 @@ class CDCEngine:
             # exchange) and keeps each bucket wholly in one partition
             # (⇒ the bucketed delta write shuffles nothing and emits one
             # file per bucket)
-            events = cluster_by_bucket(events, self.table.n_buckets())
+            events = cluster_by_bucket(events, int(snap["n_buckets"]))
         reduced = reduce_batch(events)
         # MOR + lazy: per-epoch audit skipped; compaction extracts stale
         # rows from __epoch/__lsn (a COW fold counts its stale rows anyway)
@@ -333,6 +339,7 @@ class CDCEngine:
                 mark_epoch=mark_epoch,
                 slice_files=slice_files,
                 aux=aux,
+                snap=snap,
             )
         else:
             stats = merge_epoch(
@@ -345,6 +352,7 @@ class CDCEngine:
                 mark_epoch=mark_epoch,
                 slice_files=slice_files,
                 aux=aux,
+                snap=snap,
             )
         if not stats.get("skipped"):
             stats["events_in"] = int(obs.get["events_in"])
@@ -533,14 +541,17 @@ class CDCEngine:
         applied, skipped = [], []
         for k in epochs:
             d = os.path.join(events_dir, f"epoch={k}")
-            if k in self.table.committed_epochs():
+            # one snapshot per epoch: the skip, the applied-file set and
+            # the apply itself are decided against it
+            snap = self.table.snapshot()
+            if k in snap["committed_epochs"]:
                 skipped.append(k)
                 continue
             listed = sorted(
                 f for f in os.listdir(d) if f.endswith(".parquet")
             )
             declared = _declared_files(events_dir, k)
-            prior = set(self.table.epoch_files().get(str(k), []))
+            prior = set(snap.get("epoch_files", {}).get(str(k), []))
             todo = [f for f in listed if f not in prior]
             complete = declared is not None and set(listed) | prior >= declared
             if not todo:
@@ -561,14 +572,15 @@ class CDCEngine:
                 reader = self.spark.read.option("mergeSchema", "true")
             df = reader.parquet(*paths)
             if complete:
-                st = self.apply_epoch(df, k, slice_files=todo)
+                st = self.apply_epoch(df, k, slice_files=todo, snap=snap)
             else:
                 marker = "e%d:batch:%s" % (
                     k,
                     hashlib.sha1("\n".join(todo).encode()).hexdigest()[:16],
                 )
                 st = self.apply_epoch(
-                    df, k, slice_marker=marker, mark_epoch=False, slice_files=todo
+                    df, k, slice_marker=marker, mark_epoch=False, slice_files=todo,
+                    snap=snap,
                 )
             if st.get("skipped"):
                 skipped.append(k)

@@ -38,12 +38,22 @@ the max-``__lsn`` resolution :meth:`IceliteTable.read_resolved` uses).
 The read path pins one manifest per read: :meth:`IceliteTable.read`
 reads ``CURRENT`` and that manifest once and builds the file list, the
 resolve decision and the projection from it, so a commit landing
-mid-read cannot pair one snapshot's files with another's layout. The
-live read keeps one relation per live snapshot (its plan and file index,
-no data) and returns it while the manifest is unchanged; a commit, a
-compaction, a rebucket, another writer or a table re-created at the same
-root moves the manifest, and the next read rebuilds. Compaction pins
-its snapshot the same way.
+mid-read cannot pair one snapshot's files with another's layout. A
+small snapshot is resolved on the driver: its files are read with
+pyarrow, resolved by max ``__lsn`` per key and handed to Spark as a
+``LocalRelation``, when its stored rows are under
+:data:`LOCAL_READ_MAX_BYTES` (8 MiB) and under the session's
+``spark.sql.execution.arrow.localRelationThreshold`` (default 48 MB, the
+size under which Spark itself keeps Arrow data as a local relation). A
+point lookup on it runs no Spark job. Any other read is a Spark relation
+over the files, resolved by :meth:`IceliteTable.read_resolved`;
+compaction, rebucketing, the copy-on-write fold and the audits always
+use that one. The live read keeps one relation per live snapshot (a
+Spark relation's plan and file index, or a local relation's rows, so at
+most that limit's bytes) and returns it while the manifest and the limit
+are unchanged; a commit, a compaction, a rebucket, another writer or a
+table re-created at the same root moves the manifest, and the next read
+rebuilds. Compaction pins its snapshot the same way.
 
 Reference analog: the reference's final combined table is fully rebuilt
 per edition and diffed across runs
@@ -58,9 +68,14 @@ import json
 import os
 import shutil
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from .schema import stored_schema
+from .schema import DELETED_COL, LSN_COL, stored_schema
 
 BUCKET_COL = "__bucket"
 CURRENT = "CURRENT"
@@ -68,6 +83,11 @@ CURRENT = "CURRENT"
 #: every snapshot so a table created under a different bucketing scheme
 #: refuses loudly instead of silently mis-assigning rows to buckets
 BUCKET_FN = "murmur3_pmod_v1"
+#: the most stored bytes (on disk, uncompressed in the footers, or decoded
+#: into Arrow) a read resolves on the driver. On a 4-core host the
+#: driver-resolved point read stopped beating the Spark relation's at
+#: 9.5-12 MB of decoded stored rows (scripts/read_path_crossover.py)
+LOCAL_READ_MAX_BYTES = 8 << 20
 
 #: every manifest field, in the order each snapshot is written, with the
 #: value a field takes when an older manifest lacks it. Writers change the
@@ -198,6 +218,70 @@ def _key_cols(snap: dict) -> list[str]:
     return list(snap.get("key_cols", _MANIFEST["key_cols"]))
 
 
+def _resolve_needed(snap: dict, buckets: set[int] | None = None) -> bool:
+    """Whether a read of ``buckets`` (default all) of ``snap`` must resolve
+    keys. Every stored file already holds one row per key (a delta file
+    is one reduced batch, a base file one resolved bucket) and a key
+    lives in one bucket, so a key can occur twice only in a bucket that
+    holds a delta beside another file."""
+    files = snap["files"]
+    return any(
+        v and len(v) + len(files.get(b, [])) > 1
+        for b, v in snap.get("deltas", {}).items()
+        if buckets is None or int(b) in buckets
+    )
+
+
+def _arrow_stored(
+    files: list[pq.ParquetFile], schema: pa.Schema, limit: int
+) -> pa.Table | None:
+    """The rows of the stored ``files``, read with pyarrow as ``schema``,
+    or ``None`` as soon as the rows read so far reach ``limit`` Arrow
+    bytes (so the driver holds at most ``limit`` plus one file's rows). A
+    column a file lacks (it was written before the column was added)
+    reads as null, as in Spark's parquet scan; the others are cast to
+    their manifest type. Spark writes ``TimestampType`` as INT96 UTC
+    instants, which the cast labels UTC."""
+    parts, size = [], 0
+    for f in files:
+        have = set(f.schema_arrow.names)
+        t = f.read(columns=[n for n in schema.names if n in have])
+        t = pa.table(
+            [
+                t[c.name].cast(c.type) if c.name in have else pa.nulls(len(t), c.type)
+                for c in schema
+            ],
+            schema=schema,
+        )
+        size += t.nbytes
+        if size >= limit:
+            return None
+        parts.append(t)
+    return pa.concat_tables(parts) if parts else schema.empty_table()
+
+
+def _latest_per_key(rows: pa.Table, keys: list[str]) -> pa.Table:
+    """One row per key tuple: the one with the highest ``__lsn`` — the
+    rule of ``operators.dedup.reduce_latest`` over a bare ``__lsn``
+    order (rows tied on it carry the same change). Null key values group
+    together, as in a Spark ``groupBy``."""
+    rows = rows.take(
+        pc.sort_indices(rows, [(k, "ascending") for k in keys] + [(LSN_COL, "descending")])
+    )
+    n = len(rows)
+    if n < 2:
+        return rows
+    same = np.ones(n - 1, dtype=bool)
+    for k in keys:
+        a, b = rows[k].slice(1), rows[k].slice(0, n - 1)
+        eq = pc.or_(
+            pc.fill_null(pc.equal(a, b), False),
+            pc.and_(pc.is_null(a), pc.is_null(b)),
+        )
+        same &= eq.to_numpy()
+    return rows.filter(pa.array(np.concatenate([[True], ~same])))
+
+
 def bucket_expr(n_buckets: int, col: str = "conv_id"):
     """Deterministic bucket id: pmod(hash(conv_id), N) — Iceberg's bucket
     transform shape, using Spark's Murmur3 ``hash`` so the bucket function
@@ -229,8 +313,7 @@ def cluster_by_bucket(df: DataFrame, n_buckets: int, col: str = "conv_id") -> Da
     W = :func:`aligned_width` of the bucket count and the session's task
     slots. Every bucket of ``bucket_expr(n_buckets, col)`` lands wholly
     in one partition, so a reduce grouped by keys that include ``col``
-    adds no exchange and ``write_merged(repartition=False)`` writes one
-    file per bucket."""
+    adds no exchange and ``write_merged`` writes one file per bucket."""
     slots = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(aligned_width(n_buckets, slots), F.col(col))
 
@@ -240,7 +323,7 @@ class IceliteTable:
         self.root = root
         self.io = io or LocalManifestIO(root)
         #: (session, manifest, relation) of the last live read — see read
-        self._live: tuple[SparkSession, dict, DataFrame] | None = None
+        self._live: tuple[SparkSession, int, dict, DataFrame] | None = None
 
     # --- lifecycle ---------------------------------------------------------
 
@@ -444,24 +527,20 @@ class IceliteTable:
 
         ``cluster=N`` resolves for a rewrite into N buckets. It first
         clusters the stored rows with :func:`cluster_by_bucket`, so that
-        one exchange serves the resolve and a
-        ``write_merged(repartition=False)`` of the result. A rewrite
-        stores ``__epoch`` again, so an LSN tie goes to the row of the
-        earlier epoch (a file written before ``__epoch`` existed counts
-        as earliest) — the rule a copy-on-write fold applies: an
-        equal-LSN redelivery resolves to the epoch that first applied it,
-        and compaction's lazy audit sees the later copy as stale. A read
-        keeps the bare ``__lsn`` order; tied rows carry the same change."""
+        one exchange serves the resolve and a ``write_merged`` of the
+        result. A rewrite stores ``__epoch`` again, so an LSN tie goes to
+        the row of the earlier epoch (a file written before ``__epoch``
+        existed counts as earliest) — the rule a copy-on-write fold
+        applies: an equal-LSN redelivery resolves to the epoch that first
+        applied it, and compaction's lazy audit sees the later copy as
+        stale. A read keeps the bare ``__lsn`` order; tied rows carry the
+        same change."""
         snap = snap if snap is not None else self.snapshot()
         df = self.read_stored(spark, buckets=buckets, schema=schema, snap=snap)
         keys = _key_cols(snap)
         if cluster is not None:
             df = cluster_by_bucket(df, cluster, keys[0])
-        touched = snap.get("deltas", {})
-        if buckets is not None:
-            touched = {b: v for b, v in touched.items() if int(b) in buckets}
-        files = snap["files"]
-        if all(len(v) + len(files.get(b, [])) <= 1 for b, v in touched.items() if v):
+        if not _resolve_needed(snap, buckets):
             return df  # no key can occur twice
         from .operators.dedup import reduce_latest
 
@@ -474,58 +553,109 @@ class IceliteTable:
         """The table's visible (non-tombstone) rows, payload columns —
         live by default, or as of a retained snapshot ``version``.
 
-        Each call pins one manifest and builds the whole read from it. The
-        live read keeps the relation it built (the plan and the file index
-        of the files that manifest references; no data) and returns that
-        same ``DataFrame`` while ``spark`` is the session it was built in
-        and the live manifest still equals the pinned one, so a hit costs
-        one ``CURRENT`` and one manifest read and no DataSource
-        resolution, file listing or analysis. Any change to the manifest
-        rebuilds it: a commit, a compaction, a rebucket, another writer,
-        or a table re-created at the same root (compared by content, since
-        a re-created table starts again at version 0). Reuse is safe
-        because data files are immutable and ``expire_snapshots`` never
-        deletes a file the live snapshot references. A ``version`` read
-        is built from its own manifest and not kept."""
+        Each call pins one manifest and builds the whole read from it, on
+        one of two paths with equal rows:
+
+        - a small snapshot resolves on the driver (:meth:`_read_local`):
+          its files are read with pyarrow, resolved to the max ``__lsn``
+          row per key, and handed to Spark as a ``LocalRelation``, so a
+          filter-and-collect on it runs no Spark job. A read takes this
+          path when its stored files are under a limit on disk, in their
+          footers' uncompressed bytes and as decoded Arrow rows. The limit
+          is the session's ``spark.sql.execution.arrow.localRelationThreshold``
+          (default 48 MB, the size below which Spark itself builds a
+          ``LocalRelation`` from Arrow data), capped at
+          :data:`LOCAL_READ_MAX_BYTES`, the measured size past which the
+          Spark relation is faster. The driver holds at most the limit's
+          bytes plus one file's rows while it reads;
+        - any other snapshot reads as a Spark relation over its files,
+          resolved by :meth:`read_resolved` (the only path that can read
+          a table too big for the driver).
+
+        The live read keeps the relation it built and returns that same
+        ``DataFrame`` while ``spark`` is the session it was built in, the
+        limit is unchanged and the live manifest still equals the pinned
+        one, so a hit costs one ``CURRENT`` and one manifest read and no
+        file read, DataSource resolution, listing or analysis. A kept
+        Spark relation holds its plan and file index, no data; a kept
+        local one holds its rows, under the limit's bytes. Any change to
+        the manifest rebuilds it: a commit, a compaction, a rebucket,
+        another writer, or a table re-created at the same root (compared
+        by content, since a re-created table starts again at version 0).
+        Reuse is safe because data files are immutable and
+        ``expire_snapshots`` never deletes a file the live snapshot
+        references. A ``version`` read is built from its own manifest and
+        not kept."""
         snap = self.snapshot_at(version)
+        # the setting in bytes, parsed by Spark's own SQLConf accessor
+        limit = min(spark._jconf.arrowLocalRelationThreshold(), LOCAL_READ_MAX_BYTES)
         if version is None and self._live is not None:
-            live_spark, live_snap, df = self._live
-            if live_spark is spark and live_snap == snap:
+            live_spark, live_limit, live_snap, df = self._live
+            if live_spark is spark and live_limit == limit and live_snap == snap:
                 return df
-        cols = [f["name"] for f in snap["schema"]["fields"]]
-        df = (
-            self.read_resolved(spark, snap=snap)
-            .filter(~F.col("__deleted"))
-            .select(*cols)
-        )
+        df = self._read_local(spark, snap, limit)
+        if df is None:
+            cols = [f["name"] for f in snap["schema"]["fields"]]
+            df = (
+                self.read_resolved(spark, snap=snap)
+                .filter(~F.col(DELETED_COL))
+                .select(*cols)
+            )
         if version is None:
-            self._live = (spark, snap, df)
+            self._live = (spark, limit, snap, df)
         return df
+
+    def _read_local(self, spark: SparkSession, snap: dict, limit: int) -> DataFrame | None:
+        """``snap``'s visible rows resolved on the driver, as a Spark
+        ``DataFrame`` over the resolved Arrow table — or ``None`` when the
+        snapshot's files reach ``limit`` bytes on disk (``os.stat``, no
+        file opened), in their footers' uncompressed row groups (no row
+        decoded) or as Arrow rows (checked as each file is read). Columns
+        are nullable, as in a Spark file scan."""
+        paths = self.data_files(snap=snap)
+        if sum(os.stat(p).st_size for p in paths) >= limit:
+            return None
+        files = [pq.ParquetFile(p, coerce_int96_timestamp_unit="us") for p in paths]
+        footer = sum(
+            f.metadata.row_group(i).total_byte_size
+            for f in files
+            for i in range(f.num_row_groups)
+        )
+        if footer >= limit:
+            return None
+        payload = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in T.StructType.fromJson(snap["schema"])]
+        )
+        try:
+            stored = pa.schema(
+                [(f.name, to_arrow_type(f.dataType)) for f in payload]
+                + [(LSN_COL, pa.int64()), (DELETED_COL, pa.bool_())]
+            )
+        except TypeError:
+            return None  # a column type with no Arrow form reads through Spark
+        rows = _arrow_stored(files, stored, limit)
+        if rows is None:
+            return None
+        if _resolve_needed(snap):
+            rows = _latest_per_key(rows, _key_cols(snap))
+        rows = rows.filter(pc.invert(rows[DELETED_COL])).select(payload.fieldNames())
+        return spark.createDataFrame(rows, payload)
 
     # --- write path ------------------------------------------------------------
 
-    def write_merged(
-        self, df: DataFrame, epoch: int, version: int, repartition: bool = True
-    ) -> dict[int, list[str]]:
+    def write_merged(self, df: DataFrame, epoch: int, version: int) -> dict[int, list[str]]:
         """Write merged rows (must carry BUCKET_COL) for the affected
         buckets under a fresh, uniquely-named data dir. Idempotent on
         retry: a crashed attempt's dir is unreferenced and is removed
         before rewrite.
 
-        ``repartition=True`` clusters the rows with
-        :func:`cluster_by_bucket` first, so each bucket sits wholly in one
-        of at most slot-count partitions and the commit emits one file per
-        bucket instead of tasks×buckets small files. ``repartition=False``
-        when the caller already clustered them that way (the partitioned
-        write then adds no exchange)."""
+        The write is partitioned by bucket and adds no exchange: rows the
+        caller clustered with :func:`cluster_by_bucket` give one file per
+        bucket, unclustered rows up to one per task and bucket."""
         rel = f"data/e{epoch:06d}-v{version:06d}"
         out = os.path.join(self.root, rel)
         if os.path.exists(out):
             shutil.rmtree(out)  # orphan from a crashed attempt — never referenced
-        if repartition:
-            # a real cluster would raise files-per-bucket by repartitioning
-            # on (bucket, salt) when buckets exceed task size
-            df = cluster_by_bucket(df, self.n_buckets(), self.key_cols()[0])
         (
             df.write.partitionBy(BUCKET_COL)
             .mode("overwrite")
@@ -929,15 +1059,13 @@ class IceliteTable:
                 # read the EXACT version whose base is recorded (a commit
                 # landing between this read and the swap is caught by the
                 # swap's validation), clustered for the NEW bucket count
-                # (write_merged's own repartition would use the OLD one);
-                # the data dir claims the version the progress commit
-                # will take, so rewrite dirs never collide
+                # by the resolve's exchange; the data dir claims the
+                # version the progress commit will take, so rewrite dirs
+                # never collide
                 df = self.read_resolved(
                     spark, buckets=set(g), snap=cur, cluster=new_n_buckets,
                 ).withColumn(BUCKET_COL, bucket_expr(new_n_buckets, key))
-                new_files = self.write_merged(
-                    df, epoch=-2, version=cur["version"] + 1, repartition=False
-                )
+                new_files = self.write_merged(df, epoch=-2, version=cur["version"] + 1)
                 groups_done[gk] = {
                     "base": {str(b): base_of(cur, b) for b in g},
                     "new_files": {str(b): fl for b, fl in new_files.items()},
@@ -1086,9 +1214,7 @@ class IceliteTable:
         if drop_tombstones:
             df = df.filter(~F.col("__deleted"))
         df = df.withColumn(BUCKET_COL, bucket_expr(n, keys[0]))
-        new_files = self.write_merged(
-            df, epoch=-1, version=snap["version"] + 1, repartition=False
-        )
+        new_files = self.write_merged(df, epoch=-1, version=snap["version"] + 1)
 
         def fold(s: dict) -> None:
             # maintenance op: a commit since `snap` makes the rewrite stale

@@ -82,6 +82,7 @@ def merge_epoch(
     mark_epoch: bool = True,
     slice_files: list[str] | None = None,
     aux: "EpochAux | None" = None,
+    snap: dict | None = None,
 ) -> dict:
     """Copy-on-write apply: fold one reduced batch (one row per key) into
     the buckets it hits, rewrite them and commit atomically with the
@@ -93,7 +94,8 @@ def merge_epoch(
     ``committed_epochs`` so a later batch replay won't skip the rest.
 
     ``aux``: the hook that computes the epoch's aux artifacts from its
-    written rows (see the module notes).
+    written rows (see the module notes). ``snap``: the snapshot the first
+    attempt applies against (default: the live one, read here).
 
     Concurrency: the fold reads a PINNED base snapshot version and the
     commit validates the affected buckets against it (see
@@ -103,7 +105,7 @@ def merge_epoch(
     retry), so a concurrent commit's rows are never silently dropped."""
     return _apply(
         spark, table, reduced, epoch, quarantine_dir, slice_marker,
-        mark_epoch, slice_files, aux, cow=True, repartition=False,
+        mark_epoch, slice_files, aux, snap, cow=True, repartition=False,
     )
 
 
@@ -118,6 +120,7 @@ def apply_delta_epoch(
     mark_epoch: bool = True,
     slice_files: list[str] | None = None,
     aux: "EpochAux | None" = None,
+    snap: dict | None = None,
 ) -> dict:
     """Merge-on-read apply (the sustained-throughput path): write the
     reduced batch as per-bucket **delta files** and commit — nothing in
@@ -129,7 +132,7 @@ def apply_delta_epoch(
     for the key) are additionally audited eagerly with a column-pruned
     scan of the affected buckets (reads only key + __lsn columns).
 
-    ``slice_marker``/``mark_epoch``/``aux``: see
+    ``slice_marker``/``mark_epoch``/``aux``/``snap``: see
     :func:`merge_epoch`.
 
     Concurrency: the commit validates that the table's BUCKET COUNT is
@@ -142,7 +145,7 @@ def apply_delta_epoch(
     """
     return _apply(
         spark, table, reduced, epoch, quarantine_dir, slice_marker,
-        mark_epoch, slice_files, aux, cow=False,
+        mark_epoch, slice_files, aux, snap, cow=False,
         repartition=not pre_partitioned,
     )
 
@@ -157,6 +160,7 @@ def _apply(
     mark_epoch: bool,
     slice_files: list[str] | None,
     aux: "EpochAux | None",
+    snap: dict | None,
     cow: bool,
     repartition: bool,
 ) -> dict:
@@ -170,7 +174,7 @@ def _apply(
     ``LshBandIndex.batch_bands`` on a ``doc_id`` with two texts) leaves
     the snapshot as it was and the written data dir an unreferenced
     orphan, which ``expire_snapshots`` sweeps."""
-    snap = table.snapshot()
+    snap = snap if snap is not None else table.snapshot()
     if skip := table.skip_if_committed(epoch, slice_marker, mark_epoch, snap):
         return skip
     t0 = time.monotonic()
@@ -235,9 +239,10 @@ def _apply(
                 )
             else:
                 out = rows.observe(obs, *counts)
-            new_files = table.write_merged(
-                out, epoch=epoch, version=base + 1, repartition=repartition
-            )
+                if repartition:
+                    # each bucket wholly in one partition: one file per bucket
+                    out = cluster_by_bucket(out, n_buckets, key_cols[0])
+            new_files = table.write_merged(out, epoch=epoch, version=base + 1)
             m = obs.get
             if not cow:
                 affected, keys = set(new_files), int(m["rows"])

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import shutil
 import sys
@@ -15,6 +16,7 @@ sys.path.insert(0, REPO)
 #: SPARK_DRIVER_MEM wins.
 os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
 
+from crba_etl_spark.icelite import LocalManifestIO  # noqa: E402
 from crba_etl_spark.session import get_spark  # noqa: E402
 
 
@@ -23,6 +25,45 @@ def spark():
     s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+#: Spark's size limit for building a ``LocalRelation`` from Arrow data;
+#: ``IceliteTable.read`` resolves a snapshot on the driver only under it
+LOCAL_RELATION_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
+
+
+@contextlib.contextmanager
+def local_relation_threshold(spark, value):
+    """Set the session's Arrow local-relation threshold for the block
+    (``None``: Spark's default), then restore it."""
+    old = spark.conf.get(LOCAL_RELATION_THRESHOLD)
+    if value is None:
+        spark.conf.unset(LOCAL_RELATION_THRESHOLD)
+    else:
+        spark.conf.set(LOCAL_RELATION_THRESHOLD, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(LOCAL_RELATION_THRESHOLD, old)
+
+
+def read_path(df):
+    """Which path built an ``IceliteTable.read``: ``"spark"`` when its plan
+    scans the stored files, ``"local"`` for a driver-resolved
+    ``LocalRelation``."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "FileScan" in plan:
+        return "spark"
+    assert "LocalTableScan" in plan, plan
+    return "local"
+
+
+@pytest.fixture()
+def spark_relation_reads(spark):
+    """``IceliteTable.read`` builds the Spark relation over the stored
+    files (the threshold at 0), for tests that inspect its plan."""
+    with local_relation_threshold(spark, "0"):
+        yield
 
 
 @pytest.fixture()
@@ -88,3 +129,49 @@ class FixedAux:
     def __call__(self, rows):
         self.calls += 1
         return self.entries
+
+
+#: sort order of a final-state frame for comparison with ``oracle_final``
+ORACLE_KEYS = ["conv_id", "turn_idx", "ts"]
+
+
+class CountingIO(LocalManifestIO):
+    """Counts pointer and manifest reads."""
+
+    def __init__(self, root):
+        super().__init__(root)
+        self.current_reads = 0
+        self.manifest_reads = 0
+
+    def read_current(self):
+        self.current_reads += 1
+        return super().read_current()
+
+    def read_manifest(self, name):
+        self.manifest_reads += 1
+        return super().read_manifest(name)
+
+
+def oracle_upto(stream, epochs, tmp):
+    """``oracle_final`` over only the given epochs of ``stream``."""
+    from crba_etl_spark.gen import oracle_final
+
+    d = os.path.join(tmp, "oracle-" + "-".join(map(str, epochs)))
+    for k in epochs:
+        shutil.copytree(
+            os.path.join(stream, f"epoch={k}"), os.path.join(d, f"epoch={k}"),
+            dirs_exist_ok=True,
+        )
+    return oracle_final(d)
+
+
+def assert_oracle(df, exp):
+    """``df`` holds exactly the rows of the oracle frame ``exp``."""
+    import pandas as pd
+
+    got = df.toPandas()[list(exp.columns)]
+    pd.testing.assert_frame_equal(
+        got.sort_values(ORACLE_KEYS).reset_index(drop=True),
+        exp.sort_values(ORACLE_KEYS).reset_index(drop=True),
+        check_dtype=False,
+    )

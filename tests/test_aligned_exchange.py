@@ -47,14 +47,14 @@ def test_aligned_width_is_a_divisor_within_the_slots():
 @pytest.fixture()
 def writes(monkeypatch):
     """Record every write_merged call: the executed plan of the frame it
-    writes, its repartition flag and the files it produced."""
+    writes and the files it produced."""
     calls = []
     orig = IceliteTable.write_merged
 
-    def spy(self, df, epoch, version, repartition=True):
+    def spy(self, df, epoch, version):
         plan = df._jdf.queryExecution().executedPlan().toString()
-        files = orig(self, df, epoch, version, repartition=repartition)
-        calls.append({"plan": plan, "repartition": repartition, "files": files})
+        files = orig(self, df, epoch, version)
+        calls.append({"plan": plan, "files": files})
         return files
 
     monkeypatch.setattr(IceliteTable, "write_merged", spy)
@@ -87,7 +87,6 @@ def test_engine_epoch_plans_one_aligned_exchange(spark, stream, tmpdir_, writes,
     assert len(writes) == len(epochs)
     for call in writes:
         plan = call["plan"]
-        assert not call["repartition"]
         assert re.fullmatch(rf"conv_id#\d+, {w}", _one_exchange_width(plan)), plan
         # the reduce's partial (map-side) and final max_by run in the
         # stage above the one exchange: no exchange between them
@@ -121,7 +120,6 @@ def test_compaction_rewrite_plans_one_exchange(spark, tmpdir_, writes):
     del writes[:]
     eng.compact()
     (call,) = writes
-    assert not call["repartition"]
     w = aligned_width(8, spark.sparkContext.defaultParallelism)
     assert re.fullmatch(rf"conv_id#\d+, {w}", _one_exchange_width(call["plan"]))
     assert "max_by" in call["plan"]  # the resolve ran, on the one exchange
@@ -138,7 +136,6 @@ def test_cow_fold_plans_one_exchange(spark, tmpdir_, writes):
     # plan holds only the fold's own exchanges
     merge_epoch(spark, eng.table, make_events(spark, _rows(1, 20, n_keys=12)), 1)
     (call,) = writes
-    assert not call["repartition"]
     w = aligned_width(8, spark.sparkContext.defaultParallelism)
     assert re.fullmatch(rf"conv_id#\d+, {w}", _one_exchange_width(call["plan"]))
     assert all(len(v) == 1 for v in call["files"].values())

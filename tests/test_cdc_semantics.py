@@ -133,11 +133,11 @@ def test_exactly_once_epoch_redelivery(spark, tmpdir_, mode):
     assert eng.read_final().count() == 1
 
 
-def test_read_resolves_only_buckets_holding_two_files(spark, tmpdir_):
-    """A MOR table whose buckets each hold one delta file reads without
-    the resolving aggregate (every file is one row per key); once a
-    second delta lands in a bucket, the read resolves it to the latest
-    row per key."""
+def test_read_resolves_only_buckets_holding_two_files(spark, tmpdir_, spark_relation_reads):
+    """On the Spark path, a MOR table whose buckets each hold one delta
+    file reads without the resolving aggregate (every file is one row per
+    key); once a second delta lands in a bucket, the read resolves it to
+    the latest row per key."""
     eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode="mor")
     eng.apply_epoch(make_events(spark, [
         (1, 0, "I", "c1", 0, "user", "hello", None, 0, 0),

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from crba_etl_spark.checkpoint import resume, resume_point
 from crba_etl_spark.engine import CDCEngine
 from crba_etl_spark.gen import StreamSpec, generate_stream, oracle_final
-from crba_etl_spark.icelite import BUCKET_COL, bucket_expr
+from crba_etl_spark.icelite import BUCKET_COL, bucket_expr, cluster_by_bucket
 from crba_etl_spark.operators.dedup import reduce_batch
 
 
@@ -48,11 +48,12 @@ def test_crash_between_write_and_rename(spark, stream, tmpdir_):
     snap_before = eng.table.snapshot()
 
     red = reduce_batch(spark.read.parquet(os.path.join(stream, "epoch=2")))
-    partial = (
+    partial = cluster_by_bucket(
         red.withColumn(BUCKET_COL, bucket_expr(8))
         .withColumn("__lsn", F.col("lsn"))
         .withColumn("__deleted", F.col("op") == "D")
-        .drop("op", "lsn", "epoch", "ingest_ts")
+        .drop("op", "lsn", "epoch", "ingest_ts"),
+        8,
     )
     eng.table.write_merged(partial, epoch=2, version=snap_before["version"] + 1)
     # CRASH: no commit happened

@@ -209,8 +209,8 @@ def test_rebucket_concurrent_commit_not_lost(spark, tmpdir_):
     injected = {"done": False}
     orig_wm = t.write_merged
 
-    def racing(df, epoch, version, repartition=True):
-        files = orig_wm(df, epoch, version, repartition)
+    def racing(df, epoch, version):
+        files = orig_wm(df, epoch, version)
         if epoch == -2 and not injected["done"]:
             injected["done"] = True
             other = CDCEngine(
