@@ -74,7 +74,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .cache import persist_tracked, release_caches
+from .cache import persist_tracked
 from .icelite import IceliteTable
 from .operators.graph import _arrow_table, _in_list
 from .operators.text_dedup import (
@@ -1202,5 +1202,4 @@ def ingest_documents(
     labels = DedupLabels(table, index, max_bucket=max_bucket) if dedup_labels else None
     aux = EpochAux(spark, index, labels, epoch)
     apply_delta_epoch(spark, table, batch, epoch=epoch, aux=aux)
-    release_caches()
     return table, index

@@ -56,6 +56,23 @@ def test_index_candidates_equal_fresh_recompute(spark, tmpdir_):
     assert got == want and len(got) > 0
 
 
+def test_ingest_documents_keeps_other_callers_caches(spark, tmpdir_):
+    """An ingest releases no persist it did not take: a relation another
+    caller tracked before it stays cached after it."""
+    from crba_etl_spark.cache import persist_tracked, release_caches
+
+    theirs = persist_tracked(spark.range(100).selectExpr("id", "id * 3 AS v"))
+    theirs.count()
+    existing, _new = _split(spark)
+    try:
+        ingest_documents(
+            spark, os.path.join(tmpdir_, "t"), existing, dedup_labels=True
+        )
+        assert theirs.storageLevel.useMemory
+    finally:
+        release_caches()
+
+
 def test_commit_atomic_with_data(spark, tmpdir_):
     existing, new = _split(spark)
     table, index = ingest_documents(spark, os.path.join(tmpdir_, "t"), existing)

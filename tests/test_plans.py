@@ -69,26 +69,20 @@ def test_plan_invariants_and_regenerate_plans_md(spark, tmp_path):
     # scale-safe — and is allowlisted per query:
     SCALAR_BROADCAST_OK = {
         "snapshot_diff_events",  # half-max-LSN cutoff (1-row agg)
-        "domain_mix_weights",    # corpus totals (1-row agg)
     }
-    # ... and no UNPARTITIONED ORDERED window (single-task sort of the
-    # whole input — the round-3 VERDICT pack_contiguous scale-killer)
-    # outside labeled oracle shapes. In `windowspecdefinition(part...,
+    # ... and no UNPARTITIONED ORDERED window anywhere (a single-task
+    # sort of the whole input). In `windowspecdefinition(part...,
     # order..., frame)` the partition columns come first; if the FIRST
     # argument already carries a sort direction, there is no partition
     # spec and the whole relation funnels through one task's sort.
     unpartitioned_win = re.compile(
         r"windowspecdefinition\([^,()]*(?:ASC|DESC) NULLS"
     )
-    GLOBAL_WINDOW_OK = {
-        "pack_contiguous",  # the per-shard oracle of pack_sharded
-    }
     for qname, (qfn, _sql) in Q.registry().items():
         p = plan_of(qfn(spark, SF))
-        if unpartitioned_win.search(p):
-            assert qname in GLOBAL_WINDOW_OK, (
-                f"{qname}: unpartitioned global window"
-            )
+        assert not unpartitioned_win.search(p), (
+            f"{qname}: unpartitioned global window"
+        )
         assert "CartesianProduct" not in p, qname
         if qname not in SCALAR_BROADCAST_OK:
             assert "BroadcastNestedLoopJoin" not in p, qname

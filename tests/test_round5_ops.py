@@ -1,14 +1,10 @@
-"""Round-5 operator additions and the oversized-band-bucket cap.
+"""The oversized-band-bucket cap.
 
-Covers: Gopher-style repetition stats, PII redaction, domain mixture
-weights (oracle equality for their registry entries is
-asserted in test_entry_contract.py — here we pin hand-computed values
-and semantic invariants), and the ``max_bucket`` boilerplate/skew
-defense: a corpus of near-identical texts (shared 256-char suffix, the
-shape that once froze a 200k-document dedup run) must cost O(n)
-candidates, not O(n²), while transitive grouping through bucket
-representatives stays intact end-to-end, including through the engine's
-DedupLabels path.
+Covers the ``max_bucket`` boilerplate/skew defense: a corpus of
+near-identical texts (shared 256-char suffix, the shape that once froze
+a 200k-document dedup run) must cost O(n) candidates, not O(n²), while
+transitive grouping through bucket representatives stays intact
+end-to-end, including through the engine's DedupLabels path.
 """
 
 import os
@@ -19,7 +15,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from crba_etl_spark.cache import release_caches  # noqa: E402
-from crba_etl_spark.operators import text_analysis, text_dedup  # noqa: E402
+from crba_etl_spark.operators import text_dedup  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -42,55 +38,6 @@ def _degenerate_docs(spark, n: int, id_as_string: bool = False):
             F.lit("u"), F.col("id").cast("string"), F.lit(" says "), F.lit(FILLER)
         ).alias("text"),
     )
-
-
-def test_repetition_stats_exact(spark):
-    df = spark.createDataFrame(
-        [(1, "a b a b a"), (2, "x y z w"), (3, "q")], ["doc_id", "text"]
-    )
-    r = {x["doc_id"]: x for x in text_analysis.repetition_stats(df).collect()}
-    # doc 1: 5 words, 2 distinct, top word 'a' x3; bigrams
-    # [a b, b a, a b, b a] -> 4 total, 2 distinct
-    assert r[1]["n_words"] == 5
-    assert r[1]["dup_word_frac"] == 0.6
-    assert r[1]["top_word_frac"] == 0.6
-    assert r[1]["dup_2gram_frac"] == 0.5
-    assert not r[1]["keep"]  # top_word_frac 0.6 > 0.3
-    assert r[2]["n_words"] == 4 and r[2]["dup_word_frac"] == 0.0
-    assert r[2]["keep"]  # top 0.25 <= 0.3, dup_2gram 0 <= 0.6
-    # single-word doc: zero bigrams -> frac pinned to 0, top_word_frac 1
-    assert r[3]["dup_2gram_frac"] == 0.0 and not r[3]["keep"]
-
-
-def test_pii_redact_plants_and_clears(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "hello bob.smith9@mail.example call 555-1234 now"),
-            (2, "no pii here"),
-        ],
-        ["doc_id", "text"],
-    )
-    r = {x["doc_id"]: x for x in text_analysis.pii_redact(df).collect()}
-    assert r[1]["n_emails"] == 1 and r[1]["n_phones"] == 1
-    assert r[1]["redacted"] == "hello <EMAIL> call <PHONE> now"
-    assert r[1]["clean"]
-    assert r[2]["n_emails"] == 0 and r[2]["n_phones"] == 0
-    assert r[2]["redacted"] == "no pii here" and r[2]["clean"]
-
-
-def test_domain_mix_weights_normalized(spark):
-    from crba_etl_spark.queries import q_domain_mix_weights
-
-    rows = q_domain_mix_weights(spark, SF_DIR).collect()
-    assert abs(sum(r["weight"] for r in rows) - 1.0) < 1e-4
-    assert abs(sum(r["raw_share"] for r in rows) - 1.0) < 1e-4
-    # alpha=0.5 smoothing: weights order-preserving in n_docs, and small
-    # domains get MORE than their raw share, large ones less
-    big = max(rows, key=lambda r: r["n_docs"])
-    small = min(rows, key=lambda r: r["n_docs"])
-    if big["n_docs"] > small["n_docs"]:
-        assert big["weight"] <= big["raw_share"] + 1e-9
-        assert small["weight"] >= small["raw_share"] - 1e-9
 
 
 def test_max_bucket_noop_below_cap(spark):

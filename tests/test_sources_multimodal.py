@@ -118,48 +118,3 @@ def test_partial_aggregation_in_reduce(spark):
     plan = reduce_latest(ev, key_cols=["user_id"])._jdf.queryExecution().executedPlan().toString()
     assert "partial_max" in plan  # map-side combine before the exchange
     assert "Exchange" in plan
-
-
-def test_lang_id_classifies_each_marker_language(spark):
-    """Every language in LANG_MARKERS classifies a characteristic
-    sentence correctly; markerless text falls back to 'und'. (Still a
-    stopword heuristic, not a model — but now 8 languages wide, with
-    the SQL oracle generated from the same marker table.)"""
-    from crba_etl_spark.operators.text_analysis import LANG_MARKERS, lang_id
-
-    sentences = {
-        "en": "the cat is on the mat and part of that story with us",
-        "de": "der hund und die katze sind nicht ein problem",
-        "fr": "le chat est dans la maison et les jardins",
-        "es": "el perro y los gatos una vez pero nunca",
-        "pt": "os amigos foram com uma ideia para ganhar mais",
-        "it": "il ragazzo che non dorme per ore gli amici sono qui",
-        "nl": "het huis van een man is niet ook zijn tuin",
-        "pl": "nie wiem czy to jest dobre ale tak mówisz",
-        "und": "zzz qqq xxx 12345",
-    }
-    assert set(sentences) == set(LANG_MARKERS) | {"und"}
-    docs = spark.createDataFrame(
-        [(lang, text) for lang, text in sentences.items()], "doc_id string, text string"
-    )
-    got = {r.doc_id: r.lang_pred for r in lang_id(docs).collect()}
-    assert got == {lang: lang for lang in sentences}
-
-
-def test_quality_repetition_penalty(spark):
-    """Duplicate-line boilerplate lowers quality; the ratio itself is
-    exact: 4 lines with 2 distinct -> dup_line_ratio 0.5 (penalty
-    capped at 0.3)."""
-    from crba_etl_spark.operators.text_analysis import quality_score
-
-    body = "the cat is on the mat and it is a good day to be here now."
-    clean = " ".join([body] * 1)
-    spammy = "\n".join([body, body, "buy now!", "buy now!"])
-    docs = spark.createDataFrame(
-        [("clean", clean), ("spam", spammy)], "doc_id string, text string"
-    )
-    got = {r.doc_id: r for r in quality_score(docs).collect()}
-    assert got["clean"].dup_line_ratio == 0.0
-    assert got["spam"].dup_line_ratio == 0.5
-    # same text content otherwise -> the penalty strictly lowers quality
-    assert got["spam"].quality < got["clean"].quality
